@@ -60,7 +60,7 @@ def main() -> None:
 
     from information_retrieval_images_spark import entry_queries, fixtures
     from information_retrieval_images_spark.catalog import Catalog
-    from information_retrieval_images_spark.operators.bm25 import bm25_topk_naive, bm25_topk_wand
+    from information_retrieval_images_spark.operators.bm25 import bm25_topk_wand
     from information_retrieval_images_spark.operators.index_build import build_index
     from information_retrieval_images_spark.session import get_spark
     from information_retrieval_images_spark.weather import bw_probe
@@ -206,9 +206,6 @@ def main() -> None:
         t0 = time.time()
         result_rows["wand"] = bm25_topk_wand(spark, cat, qdf).count()
         record("bm25_wand_50q", time.time() - t0)
-        t0 = time.time()
-        result_rows["naive"] = bm25_topk_naive(spark, cat, qdf).count()
-        record("bm25_naive_50q", time.time() - t0)
         # single-query latency probes (north rule names query p95): one-query
         # invocations — interactive latency, dominated by per-job overhead at
         # this SF rather than posting volume

@@ -8,7 +8,7 @@ Usage:
   python bench_extra.py noop   [rep_count]   # same, with a noop sink instead
                                              # of .count() (guide §1.4)
   python bench_extra.py build  [engine]      # one traced build (IR_TRACE=1)
-  python bench_extra.py query  [rep_count]   # wand/naive 50q + singles only
+  python bench_extra.py query  [rep_count]   # wand 50q + singles only
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in bench.py.
 """
@@ -93,10 +93,7 @@ def main() -> None:
         reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
         from information_retrieval_images_spark import fixtures
         from information_retrieval_images_spark.catalog import Catalog
-        from information_retrieval_images_spark.operators.bm25 import (
-            bm25_topk_naive,
-            bm25_topk_wand,
-        )
+        from information_retrieval_images_spark.operators.bm25 import bm25_topk_wand
 
         n_docs = max(2000, int(600_000 * float(os.environ.get("IR_BUILD_SF", "1.0"))))
         wh = os.environ.get("IR_WH", f"/tmp/ir_extra_wh_{n_docs}")
@@ -109,9 +106,6 @@ def main() -> None:
             t0 = time.time()
             bm25_topk_wand(spark, cat, qdf).count()
             record("bm25_wand_50q", time.time() - t0)
-            t0 = time.time()
-            bm25_topk_naive(spark, cat, qdf).count()
-            record("bm25_naive_50q", time.time() - t0)
             for row in single_rows:
                 t0 = time.time()
                 bm25_topk_wand(spark, cat, [tuple(row)]).count()

@@ -24,7 +24,7 @@ Package map:
 - ``session``    tuned SparkSession builders
 - ``catalog``    Iceberg-or-parquet table IO
 - ``sources``    pages corpus reader/generator
-- ``operators``  index build, BM25 query engines, dedup, ANN
+- ``operators``  index build, BM25 query engine, dedup, ANN
 - ``functions``  text analysis / similarity column functions
 """
 

@@ -138,7 +138,7 @@ class Catalog:
         return n, s, m
 
     def global_query_stats(self) -> tuple[int, float]:
-        """(n_docs, avgdl) — the pair the query engines score with."""
+        """(n_docs, avgdl) — the pair the query engine scores with."""
         self._check_version()
         if self._global_stats is None:
             self.global_doc_stats()

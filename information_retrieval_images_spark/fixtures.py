@@ -107,30 +107,6 @@ def make_pages_pandas(n_docs: int, seed: int = 42) -> pd.DataFrame:
     return make_pages_batch(np.arange(n_docs), seed=seed)
 
 
-def write_pages_parquet(path: str, n_docs: int, seed: int = 42, rows_per_file: int = 50_000) -> None:
-    """Materialize the corpus as a parquet directory (driver-side, small SF)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("warc_ts", pa.timestamp("us")),
-            ("html", pa.binary()),
-            ("text", pa.string()),
-            ("lang", pa.string()),
-        ]
-    )
-    part = 0
-    for start in range(0, n_docs, rows_per_file):
-        batch = make_pages_batch(np.arange(start, min(start + rows_per_file, n_docs)), seed=seed)
-        table = pa.Table.from_pandas(batch, schema=schema, preserve_index=False)
-        pq.write_table(table, os.path.join(path, f"part-{part:05d}.parquet"))
-        part += 1
-
-
 def generate_pages_df(spark, n_docs: int, seed: int = 42, partitions: int | None = None, page_kb: int = 0):
     """Distributed generator: spark.range -> mapInPandas (scales to any SF;
     each partition generates its own rows from (seed, id) independently)."""

@@ -6,7 +6,7 @@ anti-join is one Spark op against the docs table, and new documents land in
 their own bucket with doc ids continuing after the current maximum.
 
 Correctness under shifting collection statistics: appends change N and avgdl,
-which changes every BM25 score. The query engines always read *current*
+which changes every BM25 score. The query engine always reads *current*
 ``stats``/``stats_global`` (idf and scoring are query-time), and WAND bounds
 derive from per-block ``(max_tf, min_dl)`` under the current avgdl — so
 results after an append are exactly what a full rebuild would score, with one
@@ -67,14 +67,7 @@ def encode_bucket_postings(
 ) -> None:
     """(Re)build one bucket's postings + stats from the docs table — the
     shared bucket-rewrite unit used by append, crash repair and row deletes.
-    Idempotent: existing files for the bucket are discarded first — on the
-    parquet path via the bucket-directory overwrites inside
-    write_bucket; on Iceberg via DELETE FROM of the bucket's rows
-    before the append (a plain append would double a crash-retried bucket's
-    df and BM25 scores)."""
-    if catalog.use_iceberg:
-        for t in ("postings", "stats"):
-            spark.sql(f"DELETE FROM {t} WHERE bucket = {int(bucket)}")
+    Idempotent: write_bucket replaces the bucket's existing rows."""
     bucket_docs = catalog.read("docs").where(F.col("bucket") == bucket)
     runs = posting_runs(bucket_docs, min_parallelism=nparts).withColumn(
         "doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS)

@@ -345,32 +345,6 @@ def posting_runs(docs: DataFrame, min_parallelism: int | None = None) -> DataFra
     return src.mapInPandas(gen, schema=RUNS_SCHEMA)
 
 
-def posting_runs_sql(docs: DataFrame) -> DataFrame:
-    """JVM run generation: the same (term, doc_id, tf, dl) rows as
-    :func:`posting_runs` with zero Python workers — explode the analyzer
-    (lower + single-space split of the collapsed text) and count (doc, term)
-    pairs with a hash aggregate (partial map-side combine, so the shuffle
-    carries ~unique pairs, the same volume the pandas kernel emits).
-
-    Analyzer parity: extracted text is single-space collapsed and trimmed,
-    so splitting on one space IS Python's str.split(); empty text explodes
-    to one "" token which is filtered (str.split() of "" is []).
-
-    NOTE: the build pipeline does not call this + a separate repartition any
-    more (that was TWO shuffles of the posting volume); see
-    :func:`sorted_posting_runs_sql`. Kept for callers that want plain runs."""
-    toks = docs.select(
-        "doc_id",
-        "dl",
-        F.explode(F.split(F.lower(F.col("text")), " ", -1)).alias("term"),
-    ).where(F.col("term") != "")
-    return (
-        toks.groupBy("term", "doc_id", "dl")
-        .agg(F.count("*").cast("int").alias("tf"))
-        .select("term", "doc_id", "tf", F.col("dl").cast("int").alias("dl"))
-    )
-
-
 def sorted_posting_runs_sql(docs: DataFrame, nparts: int) -> DataFrame:
     """All-JVM (term, doc_id)-sorted posting runs in ONE shuffle (r6,
     guide §2.4 "remove shuffles outright").
@@ -460,7 +434,7 @@ def encode_blocks(runs_sorted: DataFrame, avgdl: float) -> DataFrame:
     mapInPandas with cross-batch buffering: a term's run may span Arrow
     batches within a partition; the trailing partial term is held until the
     next batch (terms may also span *partitions* — that is fine: doc ranges
-    are disjoint, so the query engines just see multiple block sequences).
+    are disjoint, so the query engine just sees multiple block sequences).
     """
 
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -529,7 +503,7 @@ def build_index(
     contract in textproc (group ~= <=512 MB of extracted text).
 
     ``tp_n`` (default TERM_PREFIX_PARTITIONS) is the term-prefix directory
-    modulus — the second pinned format parameter. The query engines read the
+    modulus — the second pinned format parameter. The query engine reads the
     recorded value from the catalog (never the module constant), so an index
     built with a different tp_n stays queryable; a resume under a different
     value is refused for the same reason as p_logical (already-committed
@@ -537,7 +511,7 @@ def build_index(
 
     ``engine``: "arrow" (default) — extraction/tokenization in vectorized
     pandas UDFs, the input-hint contract path. "sql" — the whole pipeline up
-    to block encoding runs JVM-side (extract_text_expr + posting_runs_sql +
+    to block encoding runs JVM-side (extract_text_expr + sorted_posting_runs_sql +
     window id assignment): identical output index, proven bit-identical in
     tests/test_sql_engine.py EXCEPT for one documented input class —
     UTF-8-encoded surrogate byte sequences (ED A0-BF 80-BF), where Java's
@@ -646,8 +620,8 @@ def build_index(
 
     def _build_bucket(b: int) -> None:
         t0 = time.time()
-        # partial files from a killed run of this bucket are discarded by the
-        # mode("overwrite") bucket-directory writes in write_bucket
+        # rows from a killed run of this bucket are discarded by write_bucket
+        # (bucket-directory overwrites on parquet, DELETE first on Iceberg)
         bucket_docs = docs.where(F.col("bucket") == b)
         if engine == "sql":
             # one exchange: token stream repartitioned straight into the
@@ -732,38 +706,6 @@ def build_index(
     return metrics
 
 
-def write_bucket_postings(
-    catalog: Catalog,
-    blocks: DataFrame,
-    bucket: int,
-    nparts: int,
-    tp_n: int = TERM_PREFIX_PARTITIONS,
-) -> None:
-    """Persist ONE bucket's block rows plus its derived per-term df stats.
-
-    The bucket DIRECTORY is the atomic commit/rewrite unit: blocks land under
-    ``postings/bucket=B/tp=T`` (term-prefix subdirectories, see
-    TERM_PREFIX_PARTITIONS) via an overwrite of that bucket's directory only —
-    bucket writes never share a ``_temporary`` staging dir (safe to overlap)
-    and delete/compact swap whole directories. ``stats`` follows the same
-    layout with rows (term, df); readers aggregate ``sum(df)`` over their
-    (tiny, IN-list + tp-pruned) term set.
-
-    ``blocks`` is persisted for the duration so the stats rows aggregate from
-    the in-memory frame instead of re-reading the just-written parquet — one
-    fewer full bucket scan per commit. Explicit (tp, term) within-partition
-    sorts keep per-file term runs contiguous for parquet row-group min/max
-    pruning (the dynamic-partition writer only guarantees clustering by tp).
-    """
-    blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n)).persist()
-    try:
-        _write_postings_rows(catalog, blocks, bucket, tp_n)
-        _write_bucket_stats(catalog, blocks, bucket, nparts, tp_n)
-    finally:
-        blocks.unpersist()
-        catalog.invalidate_reads()  # direct parquet writes bypass Catalog.write
-
-
 def _write_postings_rows(
     catalog: Catalog, blocks: DataFrame, bucket: int, tp_n: int = TERM_PREFIX_PARTITIONS
 ) -> None:
@@ -824,7 +766,15 @@ def write_bucket(
     serial floor). The writes touch four disjoint directories/tables
     (postings=, stats=, doclens=, blooms=bucket=B), so no two jobs share a
     ``_temporary`` staging dir. Failure of any sidecar propagates after all
-    three finish (no partially-awaited commit)."""
+    three finish (no partially-awaited commit).
+
+    Idempotent: a rewrite replaces the bucket's rows, never adds to them. On
+    parquet the bucket-directory overwrites discard any earlier files. On
+    Iceberg the writes are appends, so the bucket's postings and stats rows
+    are DELETEd first; otherwise a bucket whose postings committed before a
+    crash (and before its checkpoint row) would be appended twice on resume,
+    doubling its df and BM25 contributions. Tables that do not exist yet (a
+    fresh build drops them) get no DELETE."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..blooms import write_bucket_bloom
@@ -849,6 +799,10 @@ def write_bucket(
             if trace:
                 print(f"IR_TRACE   wb{bucket}.{name}: {time.time() - t0:.1f}s", flush=True)
 
+    if catalog.use_iceberg:
+        for t in ("postings", "stats"):
+            if catalog.exists(t):
+                spark.sql(f"DELETE FROM {t} WHERE bucket = {int(bucket)}")
     blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n)).persist()
     try:
         _timed("postings", _write_postings_rows, catalog, blocks, bucket, tp_n)

@@ -11,7 +11,8 @@ Two layers:
   one SparkSession + one Catalog whose driver-side metadata caches
   (stats_global, per-term df — ``catalog.py``) stay hot across requests, so
   a repeat query costs only the pruned scoring job. This is the unit the
-  latency contract is written against (bench.py's single-query p50/p95).
+  latency contract is written against (the ``perfbench`` ``search``
+  workload: closed-loop clients on one warm session).
   Its :meth:`SearchSession.append` wraps ``operators.incremental.
   append_bucket`` with HTTP-ingest bucket allocation (a dedicated id range,
   disjoint from build and streaming ranges).
@@ -47,7 +48,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from .catalog import Catalog
-from .operators.bm25 import attach_urls, bm25_topk_naive, bm25_topk_wand
+from .operators.bm25 import attach_urls, bm25_topk_wand
 
 # HTTP-ingest buckets count up from here: disjoint from build buckets (small
 # ints), streaming micro-batch buckets (1_000_000 + batch_id) and streaming
@@ -58,10 +59,9 @@ HTTP_INGEST_BUCKET_START = 2_000_000
 class SearchSession:
     """Warm query session over a built index (reference ``/search`` core)."""
 
-    def __init__(self, spark: SparkSession, warehouse: str, engine: str = "wand"):
+    def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.catalog = Catalog(spark, warehouse)
-        self.engine = bm25_topk_wand if engine == "wand" else bm25_topk_naive
         self._qid_iter = itertools.count()  # atomic under the GIL
         # appends are strictly serialized (operators.incremental contract);
         # the threaded HTTP server funnels every /append through this lock
@@ -82,7 +82,7 @@ class SearchSession:
         sc = self.spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", f"ir_search_{qid % 16}")
         try:
-            rows = attach_urls(self.engine(self.spark, self.catalog, qbatch), self.catalog).collect()
+            rows = attach_urls(bm25_topk_wand(self.spark, self.catalog, qbatch), self.catalog).collect()
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
         return [

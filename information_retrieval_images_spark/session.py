@@ -11,11 +11,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB, between 1g and 48g: in
+    local mode the driver is the executor, and the Python workers need the
+    other half."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (non-POSIX)
+        return "48g"
+    return f"{max(1, min(48, phys // 2 // 2**30))}g"
+
+
 SPARK_CONF = {
     # local-mode driver == the executor: size its heap for the box (the
     # default 1g thrashes GC once the corpus persist exceeds ~500 MB). On a
     # real cluster these come from spark-submit/cluster conf instead.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
     "spark.driver.maxResultSize": "4g",
     # Arrow batch transfer for every pandas UDF (the only Python in the plan).
     "spark.sql.execution.arrow.pyspark.enabled": "true",

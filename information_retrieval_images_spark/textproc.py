@@ -227,7 +227,7 @@ def url_sort_key(url: str, p_logical: int = P_LOGICAL) -> tuple[int, str]:
 
 
 # --- BM25 math ---------------------------------------------------------------
-# One formula, float64, used by oracle, naive engine and WAND engine.
+# One formula, float64, used by the oracle and the WAND engine.
 # idf per Robertson/Sparck-Jones as used by Lucene: ln(1 + (N - df + 0.5)/(df + 0.5)).
 
 

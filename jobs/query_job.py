@@ -2,7 +2,7 @@
 
     spark-submit --py-files ir_spark.zip jobs/query_job.py \
         --warehouse <dir> --query "web text retrieval" [--k 10] \
-        [--engine wand|naive] [--queries-parquet path]
+        [--queries-parquet path]
 """
 
 from __future__ import annotations
@@ -16,17 +16,12 @@ def main() -> None:
     ap.add_argument("--query", default=None)
     ap.add_argument("--queries-parquet", default=None)
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--engine", choices=["wand", "naive"], default="wand")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
     from information_retrieval_images_spark.catalog import Catalog
-    from information_retrieval_images_spark.operators.bm25 import (
-        attach_urls,
-        bm25_topk_naive,
-        bm25_topk_wand,
-    )
+    from information_retrieval_images_spark.operators.bm25 import attach_urls, bm25_topk_wand
     from information_retrieval_images_spark.session import SPARK_CONF
 
     builder = SparkSession.builder.appName("ir-query")
@@ -44,11 +39,10 @@ def main() -> None:
     else:
         raise SystemExit("one of --query / --queries-parquet is required")
 
-    engine = bm25_topk_wand if args.engine == "wand" else bm25_topk_naive
-    # display-only path: the engines deliberately do not globally sort (the
+    # display-only path: the engine deliberately does not globally sort (the
     # result contract is the (query_id, rank) KEY), so order here — otherwise
     # multi-query --queries-parquet output interleaves queries arbitrarily
-    attach_urls(engine(spark, cat, qdf), cat).orderBy("query_id", "rank").show(
+    attach_urls(bm25_topk_wand(spark, cat, qdf), cat).orderBy("query_id", "rank").show(
         100, truncate=False
     )
     spark.stop()

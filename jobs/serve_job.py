@@ -2,7 +2,7 @@
 (reference server.py:128-177 analogue).
 
     spark-submit --py-files ir_spark.zip jobs/serve_job.py \
-        --warehouse <dir> [--port 8080] [--engine wand|naive]
+        --warehouse <dir> [--port 8080]
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ def main() -> None:
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--host", default="127.0.0.1")
     ap.add_argument("--port", type=int, default=8080)
-    ap.add_argument("--engine", choices=["wand", "naive"], default="wand")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -28,7 +27,7 @@ def main() -> None:
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
 
-    session = SearchSession(spark, args.warehouse, engine=args.engine)
+    session = SearchSession(spark, args.warehouse)
     srv = make_http_server(session, host=args.host, port=args.port)
     print(f"serving on http://{args.host}:{srv.server_address[1]}/search?q=...", flush=True)
     try:

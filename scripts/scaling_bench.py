@@ -800,7 +800,7 @@ BENCH/scaling_runs.jsonl.
 
 `arrow` is the input-hint contract path (extraction + tokenization in
 vectorized pandas UDFs). `sql` builds the bit-identical index with zero
-Python workers (textproc.extract_text_expr + posting_runs_sql; proven
+Python workers (textproc.extract_text_expr + sorted_posting_runs_sql; proven
 identical in tests/test_sql_engine.py). This box freezes/anti-scales groups
 of MEMORY-HEAVY PYTHON PROCESSES specifically (r3 forensics: a no-Spark
 16-process replica of the extraction stage runs 2x slower than its own

@@ -10,11 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from information_retrieval_images_spark import fixtures
-from information_retrieval_images_spark.operators.bm25 import (
-    attach_urls,
-    bm25_topk_naive,
-    bm25_topk_wand,
-)
+from information_retrieval_images_spark.operators.bm25 import attach_urls, bm25_topk_wand
 from information_retrieval_images_spark.operators.index_build import build_index
 from information_retrieval_images_spark.oracle import (
     build_oracle_index,
@@ -93,14 +89,6 @@ def test_stats_match_oracle(spark, corpus, built):
         assert stats[term] == len(plist), term
 
 
-def test_naive_rank_identity(spark, corpus, built):
-    _, queries, _, expected = corpus
-    cat, _ = built
-    qdf = spark.createDataFrame(queries)
-    got = bm25_topk_naive(spark, cat, qdf).toPandas()
-    _assert_rank_identical(got, expected[["query_id", "rank", "doc_id", "bm25_score"]])
-
-
 def test_wand_rank_identity(spark, corpus, built):
     _, queries, _, expected = corpus
     cat, _ = built
@@ -143,7 +131,7 @@ def test_query_term_guard(spark, built, monkeypatch):
         [(0, "one two three four five", 10)], "query_id int, query_text string, k int"
     )
     with pytest.raises(ValueError, match="distinct terms"):
-        bm25_topk_naive(spark, cat, qdf).count()
+        bm25_topk_wand(spark, cat, qdf).count()
 
 
 def test_wand_task_cap_scales_with_parallelism_and_identity_holds(spark, corpus, built):
@@ -200,6 +188,6 @@ def test_attach_urls(spark, corpus, built):
     _, queries, idx, expected = corpus
     cat, _ = built
     qdf = spark.createDataFrame(queries.head(3))
-    got = attach_urls(bm25_topk_naive(spark, cat, qdf), cat).toPandas()
+    got = attach_urls(bm25_topk_wand(spark, cat, qdf), cat).toPandas()
     for r in got.itertuples():
         assert r.url == idx.url_of[r.doc_id]

@@ -1,5 +1,5 @@
 """Row-level delete/upsert (SURVEY K4/K5, reference vector_db.py:54-91):
-after deleting or replacing documents, both engines rank exactly as an
+after deleting or replacing documents, the engine ranks exactly as an
 oracle over the post-edit corpus — and only the affected buckets rewrite."""
 
 import math
@@ -11,11 +11,7 @@ from pyspark.sql import functions as F
 
 from information_retrieval_images_spark import fixtures
 from information_retrieval_images_spark.catalog import Catalog
-from information_retrieval_images_spark.operators.bm25 import (
-    attach_urls,
-    bm25_topk_naive,
-    bm25_topk_wand,
-)
+from information_retrieval_images_spark.operators.bm25 import attach_urls, bm25_topk_wand
 from information_retrieval_images_spark.operators.index_build import build_index
 from information_retrieval_images_spark.operators.maintenance import delete_docs, upsert_docs
 from information_retrieval_images_spark.oracle import build_oracle_index, oracle_topk
@@ -24,9 +20,9 @@ N_DOCS = 200
 QUERIES = ["term000000", "term000003 term000120", "term000401 term000000"]
 
 
-def _rank_urls(spark, cat, query_text, engine, k=10):
+def _rank_urls(spark, cat, query_text, k=10):
     qdf = spark.createDataFrame([(0, query_text, k)], "query_id int, query_text string, k int")
-    got = attach_urls(engine(spark, cat, qdf), cat).toPandas().sort_values("rank")
+    got = attach_urls(bm25_topk_wand(spark, cat, qdf), cat).toPandas().sort_values("rank")
     return list(zip(got["url"], got["bm25_score"]))
 
 
@@ -34,11 +30,10 @@ def _assert_matches_oracle(spark, cat, corpus_pdf):
     idx = build_oracle_index(corpus_pdf, lang="en")
     for qtext in QUERIES:
         want = [(url, score) for _, url, score in oracle_topk(idx, qtext, k=10)]
-        for engine in (bm25_topk_wand, bm25_topk_naive):
-            got = _rank_urls(spark, cat, qtext, engine)
-            assert [u for u, _ in got] == [u for u, _ in want], (qtext, engine.__name__)
-            for (_, a), (_, b) in zip(got, want):
-                assert math.isclose(a, b, rel_tol=1e-9)
+        got = _rank_urls(spark, cat, qtext)
+        assert [u for u, _ in got] == [u for u, _ in want], qtext
+        for (_, a), (_, b) in zip(got, want):
+            assert math.isclose(a, b, rel_tol=1e-9)
 
 
 @pytest.fixture(scope="module")

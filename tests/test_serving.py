@@ -1,5 +1,5 @@
 """Serving path (reference server.py:128-177): SearchSession warm queries +
-the stdlib HTTP wrapper, rank-identical to the engines."""
+the stdlib HTTP wrapper, rank-identical to the oracle."""
 
 import json
 import threading
@@ -133,15 +133,17 @@ def test_http_search_requests_overlap(served, monkeypatch):
     Rank identity under concurrency is asserted on the real responses."""
     import urllib.request
 
+    from information_retrieval_images_spark import serving
+
     session, idx = served
     barrier = threading.Barrier(2, timeout=60)
-    real_engine = session.engine
+    real_engine = serving.bm25_topk_wand
 
     def barriered(spark, catalog, qbatch, **kw):
         barrier.wait()  # passes only when BOTH requests are in-flight
         return real_engine(spark, catalog, qbatch, **kw)
 
-    monkeypatch.setattr(session, "engine", barriered)
+    monkeypatch.setattr(serving, "bm25_topk_wand", barriered)
     srv = make_http_server(session, port=0)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()

@@ -1,23 +1,18 @@
 """engine="sql" parity: the all-JVM build path (extract_text_expr +
-posting_runs_sql + window id assignment) must produce the IDENTICAL index to
-the arrow path — same doc ids, same text bytes, same block rows.
+sorted_posting_runs_sql + window id assignment) must produce the IDENTICAL
+index to the arrow path — same doc ids, same text bytes, same block rows.
 
 Why it exists: built-in expressions are Spark's fast path (whole-stage
 codegen, no Python workers); the arrow path stays the normative input-hint
 contract, and this suite is the proof that "sql" is a pure optimization."""
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from information_retrieval_images_spark import fixtures
 from information_retrieval_images_spark.catalog import Catalog
-from information_retrieval_images_spark.operators.index_build import (
-    build_index,
-    posting_runs,
-    posting_runs_sql,
-)
+from information_retrieval_images_spark.operators.index_build import build_index
 from information_retrieval_images_spark.textproc import (
     doc_len_expr,
     extract_text_expr,
@@ -111,32 +106,6 @@ def test_extract_expr_matches_on_fixture_corpus(spark):
     )
     assert got["text"].tolist() == want
     assert got["dl"].tolist() == want_dl
-
-
-def test_posting_runs_sql_matches_arrow(spark):
-    pages = fixtures.make_pages_pandas(60)
-    texts = extract_text_series(pages["html"])
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": np.arange(len(pages), dtype=np.int64),
-                "dl": [len(t.split()) for t in texts],
-                "text": texts,
-            }
-        )
-    )
-
-    def norm(df):
-        return (
-            df.toPandas()
-            .astype({"doc_id": "int64", "tf": "int64", "dl": "int64"})
-            .sort_values(["term", "doc_id"])
-            .reset_index(drop=True)
-        )
-
-    a = norm(posting_runs(docs.select("doc_id", "dl", "text")))
-    b = norm(posting_runs_sql(docs))
-    pd.testing.assert_frame_equal(a[["term", "doc_id", "tf", "dl"]], b[["term", "doc_id", "tf", "dl"]])
 
 
 @pytest.mark.parametrize("n_docs", [150])
