@@ -87,7 +87,7 @@ def main() -> None:
     # AFTER all reps, because a rep's closing bracket is its SETTLED probe
     probe_seq: list[tuple[str, int, str, float]] = []
 
-    def timed_build(name: str, **kwargs):
+    def timed_build(name: str):
         """One probe-bracketed build rep: pre/post 8-proc memcpy GB/s are
         recorded per rep. The immediate post-probe is depressed for ~20-30 s
         by worker teardown AND by the bench's own still-alive local[N] JVM
@@ -105,7 +105,7 @@ def main() -> None:
         pre = bw_probe(8, 1.5)
         t0 = time.time()
         metrics = build_index(
-            spark, pages, cat, lang="en", n_buckets=2, bucket_concurrency=2, **kwargs
+            spark, pages, cat, lang="en", n_buckets=2, bucket_concurrency=2
         )
         record(name, time.time() - t0)
         post = bw_probe(8, 1.5)
@@ -136,35 +136,28 @@ def main() -> None:
         clean = [w for w, ok in zip(walls, build_clean[name]) if ok]
         return min(clean) if clean else min(walls)
 
-    def build_leg(name: str, **kwargs):
+    def build_leg(name: str):
         """BUILD_REPS probe-bracketed reps, topped up to BUILD_REPS_MAX while
         no rep even STARTED in a healthy window (pre-probe >= floor) — final
         cleanliness is settled later (settle_build_gate), but a leg whose
         every rep began degraded deserves extra draws now."""
         m = None
         for _ in range(BUILD_REPS):
-            m = timed_build(name, **kwargs)
+            m = timed_build(name)
         while (
             not any(p[0] >= MIN_PROBE_GBS for p in build_probes[name])
             and len(build_probes[name]) < BUILD_REPS_MAX
         ):
-            m = timed_build(name, **kwargs)
+            m = timed_build(name)
         return m
 
     metrics = build_leg("index_build")
     extras["n_docs_indexed"] = metrics["n_docs"]
 
-    # second build datapoint: the all-JVM engine (engine="sql", bit-identical
-    # index — tests/test_sql_engine.py). The default arrow path measures the
-    # input-hint contract (pandas-UDF extraction); this one is robust to the
-    # sandbox host's python-process throttling, so the pair separates engine
-    # regressions from host weather in round-over-round comparisons.
-    metrics = build_leg("index_build_sql", engine="sql")
     settle_build_gate()
     extras["build_docs_per_sec"] = round(
         extras["n_docs_indexed"] / best_of_clean("index_build"), 1
     )
-    extras["build_docs_per_sec_sql"] = round(metrics["n_docs"] / best_of_clean("index_build_sql"), 1)
     extras["build_probe_gbs"] = build_probes
     extras["build_rep_clean"] = build_clean
     extras["build_probe_floor_gbs"] = MIN_PROBE_GBS

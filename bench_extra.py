@@ -7,7 +7,7 @@ Usage:
   python bench_extra.py gates  [rep_count]   # gate queries only, interleaved
   python bench_extra.py noop   [rep_count]   # same, with a noop sink instead
                                              # of .count() (guide §1.4)
-  python bench_extra.py build  [engine]      # one traced build (IR_TRACE=1)
+  python bench_extra.py build                # one traced build (IR_TRACE=1)
   python bench_extra.py query  [rep_count]   # wand 50q + singles only
 
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in bench.py.
@@ -66,7 +66,6 @@ def main() -> None:
                 record(name, time.time() - t0)
         spark.sparkContext.setJobDescription(None)
     elif mode == "build":
-        engine = sys.argv[2] if len(sys.argv) > 2 else "arrow"
         import shutil
 
         from information_retrieval_images_spark import fixtures
@@ -84,10 +83,8 @@ def main() -> None:
         shutil.rmtree(wh, ignore_errors=True)
         cat = Catalog(spark, wh)
         t0 = time.time()
-        m = build_index(
-            spark, pages, cat, lang="en", n_buckets=2, bucket_concurrency=2, engine=engine
-        )
-        record(f"build_{engine}", time.time() - t0)
+        m = build_index(spark, pages, cat, lang="en", n_buckets=2, bucket_concurrency=2)
+        record("build_arrow", time.time() - t0)
         print(f"build metrics: {m}", file=sys.stderr)
     elif mode == "query":
         reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3

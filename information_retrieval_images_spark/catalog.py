@@ -16,6 +16,7 @@ belong to the build job, not the sink.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +66,11 @@ class Catalog:
         # dir-swap paths (delete/compact staging) call invalidate_reads()
         # explicitly because files change BEFORE their checkpoint row lands.
         self._df_cache: dict[str, DataFrame] = {}
+        # Iceberg: the first append to a table creates it (a fresh build
+        # drops every table). Bucket pipelines and sidecar commits append
+        # from several driver threads, so the exists-check and the create
+        # run under one lock: exactly one writer creates, the rest append.
+        self._create_lock = threading.Lock()
 
     def index_version(self) -> object:
         """Cheap driver-side fingerprint of index state — NO Spark job.
@@ -208,8 +214,12 @@ class Catalog:
                 writer = writer.partitionedBy(*[col(c) for c in partition_by])
             if mode == "overwrite":
                 writer.createOrReplace()
-            else:
-                writer.append()
+                return
+            with self._create_lock:
+                if not self.exists(name):
+                    writer.create()
+                    return
+            writer.append()
         else:
             w = df.write.mode(mode)
             if partition_by:

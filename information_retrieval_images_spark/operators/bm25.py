@@ -161,7 +161,7 @@ def _group_dls(ids_g: np.ndarray, dls_g: np.ndarray, doc_ids: np.ndarray, g: int
             f"doclens sidecar inconsistency: doc_group {g} postings contain "
             f"doc ids absent from the sidecar (e.g. {missing[:3].tolist()}) — "
             "postings and doclens were written by different commits; re-encode "
-            "the affected bucket (operators.incremental.encode_bucket_postings)"
+            "the affected bucket (operators.index_build.encode_bucket_postings)"
         )
     return dls_g[pos].astype(np.float64)
 

@@ -47,38 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from .index_build import (
-    CHECKPOINT_SCHEMA,
-    DOC_GROUP_BITS,
-    assign_doc_ids,
-    encode_blocks,
-    posting_runs,
-    write_bucket,
-)
-
-
-def encode_bucket_postings(
-    spark: SparkSession,
-    catalog: Catalog,
-    bucket: int,
-    avgdl: float,
-    nparts: int,
-    bloom_n_keys: int | None = None,
-) -> None:
-    """(Re)build one bucket's postings + stats from the docs table — the
-    shared bucket-rewrite unit used by append, crash repair and row deletes.
-    Idempotent: write_bucket replaces the bucket's existing rows."""
-    bucket_docs = catalog.read("docs").where(F.col("bucket") == bucket)
-    runs = posting_runs(bucket_docs, min_parallelism=nparts).withColumn(
-        "doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS)
-    )
-    sorted_runs = (
-        runs.repartition(nparts, "term", "doc_group").sortWithinPartitions("term", "doc_id").drop("doc_group")
-    )
-    blocks = encode_blocks(sorted_runs, avgdl)
-    write_bucket(
-        catalog, blocks, bucket_docs, bucket, nparts, n_keys=bloom_n_keys, tp_n=catalog.tp_n()
-    )
+from .index_build import CHECKPOINT_SCHEMA, assign_doc_ids, encode_bucket_postings, write_stats_global
 
 
 def _checkpointed_buckets(catalog: Catalog) -> set[int]:
@@ -188,13 +157,10 @@ def append_bucket(
         n_docs, sum_dl = n0 + n_new, sum0 + (sum_bucket - sum_orphan)
     else:
         n_docs, sum_dl = n0 + n_bucket, sum0 + sum_bucket
-    from .index_build import write_stats_global
+    tp_n = catalog.tp_n()
+    avgdl = write_stats_global(catalog, n_docs, sum_dl, max(max0, max_bucket), p_logical, tp_n)
 
-    avgdl = write_stats_global(
-        catalog, n_docs, sum_dl, max(max0, max_bucket), p_logical, catalog.tp_n()
-    )
-
-    encode_bucket_postings(spark, catalog, bucket, avgdl, nparts, bloom_n_keys=n_bucket)
+    encode_bucket_postings(catalog, catalog.read("docs"), bucket, avgdl, nparts, tp_n, n_keys=n_bucket)
 
     lineage = json.dumps(
         {"job": "append_bucket", "bucket": bucket, "avgdl": avgdl, "start_id": start_id, "repaired": n_orphaned}

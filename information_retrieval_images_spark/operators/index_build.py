@@ -14,7 +14,8 @@ Pipeline (SURVEY.md §3.3 target lifecycle):
        Deterministic on any cluster width, no sampling, no corpus persist,
        no global sort)
     -> docs table (doc_id, url, dl, text, bucket)
-    -> per BUCKET (checkpointed, resumable):
+    -> per BUCKET (checkpointed, resumable; encode_bucket_postings, the one
+       bucket encoder that append, delete and compaction also call):
          mapInPandas SPIMI run generation -> (term, doc_id, tf, dl)
          -> repartition(P, term, doc_group)  # THE big shuffle; hashing on
             (term, doc_group = doc_id >> 14) splits Zipf head terms across
@@ -29,6 +30,9 @@ Pipeline (SURVEY.md §3.3 target lifecycle):
             doc-group scoring is exact; per-block max_tf_norm = WAND bound)
          -> append postings (bucket-partitioned) + checkpoint row w/ metrics
     -> stats table (term df) derived from postings; global (N, avgdl) from docs
+
+Every Python step is a vectorized pandas/Arrow UDF over the shared textproc
+kernels; there is one build path.
 
 At 10^12 docs each bucket is an independent Iceberg append commit; resume
 left-anti-joins pages against the checkpoint manifest exactly like the
@@ -53,11 +57,8 @@ from ..catalog import Catalog
 from ..textproc import (
     P_LOGICAL,
     bm25_tf_norm,
-    doc_len_expr,
-    extract_text_expr,
     extract_text_series,
     term_frequencies_batch,
-    tokenize_series,
 )
 
 # Blocks never span a DOC_GROUP boundary: every posting of doc d lives in a
@@ -174,7 +175,6 @@ def assign_doc_ids(
     start_id: int = 0,
     fixed_bucket: int | None = None,
     p_logical: int = P_LOGICAL,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Deterministic dense doc ids + extracted text, with NO corpus persist
     and NO sampled shuffle.
@@ -186,7 +186,9 @@ def assign_doc_ids(
     Three stages, all deterministic:
     1. counts per url_group — a column-pruned scan of ``url`` only -> driver
        prefix sums over P_LOGICAL rows;
-    2. EXTRACT on the scan side, BEFORE any shuffle: the html payload is
+    2. EXTRACT on the scan side, BEFORE any shuffle, with the contract
+       kernel (textproc.extract_text_series in a mapInPandas UDF, so the
+       text is byte-identical to the oracle's per url): the html payload is
        ~30-60x larger than the extracted text (real pages are 50-100 KB of
        markup for 1-2 KB of text), so extracting first means the id shuffle
        moves text, never html — at 100 TB of pages that is the difference
@@ -207,15 +209,6 @@ def assign_doc_ids(
     group's payloads in pandas memory: at 10^9 docs a url_group is ~10^6
     docs, gigabytes per worker.) The counter dict is bounded by the number
     of groups per partition (<= P_LOGICAL).
-
-    ``engine``: "arrow" (default) runs extraction + assignment in pandas/
-    Arrow UDFs — the normative contract path. "sql" computes the SAME ids
-    and the SAME text with zero Python workers: extraction via the
-    whole-stage-codegen replica (textproc.extract_text_expr, proven
-    byte-identical on the test battery) projected scan-side before the
-    shuffle, and id assignment as offset[g] + row_number() over a
-    (partitionBy g, orderBy url) window — the same hash shuffle + in-
-    partition sort the arrow path performs, with identical determinism.
     """
     spark = pages.sparkSession
     nparts = num_partitions or spark.sparkContext.defaultParallelism
@@ -232,35 +225,6 @@ def assign_doc_ids(
     boff = spark.sparkContext.broadcast(offsets)
 
     src = pages.select("url", "html").withColumn("g", _group_expr(p_logical))
-    if engine == "sql":
-        from pyspark.sql import Window
-
-        # decode() must REPLACE malformed UTF-8 (not ANSI-throw) to match the
-        # Python kernel's errors="replace" — session.SPARK_CONF sets this, but
-        # set it here too so a plain SparkSession gets a building engine
-        # instead of a MALFORMED_CHARACTER_CODING crash on the first bad byte
-        spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
-        ext = src.select(
-            "g", "url", extract_text_expr(F.col("html")).alias("text")
-        ).withColumn("dl", doc_len_expr(F.col("text")))
-        off_df = spark.createDataFrame(
-            [(g, o) for g, o in offsets.items()], "g long, goff long"
-        )
-        w = Window.partitionBy("g").orderBy("url")
-        assigned = (
-            ext.join(F.broadcast(off_df), "g")
-            .withColumn(
-                "doc_id",
-                (F.row_number().over(w) - 1).cast("long") + F.col("goff") + F.lit(int(start_id)),
-            )
-            .withColumn(
-                "bucket",
-                F.lit(int(fixed_bucket)).cast("int")
-                if fixed_bucket is not None
-                else (F.col("doc_id") % n_buckets).cast("int"),
-            )
-        )
-        return assigned.select("doc_id", "url", "dl", "text", "bucket")
     if src.rdd.getNumPartitions() < nparts:
         src = src.repartition(nparts)
 
@@ -343,39 +307,6 @@ def posting_runs(docs: DataFrame, min_parallelism: int | None = None) -> DataFra
             yield term_frequencies_batch(pdf["doc_id"], pdf["text"])
 
     return src.mapInPandas(gen, schema=RUNS_SCHEMA)
-
-
-def sorted_posting_runs_sql(docs: DataFrame, nparts: int) -> DataFrame:
-    """All-JVM (term, doc_id)-sorted posting runs in ONE shuffle (r6,
-    guide §2.4 "remove shuffles outright").
-
-    The old sql pipeline paid two full shuffles of the posting volume:
-    groupBy(term, doc_id, dl) exchanged ~unique pairs to aggregate tf, then
-    ``repartition(nparts, term, doc_group)`` exchanged them AGAIN into the
-    encoder's layout. Here the exploded token stream is hash-repartitioned
-    straight into the encoder's (term, doc_group) layout and the tf
-    aggregate runs ON that partitioning: HashPartitioning(term, doc_group)
-    satisfies the aggregate's ClusteredDistribution(term, doc_group, doc_id,
-    dl) because doc_group is a function of doc_id and the partitioning keys
-    are a subset of the grouping keys — Catalyst plans NO second exchange
-    (asserted in tests/test_sql_engine.py). Same rows, same layout, same
-    blocks as before — one exchange instead of two."""
-    toks = (
-        docs.select(
-            "doc_id",
-            "dl",
-            F.explode(F.split(F.lower(F.col("text")), " ", -1)).alias("term"),
-        )
-        .where(F.col("term") != "")
-        .withColumn("doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS))
-    )
-    return (
-        toks.repartition(nparts, "term", "doc_group")
-        .groupBy("term", "doc_group", "doc_id", "dl")
-        .agg(F.count("*").cast("int").alias("tf"))
-        .select("term", "doc_id", "tf", F.col("dl").cast("int").alias("dl"))
-        .sortWithinPartitions("term", "doc_id")
-    )
 
 
 # --- Block encoder --------------------------------------------------------------
@@ -509,17 +440,10 @@ def build_index(
     value is refused for the same reason as p_logical (already-committed
     buckets' tp directories were laid out under the pinned modulus).
 
-    ``engine``: "arrow" (default) — extraction/tokenization in vectorized
-    pandas UDFs, the input-hint contract path. "sql" — the whole pipeline up
-    to block encoding runs JVM-side (extract_text_expr + sorted_posting_runs_sql +
-    window id assignment): identical output index, proven bit-identical in
-    tests/test_sql_engine.py EXCEPT for one documented input class —
-    UTF-8-encoded surrogate byte sequences (ED A0-BF 80-BF), where Java's
-    decoder emits one U+FFFD per 3-byte sequence and Python's one per byte
-    (pinned in test_extract_expr_surrogate_bytes_known_divergence) — with
-    only the block encoder left in Python.
-    Prefer "sql" where Python-worker throughput is the bottleneck — built-in
-    expressions are the fast path, UDFs the slow one.
+    ``engine`` accepts only "arrow": extraction and tokenization run in the
+    vectorized pandas UDFs, the one build path. The parameter stays for
+    existing callers; any other value raises ValueError before anything is
+    dropped.
 
     ``bucket_concurrency``: how many bucket pipelines run concurrently from
     driver threads (default 1 = serial). 2-3 overlaps each bucket's fixed
@@ -527,6 +451,8 @@ def build_index(
     executor-side resource use (task slots bound total concurrency); the
     kill/resume contract is unchanged (see the in-function comment).
     """
+    if engine != "arrow":
+        raise ValueError(f"unknown build engine {engine!r}: the only index-build engine is 'arrow'")
     t_start = time.time()
     trace = os.environ.get("IR_TRACE") == "1"
     t_last = [t_start]
@@ -584,7 +510,7 @@ def build_index(
     # reads only (bucket, dl, doc_id), bloom only url).
     if not (resume and catalog.exists("docs")):
         docs = assign_doc_ids(
-            pages, n_buckets=n_buckets, num_partitions=nparts, p_logical=p_logical, engine=engine
+            pages, n_buckets=n_buckets, num_partitions=nparts, p_logical=p_logical
         )
         # directory-partition by bucket (each of the nparts tasks writes one
         # file per bucket): bucket-filtered reads prune directories AND keep
@@ -620,36 +546,14 @@ def build_index(
 
     def _build_bucket(b: int) -> None:
         t0 = time.time()
-        # rows from a killed run of this bucket are discarded by write_bucket
-        # (bucket-directory overwrites on parquet, DELETE first on Iceberg)
-        bucket_docs = docs.where(F.col("bucket") == b)
-        if engine == "sql":
-            # one exchange: token stream repartitioned straight into the
-            # encoder's (term, doc_group) layout, tf aggregated ON that
-            # partitioning (see sorted_posting_runs_sql)
-            sorted_runs = sorted_posting_runs_sql(bucket_docs, nparts)
-        else:
-            runs = posting_runs(bucket_docs, min_parallelism=nparts).withColumn(
-                "doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS)
-            )
-            # HASH repartition on (term, doc_group): same co-location and
-            # head-term splitting as a range shuffle, but fully deterministic
-            # with NO boundary-sampling pass (a range shuffle would re-execute
-            # — or force caching of — the whole SPIMI kernel just to sample
-            # boundaries). Term-lookup pruning is preserved: each output file
-            # is sorted by (term, doc_id), so parquet row-group min/max stats
-            # stay selective.
-            sorted_runs = (
-                runs.repartition(nparts, "term", "doc_group")
-                .sortWithinPartitions("term", "doc_id")
-                .drop("doc_group")
-            )
-        blocks = encode_blocks(sorted_runs, avgdl)
-        write_bucket(
-            catalog, blocks, bucket_docs, b, nparts, n_keys=per_bucket.get(b, (0, 0))[0], tp_n=tp_n
-        )
-        _tr(f"bucket{b}_postings_stats")
         nd, toks = per_bucket.get(b, (0, 0))
+        # rows from a killed run of this bucket are discarded by write_bucket
+        # (bucket-directory overwrites on parquet, DELETE first on Iceberg).
+        # tp_n is the local pinned value: catalog.tp_n() would re-read
+        # stats_global once per bucket, since every checkpoint row moves the
+        # catalog's cache version.
+        encode_bucket_postings(catalog, docs, b, avgdl, nparts, tp_n, n_keys=nd)
+        _tr(f"bucket{b}_postings_stats")
         wall_ms = int((time.time() - t0) * 1000)
         lineage = json.dumps(
             {
@@ -726,7 +630,7 @@ def _write_postings_rows(
 
 
 def _write_bucket_stats(
-    catalog: Catalog, blocks: DataFrame, bucket: int, nparts: int, tp_n: int = TERM_PREFIX_PARTITIONS
+    catalog: Catalog, blocks: DataFrame, bucket: int, tp_n: int = TERM_PREFIX_PARTITIONS
 ) -> None:
     bstats = (
         blocks.groupBy("term")
@@ -745,12 +649,41 @@ def _write_bucket_stats(
         )
 
 
+def encode_bucket_postings(
+    catalog: Catalog,
+    docs: DataFrame,
+    bucket: int,
+    avgdl: float,
+    nparts: int,
+    tp_n: int,
+    n_keys: int | None = None,
+) -> None:
+    """(Re)build one bucket's postings, stats and sidecars from its rows of
+    ``docs`` — the one bucket encoder that build, append, delete and
+    compaction share. ``n_keys`` (the bucket's doc count) sizes the url
+    bloom. Idempotent: write_bucket replaces the bucket's existing rows."""
+    bucket_docs = docs.where(F.col("bucket") == bucket)
+    runs = posting_runs(bucket_docs, min_parallelism=nparts).withColumn(
+        "doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS)
+    )
+    # HASH repartition on (term, doc_group): same co-location and head-term
+    # splitting as a range shuffle, but fully deterministic with NO
+    # boundary-sampling pass (a range shuffle would re-execute — or force
+    # caching of — the whole SPIMI kernel just to sample boundaries).
+    # Term-lookup pruning is preserved: each output file is sorted by (term,
+    # doc_id), so parquet row-group min/max stats stay selective.
+    sorted_runs = (
+        runs.repartition(nparts, "term", "doc_group").sortWithinPartitions("term", "doc_id").drop("doc_group")
+    )
+    blocks = encode_blocks(sorted_runs, avgdl)
+    write_bucket(catalog, blocks, bucket_docs, bucket, n_keys=n_keys, tp_n=tp_n)
+
+
 def write_bucket(
     catalog: Catalog,
     blocks: DataFrame,
     bucket_docs: DataFrame,
     bucket: int,
-    nparts: int,
     n_keys: int | None = None,
     tp_n: int = TERM_PREFIX_PARTITIONS,
 ) -> None:
@@ -808,7 +741,7 @@ def write_bucket(
         _timed("postings", _write_postings_rows, catalog, blocks, bucket, tp_n)
         with ThreadPoolExecutor(max_workers=3) as ex:
             futs = [
-                ex.submit(_timed, "stats", _write_bucket_stats, catalog, blocks, bucket, nparts, tp_n),
+                ex.submit(_timed, "stats", _write_bucket_stats, catalog, blocks, bucket, tp_n),
                 ex.submit(_timed, "doclens", write_bucket_doclens, catalog, bucket_docs, bucket),
                 ex.submit(_timed, "bloom", write_bucket_bloom, catalog, bucket_docs, bucket, n_keys),
             ]

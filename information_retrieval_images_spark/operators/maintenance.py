@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
-from .incremental import append_bucket, encode_bucket_postings
-from .index_build import CHECKPOINT_SCHEMA
+from .incremental import append_bucket
+from .index_build import CHECKPOINT_SCHEMA, encode_bucket_postings, write_stats_global
 
 
 # upsert url sets at or below this size are collected driver-side so the
@@ -166,18 +166,15 @@ def delete_docs(
 
     # 2. refresh global stats by delta (max_doc_id is never lowered — id
     #    reuse would collide doc-group scoring; see append_bucket)
-    from .index_build import write_stats_global
-
     n_docs = n0 - n_deleted
-    avgdl = write_stats_global(
-        catalog, n_docs, sum0 - sum_deleted, max0, catalog.p_logical(), catalog.tp_n()
-    )
+    tp_n = catalog.tp_n()
+    avgdl = write_stats_global(catalog, n_docs, sum0 - sum_deleted, max0, catalog.p_logical(), tp_n)
 
     # 3. re-encode postings + stats for each affected bucket (the rewrite
     #    unit); surviving counts from the locate job size the blooms — no
     #    per-bucket count job
     for b in buckets:
-        encode_bucket_postings(spark, catalog, b, avgdl, nparts, bloom_n_keys=surviving_counts[b])
+        encode_bucket_postings(catalog, catalog.read("docs"), b, avgdl, nparts, tp_n, n_keys=surviving_counts[b])
 
     lineage = json.dumps({"job": "delete_docs", "buckets": buckets, "n_deleted": n_deleted, "avgdl": avgdl})
     catalog.append_row("checkpoints", (buckets[0], "done", -n_deleted, 0, int((time.time() - t0) * 1000), lineage), CHECKPOINT_SCHEMA)
@@ -254,7 +251,7 @@ def compact_buckets(
 
     # same corpus, same N/avgdl — only the layout changed
     _, avgdl = catalog.global_query_stats()
-    encode_bucket_postings(spark, catalog, target_bucket, avgdl, nparts, bloom_n_keys=n_moved)
+    encode_bucket_postings(catalog, catalog.read("docs"), target_bucket, avgdl, nparts, catalog.tp_n(), n_keys=n_moved)
 
     lineage = json.dumps({"job": "compact_buckets", "buckets": buckets, "target": target_bucket, "n_moved": n_moved})
     catalog.append_row("checkpoints", (target_bucket, "done", n_moved, 0, int((time.time() - t0) * 1000), lineage), CHECKPOINT_SCHEMA)

@@ -74,13 +74,6 @@ SPARK_CONF = {
     # — single-threaded behavior is unchanged.
     "spark.scheduler.mode": "FAIR",
     "spark.sql.files.maxPartitionBytes": "134217728",
-    # decode(html, 'UTF-8') with REPLACE semantics instead of ANSI throw —
-    # required by the all-JVM build path (engine="sql"): real web corpora
-    # contain malformed UTF-8, Python's errors="replace" substitutes U+FFFD,
-    # and without this conf the JVM replica CRASHES the build on the first
-    # bad byte instead (textproc.extract_text_expr; runtime-settable, also
-    # set defensively by assign_doc_ids' sql branch).
-    "spark.sql.legacy.codingErrorAction": "true",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",

@@ -72,66 +72,6 @@ def extract_text(html: bytes | str) -> str:
     return extract_text_series(pd.Series([html]))[0]
 
 
-# --- JVM replica of the extraction kernel ------------------------------------
-# The same strip -> entity-decode -> whitespace-collapse -> trim pipeline as
-# extract_text_series, expressed with built-in (whole-stage-codegen) column
-# functions so the build's dominant kernel can run WITHOUT Python workers
-# (operators.index_build engine="sql"). Semantics notes:
-#
-# - java.util.regex vs Python re: the strip pattern adds (?U) so \b/\s use
-#   Unicode classes like Python's; the whitespace class is [\s\x1c-\x1f]
-#   because Python's str \s additionally matches the 0x1C-0x1F separators.
-# - entity decode: Python does ONE alternation pass; chained
-#   regexp_replace is equivalent IFF no replacement can create a later
-#   pattern's match. The six non-& entities are applied first (their
-#   replacements <, >, ", ', space occur in no entity literal), &amp; -> &
-#   LAST (its & output could otherwise combine into e.g. "&lt;" and be
-#   double-decoded: Python's single pass yields "&lt;" for input
-#   "&amp;lt;", and so does this ordering).
-# - decode('UTF-8'): under Spark 4's ANSI default, malformed bytes THROW
-#   (MALFORMED_CHARACTER_CODING) — the engine requires
-#   spark.sql.legacy.codingErrorAction=true (session.SPARK_CONF sets it;
-#   assign_doc_ids' sql branch sets it defensively) so malformed input
-#   REPLACES with U+FFFD like Python's errors="replace". Measured parity
-#   (tests/test_sql_engine.py fuzz battery): byte-identical on valid UTF-8,
-#   lone bad bytes, truncated multi-byte sequences and invalid continuations;
-#   the ONE known divergence is UTF-8-encoded surrogate byte sequences
-#   (ED A0-BF 80-BF): Python emits one U+FFFD per byte, Java one per
-#   3-byte sequence. Locale lowercase (İ, ẞ, full Unicode) measured
-#   identical between str.lower() and Spark lower().
-# extract_text_series remains the normative contract kernel (the oracle runs
-# it); the expression is an optimization proven equal on the fuzz battery
-# minus the surrogate-bytes case above.
-
-_J_STRIP = r"(?isU)<script\b.*?</script\s*>|<style\b.*?</style\s*>|<!--.*?-->|<[^>]*>"
-_J_WS = r"(?U)[\s\x1c-\x1f]+"
-_J_ENTITIES_FIRST = [(k, v) for k, v in _ENTITIES.items() if k != "&amp;"]
-
-
-def extract_text_expr(html_col):
-    """Column expression: html binary -> extracted text (JVM-side)."""
-    from pyspark.sql import functions as F
-
-    s = F.coalesce(F.decode(html_col, "UTF-8"), F.lit(""))
-    s = F.regexp_replace(s, _J_STRIP, " ")
-    for ent, rep in _J_ENTITIES_FIRST:
-        s = F.regexp_replace(s, re.escape(ent), rep)
-    s = F.regexp_replace(s, re.escape("&amp;"), "&")
-    s = F.regexp_replace(s, _J_WS, " ")
-    return F.trim(s)
-
-
-def doc_len_expr(text_col):
-    """Column expression: token count of EXTRACTED text (single-space
-    collapsed + trimmed, so a split on one space is exactly Python's
-    text.split(); empty text has zero tokens, not one empty token)."""
-    from pyspark.sql import functions as F
-
-    return F.when(F.length(text_col) == 0, F.lit(0)).otherwise(
-        F.size(F.split(text_col, " ", -1))
-    ).cast("int")
-
-
 # --- Tokenization ------------------------------------------------------------
 # Reference analyzer parity: lowercase + whitespace split (MAP.py:5-6).
 

@@ -3,7 +3,7 @@
     spark-submit --py-files ir_spark.zip jobs/build_index_job.py \
         --pages <path-or-iceberg-table> --warehouse <dir> \
         [--lang en] [--buckets 8] [--resume] [--term-partitions N] \
-        [--engine arrow|sql] [--p-logical N]
+        [--p-logical N]
 
 The same artifact runs on local[N] and a multi-executor cluster — no code
 changes, only --master/cluster conf. Build the zip with scripts/package.sh.
@@ -23,8 +23,6 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=8)
     ap.add_argument("--term-partitions", type=int, default=None)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--engine", choices=["arrow", "sql"], default="arrow",
-                    help="arrow = pandas-UDF kernels (contract path); sql = all-JVM build")
     ap.add_argument("--p-logical", dest="p_logical", type=int, default=None,
                     help="doc-id modulus (index-format parameter, pinned per index)")
     args = ap.parse_args()
@@ -52,7 +50,6 @@ def main() -> None:
         num_term_partitions=args.term_partitions,
         resume=args.resume,
         p_logical=args.p_logical,
-        engine=args.engine,
     )
     print(json.dumps(metrics))
     spark.stop()

@@ -31,12 +31,9 @@ The campaign runs until every leg has ``--target-clean`` clean samples (or
 timed build per fresh JVM. Every sample (clean or not) appends to
 BENCH/scaling_runs.jsonl with its full weather record.
 
-``--engine`` selects the build path (operators.index_build): "arrow" =
-pandas-UDF kernels (the input-hint contract path), "sql" = the all-JVM
-build (bit-identical output, tests/test_sql_engine.py). Measuring both
-separates engine scaling from the host's python-process pathology: JVM-only
-work scales on this box (r3 forensics), so the sql legs evidence the PLAN's
-scalability while the arrow legs measure the contract path under gating.
+Every new sample builds with the one build path (pandas-UDF kernels) and
+is recorded as ``"engine": "arrow"``. Round 6 also measured a since-deleted
+all-JVM ``"sql"`` build; ``--report`` still renders those recorded rows.
 
 Usage:
     python scripts/scaling_bench.py [n_docs] --campaign          # measure
@@ -48,6 +45,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import subprocess
 import sys
 import threading
@@ -130,8 +128,7 @@ def tree_cpu_s() -> float:
 cpu0 = tree_cpu_s()
 t0 = time.time()
 m = build_index(spark, pages, cat, lang="en", n_buckets={buckets},
-                num_term_partitions={cores}, engine={engine!r},
-                bucket_concurrency=2)
+                num_term_partitions={cores}, bucket_concurrency=2)
 dt = time.time() - t0
 cpu_build = tree_cpu_s() - cpu0
 from information_retrieval_images_spark import fixtures
@@ -162,8 +159,21 @@ from information_retrieval_images_spark.weather import (  # noqa: E402
 )
 
 
-def run_leg(cores: int, corpus: str, buckets: int, engine: str, timeout: int = 1800) -> dict:
-    code = WORKER.format(repo=REPO, cores=cores, corpus=corpus, buckets=buckets, engine=engine)
+_EXC_LINE = re.compile(r"^(?::\s*)?[A-Za-z_$][\w.$]*(?:Error|Exception)\b")
+
+
+def exception_line(stderr: str) -> str:
+    """The last line of a worker's stderr that starts with an exception
+    class — the Python traceback's final line, or the Java exception under
+    a Py4JJavaError — else the last non-empty line."""
+    lines = [ln.strip() for ln in stderr.splitlines() if ln.strip()]
+    hits = [ln for ln in lines if _EXC_LINE.match(ln)]
+    line = (hits or lines or [""])[-1]
+    return line.lstrip(": ")[:1000]
+
+
+def run_leg(cores: int, corpus: str, buckets: int, timeout: int = 1800) -> dict:
+    code = WORKER.format(repo=REPO, cores=cores, corpus=corpus, buckets=buckets)
     prober = InRunProber()
     prober.start()
     try:
@@ -174,6 +184,8 @@ def run_leg(cores: int, corpus: str, buckets: int, engine: str, timeout: int = 1
             timeout=timeout,
             start_new_session=True,
         )
+    except subprocess.TimeoutExpired:
+        raise RuntimeError(f"worker local[{cores}] timed out after {timeout} s") from None
     finally:
         inrun = prober.stop()
     for line in out.stdout.splitlines():
@@ -181,7 +193,7 @@ def run_leg(cores: int, corpus: str, buckets: int, engine: str, timeout: int = 1
             r = json.loads(line[len("RESULT "):])
             r["inrun_gbs"] = inrun
             return r
-    raise RuntimeError(f"worker local[{cores}] failed:\n{out.stdout[-2000:]}\n{out.stderr[-3000:]}")
+    raise RuntimeError(f"worker local[{cores}] failed: {exception_line(out.stderr)}")
 
 
 AMBIENT_SETTLE_S = 180  # settle window after leg END for the closing probe
@@ -323,28 +335,24 @@ def _load_runs() -> list[dict]:
 
 
 def campaign(args) -> None:
-    """Adaptive multi-cell campaign: one loop over every (engine, corpus,
-    width) cell, always measuring the cell with the fewest clean samples —
-    a good-weather window is never wasted on an already-satisfied cell, and
-    a frozen stretch costs only cheap pre-skips (~25 s each)."""
-    engines = args.engine.split(",")
-    cells = []  # (engine, n_docs, cores)
-    for eng in engines:
-        for nd, cs in ((args.n_docs, args.low), (args.n_docs, args.high),
-                       (args.n_docs2, args.low2), (args.n_docs2, args.high2)):
-            cells.append((eng, nd, cs))
-    corpora = {nd: ensure_corpus(nd, args.page_kb) for nd in {c[1] for c in cells}}
+    """Adaptive multi-cell campaign: one loop over every (corpus, width)
+    cell, always measuring the cell with the fewest clean samples — a
+    good-weather window is never wasted on an already-satisfied cell, and a
+    frozen stretch costs only cheap pre-skips (~25 s each)."""
+    cells = [(args.n_docs, args.low), (args.n_docs, args.high),
+             (args.n_docs2, args.low2), (args.n_docs2, args.high2)]  # (n_docs, cores)
+    corpora = {nd: ensure_corpus(nd, args.page_kb) for nd in {c[0] for c in cells}}
     t_end = time.time() + args.max_minutes * 60
 
     def clean_count(cell) -> int:
-        eng, nd, cs = cell
+        nd, cs = cell
         return sum(
             1
             for r in _load_runs()
             if r.get("cores") == cs
             and r.get("n_docs_req") == nd
             and r.get("page_kb") == args.page_kb
-            and r.get("engine", "arrow") == eng
+            and r.get("engine", "arrow") == "arrow"
             and is_clean(r, args)
         )
 
@@ -355,10 +363,10 @@ def campaign(args) -> None:
             print(json.dumps({"done": True, "clean": {str(k): v for k, v in counts.items()}}))
             return
         # fewest-clean first so a good-weather window is never wasted on an
-        # already-satisfied cell; ties break by CLI cell order (engine-major,
-        # primary corpus first) so the caller controls which pair gets scarce
-        # clear windows
-        eng, nd, cores = min(pending, key=lambda c: (counts[c], cells.index(c)))
+        # already-satisfied cell; ties break by CLI cell order (primary
+        # corpus first) so the caller controls which pair gets scarce clear
+        # windows
+        nd, cores = min(pending, key=lambda c: (counts[c], cells.index(c)))
         probe = bw_probe()
         base = {
             "cores": cores,
@@ -366,7 +374,7 @@ def campaign(args) -> None:
             "n_docs_req": nd,
             "page_kb": args.page_kb,
             "buckets": args.buckets,
-            "engine": eng,
+            "engine": "arrow",
             "fmt": FMT,
             "probe_gbs": probe,
         }
@@ -376,9 +384,9 @@ def campaign(args) -> None:
             time.sleep(args.weather_wait_s)
             continue
         try:
-            r = run_leg(cores, corpora[nd], args.buckets, eng)
+            r = run_leg(cores, corpora[nd], args.buckets)
         except Exception as e:  # a frozen-weather run may blow the timeout
-            r = {"error": str(e)[:300]}
+            r = {"error": str(e)}
         r["probe_post_gbs"] = bw_probe()
         _append_run({**base, **r})
         # settle before the next iteration's pre-probe: worker teardown (JVM
@@ -796,18 +804,21 @@ it cannot inflate a ratio). Reported numbers are best-of-CLEAN per leg;
 every raw sample (including excluded and skipped ones) is in
 BENCH/scaling_runs.jsonl.
 {"".join(blocks)}
-## Why two engines
+## Why the recorded samples show two engines (history)
 
-`arrow` is the input-hint contract path (extraction + tokenization in
-vectorized pandas UDFs). `sql` builds the bit-identical index with zero
-Python workers (textproc.extract_text_expr + sorted_posting_runs_sql; proven
-identical in tests/test_sql_engine.py). This box freezes/anti-scales groups
-of MEMORY-HEAVY PYTHON PROCESSES specifically (r3 forensics: a no-Spark
-16-process replica of the extraction stage runs 2x slower than its own
-4-process run) — so the sql legs evidence the PLAN's scaling behavior free
-of that host pathology, and the arrow legs state the contract path's number
-under clean weather. On a real cluster Python workers are spread across
-nodes, not co-scheduled onto one oversold memory bus.
+Every new sample builds with the one build path, `arrow` (extraction and
+tokenization in vectorized pandas UDFs). Until it was deleted, a second
+build path, `sql`, built the same index with zero Python workers through a
+JVM copy of the extractor; that copy differed from the contract kernel on
+UTF-8-encoded surrogate bytes. The recorded `sql` rows stay in
+BENCH/scaling_runs.jsonl and in the tables above. They were measured
+because this box freezes/anti-scales groups of MEMORY-HEAVY PYTHON
+PROCESSES specifically (r3 forensics: a no-Spark 16-process replica of the
+extraction stage runs 2x slower than its own 4-process run) — so the sql
+legs evidenced the PLAN's scaling behavior free of that host pathology, and
+the arrow legs state the contract path's number under clean weather. On a
+real cluster Python workers are spread across nodes, not co-scheduled onto
+one oversold memory bus.
 
 The sharpest single datapoint (MEASURED IN THE r5 CAMPAIGN — the figures
 in this and the preceding paragraph are quoted from that campaign's runs
@@ -874,7 +885,7 @@ the overlapped plan (n_buckets=2, bucket_concurrency=2).
 
 Probe range observed across the whole campaign: {probes[0] if probes else 0} - {probes[-1] if probes else 0} GB/s
 ({len(probes)} probes). Measured {time.strftime('%Y-%m-%d %H:%M:%S')}; regenerate with
-`python scripts/scaling_bench.py --campaign --engine <e> && python scripts/scaling_bench.py --report`.
+`python scripts/scaling_bench.py --campaign && python scripts/scaling_bench.py --report`.
 
 ## Standing structural evidence (independent of host weather)
 
@@ -921,9 +932,6 @@ def main() -> None:
                     help="corpus size for the secondary (low2/high2) legs")
     ap.add_argument("--page-kb", type=int, default=64)
     ap.add_argument("--buckets", type=int, default=1)
-    ap.add_argument("--engine", default="arrow",
-                    help="comma-separated build engines to measure: arrow, sql")
-    ap.add_argument("--report-engines", default="arrow,sql")
     # 40.0 is the documented gate floor (BENCH/BASELINE.md "Gating"): healthy
     # windows read 60-110, frozen ones <1, and r4's accumulated clean pool was
     # gated at 40 — a different default here would silently re-gate history.

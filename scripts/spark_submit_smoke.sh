@@ -46,7 +46,7 @@ cd "$SUBMIT_DIR"
 # /dev/null, so a failed build is diagnosable.
 spark-submit --master "$MASTER" --py-files ir_spark.zip \
     build_index_job.py --pages "$WORK/pages" --warehouse "$WORK/wh" \
-    --buckets 2 --engine arrow > "$WORK/build.out" 2> "$WORK/build.err"
+    --buckets 2 > "$WORK/build.out" 2> "$WORK/build.err"
 cat "$WORK/build.out"
 
 # query two terms that EXIST in the fixture vocabulary (term%06d — see

@@ -97,6 +97,18 @@ def test_wand_rank_identity(spark, corpus, built):
     _assert_rank_identical(got, expected[["query_id", "rank", "doc_id", "bm25_score"]])
 
 
+def test_build_engine_guard_keeps_index(spark, corpus, built):
+    """"arrow" is the only build engine: any other value raises before a
+    fresh build drops the tables, so the built index keeps serving the same
+    oracle-equal top-k."""
+    pages, queries, _, expected = corpus
+    cat, _ = built
+    with pytest.raises(ValueError, match="engine"):
+        build_index(spark, spark.createDataFrame(pages), cat, lang="en", n_buckets=3, engine="sql")
+    got = bm25_topk_wand(spark, cat, spark.createDataFrame(queries)).toPandas()
+    _assert_rank_identical(got, expected[["query_id", "rank", "doc_id", "bm25_score"]])
+
+
 def test_wand_single_query_one_stage_plan_and_identity(spark, corpus, built):
     """The interactive fast path (one query, fan-out 1) must plan ZERO
     exchanges — pruned scan -> coalesce(1) -> mapInPandas, no broadcast of a

@@ -10,12 +10,13 @@ pyspark.sql.functions expressions (F.col/F.lit) used inside the operators can
 be constructed; all IO goes through MagicMocks.
 """
 
+import time
 from unittest.mock import MagicMock
 
 import pytest
 
 from information_retrieval_images_spark.catalog import Catalog
-from information_retrieval_images_spark.operators import incremental, index_build, maintenance
+from information_retrieval_images_spark.operators import index_build, maintenance
 
 
 @pytest.fixture()
@@ -61,7 +62,7 @@ def test_delete_docs_iceberg_sql_sequence(icat, monkeypatch):
     monkeypatch.setattr(maintenance.F, "broadcast", lambda df: df)
     encoded = []
     monkeypatch.setattr(
-        maintenance, "encode_bucket_postings", lambda sp, c, b, avgdl, np_, **kw: encoded.append((b, avgdl))
+        maintenance, "encode_bucket_postings", lambda c, docs, b, avgdl, np_, tp_n, **kw: encoded.append((b, avgdl))
     )
 
     out = maintenance.delete_docs(ms, cat, ["http://a", "http://b"])
@@ -97,7 +98,7 @@ def test_compact_buckets_iceberg_sql_sequence(icat, monkeypatch):
     monkeypatch.setattr("information_retrieval_images_spark.operators.incremental._checkpointed_buckets", lambda c: {1000000, 1000001})
     encoded = []
     monkeypatch.setattr(
-        maintenance, "encode_bucket_postings", lambda sp, c, b, avgdl, np_, **kw: encoded.append((b, avgdl))
+        maintenance, "encode_bucket_postings", lambda c, docs, b, avgdl, np_, tp_n, **kw: encoded.append((b, avgdl))
     )
 
     out = maintenance.compact_buckets(ms, cat, [1000000, 1000001], 999999)
@@ -147,10 +148,10 @@ def test_encode_bucket_postings_iceberg_deletes_before_append(icat, monkeypatch)
     BM25 contributions."""
     cat, ms, _ = icat
     log = _log_commits(cat, ms, monkeypatch)
-    monkeypatch.setattr(incremental, "posting_runs", lambda docs, min_parallelism: MagicMock(name="runs"))
-    monkeypatch.setattr(incremental, "encode_blocks", lambda runs, avgdl: MagicMock(name="blocks"))
+    monkeypatch.setattr(index_build, "posting_runs", lambda docs, min_parallelism: MagicMock(name="runs"))
+    monkeypatch.setattr(index_build, "encode_blocks", lambda runs, avgdl: MagicMock(name="blocks"))
 
-    incremental.encode_bucket_postings(ms, cat, 3, 10.0, 8)
+    index_build.encode_bucket_postings(cat, cat.read("docs"), 3, 10.0, 8, 16)
 
     assert _commits(log) == [
         ("sql", "DELETE FROM postings WHERE bucket = 3"),
@@ -211,6 +212,50 @@ def test_fresh_build_iceberg_issues_no_delete(icat, monkeypatch):
     assert _commits(log) == [("append", "postings"), ("append", "stats"), ("append", "checkpoints")]
 
 
+def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
+    """A fresh build drops every table, so the first append to each table
+    creates it. With two bucket pipelines appending concurrently, each table
+    is created exactly once and nothing appends to a table before its
+    create."""
+    from information_retrieval_images_spark import blooms
+
+    cat, ms, _ = icat
+    created, log = set(), []
+
+    class _Writer:
+        def __init__(self, name):
+            self.name = name
+
+        def create(self):
+            time.sleep(0.1)  # hold the check-then-create window open
+            created.add(self.name)
+            log.append(("create", self.name))
+
+        def append(self):
+            assert self.name in created, f"append to {self.name} before its create"
+            log.append(("append", self.name))
+
+    ms.catalog.tableExists.side_effect = lambda name: name in created
+    append = cat.append
+
+    def recording_append(df, name):
+        df = MagicMock(name=f"{name}_df")
+        df.writeTo.side_effect = _Writer
+        append(df, name)
+
+    monkeypatch.setattr(cat, "append", recording_append)
+    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, n_keys=None: None)
+    _mock_build(icat, monkeypatch, done_buckets=[])
+
+    index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=2, bucket_concurrency=2)
+
+    tables = ["checkpoints", "postings", "stats"]
+    assert sorted(n for kind, n in log if kind == "create") == tables
+    assert sorted(n for kind, n in log if kind == "append") == tables
+    for t in tables:
+        assert next(kind for kind, n in log if n == t) == "create", log
+
+
 def test_write_bucket_iceberg_appends_both_tables(icat, monkeypatch):
     """The bucket commit's Iceberg append contract for postings: a
     tp-clustered (r6), sorted frame with the bucket column, written with
@@ -219,7 +264,7 @@ def test_write_bucket_iceberg_appends_both_tables(icat, monkeypatch):
     _log_commits(cat, ms, monkeypatch)
 
     blocks = MagicMock(name="blocks")
-    index_build.write_bucket(cat, blocks, MagicMock(name="bucket_docs"), 2, 8)
+    index_build.write_bucket(cat, blocks, MagicMock(name="bucket_docs"), 2)
 
     persisted = blocks.withColumn.return_value.persist.return_value
     # postings: tp-clustered (r6) + sorted frame + bucket column ->

@@ -48,6 +48,26 @@ def test_extract_edge_battery_locked():
         (b"", ""),
         (b"plain text no tags", "plain text no tags"),
         (b"<script >spaced</script >x<script\ny>nl</script\n>", "x"),
+        # single-pass entity decode: &amp;lt; must NOT double-decode
+        (b"&amp;lt; &amp;amp; x&amp;nbsp;y", "&lt; &amp; x&nbsp;y"),
+        (b"<p>unicode \xc3\xa9\xc3\xa0 &amp; \xe2\x82\xac10</p>", "unicode éà & €10"),
+        (b"nbsp run a\xc2\xa0\xc2\xa0b", "nbsp run a b"),  # U+00A0 is \s: collapses
+        # non-ASCII and malformed UTF-8, as real web corpora carry them:
+        # undecodable bytes become U+FFFD (errors="replace")
+        (b"<p>caf\xc3\xa9 na\xc3\xafve \xe6\xbc\xa2\xe5\xad\x97</p>", "café naïve 漢字"),
+        (b"<p>bad \xff\xfe bytes</p>", "bad �� bytes"),  # one per lone byte
+        (b"<p>trunc \xe6\xbc</p>", "trunc �"),  # truncated 3-byte sequence
+        (b"<p>\xc3\x28</p>", "�("),  # invalid continuation byte
+        (b"\xf0\x9f\x98<p>lead-trunc</p>", "� lead-trunc"),  # truncated 4-byte
+        ("<p>İstanbul Iı dotted</p>".encode(), "İstanbul Iı dotted"),
+        ("<p>ẞ sharp-s</p>".encode(), "ẞ sharp-s"),
+        # U+2028, U+2029 and U+0085 are Python \s: each collapses to a space
+        ("<p>sep\u2028line\u2029para\u0085nel</p>".encode(), "sep line para nel"),
+        (b"<p>emoji \xf0\x9f\x98\x80 ok</p>", "emoji \U0001f600 ok"),
+        ("<p>ZĀ́LGO á combining</p>".encode(), "ZĀ́LGO á combining"),
+        (b"<script>x</script><p>\x1c\x1d\x1e\x1f seps</p>", "seps"),  # 0x1C-0x1F are \s
+        # UTF-8-encoded surrogate (ED A0 80): one U+FFFD per byte
+        (b"<p>mix \xed\xa0\x80 surrogate-bytes</p>", "mix ��� surrogate-bytes"),
     ]
     got = extract_text_series(pd.Series([h for h, _ in cases]))
     for (h, want), g in zip(cases, got):
