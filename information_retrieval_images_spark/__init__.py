@@ -34,7 +34,7 @@ K1 = 1.2
 B = 0.75
 BLOCK_SIZE = 128
 
-# Index on-disk format version, recorded in stats_global and checked by every
+# Index on-disk format version, recorded in the manifest and checked by every
 # reader: bump whenever the physical layout changes incompatibly. History:
 #   1  r1: per-posting (docs/tfs/dls) varint blocks
 #   2  r2: + per-block (max_tf, min_dl) bounds
@@ -45,4 +45,7 @@ BLOCK_SIZE = 128
 #      tp directory layout is computed from it at build AND query time, so
 #      changing the module default against an existing index would silently
 #      miss postings (same bug class as the r4 p_logical fix)
-INDEX_FORMAT = 5
+#   6  one commit point: immutable bucket versions <table>/bucket=B/v=<id>
+#      published by an atomic _manifest/<seq>.json that also carries the
+#      global stats (the checkpoints and stats_global tables are gone)
+INDEX_FORMAT = 6

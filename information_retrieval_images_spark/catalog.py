@@ -1,13 +1,31 @@
-"""Table IO: Iceberg when available, plain Parquet directories otherwise.
+"""Table IO and the index's one commit point: an atomic manifest of
+immutable bucket versions.
 
-On a real cluster the index tables (``postings``, ``docs``, ``stats``,
-``checkpoints``) are Iceberg tables — atomic snapshot commits give the
-per-partition-batch transactional appends the resumable build relies on, and
-Iceberg metadata gives partition pruning on the term ranges. This sandbox has
-no Iceberg runtime jar, so the same API writes sorted Parquet directories
-(parquet row-group min/max stats on the sort columns provide the equivalent
-scan-time pruning; appends are directory-level and the checkpoint manifest
-provides the atomicity contract instead).
+Layout under the warehouse root::
+
+    <table>/bucket=B/v=<version>/...   one immutable version of bucket B
+    _manifest/<seq>.json               one file per commit, never rewritten
+
+Every write (a build bucket, append, delete, compaction) writes NEW version
+directories and never changes an existing file. It then publishes manifest
+``seq + 1``: a temp file hard-linked to its final name with ``os.link``,
+which fails if another writer already took that sequence number. A manifest
+holds the live bucket -> version map of ``docs``, ``postings``, ``stats``,
+``doclens`` and ``blooms``, the global statistics (n_docs, sum_dl, avgdl,
+max_doc_id, p_logical, tp_n, format) and the commit's lineage record. This
+is Iceberg's model (https://iceberg.apache.org/spec/): write new files, then
+swap the metadata atomically. A reader pins one manifest and reads that
+manifest's explicit directory list, so a concurrent commit is either fully
+visible to it or not at all, and an uncommitted write is invisible.
+
+Retired versions stay on disk for ``VACUUM_GRACE_MINUTES`` after the commit
+that retired them, so readers pinned to an older manifest finish; the vacuum
+at the end of each commit then deletes them and the superseded manifests.
+
+On Iceberg, ``docs``, ``postings`` and ``stats`` are Iceberg tables; the
+manifest still carries the metadata and the two plain-parquet sidecars
+(``doclens``, ``blooms``). Without the Iceberg runtime jar every table is
+sorted parquet (row-group min/max stats give the scan-time pruning).
 
 All writers take sorted DataFrames and never repartition — layout decisions
 belong to the build job, not the sink.
@@ -15,11 +33,34 @@ belong to the build job, not the sink.
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import shutil
 import threading
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+INDEX_TABLES = ("docs", "postings", "stats", "doclens", "blooms")
+# the tables write_bucket writes per bucket, all under one version id
+BUCKET_TABLES = ("postings", "stats", "doclens", "blooms")
+# tables that are Iceberg tables when the runtime is available
+ICEBERG_TABLES = ("docs", "postings", "stats")
+MANIFEST_DIR = "_manifest"
+# Retired versions and superseded manifests are kept this long, so a reader
+# pinned to an older manifest never loses a file mid-query.
+VACUUM_GRACE_MINUTES = 10
+
+
+def _now() -> float:
+    return time.time()
+
+
+class CommitConflict(RuntimeError):
+    """Another writer committed since this write read its base manifest."""
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -30,6 +71,25 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+class Snapshot:
+    """One published manifest plus the driver-side caches derived from it.
+    Immutable data, so the caches never need invalidating: a new commit is a
+    new Snapshot."""
+
+    def __init__(self, seq: int, manifest: dict):
+        self.seq = seq
+        self.manifest = manifest
+        self.tables: dict[str, dict[int, str]] = {
+            t: {int(b): v for b, v in manifest.get("tables", {}).get(t, {}).items()} for t in INDEX_TABLES
+        }
+        self.stats: dict | None = manifest.get("stats")
+        self.term_df: dict[str, int] = {}
+        self.blooms: dict | None = None
+        # reusing a DataFrame reuses its file index: a warm query skips the
+        # directory listing (~0.2-0.4 s of single-query latency)
+        self.dfs: dict[str, DataFrame] = {}
+
+
 class Catalog:
     """Warehouse of named tables rooted at a directory (or Iceberg namespace)."""
 
@@ -37,16 +97,13 @@ class Catalog:
         self.spark = spark
         self.root = root
         self.use_iceberg = iceberg_available(spark)
-        # driver-side caches for index METADATA that changes only on commit
-        # (append/delete/compact all append a checkpoint row): the single
-        # stats_global row and per-term df values. Keyed by index_version();
-        # a stale key drops the whole cache. This is what makes a warm repeat
-        # query one Spark job instead of four (VERDICT r2 "what's wrong #2").
-        self._cache_version: object = None
-        self._global_stats: tuple[int, float, int, int, int, int] | None = None
-        self._term_df: dict[str, int] = {}
+        self._snap: Snapshot | None = None
+        self._pin = threading.local()
+        # serializes this catalog's commits (build bucket pipelines commit
+        # from several threads); any other writer on the warehouse loses at
+        # os.link instead
+        self._commit_lock = threading.Lock()
         self._term_df_cap = 1_000_000  # bound driver memory (~50 MB of strings)
-        self._blooms: dict | None = None
         # Byte cap on DRIVER-side bloom materialization (VERDICT r5
         # what's-wrong #1): bloom bytes scale with the corpus (~1.25 B/doc
         # at 10 bits/key), so the delete/upsert candidate-bucket probe must
@@ -59,269 +116,318 @@ class Catalog:
         self.bloom_driver_cache_cap = int(
             os.environ.get("IR_BLOOM_DRIVER_CACHE_CAP", str(256 << 20))
         )
-        # version-keyed DataFrame memo for parquet reads: reusing the
-        # DataFrame reuses its InMemoryFileIndex, so a warm query skips the
-        # directory re-listing (~0.2-0.4 s of single-query latency). Any
-        # index commit moves the version and drops the memo; the raw
-        # dir-swap paths (delete/compact staging) call invalidate_reads()
-        # explicitly because files change BEFORE their checkpoint row lands.
-        self._df_cache: dict[str, DataFrame] = {}
         # Iceberg: the first append to a table creates it (a fresh build
-        # drops every table). Bucket pipelines and sidecar commits append
-        # from several driver threads, so the exists-check and the create
-        # run under one lock: exactly one writer creates, the rest append.
+        # drops every table). Bucket pipelines append from several driver
+        # threads, so the exists-check and the create run under one lock:
+        # exactly one writer creates, the rest append.
         self._create_lock = threading.Lock()
 
-    def index_version(self) -> object:
-        """Cheap driver-side fingerprint of index state — NO Spark job.
+    # --- the manifest ---------------------------------------------------------
 
-        Parquet path: (file count, max mtime_ns, total bytes) of the
-        checkpoints directory; every mutation commits by appending a
-        checkpoint row, so any change moves this fingerprint. Iceberg path:
-        the checkpoints table's current snapshot id (falls back to an
-        always-changing sentinel, i.e. caching disabled, if unavailable).
-        """
-        if self.use_iceberg:
-            try:
-                return (
-                    self.spark.sql("SELECT snapshot_id FROM checkpoints.snapshots ORDER BY committed_at DESC LIMIT 1")
-                    .collect()[0][0]
+    def _manifest_seqs(self) -> list[int]:
+        try:
+            names = os.listdir(self.path(MANIFEST_DIR))
+        except FileNotFoundError:
+            return []
+        return sorted(int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit())
+
+    def _manifest_path(self, seq: int) -> str:
+        return os.path.join(self.path(MANIFEST_DIR), f"{seq}.json")
+
+    def index_version(self) -> int:
+        """Sequence number of the latest manifest (0: none) — one directory
+        listing, no Spark job."""
+        seqs = self._manifest_seqs()
+        return seqs[-1] if seqs else 0
+
+    def snapshot(self) -> Snapshot:
+        """The calling thread's pinned snapshot, else the latest one."""
+        pinned = getattr(self._pin, "snap", None)
+        if pinned is not None:
+            return pinned
+        seq = self.index_version()
+        snap = self._snap
+        if snap is None or snap.seq != seq:
+            manifest = {}
+            if seq:
+                with open(self._manifest_path(seq)) as f:
+                    manifest = json.load(f)
+            snap = self._snap = Snapshot(seq, manifest)
+        return snap
+
+    @contextlib.contextmanager
+    def pinned(self):
+        """Pin one snapshot for every read this thread makes inside the
+        block (nested blocks keep the outer pin)."""
+        if getattr(self._pin, "snap", None) is not None:
+            yield self._pin.snap
+            return
+        self._pin.snap = self.snapshot()
+        try:
+            yield self._pin.snap
+        finally:
+            self._pin.snap = None
+
+    def committed_buckets(self) -> set[int]:
+        """Buckets whose postings are committed — the unit resume, the
+        append freshness guard and delete's candidate set work on."""
+        return set(self.snapshot().tables["postings"])
+
+    def new_version(self) -> str:
+        """A fresh version id: creation time (readable) plus a random tag.
+        Never all digits, so partition discovery keeps it a string."""
+        return time.strftime("%Y%m%dT%H%M%S", time.gmtime()) + "-" + uuid.uuid4().hex[:8]
+
+    def version_path(self, name: str, bucket: int, version: str) -> str:
+        return os.path.join(self.path(name), f"bucket={int(bucket)}", f"v={version}")
+
+    def version_dirs(self, name: str) -> dict[int, str]:
+        """bucket -> live version directory of ``name`` in the snapshot."""
+        return {b: self.version_path(name, b, v) for b, v in self.snapshot().tables[name].items()}
+
+    def commit(
+        self,
+        lineage: dict,
+        tables: dict[str, dict[int, str | None]] | None = None,
+        stats: dict | None = None,
+        base: Snapshot | None = None,
+    ) -> Snapshot:
+        """Publish the next manifest: ``tables`` maps table -> {bucket:
+        version, or None to drop the bucket}; ``stats`` replaces the global
+        statistics. With ``base``, the commit fails (CommitConflict) unless
+        ``base`` is still the latest manifest — the write derived its
+        statistics from it. Ends with the vacuum."""
+        from . import INDEX_FORMAT
+
+        with self._commit_lock:
+            cur = self._latest()
+            if base is not None and base.seq != cur.seq:
+                raise CommitConflict(
+                    f"manifest moved from {base.seq} to {cur.seq} during this write; retry it"
                 )
-            except Exception:
-                return object()  # unknown -> never equal -> no caching
-        p = self.path("checkpoints")
-        n, mt, sz = 0, 0, 0
-        for dirpath, _, files in os.walk(p):
-            for f in files:
-                if f.endswith(".parquet"):
-                    st = os.stat(os.path.join(dirpath, f))
-                    n += 1
-                    mt = max(mt, st.st_mtime_ns)
-                    sz += st.st_size
-        return (n, mt, sz)
+            now = _now()
+            live = {t: dict(cur.tables[t]) for t in INDEX_TABLES}
+            retired = [tuple(r) for r in cur.manifest.get("retired", [])]
+            touched = []
+            for t, changes in (tables or {}).items():
+                for b, v in changes.items():
+                    old = live[t].pop(int(b), None)
+                    if v is not None:
+                        live[t][int(b)] = v
+                    if self._is_dir_table(t):
+                        touched.append((t, int(b)))
+                        if old is not None and old != v:
+                            retired.append((t, int(b), old, now))
+            cutoff = now - VACUUM_GRACE_MINUTES * 60
+            expired = [r for r in retired if r[3] < cutoff]
+            manifest = {
+                "format": INDEX_FORMAT,
+                "seq": cur.seq + 1,
+                "committed_at": now,
+                "stats": dict(stats, format=INDEX_FORMAT) if stats is not None else cur.stats,
+                "tables": {t: {str(b): v for b, v in sorted(live[t].items())} for t in INDEX_TABLES},
+                "lineage": lineage,
+                "retired": [list(r) for r in retired if r[3] >= cutoff],
+            }
+            os.makedirs(self.path(MANIFEST_DIR), exist_ok=True)
+            tmp = os.path.join(self.path(MANIFEST_DIR), f".{uuid.uuid4().hex}.tmp")
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            try:
+                os.link(tmp, self._manifest_path(cur.seq + 1))
+            except FileExistsError:
+                raise CommitConflict(
+                    f"manifest {cur.seq + 1} was committed by another writer; retry this write"
+                ) from None
+            finally:
+                os.remove(tmp)
+            snap = self._snap = Snapshot(cur.seq + 1, manifest)
+            self._vacuum(snap, expired, touched, cutoff)
+            return snap
 
-    def _check_version(self) -> None:
-        v = self.index_version()
-        if v != self._cache_version:
-            self._cache_version = v
-            self._global_stats = None
-            self._term_df = {}
-            self._blooms = None
-            self._df_cache = {}
+    def _latest(self) -> Snapshot:
+        pinned, self._pin.snap = getattr(self._pin, "snap", None), None
+        try:
+            return self.snapshot()
+        finally:
+            self._pin.snap = pinned
+
+    def _is_dir_table(self, name: str) -> bool:
+        """True when the table's bucket versions are directories (every
+        table on parquet; only the sidecars on Iceberg)."""
+        return not (self.use_iceberg and name in ICEBERG_TABLES)
+
+    def _vacuum(self, snap: Snapshot, expired: list, touched: list, cutoff: float) -> None:
+        """Delete what no reader can still need: versions retired before
+        ``cutoff``; in the buckets this commit touched, version directories
+        no manifest references that are older than ``cutoff`` (left by a
+        crashed write); and manifests superseded before ``cutoff``."""
+        for t, b, v, _ in expired:
+            shutil.rmtree(self.version_path(t, b, v), ignore_errors=True)
+        retired = {(t, b, v) for t, b, v, _ in snap.manifest["retired"]}
+        for t, b in set(touched) | {(t, b) for t, b, _, _ in expired}:
+            bdir = os.path.dirname(self.version_path(t, b, "x"))
+            try:
+                names = os.listdir(bdir)
+            except FileNotFoundError:
+                continue
+            for n in names:
+                v, p = n[2:], os.path.join(bdir, n)
+                if n.startswith("v=") and snap.tables[t].get(b) != v and (t, b, v) not in retired:
+                    with contextlib.suppress(FileNotFoundError):
+                        if os.path.getmtime(p) < cutoff:
+                            shutil.rmtree(p, ignore_errors=True)
+            with contextlib.suppress(OSError):
+                os.rmdir(bdir)  # only succeeds once the bucket has no version left
+        seqs = self._manifest_seqs()
+        for seq, successor in zip(seqs, seqs[1:]):
+            with contextlib.suppress(FileNotFoundError):
+                if os.path.getmtime(self._manifest_path(successor)) < cutoff:
+                    os.remove(self._manifest_path(seq))
+
+    # --- global statistics and metadata caches --------------------------------
+
+    def _stats(self) -> dict:
+        """The snapshot's global statistics. Also the index-format gate: an
+        index written by an incompatible engine version (or one without a
+        manifest) fails HERE with a clear rebuild-required message instead
+        of a column-not-found error deep in a query plan."""
+        from . import INDEX_FORMAT
+
+        st = self.snapshot().stats
+        fmt = st.get("format") if st else None
+        if fmt != INDEX_FORMAT:
+            raise RuntimeError(
+                f"index format mismatch: this warehouse is format "
+                f"{fmt if fmt is not None else '<pre-v6 (no manifest)>'} "
+                f"but the engine reads format {INDEX_FORMAT}; the physical "
+                "layout changed incompatibly — rebuild the index "
+                "(operators.index_build.build_index) to use it"
+            )
+        return st
 
     def global_doc_stats(self) -> tuple[int, int, int]:
-        """(n_docs, sum_dl, max_doc_id) from stats_global, driver-cached.
-
-        Also the index-format gate: an index written by an incompatible
-        engine version fails HERE with a clear rebuild-required message
-        instead of a column-not-found error deep in a query plan (ADVICE r3
-        finding #4 — e.g. a pre-r3 warehouse lacks sum_dl/tp, a pre-r4 one
-        carries per-posting dls_enc and no doclens sidecar)."""
-        self._check_version()
-        if self._global_stats is None:
-            from . import INDEX_FORMAT
-
-            r = self.read("stats_global").collect()[0]
-            d = r.asDict()
-            fmt = d.get("format")
-            if fmt != INDEX_FORMAT:
-                raise RuntimeError(
-                    f"index format mismatch: this warehouse is format "
-                    f"{fmt if fmt is not None else '<pre-v4 (no format field)>'} "
-                    f"but the engine reads format {INDEX_FORMAT}; the physical "
-                    "layout changed incompatibly — rebuild the index "
-                    "(operators.index_build.build_index) to use it"
-                )
-            self._global_stats = (
-                int(d["n_docs"]),
-                float(d["avgdl"]),
-                int(d["sum_dl"]),
-                int(d["max_doc_id"]),
-                int(d["p_logical"]),
-                int(d["tp_n"]),
-            )
-        n, _, s, m, _, _ = self._global_stats
-        return n, s, m
+        """(n_docs, sum_dl, max_doc_id) of the snapshot."""
+        st = self._stats()
+        return int(st["n_docs"]), int(st["sum_dl"]), int(st["max_doc_id"])
 
     def global_query_stats(self) -> tuple[int, float]:
         """(n_docs, avgdl) — the pair the query engine scores with."""
-        self._check_version()
-        if self._global_stats is None:
-            self.global_doc_stats()
-        n, avgdl, _, _, _, _ = self._global_stats
-        return n, avgdl
+        st = self._stats()
+        return int(st["n_docs"]), float(st["avgdl"])
 
     def p_logical(self) -> int:
         """The index's pinned doc-id assignment modulus (format parameter)."""
-        self._check_version()
-        if self._global_stats is None:
-            self.global_doc_stats()
-        return self._global_stats[4]
+        return int(self._stats()["p_logical"])
 
     def tp_n(self) -> int:
         """The index's pinned term-prefix directory modulus (format
         parameter) — readers/writers must compute tp from THIS value, never
         from the module default (a mismatched modulus silently misses
         postings; see operators.index_build.TERM_PREFIX_PARTITIONS)."""
-        self._check_version()
-        if self._global_stats is None:
-            self.global_doc_stats()
-        return self._global_stats[5]
+        return int(self._stats()["tp_n"])
 
     def term_dfs(self, terms: list[str], tp_of=None) -> dict[str, int]:
-        """Per-term document frequency for a query's term set, memoized.
+        """Per-term document frequency for a query's term set, memoized per
+        snapshot.
 
         Misses are fetched in ONE IN-list-pruned job over ``stats`` (plus
         term-prefix partition pruning when ``tp_of`` is given); absent terms
         are cached as 0 so repeat queries with unknown terms stay job-free.
-        The memo is invalidated wholesale on any index commit and capped to
-        bound driver memory.
+        The memo is capped to bound driver memory.
         """
-        self._check_version()
-        missing = [t for t in terms if t not in self._term_df]
-        if missing:
-            stats = self.read("stats").where(F.col("term").isin(missing))
-            if tp_of is not None:
-                stats = stats.where(F.col("tp").isin(sorted({tp_of(t) for t in missing})))
-            rows = stats.groupBy("term").agg(F.sum("df").alias("df")).collect()
-            found = {r["term"]: int(r["df"]) for r in rows}
-            if len(self._term_df) + len(missing) > self._term_df_cap:
-                self._term_df = {}
-            for t in missing:
-                self._term_df[t] = found.get(t, 0)
-        return {t: self._term_df[t] for t in terms}
+        with self.pinned() as snap:
+            missing = [t for t in terms if t not in snap.term_df]
+            if missing:
+                stats = self.read("stats").where(F.col("term").isin(missing))
+                if tp_of is not None:
+                    stats = stats.where(F.col("tp").isin(sorted({tp_of(t) for t in missing})))
+                rows = stats.groupBy("term").agg(F.sum("df").alias("df")).collect()
+                found = {r["term"]: int(r["df"]) for r in rows}
+                if len(snap.term_df) + len(missing) > self._term_df_cap:
+                    snap.term_df.clear()
+                for t in missing:
+                    snap.term_df[t] = found.get(t, 0)
+            return {t: snap.term_df.get(t, 0) for t in terms}
 
     def bucket_blooms(self) -> dict[int, tuple[int, bytes]]:
-        """Per-bucket url bloom filters (blooms.py sidecar), driver-cached by
-        index version — delete_docs consults them to prune its locate scan."""
-        self._check_version()
-        if self._blooms is None:
+        """Per-bucket url bloom filters (blooms.py sidecar), cached per
+        snapshot — delete_docs consults them to prune its locate scan."""
+        snap = self.snapshot()
+        if snap.blooms is None:
             from .blooms import load_blooms
 
-            self._blooms = load_blooms(self)
-        return self._blooms
+            snap.blooms = load_blooms(self)
+        return snap.blooms
+
+    # --- table IO ---------------------------------------------------------------
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-        self._df_cache = {}
-        if self.use_iceberg:
-            writer = df.writeTo(f"{name}")
-            if partition_by:
-                from pyspark.sql.functions import col
-
-                writer = writer.partitionedBy(*[col(c) for c in partition_by])
-            if mode == "overwrite":
-                writer.createOrReplace()
+        """Iceberg table write: ``overwrite`` creates or replaces the table,
+        ``append`` appends (creating the table on first use)."""
+        writer = df.writeTo(f"{name}")
+        if partition_by:
+            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
+        if mode == "overwrite":
+            writer.createOrReplace()
+            return
+        with self._create_lock:
+            if not self.exists(name):
+                writer.create()
                 return
-            with self._create_lock:
-                if not self.exists(name):
-                    writer.create()
-                    return
-            writer.append()
-        else:
-            w = df.write.mode(mode)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(self.path(name))
+        writer.append()
 
     def append(self, df: DataFrame, name: str) -> None:
         self.write(df, name, mode="append")
 
-    # --- single-row metadata writes (r6) -------------------------------------
-    # A one-row commit (checkpoint manifest row, stats_global) through
-    # createDataFrame + a Spark write job costs a full driver job round-trip
-    # (~0.4-0.5 s each; the bloom sidecar's binary row measured 3.9 s). These
-    # rows are DRIVER data: on the parquet fallback, write them with pyarrow
-    # directly (tmp file + atomic rename; append = a fresh uuid-named file),
-    # types matched exactly to what Spark writes so mixed-writer directories
-    # read back with one schema. Iceberg mode keeps the table write path.
-
-    _PA_TYPES = {"int": "int32", "long": "int64", "double": "float64", "string": "string"}
-
-    def _row_table(self, row: tuple, schema: str):
-        import pyarrow as pa
-
-        fields, arrays = [], []
-        for spec, val in zip(schema.split(","), row):
-            col, typ = spec.strip().rsplit(" ", 1)
-            pa_t = getattr(pa, self._PA_TYPES[typ])()
-            fields.append(pa.field(col, pa_t))
-            arrays.append(pa.array([val], type=pa_t))
-        return pa.table(dict(zip([f.name for f in fields], arrays)))
-
-    def append_row(self, name: str, row: tuple, schema: str) -> None:
-        """Append ONE metadata row to a table without a Spark job (parquet
-        path); identical semantics to append(createDataFrame([row]))."""
+    def write_version(self, df: DataFrame, name: str, version: str, mode: str = "append") -> None:
+        """Write ``df`` (with a ``bucket`` column) as version ``version`` of
+        every bucket it holds: ``<name>/bucket=B/v=<version>`` on parquet,
+        a table write (``mode``) on Iceberg. Uncommitted until the caller
+        publishes the version in a manifest."""
         if self.use_iceberg:
-            self.append(self.spark.createDataFrame([row], schema), name)
-            return
-        import uuid
+            self.write(df, name, mode=mode, partition_by=["bucket"])
+        else:
+            df.withColumn("v", F.lit(version)).write.mode("append").partitionBy("bucket", "v").parquet(self.path(name))
 
-        import pyarrow.parquet as pq
-
-        self._df_cache = {}
-        d = self.path(name)
-        os.makedirs(d, exist_ok=True)
-        fname = f"part-{uuid.uuid4().hex}.parquet"
-        tmp = os.path.join(d, f".{fname}.tmp")
-        pq.write_table(self._row_table(row, schema), tmp)
-        os.replace(tmp, os.path.join(d, fname))
-
-    def overwrite_row(self, name: str, row: tuple, schema: str) -> None:
-        """Overwrite a single-row table without a Spark job (parquet path)."""
-        if self.use_iceberg:
-            self.write(self.spark.createDataFrame([row], schema), name)
-            return
-        import pyarrow.parquet as pq
-
-        self._df_cache = {}
-        d = self.path(name)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, "._part-00000.parquet.tmp")
-        pq.write_table(self._row_table(row, schema), tmp)
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                os.remove(os.path.join(d, f))
-        os.replace(tmp, os.path.join(d, "part-00000.parquet"))
-
-    def invalidate_reads(self) -> None:
-        """Drop cached DataFrames after an in-place file mutation that is not
-        yet reflected in the index version (mid-mutation dir swaps)."""
-        self._df_cache = {}
+    def read_versions(self, name: str, versions: dict[int, str]) -> DataFrame | None:
+        """The given bucket versions of a table as one DataFrame (``bucket``,
+        ``v`` and any ``tp`` come from the directory names), or None when
+        none of them holds data. Iceberg tables read whole."""
+        if not self._is_dir_table(name):
+            return self.spark.table(name)
+        dirs = [p for b, v in sorted(versions.items()) if os.path.isdir(p := self.version_path(name, b, v))]
+        if not dirs:
+            return None
+        return self.spark.read.option("basePath", self.path(name)).parquet(*dirs)
 
     def read(self, name: str) -> DataFrame:
-        if self.use_iceberg:
+        """The table as of the snapshot: its explicit live directory list."""
+        if not self._is_dir_table(name):
             return self.spark.table(name)
-        self._check_version()
-        df = self._df_cache.get(name)
+        snap = self.snapshot()
+        df = snap.dfs.get(name)
         if df is None:
-            df = self.spark.read.parquet(self.path(name))
-            self._df_cache[name] = df
+            df = self.read_versions(name, snap.tables[name])
+            if df is None:
+                raise RuntimeError(f"table {name!r} has no committed data in {self.root}")
+            snap.dfs[name] = df
         return df
 
     def exists(self, name: str) -> bool:
-        """True when the table has any parquet data file. Recursive: tables
-        written with partitionBy (docs/postings/stats use bucket=N subdirs)
-        keep their files below partition directories — a top-level-only check
-        would report them missing and silently disable the resume paths."""
-        if self.use_iceberg:
+        """True when the snapshot lists any bucket of the table (Iceberg
+        tables: when the table exists)."""
+        if not self._is_dir_table(name):
             return self.spark.catalog.tableExists(name)
-        p = self.path(name)
-        if not os.path.isdir(p):
-            return False
-        for _, _, files in os.walk(p):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return bool(self.snapshot().tables.get(name))
 
     def drop(self, name: str) -> None:
         """K8 analogue (reference drop_database, db.py:317-321)."""
-        self._df_cache = {}
-        if self.use_iceberg:
+        self._snap = None
+        if not self._is_dir_table(name):
             self.spark.sql(f"DROP TABLE IF EXISTS {name}")
         else:
-            import shutil
-
             shutil.rmtree(self.path(name), ignore_errors=True)

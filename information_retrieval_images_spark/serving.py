@@ -9,7 +9,7 @@ Two layers:
 
 - :class:`SearchSession` — the warm-path object a long-lived driver holds:
   one SparkSession + one Catalog whose driver-side metadata caches
-  (stats_global, per-term df — ``catalog.py``) stay hot across requests, so
+  (global stats, per-term df — ``catalog.py``) stay hot across requests, so
   a repeat query costs only the pruned scoring job. This is the unit the
   latency contract is written against (the ``perfbench`` ``search``
   workload: closed-loop clients on one warm session).
@@ -24,10 +24,12 @@ Two layers:
   are independent read-only jobs, each tagged with its own FAIR scheduler
   pool (session.SPARK_CONF sets spark.scheduler.mode=FAIR) so the driver
   overlaps them instead of queueing one behind another's stages. /append
-  stays strictly serialized behind a lock (the append contract —
-  operators.incremental — requires it). Horizontal scale beyond one driver
-  still comes from read-only replicas over the same
-  immutable-between-commits index tables, with ingest on ONE writer.
+  stays serialized behind a lock (each append commits against the manifest
+  it read; a concurrent one would fail its commit). Horizontal scale beyond
+  one driver comes from read-only replicas over the same warehouse, with
+  ingest on ONE writer: every commit writes new immutable bucket versions
+  and publishes them with one atomic manifest file, and each search pins
+  one manifest, so a replica's queries never see a half-applied write.
 
 No new dependencies: stdlib http only. The reference's rate-limit sleep
 (``server.py:152``, sleep(4) per Gemini call) has no analogue — scoring is
@@ -63,8 +65,8 @@ class SearchSession:
         self.spark = spark
         self.catalog = Catalog(spark, warehouse)
         self._qid_iter = itertools.count()  # atomic under the GIL
-        # appends are strictly serialized (operators.incremental contract);
-        # the threaded HTTP server funnels every /append through this lock
+        # appends commit against the manifest they read, so two at once would
+        # make one fail; the threaded HTTP server funnels every /append here
         self._append_lock = threading.Lock()
 
     def search(self, query_text: str, k: int = 10) -> list[dict]:
@@ -74,7 +76,8 @@ class SearchSession:
         FAIR scheduler pool (local properties are per-Python-thread under
         PySpark's pinned-thread mode), so two clients' independent read-only
         scoring jobs round-robin on the cluster instead of head-of-line
-        blocking behind each other's stages."""
+        blocking behind each other's stages. The scoring plan and the url
+        lookup read one pinned catalog snapshot."""
         qid = next(self._qid_iter)
         # pass the batch as a plain list: the engine normalizes driver-side,
         # so no LocalTableScan collect job is spent on the query row itself
@@ -82,7 +85,8 @@ class SearchSession:
         sc = self.spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", f"ir_search_{qid % 16}")
         try:
-            rows = attach_urls(bm25_topk_wand(self.spark, self.catalog, qbatch), self.catalog).collect()
+            with self.catalog.pinned():
+                rows = attach_urls(bm25_topk_wand(self.spark, self.catalog, qbatch), self.catalog).collect()
         finally:
             sc.setLocalProperty("spark.scheduler.pool", None)
         return [
@@ -99,20 +103,12 @@ class SearchSession:
         """Ingest pages (list of {"url", "html" bytes, "lang", optional
         "warc_ts"/"text"}) as one fresh bucket — the serving-side wrapper
         over operators.incremental.append_bucket (anti-join dedup, doc-id
-        continuation, bucket-scoped encode, checkpoint commit all apply).
-        Returns the append metrics; queries see the new docs immediately
-        (the version-keyed metadata caches invalidate on the commit).
-        Serialized behind the session's append lock — concurrent HTTP
-        ingest must not interleave (operators.incremental contract)."""
-        from .operators.incremental import _checkpointed_buckets, append_bucket
+        continuation, bucket-scoped encode, manifest commit all apply).
+        Returns the append metrics; queries see the new docs as soon as the
+        commit lands (the metadata caches belong to a manifest snapshot).
+        Serialized behind the session's append lock."""
+        from .operators.incremental import append_bucket
 
-        with self._append_lock:
-            return self._append_locked(pages, bucket, lang, _checkpointed_buckets, append_bucket)
-
-    def _append_locked(self, pages, bucket, lang, _checkpointed_buckets, append_bucket) -> dict:
-        if bucket is None:
-            used = [b for b in _checkpointed_buckets(self.catalog) if b >= HTTP_INGEST_BUCKET_START]
-            bucket = (max(used) + 1) if used else HTTP_INGEST_BUCKET_START
         pdf = pd.DataFrame(
             {
                 "url": [p["url"] for p in pages],
@@ -131,7 +127,11 @@ class SearchSession:
         df = self.spark.createDataFrame(
             pdf, "url string, warc_ts timestamp, html binary, text string, lang string"
         )
-        return append_bucket(self.spark, df, self.catalog, bucket, lang=lang)
+        with self._append_lock:
+            if bucket is None:
+                used = [b for b in self.catalog.committed_buckets() if b >= HTTP_INGEST_BUCKET_START]
+                bucket = (max(used) + 1) if used else HTTP_INGEST_BUCKET_START
+            return append_bucket(self.spark, df, self.catalog, bucket, lang=lang)
 
 
 def make_http_server(

@@ -2,14 +2,14 @@
 
 The reference has NO streaming operators (SURVEY.md §2.10) — its incremental
 behavior is ingest-by-anti-join (db.py:324-339). The batch engine covers that
-with checkpointed bucket builds. This module adds the Structured-Streaming
+with resumable bucket builds. This module adds the Structured-Streaming
 shape for the two places a production deployment streams:
 
 - :func:`incremental_index_update` — micro-batch ingest of new pages into the
   index via foreachBatch: each batch is deduped against the docs table
   (left-anti on url, the reference's md5-presence pattern) and appended as a
-  new bucket; exactly-once comes from the checkpoint manifest + streaming
-  checkpointLocation.
+  new bucket; exactly-once comes from the index manifest (catalog.py) +
+  streaming checkpointLocation.
 - :func:`windowed_event_counts` — watermarked tumbling-window aggregation over
   an event stream (the generic late-data-tolerant rollup).
 """
@@ -39,28 +39,12 @@ def pending_from_manifest(catalog, next_bucket_start: int) -> list[int]:
     buckets in the stream's own micro-batch range [next_bucket_start,
     HTTP_INGEST_BUCKET_START) — an unbounded ``>=`` filter would also sweep
     HTTP-ingest buckets (serving appends at >= 2_000_000) into the stream's
-    compaction backlog, compacting another writer's buckets."""
-    if not catalog.exists("checkpoints"):
-        return []
-    import json as _json
-
+    compaction backlog, compacting another writer's buckets. A compaction
+    retires its source buckets from the manifest, so the live micro-batch
+    buckets ARE the pending set."""
     from ..serving import HTTP_INGEST_BUCKET_START
 
-    rows = catalog.read("checkpoints").select("bucket", "lineage").collect()
-    compacted: set[int] = set()
-    for r in rows:
-        try:
-            lin = _json.loads(r["lineage"] or "{}")
-        except ValueError:
-            continue
-        if lin.get("job") == "compact_buckets":
-            compacted.update(int(b) for b in lin.get("buckets", []))
-    appended = {
-        int(r["bucket"])
-        for r in rows
-        if next_bucket_start <= int(r["bucket"]) < HTTP_INGEST_BUCKET_START
-    }
-    return sorted(appended - compacted)
+    return sorted(b for b in catalog.committed_buckets() if next_bucket_start <= b < HTTP_INGEST_BUCKET_START)
 
 
 def incremental_index_update(
@@ -77,7 +61,7 @@ def incremental_index_update(
     foreachBatch: anti-join the micro-batch against indexed urls (J2, the
     reference's cross-system anti-join done as one Spark op), then run the
     batch build for the novel rows into a fresh bucket id. Streaming
-    checkpointing + the engine's per-bucket manifest give exactly-once.
+    checkpointing + the engine's manifest commits give exactly-once.
 
     ``compact_every``: every N appended micro-batch buckets, merge them into
     one fresh bucket via ``compact_fn(buckets, target_bucket)`` (defaults to
@@ -86,14 +70,13 @@ def incremental_index_update(
     Compaction targets count DOWN from ``next_bucket_start - 1`` while batch
     buckets count up from ``next_bucket_start``, so the two id sequences
     never collide. Compaction is rank-neutral (doc ids unchanged) and
-    crash-safe (bucket-directory swap + checkpoint row), so running it inside
-    foreachBatch keeps the exactly-once story.
+    crash-safe (one manifest commit), so running it inside foreachBatch
+    keeps the exactly-once story.
 
-    The pending-compaction set is RECOVERED from the checkpoint manifest on
-    (re)start, not kept only in memory: micro-batch buckets appended since
-    the last compaction (ids in this stream's own range — see
-    pending_from_manifest — with a committed checkpoint row but not named as
-    a source in any compaction's lineage) re-enter the accumulator, so a
+    The pending-compaction set is RECOVERED from the manifest on (re)start,
+    not kept only in memory: the live micro-batch buckets (ids in this
+    stream's own range — see pending_from_manifest) re-enter the
+    accumulator, so a
     stream restart cannot silently strand them uncompacted forever (ADVICE
     r3 finding #2) nor claim another writer's buckets (ADVICE r4 #1).
     """
@@ -103,15 +86,12 @@ def incremental_index_update(
 
     def next_target() -> int:
         # restart-safe: targets are the ids below next_bucket_start already
-        # consumed by earlier compactions (recorded in the checkpoint
-        # manifest), so a resumed stream keeps descending instead of
-        # re-proposing a used id
-        from ..operators.incremental import _checkpointed_buckets
-
-        # the target range is [next_bucket_start/2, next_bucket_start): far
-        # above any initial batch-build bucket id, strictly below the
-        # micro-batch range
-        used = [b for b in _checkpointed_buckets(catalog) if next_bucket_start // 2 <= b < next_bucket_start]
+        # taken by earlier compactions (live in the manifest), so a resumed
+        # stream keeps descending instead of re-proposing a used id. The
+        # target range is [next_bucket_start/2, next_bucket_start): far above
+        # any initial batch-build bucket id, strictly below the micro-batch
+        # range
+        used = [b for b in catalog.committed_buckets() if next_bucket_start // 2 <= b < next_bucket_start]
         floor = min(used) if used else next_bucket_start
         return floor - 1
 

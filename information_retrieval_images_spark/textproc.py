@@ -142,8 +142,8 @@ def term_frequencies_batch(doc_ids: pd.Series, texts: pd.Series) -> pd.DataFrame
 # Engine side, groups shuffle by hash — no range-boundary sampling, no corpus
 # persist, and the counts pass reads only the url column.
 #
-# p_logical is pinned PER INDEX (recorded in stats_global and checkpoint
-# lineage — operators.index_build): doc ids derive from it, so resuming or
+# p_logical is pinned PER INDEX (recorded in the index manifest —
+# catalog.py, operators.index_build): doc ids derive from it, so resuming or
 # appending under a different value would renumber documents. Sizing rule at
 # scale: each group must land whole in one shuffle partition and be sorted
 # there, so choose p_logical ~= total_extracted_text_bytes / 512 MB (e.g.

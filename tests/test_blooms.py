@@ -122,13 +122,13 @@ def test_bloom_cap_forces_executor_probe_and_keeps_delete_green(
     monkeypatch.setattr(cat, "read", guarded)
     res = delete_docs(spark, cat, ["https://definitely-not-indexed.example/nope"])
     assert res == {"n_deleted": 0, "buckets": [], "bloom_pruned": True}
-    assert cat._blooms is None, "driver bloom cache materialized despite cap"
+    assert cat.snapshot().blooms is None, "driver bloom cache materialized despite cap"
 
     monkeypatch.setattr(cat, "read", orig_read)
     victim = pdf[pdf["lang"] == "en"]["url"].iloc[0]
     res = delete_docs(spark, cat, [victim])
     assert res["n_deleted"] == 1
-    assert cat._blooms is None, "driver bloom cache materialized despite cap"
+    assert cat.snapshot().blooms is None, "driver bloom cache materialized despite cap"
 
 
 @pytest.fixture()

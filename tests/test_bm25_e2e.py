@@ -78,9 +78,9 @@ def test_docid_contract(spark, corpus, built):
 def test_stats_match_oracle(spark, corpus, built):
     _, _, idx, _ = corpus
     cat, _ = built
-    g = cat.read("stats_global").collect()[0]
-    assert g["n_docs"] == idx.n_docs
-    assert math.isclose(g["avgdl"], idx.avgdl, rel_tol=1e-12)
+    n_docs, avgdl = cat.global_query_stats()
+    assert n_docs == idx.n_docs
+    assert math.isclose(avgdl, idx.avgdl, rel_tol=1e-12)
     # stats is additive per bucket — aggregate like the query path does
     srows = cat.read("stats").groupBy("term").agg(F.sum("df").alias("df")).collect()
     stats = {r["term"]: r["df"] for r in srows}
@@ -93,7 +93,9 @@ def test_wand_rank_identity(spark, corpus, built):
     _, queries, _, expected = corpus
     cat, _ = built
     qdf = spark.createDataFrame(queries)
-    got = bm25_topk_wand(spark, cat, qdf, tasks_per_query=3).toPandas()
+    # a per-task budget below every query's volume forces fan-out > 1: the
+    # general plan with its global-rank window
+    got = bm25_topk_wand(spark, cat, qdf, postings_per_task=8).toPandas()
     _assert_rank_identical(got, expected[["query_id", "rank", "doc_id", "bm25_score"]])
 
 
@@ -113,7 +115,8 @@ def test_wand_single_query_one_stage_plan_and_identity(spark, corpus, built):
     """The interactive fast path (one query, fan-out 1) must plan ZERO
     exchanges — pruned scan -> coalesce(1) -> mapInPandas, no broadcast of a
     query-literal frame, no clustering shuffle — and stay rank-identical to
-    the oracle. The general engine (forced via tasks_per_query) must agree."""
+    the oracle. The general engine (fan-out forced above 1 by a tiny
+    postings_per_task) must agree."""
     from information_retrieval_images_spark import plans
 
     _, queries, _, expected = corpus
@@ -126,7 +129,7 @@ def test_wand_single_query_one_stage_plan_and_identity(spark, corpus, built):
             df.toPandas(), exp[exp["query_id"] == row.query_id]
         )
         # same query through the general (shuffled) engine agrees
-        general = bm25_topk_wand(spark, cat, [tuple(row)], tasks_per_query=2)
+        general = bm25_topk_wand(spark, cat, [tuple(row)], postings_per_task=1)
         _assert_rank_identical(
             general.toPandas(), exp[exp["query_id"] == row.query_id]
         )
@@ -159,8 +162,8 @@ def test_wand_task_cap_scales_with_parallelism_and_identity_holds(spark, corpus,
     from information_retrieval_images_spark.operators import bm25 as bm25_mod
 
     big = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=256))
-    assert bm25_mod._max_tasks_per_query(big) == 1024
-    assert bm25_mod._max_tasks_per_query(spark) >= 64
+    assert bm25_mod._max_query_fanout(big) == 1024
+    assert bm25_mod._max_query_fanout(spark) >= 64
     # a head term with df >> one task's budget fans out beyond 64...
     fan = bm25_mod._task_fanout({7: 10_000_000}, postings_per_task=1 << 10, max_tasks=1024)
     assert fan[7] > 64
@@ -171,15 +174,13 @@ def test_wand_task_cap_scales_with_parallelism_and_identity_holds(spark, corpus,
     cat, _ = built
     qdf = spark.createDataFrame(queries)
     exp = expected[["query_id", "rank", "doc_id", "bm25_score"]]
-    got = bm25_topk_wand(spark, cat, qdf, tasks_per_query=100).toPandas()
+    got = bm25_topk_wand(spark, cat, qdf, postings_per_task=1).toPandas()
     _assert_rank_identical(got, exp)
-    got2 = bm25_topk_wand(spark, cat, qdf, postings_per_task=1).toPandas()
-    _assert_rank_identical(got2, exp)
 
 
 def test_warm_query_skips_metadata_reads(spark, corpus, built):
-    """Interactive-latency contract (VERDICT r2 what's-wrong #2): stats_global
-    and per-term df are driver-cached keyed by the index version, so a warm
+    """Interactive-latency contract (VERDICT r2 what's-wrong #2): the global
+    stats and per-term df are driver-cached per manifest snapshot, so a warm
     repeat query reads ONLY postings — zero metadata jobs."""
     _, queries, _, _ = corpus
     cat, _ = built
@@ -192,7 +193,7 @@ def test_warm_query_skips_metadata_reads(spark, corpus, built):
         bm25_topk_wand(spark, cat, qdf).count()
     finally:
         cat.read = orig
-    assert "stats" not in reads and "stats_global" not in reads, reads
+    assert "stats" not in reads, reads
     assert "postings" in reads
 
 

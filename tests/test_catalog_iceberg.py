@@ -38,7 +38,7 @@ def test_overwrite_with_partitioning_uses_create_or_replace(icat, spark):
 def test_append_mode_appends_without_replace(icat):
     cat, _ = icat
     df = MagicMock(name="df")
-    cat.write(df, "checkpoints", mode="append")
+    cat.write(df, "docs", mode="append")
     writer = df.writeTo.return_value
     writer.append.assert_called_once_with()
     writer.createOrReplace.assert_not_called()

@@ -71,7 +71,7 @@ def test_start_id_offset_respected_with_small_batches(spark, tiny_batches):
 def test_p_logical_is_a_format_parameter(spark, tmp_path_factory, p_logical):
     """p_logical is a per-index format parameter (VERDICT r3 what's-wrong #1),
     not a hard-coded constant: build + query + oracle stay rank-identical at
-    overridden moduli, and the value is recorded in stats_global."""
+    overridden moduli, and the value is recorded in the manifest."""
     import math
 
     from information_retrieval_images_spark import fixtures

@@ -23,15 +23,14 @@ def built(spark, tmp_path_factory):
 
 
 def test_doclens_discovery_scoped_to_candidate_buckets(built, monkeypatch):
-    """A kernel's sidecar read must open ONLY its candidate bucket=B
+    """A kernel's sidecar read must open ONLY its candidate buckets' version
     directories, never the doclens root: root discovery lists every bucket
     directory before pruning — O(buckets) metadata RPCs per WAND task per
     query at 10^4-10^5 buckets on object storage."""
-    import os
-
     import pyarrow.dataset as pads
 
     root = built.path("doclens")
+    dirs = built.version_dirs("doclens")
     opened = []
     orig = pads.dataset
 
@@ -42,15 +41,15 @@ def test_doclens_discovery_scoped_to_candidate_buckets(built, monkeypatch):
     monkeypatch.setattr(pads, "dataset", spy)
     # ask for groups from bucket 1 only; groups exist (ids round-robin over
     # 3 buckets within group 0 at this corpus size)
-    out = _load_group_doclens(root, {(1, 0)})
-    assert opened == [os.path.join(root, "bucket=1")]
+    out = _load_group_doclens(dirs, {(1, 0)})
+    assert opened == [dirs[1]]
     assert set(out) == {0}
     ids, dls = out[0]
     assert ids.size == dls.size > 0
     # multi-bucket request opens exactly the candidate set, no root listing
     opened.clear()
-    _load_group_doclens(root, {(0, 0), (2, 0)})
-    assert sorted(opened) == [os.path.join(root, "bucket=0"), os.path.join(root, "bucket=2")]
+    _load_group_doclens(dirs, {(0, 0), (2, 0)})
+    assert sorted(opened) == [dirs[0], dirs[2]]
     assert root not in opened
 
 
@@ -59,7 +58,7 @@ def test_doclens_merge_across_buckets_matches_docs_table(built):
     several buckets' sidecar rows; the merged (ids, dls) must equal the docs
     table's (doc_id, dl) for the group."""
     docs = built.read("docs").select("doc_id", "dl").toPandas().sort_values("doc_id")
-    out = _load_group_doclens(built.path("doclens"), {(0, 0), (1, 0), (2, 0)})
+    out = _load_group_doclens(built.version_dirs("doclens"), {(0, 0), (1, 0), (2, 0)})
     ids, dls = out[0]
     assert ids.tolist() == docs["doc_id"].tolist()
     assert dls.tolist() == docs["dl"].tolist()

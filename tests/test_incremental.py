@@ -80,10 +80,9 @@ def test_two_appends_stats_match_rebuild(spark, tmp_path_factory):
     pk = cat.read("postings").groupBy("bucket", "term", "first_doc").count()
     assert pk.where(F.col("count") > 1).count() == 0
     # global stats agree with the rebuild
-    g1 = cat.read("stats_global").collect()[0]
-    g2 = rebuilt.read("stats_global").collect()[0]
-    assert g1["n_docs"] == g2["n_docs"]
-    assert math.isclose(g1["avgdl"], g2["avgdl"], rel_tol=1e-12)
+    (n1, avgdl1), (n2, avgdl2) = cat.global_query_stats(), rebuilt.global_query_stats()
+    assert n1 == n2
+    assert math.isclose(avgdl1, avgdl2, rel_tol=1e-12)
 
 
 def test_append_bucket_reuse_refused(spark, frames, tmp_path_factory):
@@ -98,95 +97,84 @@ def test_append_bucket_reuse_refused(spark, frames, tmp_path_factory):
         append_bucket(spark, spark.createDataFrame(full.iloc[N0:]), cat, bucket=0)
 
 
-def test_append_crash_between_docs_and_postings_repairs(spark, frames, tmp_path_factory):
-    """Kill the append after docs are written but before postings: the retry
-    must rebuild the bucket's postings from the stranded docs instead of
-    no-opping (ADVICE r1 medium finding — docs indexed but invisible)."""
-    import math as _math
-
-    initial, full = frames
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("crash")))
-    build_index(spark, spark.createDataFrame(initial), cat, n_buckets=1)
-
-    new_rows = full.iloc[N0:]
-    # simulate the crash window: write the new docs exactly as append_bucket
-    # would, then "die" before postings/stats/checkpoint
-    from information_retrieval_images_spark.operators.incremental import append_bucket as _ab
+def _crash_next_encode(monkeypatch):
+    """Make the next bucket encode raise: the append dies after its docs
+    version is written, before postings and the manifest commit."""
+    from information_retrieval_images_spark.operators import incremental as incr_mod
 
     class Killed(Exception):
         pass
 
-    from information_retrieval_images_spark.operators import incremental as incr_mod
+    orig = incr_mod.encode_bucket_postings
 
-    orig_encode = incr_mod.encode_bucket_postings
-    incr_mod.encode_bucket_postings = lambda *a, **k: (_ for _ in ()).throw(Killed())
-    try:
-        with pytest.raises(Killed):
-            _ab(spark, spark.createDataFrame(new_rows), cat, bucket=1000)
-    finally:
-        incr_mod.encode_bucket_postings = orig_encode
+    def once(*a, **k):
+        monkeypatch.setattr(incr_mod, "encode_bucket_postings", orig)
+        raise Killed()
 
-    # stranded: docs for bucket 1000 exist, no checkpoint, no postings
-    assert cat.read("docs").where(F.col("bucket") == 1000).count() > 0
-    assert cat.read("checkpoints").where(F.col("bucket") == 1000).count() == 0
-
-    # retry with the SAME batch: anti-join sees nothing novel but repair kicks in
-    res = _ab(spark, spark.createDataFrame(new_rows), cat, bucket=1000)
-    assert res["n_new"] == 0 and res["n_repaired"] > 0
-    assert cat.read("checkpoints").where(F.col("bucket") == 1000).count() == 1
-
-    # the repaired index ranks identically to the oracle over the full corpus
-    idx = build_oracle_index(full, lang="en")
-    got = _rank_urls(spark, cat, "term000000")
-    want = [(url, score) for _, url, score in oracle_topk(idx, "term000000", k=10)]
-    assert [u for u, _ in got] == [u for u, _ in want]
-    for (_, x), (_, y) in zip(got, want):
-        assert _math.isclose(x, y, rel_tol=1e-9)
+    monkeypatch.setattr(incr_mod, "encode_bucket_postings", once)
+    return Killed
 
 
-def test_append_refused_while_other_bucket_crashed(spark, frames, tmp_path_factory):
-    """Appends are serialized: a crashed bucket (docs, no checkpoint) blocks
-    appends to ANY other bucket until repaired — otherwise the other append
-    would allocate overlapping doc ids and poison the crash-repair invariant
-    (ADVICE r3 finding #1)."""
-    initial, full = frames
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("serial")))
-    build_index(spark, spark.createDataFrame(initial), cat, n_buckets=1)
-
-    from information_retrieval_images_spark.operators import incremental as incr_mod
-
-    mid = full.iloc[N0 : N0 + 30]
-    tail = full.iloc[N0 + 30 :]
-
-    class Killed(Exception):
-        pass
-
-    orig_encode = incr_mod.encode_bucket_postings
-    incr_mod.encode_bucket_postings = lambda *a, **k: (_ for _ in ()).throw(Killed())
-    try:
-        with pytest.raises(Killed):
-            append_bucket(spark, spark.createDataFrame(mid), cat, bucket=1000)
-    finally:
-        incr_mod.encode_bucket_postings = orig_encode
-
-    # bucket 1000 is orphaned -> appending bucket 1001 must refuse
-    with pytest.raises(RuntimeError, match=r"\[1000\].*repair"):
-        append_bucket(spark, spark.createDataFrame(tail), cat, bucket=1001)
-
-    # repair 1000, then 1001 proceeds; final state matches the oracle
-    append_bucket(spark, spark.createDataFrame(mid), cat, bucket=1000)
-    append_bucket(spark, spark.createDataFrame(tail), cat, bucket=1001)
-    idx = build_oracle_index(full, lang="en")
-    got = _rank_urls(spark, cat, "term000000")
-    want = [(url, score) for _, url, score in oracle_topk(idx, "term000000", k=10)]
+def _assert_oracle_top10(spark, cat, corpus, qtext="term000000"):
+    idx = build_oracle_index(corpus, lang="en")
+    got = _rank_urls(spark, cat, qtext)
+    want = [(url, score) for _, url, score in oracle_topk(idx, qtext, k=10)]
     assert [u for u, _ in got] == [u for u, _ in want]
     for (_, x), (_, y) in zip(got, want):
         assert math.isclose(x, y, rel_tol=1e-9)
 
 
+def test_append_crash_between_docs_and_postings_repairs(spark, frames, tmp_path_factory, monkeypatch):
+    """Kill the append after its docs are written but before postings: the
+    written docs stay invisible (no manifest commit), and a retry of the
+    same batch indexes it (ADVICE r1 medium finding — docs indexed but
+    invisible)."""
+    initial, full = frames
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("crash")))
+    build_index(spark, spark.createDataFrame(initial), cat, n_buckets=1)
+    n_before = cat.read("docs").count()
+
+    new_rows = full.iloc[N0:]
+    killed = _crash_next_encode(monkeypatch)
+    with pytest.raises(killed):
+        append_bucket(spark, spark.createDataFrame(new_rows), cat, bucket=1000)
+
+    # nothing committed: the crashed docs are invisible to every read
+    assert 1000 not in cat.committed_buckets()
+    assert cat.read("docs").count() == n_before
+
+    res = append_bucket(spark, spark.createDataFrame(new_rows), cat, bucket=1000)
+    assert res["n_new"] == (new_rows["lang"] == "en").sum()
+    assert 1000 in cat.committed_buckets()
+    _assert_oracle_top10(spark, cat, full)
+
+
+def test_crashed_append_blocks_no_other_bucket(spark, frames, tmp_path_factory, monkeypatch):
+    """A crashed append commits nothing, so it blocks nothing: another
+    bucket appends right after it, and a retry of the crashed batch under
+    its own id then indexes it; the final index ranks like the oracle."""
+    initial, full = frames
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("serial")))
+    build_index(spark, spark.createDataFrame(initial), cat, n_buckets=1)
+
+    mid = full.iloc[N0 : N0 + 30]
+    tail = full.iloc[N0 + 30 :]
+    killed = _crash_next_encode(monkeypatch)
+    with pytest.raises(killed):
+        append_bucket(spark, spark.createDataFrame(mid), cat, bucket=1000)
+
+    res = append_bucket(spark, spark.createDataFrame(tail), cat, bucket=1001)
+    assert res["n_new"] == (tail["lang"] == "en").sum()
+    res = append_bucket(spark, spark.createDataFrame(mid), cat, bucket=1000)
+    assert res["n_new"] == (mid["lang"] == "en").sum()
+    assert {1000, 1001} <= cat.committed_buckets()
+    _assert_oracle_top10(spark, cat, full)
+    _assert_oracle_top10(spark, cat, full, "term000003 term000120")
+
+
 def test_streaming_compaction_survives_restart(spark, frames, tmp_path_factory):
     """A stream restart must not strand micro-batch buckets uncompacted: the
-    pending set is recovered from the checkpoint manifest, not the previous
+    pending set is recovered from the index manifest, not the previous
     process's memory (ADVICE r3 finding #2)."""
     import math as _math
 

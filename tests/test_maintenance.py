@@ -128,15 +128,15 @@ def test_delete_and_append_update_stats_incrementally(spark, corpus, tmp_path_fa
     en_a = a[a["lang"] == "en"]
     victims = en_a["url"].iloc[[2, 5]].tolist()
     delete_docs(spark, cat, victims)
-    max_after_delete = cat.read("stats_global").collect()[0]["max_doc_id"]
+    max_after_delete = cat.global_doc_stats()[2]
     append_bucket(spark, spark.createDataFrame(b), cat, bucket=7000)
 
     post = pd.concat([a[~a["url"].isin(victims)], b], ignore_index=True)
     idx = build_oracle_index(post, lang="en")
-    g = cat.read("stats_global").collect()[0]
-    assert g["n_docs"] == idx.n_docs
-    assert math.isclose(g["avgdl"], idx.avgdl, rel_tol=1e-12)
-    assert g["sum_dl"] == cat.read("docs").agg(F.sum("dl")).collect()[0][0]
+    n_docs, sum_dl, _ = cat.global_doc_stats()
+    assert n_docs == idx.n_docs
+    assert math.isclose(cat.global_query_stats()[1], idx.avgdl, rel_tol=1e-12)
+    assert sum_dl == cat.read("docs").agg(F.sum("dl")).collect()[0][0]
     # appended ids start strictly after the pre-delete max (no id reuse)
     min_new = cat.read("docs").where(F.col("bucket") == 7000).agg(F.min("doc_id")).collect()[0][0]
     assert min_new > max_after_delete
@@ -227,29 +227,15 @@ def test_pending_from_manifest_bounded_to_stream_range(spark, tmp_path_factory):
     """ADVICE r4 #1: stream restart recovery must not sweep HTTP-ingest
     buckets (>= serving.HTTP_INGEST_BUCKET_START) into the stream's
     compaction backlog — bucket namespaces are disjoint by contract."""
-    import json as _json
-
-    from information_retrieval_images_spark.operators.index_build import CHECKPOINT_SCHEMA
     from information_retrieval_images_spark.serving import HTTP_INGEST_BUCKET_START
     from information_retrieval_images_spark.streaming import pending_from_manifest
 
     cat = Catalog(spark, str(tmp_path_factory.mktemp("pend")))
     start = 1_000_000
-    rows = [
-        (0, "done", 10, 0, 1, _json.dumps({"job": "build_index"})),          # initial build
-        (start + 1, "done", 5, 0, 1, _json.dumps({"job": "append_bucket"})),  # stream batch
-        (start + 2, "done", 5, 0, 1, _json.dumps({"job": "append_bucket"})),  # stream batch
-        (HTTP_INGEST_BUCKET_START, "done", 1, 0, 1, _json.dumps({"job": "append_bucket"})),  # http ingest
-        (
-            start - 1,
-            "done",
-            5,
-            0,
-            1,
-            _json.dumps({"job": "compact_buckets", "buckets": [start + 1]}),
-        ),  # earlier compaction consumed start+1
-    ]
-    cat.append(spark.createDataFrame(rows, CHECKPOINT_SCHEMA), "checkpoints")
+    for b in (0, start + 1, start + 2, HTTP_INGEST_BUCKET_START):  # build, 2 stream batches, http ingest
+        cat.commit({"job": "append_bucket"}, tables={"postings": {b: "v1"}})
+    # an earlier compaction consumed start+1 into start-1
+    cat.commit({"job": "compact_buckets"}, tables={"postings": {start + 1: None, start - 1: "v2"}})
     assert pending_from_manifest(cat, start) == [start + 2]
 
 
@@ -278,3 +264,63 @@ def test_locate_join_broadcast_only_on_bounded_path(spark):
         )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _crash_next_encode(monkeypatch):
+    """Make the next bucket encode of a delete or compaction raise: the op
+    dies after its docs version is written, before postings and the
+    manifest commit."""
+    from information_retrieval_images_spark.operators import maintenance
+
+    class Killed(Exception):
+        pass
+
+    orig = maintenance.encode_bucket_postings
+
+    def once(*a, **k):
+        monkeypatch.setattr(maintenance, "encode_bucket_postings", orig)
+        raise Killed()
+
+    monkeypatch.setattr(maintenance, "encode_bucket_postings", once)
+    return Killed
+
+
+def test_delete_crash_then_retry_matches_oracle(spark, corpus, tmp_path_factory, monkeypatch):
+    """A delete killed mid-write commits nothing; its retry deletes the
+    victims and the index ranks like the oracle without them."""
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("delcrash")))
+    build_index(spark, spark.createDataFrame(corpus), cat, n_buckets=3)
+    victims = corpus[corpus["lang"] == "en"]["url"].iloc[[0, 7, 54]].tolist()
+    killed = _crash_next_encode(monkeypatch)
+    with pytest.raises(killed):
+        delete_docs(spark, cat, victims)
+    _assert_matches_oracle(spark, cat, corpus)  # the crashed delete is invisible
+
+    res = delete_docs(spark, cat, victims)
+    assert res["n_deleted"] == len(victims)
+    assert cat.read("docs").where(F.col("url").isin(victims)).count() == 0
+    _assert_matches_oracle(spark, cat, corpus[~corpus["url"].isin(victims)])
+
+
+def test_compact_crash_then_retry_and_append(spark, corpus, tmp_path_factory, monkeypatch):
+    """A compaction killed mid-write commits nothing; its retry succeeds, a
+    later append still works, and the index ranks like the oracle."""
+    from information_retrieval_images_spark.operators.incremental import append_bucket
+    from information_retrieval_images_spark.operators.maintenance import compact_buckets
+
+    a, b, c = corpus.iloc[:100], corpus.iloc[100:150], corpus.iloc[150:]
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("cmpcrash")))
+    build_index(spark, spark.createDataFrame(a), cat, n_buckets=1)
+    append_bucket(spark, spark.createDataFrame(b.iloc[:25]), cat, bucket=500)
+    append_bucket(spark, spark.createDataFrame(b.iloc[25:]), cat, bucket=501)
+    killed = _crash_next_encode(monkeypatch)
+    with pytest.raises(killed):
+        compact_buckets(spark, cat, [500, 501], target_bucket=600)
+    assert cat.committed_buckets() == {0, 500, 501}
+
+    res = compact_buckets(spark, cat, [500, 501], target_bucket=600)
+    assert res["n_moved"] == (b["lang"] == "en").sum()
+    assert cat.committed_buckets() == {0, 600}
+    append_bucket(spark, spark.createDataFrame(c), cat, bucket=502)
+    assert cat.committed_buckets() == {0, 502, 600}
+    _assert_matches_oracle(spark, cat, corpus)

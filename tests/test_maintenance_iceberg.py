@@ -19,33 +19,27 @@ from information_retrieval_images_spark.catalog import Catalog
 from information_retrieval_images_spark.operators import index_build, maintenance
 
 
+STATS = dict(n_docs=10, sum_dl=100, avgdl=10.0, max_doc_id=9, p_logical=1024, tp_n=16)
+
+
 @pytest.fixture()
-def icat(spark):
-    """Catalog on a MagicMock session that 'has' Iceberg, with a stats_global
-    row wired up so the incremental-stats reads work driver-side."""
+def icat(spark, tmp_path):
+    """Catalog on a MagicMock session that 'has' Iceberg. Its manifest (real
+    files under tmp_path, as in both catalog modes) holds the global stats,
+    so the incremental-stats reads work driver-side."""
     ms = MagicMock(name="spark")
     ms.conf.get.return_value = "8"
-    stats_tbl = MagicMock(name="stats_global_tbl")
-    class _Row(dict):
-        def asDict(self):
-            return dict(self)
-
-        def __getitem__(self, k):
-            return dict.__getitem__(self, k)
-
-    from information_retrieval_images_spark import INDEX_FORMAT
-
-    stats_tbl.collect.return_value = [
-        _Row(
-            n_docs=10, avgdl=10.0, sum_dl=100, max_doc_id=9,
-            p_logical=1024, tp_n=16, format=INDEX_FORMAT,
-        )
-    ]
-    tables = {"stats_global": stats_tbl}
+    tables = {}
     ms.table.side_effect = lambda name: tables.setdefault(name, MagicMock(name=f"{name}_tbl"))
-    cat = Catalog(ms, "/warehouse/ns")
+    cat = Catalog(ms, str(tmp_path))
     assert cat.use_iceberg
+    cat.commit({"job": "seed"}, stats=STATS)
     return cat, ms, tables
+
+
+def _commit_buckets(cat, buckets):
+    """Seed committed buckets (past any commit logger on the instance)."""
+    Catalog.commit(cat, {"job": "seed"}, tables={"postings": {b: "v0" for b in buckets}})
 
 
 def _sql_calls(ms):
@@ -79,23 +73,21 @@ def test_delete_docs_iceberg_sql_sequence(icat, monkeypatch):
     assert out["n_deleted"] == 2 and out["n_docs"] == 8 and out["avgdl"] == 10.0
     # only the hit bucket is re-encoded, under the NEW avgdl
     assert encoded == [(1, 10.0)]
-    # stats_global overwritten with the delta'd numbers (and max preserved)
+    # the manifest commit carries the delta'd stats (max preserved) and the
+    # bucket's new version
     from information_retrieval_images_spark import INDEX_FORMAT
 
-    sg_rows = [
-        c.args[0]
-        for c in ms.createDataFrame.call_args_list
-        if c.args and c.args[0] and isinstance(c.args[0], list) and len(c.args[0][0]) == 9
-    ]
-    assert (8, 10.0, 1.2, 0.75, 80, 9, 1024, 16, INDEX_FORMAT) in [tuple(r[0]) for r in sg_rows]
+    snap = cat.snapshot()
+    assert snap.stats == dict(STATS, n_docs=8, sum_dl=80, avgdl=10.0, format=INDEX_FORMAT)
+    assert snap.manifest["lineage"]["job"] == "delete_docs"
+    assert set(snap.tables["postings"]) == {1}
 
 
 def test_compact_buckets_iceberg_sql_sequence(icat, monkeypatch):
     cat, ms, tables = icat
     docs = tables.setdefault("docs", MagicMock(name="docs_tbl"))
     docs.where.return_value.count.return_value = 5
-    monkeypatch.setattr(maintenance, "_checkpointed_buckets", lambda c: {1000000, 1000001}, raising=False)
-    monkeypatch.setattr("information_retrieval_images_spark.operators.incremental._checkpointed_buckets", lambda c: {1000000, 1000001})
+    _commit_buckets(cat, [1000000, 1000001])
     encoded = []
     monkeypatch.setattr(
         maintenance, "encode_bucket_postings", lambda c, docs, b, avgdl, np_, tp_n, **kw: encoded.append((b, avgdl))
@@ -111,20 +103,22 @@ def test_compact_buckets_iceberg_sql_sequence(icat, monkeypatch):
     # target rebuilt once under the unchanged avgdl (same corpus)
     assert encoded == [(999999, 10.0)]
     assert out["n_moved"] == 5 and out["target"] == 999999
+    # one manifest commit adds the target and retires the sources
+    assert cat.committed_buckets() == {999999}
 
 
 def test_compact_target_freshness_guard_still_applies(icat, monkeypatch):
     cat, ms, _ = icat
-    monkeypatch.setattr("information_retrieval_images_spark.operators.incremental._checkpointed_buckets", lambda c: {999999})
+    _commit_buckets(cat, [999999])
     with pytest.raises(ValueError, match="not fresh"):
         maintenance.compact_buckets(ms, cat, [1000000], 999999)
 
 
 def _log_commits(cat, ms, monkeypatch, existing=("postings", "stats")):
-    """Record the Iceberg commit sequence as ("sql", stmt) / ("append",
-    table) entries. ``existing`` are the tables the mocked catalog reports
-    present. The url bloom sidecar writes plain parquet in both catalog
-    modes and is stubbed out."""
+    """Record the commit sequence as ("sql", stmt) / ("append", table) /
+    ("commit", "manifest") entries. ``existing`` are the tables the mocked
+    catalog reports present. The url bloom sidecar writes plain parquet in
+    both catalog modes and is stubbed out."""
     from information_retrieval_images_spark import blooms
 
     log = []
@@ -132,13 +126,15 @@ def _log_commits(cat, ms, monkeypatch, existing=("postings", "stats")):
     ms.catalog.tableExists.side_effect = lambda name: name in existing
     append = cat.append
     monkeypatch.setattr(cat, "append", lambda df, name: log.append(("append", name)) or append(df, name))
-    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, n_keys=None: None)
+    commit = cat.commit
+    monkeypatch.setattr(cat, "commit", lambda *a, **k: log.append(("commit", "manifest")) or commit(*a, **k))
+    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys=None: None)
     return log
 
 
 def _commits(log):
-    """The log's DELETEs and appends, in order."""
-    return [e for e in log if e[0] == "append" or e[1].startswith("DELETE")]
+    """The log's DELETEs, appends and manifest commits, in order."""
+    return [e for e in log if e[0] in ("append", "commit") or e[1].startswith("DELETE")]
 
 
 def test_encode_bucket_postings_iceberg_deletes_before_append(icat, monkeypatch):
@@ -151,7 +147,7 @@ def test_encode_bucket_postings_iceberg_deletes_before_append(icat, monkeypatch)
     monkeypatch.setattr(index_build, "posting_runs", lambda docs, min_parallelism: MagicMock(name="runs"))
     monkeypatch.setattr(index_build, "encode_blocks", lambda runs, avgdl: MagicMock(name="blocks"))
 
-    index_build.encode_bucket_postings(cat, cat.read("docs"), 3, 10.0, 8, 16)
+    index_build.encode_bucket_postings(cat, cat.read("docs"), 3, 10.0, 8, 16, version="v1")
 
     assert _commits(log) == [
         ("sql", "DELETE FROM postings WHERE bucket = 3"),
@@ -163,28 +159,25 @@ def test_encode_bucket_postings_iceberg_deletes_before_append(icat, monkeypatch)
 
 def _mock_build(icat, monkeypatch, done_buckets):
     """A 2-bucket Iceberg build over mocked tables: docs already assigned
-    (5 docs per bucket), ``done_buckets`` already checkpointed."""
-    _, _, tables = icat
+    (5 docs per bucket), ``done_buckets`` already committed."""
+    cat, _, tables = icat
     docs = tables.setdefault("docs", MagicMock(name="docs_tbl"))
     docs.groupBy.return_value.agg.return_value.collect.return_value = [
         {"bucket": b, "nd": 5, "toks": 50, "mx": 5 * b + 4} for b in (0, 1)
     ]
-    ck = tables.setdefault("checkpoints", MagicMock(name="checkpoints_tbl"))
-    ck.select.return_value.distinct.return_value.collect.return_value = [
-        {"bucket": b} for b in done_buckets
-    ]
+    _commit_buckets(cat, done_buckets)
     monkeypatch.setattr(index_build, "assign_doc_ids", lambda pages, **kw: MagicMock(name="docs"))
     monkeypatch.setattr(index_build, "posting_runs", lambda docs, min_parallelism: MagicMock(name="runs"))
     monkeypatch.setattr(index_build, "encode_blocks", lambda runs, avgdl: MagicMock(name="blocks"))
 
 
 def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkeypatch):
-    """Resume after a crash between bucket 1's postings commit and its
-    checkpoint row: bucket 1 is rebuilt, and its leftover postings/stats rows
-    are DELETEd before the re-encoded rows are appended (a plain append
-    would count the bucket twice). Checkpointed bucket 0 is not touched."""
+    """Resume after a crash between bucket 1's postings append and its
+    manifest commit: bucket 1 is rebuilt, and its leftover postings/stats
+    rows are DELETEd before the re-encoded rows are appended (a plain append
+    would count the bucket twice). Committed bucket 0 is not touched."""
     cat, ms, _ = icat
-    log = _log_commits(cat, ms, monkeypatch, existing=("checkpoints", "docs", "stats_global", "postings", "stats"))
+    log = _log_commits(cat, ms, monkeypatch, existing=("docs", "postings", "stats"))
     _mock_build(icat, monkeypatch, done_buckets=[0])
 
     metrics = index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=2, resume=True)
@@ -195,7 +188,7 @@ def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkey
         ("sql", "DELETE FROM stats WHERE bucket = 1"),
         ("append", "postings"),
         ("append", "stats"),
-        ("append", "checkpoints"),
+        ("commit", "manifest"),
     ]
 
 
@@ -209,7 +202,12 @@ def test_fresh_build_iceberg_issues_no_delete(icat, monkeypatch):
     index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=1)
 
     assert "DROP TABLE IF EXISTS postings" in [q for kind, q in log if kind == "sql"]
-    assert _commits(log) == [("append", "postings"), ("append", "stats"), ("append", "checkpoints")]
+    assert _commits(log) == [
+        ("commit", "manifest"),  # docs version + global stats
+        ("append", "postings"),
+        ("append", "stats"),
+        ("commit", "manifest"),  # the bucket
+    ]
 
 
 def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
@@ -244,12 +242,12 @@ def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
         append(df, name)
 
     monkeypatch.setattr(cat, "append", recording_append)
-    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, n_keys=None: None)
+    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys=None: None)
     _mock_build(icat, monkeypatch, done_buckets=[])
 
     index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=2, bucket_concurrency=2)
 
-    tables = ["checkpoints", "postings", "stats"]
+    tables = ["postings", "stats"]
     assert sorted(n for kind, n in log if kind == "create") == tables
     assert sorted(n for kind, n in log if kind == "append") == tables
     for t in tables:
@@ -257,20 +255,20 @@ def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
 
 
 def test_write_bucket_iceberg_appends_both_tables(icat, monkeypatch):
-    """The bucket commit's Iceberg append contract for postings: a
-    tp-clustered (r6), sorted frame with the bucket column, written with
-    writeTo("postings").append()."""
+    """The bucket write's Iceberg append contract for postings: a
+    tp-clustered (r6), sorted frame with the bucket and version columns,
+    written with writeTo("postings").append()."""
     cat, ms, _ = icat
     _log_commits(cat, ms, monkeypatch)
 
     blocks = MagicMock(name="blocks")
-    index_build.write_bucket(cat, blocks, MagicMock(name="bucket_docs"), 2)
+    index_build.write_bucket(cat, blocks, MagicMock(name="bucket_docs"), 2, "v1")
 
     persisted = blocks.withColumn.return_value.persist.return_value
-    # postings: tp-clustered (r6) + sorted frame + bucket column ->
+    # postings: tp-clustered (r6) + sorted frame + bucket and v columns ->
     # writeTo(postings).append()
     out = (
-        persisted.repartition.return_value.sortWithinPartitions.return_value.withColumn.return_value
+        persisted.repartition.return_value.sortWithinPartitions.return_value.withColumns.return_value
     )
     persisted.repartition.assert_called_once_with(16, "tp")  # tp_n default
     out.writeTo.assert_called_once_with("postings")

@@ -44,7 +44,7 @@ def test_query_term_filter_prunes_postings(spark, tmp_path_factory):
 
 def test_term_prefix_dirs_prune_postings_files(spark, tmp_path_factory):
     """Term-level FILE pruning (VERDICT r2 missing #2): postings lay out as
-    bucket=B/tp=T where tp = crc32(term) % TERM_PREFIX_PARTITIONS, and the
+    bucket=B/v=<version>/tp=T where tp = crc32(term) % TERM_PREFIX_PARTITIONS, and the
     query path adds a tp IN-list, so a k-term query opens only the matching
     term-prefix directories (Catalyst PartitionFilters), not every bucket
     file. Verified three ways: the layout fans out, the partition filter is
@@ -58,7 +58,7 @@ def test_term_prefix_dirs_prune_postings_files(spark, tmp_path_factory):
 
     cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
     build_index(spark, spark.createDataFrame(fixtures.make_pages_pandas(60)), cat, n_buckets=1)
-    tp_dirs = glob.glob(os.path.join(cat.path("postings"), "bucket=0", "tp=*"))
+    tp_dirs = glob.glob(os.path.join(cat.version_dirs("postings")[0], "tp=*"))
     assert len(tp_dirs) > 1, "layout must fan out into term-prefix subdirs"
 
     terms = ["term000000", "term000007"]
@@ -110,7 +110,7 @@ def test_single_shuffle_for_tf_agg(spark, pages_path):
 def test_tp_n_is_a_format_parameter(spark, tmp_path_factory):
     """tp_n is a pinned per-index format parameter (VERDICT r4 what's-wrong
     #1 — same class as the p_logical fix): an index built with a non-default
-    term-prefix modulus records it in stats_global, the query side computes
+    term-prefix modulus records it in the manifest, the query side computes
     its tp IN-list from the RECORDED value, and results stay rank-identical
     to the oracle."""
     import glob
@@ -127,7 +127,7 @@ def test_tp_n_is_a_format_parameter(spark, tmp_path_factory):
     cat = Catalog(spark, str(tmp_path_factory.mktemp("tpn4")))
     build_index(spark, spark.createDataFrame(pdf), cat, n_buckets=1, tp_n=4)
     assert cat.tp_n() == 4
-    tp_dirs = glob.glob(os.path.join(cat.path("postings"), "bucket=0", "tp=*"))
+    tp_dirs = glob.glob(os.path.join(cat.version_dirs("postings")[0], "tp=*"))
     assert 1 < len(tp_dirs) <= 4, "layout must follow the overridden modulus"
 
     idx = build_oracle_index(pdf, lang="en")

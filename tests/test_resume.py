@@ -2,6 +2,8 @@
 identical to an uninterrupted build (north rule; reference analogue: the
 md5-presence idempotent re-run, db.py:113-116 / anti-join db.py:324-339)."""
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -12,33 +14,42 @@ from information_retrieval_images_spark.operators.index_build import build_index
 N_DOCS = 200
 
 
+def _bucket_commits(cat: Catalog) -> list[dict]:
+    """Lineage of the build's bucket commits still in the manifest history."""
+    import json
+    import os
+
+    out = []
+    for n in sorted(os.listdir(cat.path("_manifest"))):
+        if n.endswith(".json"):
+            with open(os.path.join(cat.path("_manifest"), n)) as f:
+                lin = json.load(f)["lineage"]
+            if lin.get("job") == "build_index" and "bucket" in lin:
+                out.append(lin)
+    return out
+
+
 class KillingCatalog(Catalog):
-    """Raises mid-build: after bucket 0's checkpoint, the next bucket's
-    postings get written but its checkpoint append is killed — simulating a
-    crash between data write and manifest commit (the worst spot)."""
+    """Raises mid-build: after bucket 0's commit, the next bucket's postings
+    get written but its manifest commit is killed — simulating a crash
+    between data write and commit (the worst spot)."""
 
     def __init__(self, spark, root):
         super().__init__(spark, root)
-        self.checkpoint_appends = 0
+        self.bucket_commits = 0
         self.armed = True
 
-    def append(self, df, name):
-        if name == "checkpoints" and self.armed:
-            self.checkpoint_appends += 1
-            if self.checkpoint_appends == 2:
-                raise RuntimeError("simulated crash before checkpoint commit")
-        super().append(df, name)
-
-    def append_row(self, name, row, schema):  # r6: manifest rows commit here
-        if name == "checkpoints" and self.armed:
-            self.checkpoint_appends += 1
-            if self.checkpoint_appends == 2:
-                raise RuntimeError("simulated crash before checkpoint commit")
-        super().append_row(name, row, schema)
+    def commit(self, lineage, tables=None, stats=None, base=None):
+        if "bucket" in lineage and self.armed:
+            self.bucket_commits += 1
+            if self.bucket_commits == 2:
+                raise RuntimeError("simulated crash before manifest commit")
+        return super().commit(lineage, tables, stats, base)
 
 
 def _postings_key(cat: Catalog) -> pd.DataFrame:
-    pdf = cat.read("postings").toPandas()
+    # v (the bucket version id) differs per commit by design
+    pdf = cat.read("postings").drop("v").toPandas()
     pdf["docs_enc"] = pdf["docs_enc"].map(bytes)
     pdf["tfs_enc"] = pdf["tfs_enc"].map(bytes)
     return pdf.sort_values(["term", "bucket", "first_doc"]).reset_index(drop=True)
@@ -56,8 +67,8 @@ def test_kill_resume_identical(spark, pages_df, tmp_path_factory):
     cat = KillingCatalog(spark, str(tmp_path_factory.mktemp("killed")))
     with pytest.raises(RuntimeError, match="simulated crash"):
         build_index(spark, pages_df, cat, n_buckets=3)
-    # crashed state: 1 checkpoint, partial postings for the killed bucket
-    assert cat.read("checkpoints").count() == 1
+    # crashed state: 1 bucket committed, unreferenced files for the killed one
+    assert cat.committed_buckets() == {0}
 
     cat.armed = False
     metrics = build_index(spark, pages_df, cat, n_buckets=3, resume=True)
@@ -68,12 +79,11 @@ def test_kill_resume_identical(spark, pages_df, tmp_path_factory):
     pd.testing.assert_frame_equal(
         got.drop(columns=[]), want, check_like=False
     )
-    assert cat.read("checkpoints").count() == 3
+    assert cat.committed_buckets() == {0, 1, 2}
     # lineage + metrics recorded per partition batch
-    ck = cat.read("checkpoints").toPandas()
-    assert set(ck["status"]) == {"done"}
-    assert (ck["n_docs"] > 0).all() and (ck["wall_ms"] >= 0).all()
-    assert ck["lineage"].str.contains("build_index").all()
+    ck = _bucket_commits(cat)
+    assert sorted(c["bucket"] for c in ck) == [0, 1, 2]
+    assert all(c["n_docs"] > 0 and c["wall_ms"] >= 0 for c in ck)
 
 
 def test_resume_noop_when_complete(spark, pages_df, tmp_path_factory):
@@ -86,19 +96,18 @@ def test_resume_noop_when_complete(spark, pages_df, tmp_path_factory):
 
 
 def test_exists_sees_partitioned_tables(spark, pages_df, tmp_path_factory):
-    """docs/postings/stats are written with partitionBy('bucket') — their
-    parquet files live in bucket=N subdirs. exists() must find them or every
-    resume path silently re-runs (ADVICE r1 medium finding)."""
+    """Every index table keeps its files in bucket=N/v=<version> subdirs,
+    and exists() reads the manifest's table map, so it finds all of them
+    (ADVICE r1 medium finding: a miss silently re-runs every resume path)."""
     cat = Catalog(spark, str(tmp_path_factory.mktemp("exists")))
     build_index(spark, pages_df, cat, n_buckets=2)
-    for t in ("docs", "postings", "stats", "checkpoints", "stats_global"):
+    for t in ("docs", "postings", "stats", "doclens", "blooms"):
         assert cat.exists(t), t
+        assert set(cat.version_dirs(t)) == {0, 1}, t
     assert not cat.exists("nope")
 
 
 def _docs_file_state(cat: Catalog) -> dict:
-    import os
-
     state = {}
     for root, _, files in os.walk(cat.path("docs")):
         for f in files:
@@ -110,18 +119,24 @@ def _docs_file_state(cat: Catalog) -> dict:
 def test_old_format_warehouse_gets_clear_error(spark, pages_df, tmp_path_factory):
     """A warehouse written by an older engine version must fail with a clear
     'rebuild required' message at the stats gate, not a column-not-found
-    error deep inside a query plan (ADVICE r3 finding #4)."""
+    error deep inside a query plan (ADVICE r3 finding #4): both a manifest
+    of an older format and a pre-v6 warehouse with no manifest at all."""
+    import json
+    import shutil
+
     cat = Catalog(spark, str(tmp_path_factory.mktemp("oldfmt")))
     build_index(spark, pages_df, cat, n_buckets=1)
-    # regress stats_global to the pre-v4 6-column shape
-    legacy = spark.createDataFrame(
-        [(10, 10.0, 1.2, 0.75, 100, 9)],
-        "n_docs long, avgdl double, k1 double, b double, sum_dl long, max_doc_id long",
-    )
-    legacy.write.mode("overwrite").parquet(cat.path("stats_global"))
-    fresh = Catalog(spark, cat.root)
-    with pytest.raises(RuntimeError, match="format .*rebuild"):
-        fresh.global_doc_stats()
+    latest = os.path.join(cat.path("_manifest"), f"{cat.index_version()}.json")
+    with open(latest) as f:
+        m = json.load(f)
+    m["stats"]["format"] = 5
+    with open(latest, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(RuntimeError, match="format 5 .*rebuild"):
+        Catalog(spark, cat.root).global_doc_stats()
+    shutil.rmtree(cat.path("_manifest"))
+    with pytest.raises(RuntimeError, match="no manifest.*rebuild"):
+        Catalog(spark, cat.root).global_doc_stats()
 
 
 def test_postings_carry_no_per_posting_dls(spark, pages_df, tmp_path_factory):
@@ -131,8 +146,8 @@ def test_postings_carry_no_per_posting_dls(spark, pages_df, tmp_path_factory):
     cat = Catalog(spark, str(tmp_path_factory.mktemp("nodls")))
     build_index(spark, pages_df, cat, n_buckets=2)
     assert "dls_enc" not in cat.read("postings").columns
-    dl = spark.read.parquet(cat.path("doclens"))
-    assert set(dl.columns) == {"doc_group", "ids_enc", "dls_enc", "bucket"}
+    dl = cat.read("doclens")
+    assert set(dl.columns) == {"doc_group", "ids_enc", "dls_enc", "bucket", "v"}
     # one sidecar row per (bucket, doc_group); ids cover every doc exactly once
     import numpy as np
 
@@ -161,7 +176,7 @@ def test_resume_reuses_docs_without_reassign(spark, pages_df, tmp_path_factory):
 
 
 class FailOneCheckpointCatalog(Catalog):
-    """Thread-safe: exactly the FIRST checkpoint append raises (simulating a
+    """Thread-safe: exactly the FIRST bucket commit raises (simulating a
     crash of one bucket pipeline while concurrent pipelines keep running)."""
 
     def __init__(self, spark, root):
@@ -171,26 +186,18 @@ class FailOneCheckpointCatalog(Catalog):
         self._lock = threading.Lock()
         self.armed = True
 
-    def append(self, df, name):
-        if name == "checkpoints":
+    def commit(self, lineage, tables=None, stats=None, base=None):
+        if "bucket" in lineage:
             with self._lock:
                 if self.armed:
                     self.armed = False
-                    raise RuntimeError("simulated crash before checkpoint commit")
-        super().append(df, name)
-
-    def append_row(self, name, row, schema):  # r6: manifest rows commit here
-        if name == "checkpoints":
-            with self._lock:
-                if self.armed:
-                    self.armed = False
-                    raise RuntimeError("simulated crash before checkpoint commit")
-        super().append_row(name, row, schema)
+                    raise RuntimeError("simulated crash before manifest commit")
+        return super().commit(lineage, tables, stats, base)
 
 
 def test_concurrent_bucket_build_kill_resume_identical(spark, pages_df, tmp_path_factory):
-    """bucket_concurrency > 1 keeps the checkpoint contract: a crash in one
-    bucket pipeline leaves it un-checkpointed while concurrent pipelines
+    """bucket_concurrency > 1 keeps the commit contract: a crash in one
+    bucket pipeline leaves it uncommitted while concurrent pipelines
     commit; resume rebuilds exactly the missing buckets and the final index
     is bit-identical to a serial golden build."""
     golden_cat = Catalog(spark, str(tmp_path_factory.mktemp("cgolden")))
@@ -199,8 +206,7 @@ def test_concurrent_bucket_build_kill_resume_identical(spark, pages_df, tmp_path
     cat = FailOneCheckpointCatalog(spark, str(tmp_path_factory.mktemp("ckilled")))
     with pytest.raises(RuntimeError, match="simulated crash"):
         build_index(spark, pages_df, cat, n_buckets=3, bucket_concurrency=2)
-    done = cat.read("checkpoints").count()
-    assert done == 2, "the two surviving pipelines committed"
+    assert len(cat.committed_buckets()) == 2, "the two surviving pipelines committed"
 
     metrics = build_index(spark, pages_df, cat, n_buckets=3, resume=True, bucket_concurrency=2)
     assert sum(v == "resumed" for v in metrics["buckets"].values()) == 2
@@ -215,6 +221,4 @@ def test_concurrent_bucket_build_matches_serial(spark, pages_df, tmp_path_factor
     b = Catalog(spark, str(tmp_path_factory.mktemp("conc")))
     build_index(spark, pages_df, b, n_buckets=3, bucket_concurrency=3)
     pd.testing.assert_frame_equal(_postings_key(a), _postings_key(b))
-    sa = a.read("stats_global").toPandas()
-    sb = b.read("stats_global").toPandas()
-    pd.testing.assert_frame_equal(sa, sb)
+    assert a.snapshot().stats == b.snapshot().stats

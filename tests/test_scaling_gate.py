@@ -145,3 +145,25 @@ def test_slope_requires_two_corpora_per_width_and_clean_samples():
     dirty["probe_post_gbs"] = 0.3
     md, summ = sb._slope_block(one_corpus + [dirty], args)
     assert summ == {}
+
+
+def test_slope_verdict_unresolved_when_best_and_median_disagree():
+    # one lucky 8-core sample makes the best-of-clean slope PASS while the
+    # median of that cell's samples FAILs: the report must not pick a side
+    c, s = 0.002, 100.0
+    args = argparse.Namespace(min_probe_gbs=60.0, page_kb=64)
+    lucky = c * 190_000 / 8 + s
+    rows = [
+        _leg("sql", 100_000, 2, c * 95_000 / 2 + s, 95_000),
+        _leg("sql", 200_000, 2, c * 190_000 / 2 + s, 190_000),
+        _leg("sql", 100_000, 8, c * 95_000 / 8 + s, 95_000),
+        _leg("sql", 200_000, 8, lucky, 190_000),
+        _leg("sql", 200_000, 8, lucky + 20.0, 190_000),
+        _leg("sql", 200_000, 8, lucky + 20.0, 190_000),
+    ]
+    md, summ = sb._slope_block(rows, args)
+    assert abs(summ["sql_slope_2to8"] - 1.0) < 1e-6
+    assert summ["sql_slope_med_2to8"] < 0.8
+    assert f"UNRESOLVED: best-of-clean 1.000 vs median-of-clean {summ['sql_slope_med_2to8']:.3f}" in md
+    assert "PASS" not in md and "FAIL" not in md
+    assert "interference only ever slows" not in md
