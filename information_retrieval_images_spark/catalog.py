@@ -34,6 +34,7 @@ belong to the build job, not the sink.
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import os
 import shutil
@@ -88,6 +89,8 @@ class Snapshot:
         # reusing a DataFrame reuses its file index: a warm query skips the
         # directory listing (~0.2-0.4 s of single-query latency)
         self.dfs: dict[str, DataFrame] = {}
+        # (table, bucket, subdirectory) -> its parquet files (version_files)
+        self.files: dict[tuple[str, int, str], list[str]] = {}
 
 
 class Catalog:
@@ -184,6 +187,19 @@ class Catalog:
     def version_dirs(self, name: str) -> dict[int, str]:
         """bucket -> live version directory of ``name`` in the snapshot."""
         return {b: self.version_path(name, b, v) for b, v in self.snapshot().tables[name].items()}
+
+    def version_files(self, name: str, bucket: int, sub: str = "") -> list[str]:
+        """Sorted parquet files of ``name``'s live version of ``bucket``, in
+        its subdirectory ``sub`` (e.g. ``tp=3``; none if absent). Memoized
+        on the snapshot — a version is immutable — so a warm driver-side
+        query lists no directory."""
+        snap = self.snapshot()
+        key = (name, bucket, sub)
+        files = snap.files.get(key)
+        if files is None:
+            d = os.path.join(self.version_path(name, bucket, snap.tables[name][bucket]), sub)
+            files = snap.files[key] = sorted(glob.glob(os.path.join(d, "*.parquet")))
+        return files
 
     def commit(
         self,

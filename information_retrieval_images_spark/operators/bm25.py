@@ -2,35 +2,45 @@
 
 Reference analogue: the central ANN top-k search operator
 (``vector_db.py:93-103``, called from ``server.py:146-147``) — replaced by
-BM25 (k1=1.2, b=0.75). :func:`bm25_topk_wand` is the one engine: block-max
-scoring with doc-group skipping inside a pandas kernel. A per (query, task)
-partial top-k maintains a score threshold and skips *decoding* any 2^14-doc
-group whose summed per-term block-max upper bound cannot beat it (the
-inverted-index analogue of the reference's IVF nprobe pruning). Exact: the
-bound is a true upper bound, so no true top-k member is ever pruned. Result
-contract: ``(query_id, rank, doc_id, bm25_score)`` (plus ``url`` through
-:func:`attach_urls`) with ties broken by doc_id, rank-identical to
-``oracle.oracle_topk``.
+BM25 (k1=1.2, b=0.75). Block-max WAND is the one scorer: a per (query,
+task) partial top-k maintains a score threshold and skips *decoding* any
+2^14-doc group whose summed per-term block-max upper bound cannot beat it
+(the inverted-index analogue of the reference's IVF nprobe pruning). Exact:
+the bound is a true upper bound, so no true top-k member is ever pruned.
+Result contract: ``(query_id, rank, doc_id, bm25_score)`` (plus ``url``)
+with ties broken by doc_id, rank-identical to ``oracle.oracle_topk``.
 
-Scale notes (100 TB): the query-term set is tiny -> broadcast; the postings
-scan is pruned at the directory level by the term-prefix (tp) partition
-filter and at the row-group level by the pushed ``term`` IN-list (min-max on
-the sort column). The only shuffles are the per-task candidate routing and
-(when any query fans out past one task) the global rank window; results are
-NOT globally sorted — the contract is the (query_id, rank) key.
-``postings_per_task`` splits a query's doc-groups across executors so a
-head-term query does not serialize on one task. A query pins one catalog
-snapshot (catalog.py), so a concurrent commit never changes its inputs.
+One query with fan-out 1 (matched volume <= ``postings_per_task``) on
+directory postings is scored IN THE DRIVER over pyarrow reads of the pinned
+manifest's files, urls included: a warm :func:`bm25_search` runs no Spark
+job. Batches, fan-out above 1 and Iceberg postings run the Spark plan.
+
+Scale notes (100 TB): the postings scan is pruned at the directory level by
+the term-prefix (tp) partition and at the row-group level by the pushed
+``term`` IN-list (min-max on the sort column). The Spark plan's only
+shuffles are the per-task candidate routing and (when a query fans out past
+one task) the global rank window; results are NOT globally sorted — the
+contract is the (query_id, rank) key. ``postings_per_task`` splits a query's
+doc-groups across executors so a head-term query does not serialize on one
+task, and bounds the driver path's memory. The driver path lists each
+version directory once per snapshot (Catalog.version_files), so a warm
+query makes no directory listing. The driver's url read prunes to
+the top-k docs' buckets, but every ``docs`` file spans nearly the whole
+doc_id range, so its doc_id row-group pruning still opens about one row
+group per file. A query pins one catalog snapshot (catalog.py), so a
+concurrent commit never changes its inputs.
 """
 
 from __future__ import annotations
 
 import heapq
 import os
-from typing import Iterator
+import threading
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -43,16 +53,19 @@ from .index_build import DOC_GROUP_BITS, term_prefix
 RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 
 
-# Worker-process cache of DECODED doclens sidecar groups (guide §4.5:
+# Process-wide cache of DECODED doclens sidecar groups (guide §4.5:
 # heavyweight per-task state amortized across tasks via worker reuse). Every
 # decode kernel batch used to re-read + re-varint-decode its (bucket, group)
 # sidecar rows — for a 50-query batch the same few dozen groups were decoded
 # hundreds of times per run. Keyed by the bucket's version directory: a
 # version is immutable (catalog.py), so an entry can never go stale; a
 # rewritten bucket is a new directory and its old entry ages out of the LRU.
+# Driver-side queries share it across request threads, so one lock guards
+# lookup, fill and eviction; the sidecar read and decode run outside it.
 _DL_CACHE: dict[str, dict[int, tuple[np.ndarray, np.ndarray]]] = {}
 _DL_CACHE_BYTES = [0]
 _DL_CACHE_MAX_BYTES = 256 << 20  # decoded sidecars are ~16 B/doc; LRU-bounded
+_DL_LOCK = threading.Lock()
 
 
 def _load_group_doclens(
@@ -63,30 +76,27 @@ def _load_group_doclens(
     buckets, so one group's docs span several buckets' sidecar rows).
     ``dirs`` maps each bucket to its doclens version directory.
 
-    Executor-side pyarrow point read of the ``doclens`` sidecar (format v4:
-    blocks no longer repeat dl per posting — index_build.DOCLENS_SCHEMA).
-    Discovery is scoped to the CANDIDATE buckets' version directories
-    (VERDICT r4 what's-wrong #2): a dataset over the doclens root would list
-    every bucket directory before pruning — O(buckets) metadata RPCs per
-    WAND task per query on object storage at 10^4-10^5 buckets. Each
-    candidate directory becomes its own tiny dataset, so a task's sidecar IO
-    is O(its buckets); parquet row-group min/max pruning on the doc_group
-    sort column then skips to the requested groups. Decoded (bucket, group)
-    arrays are memoized per worker process in _DL_CACHE.
+    pyarrow point read (in an executor or the driver) of the ``doclens``
+    sidecar (format v4: blocks no longer repeat dl per posting —
+    index_build.DOCLENS_SCHEMA). Discovery is scoped to the CANDIDATE
+    buckets' version directories (VERDICT r4 what's-wrong #2): a dataset
+    over the doclens root would list every bucket directory before pruning
+    — O(buckets) metadata RPCs per query on object storage at 10^4-10^5
+    buckets. Each candidate directory becomes its own tiny dataset, so the
+    sidecar IO is O(its buckets); parquet row-group min/max pruning on the
+    doc_group sort column then skips to the requested groups. Decoded
+    (bucket, group) arrays are memoized per process in _DL_CACHE.
     """
-    import pyarrow.dataset as ds
-
     by_bucket: dict[int, set[int]] = {}
     for b, g in pairs:
         by_bucket.setdefault(int(b), set()).add(int(g))
     per_group: dict[int, list[tuple[np.ndarray, np.ndarray]]] = {}
     for b in sorted(by_bucket):
         key = dirs[b]
-        cached = _DL_CACHE.get(key)
-        if cached is None:
-            cached = {}
-            _DL_CACHE[key] = cached
-        missing = [g for g in sorted(by_bucket[b]) if g not in cached]
+        with _DL_LOCK:  # the entry moves to the LRU end
+            cached = _DL_CACHE[key] = _DL_CACHE.pop(key, None) or {}
+            got = {g: cached[g] for g in by_bucket[b] if g in cached}
+        missing = sorted(g for g in by_bucket[b] if g not in got)
         if missing:
             dataset = ds.dataset(key, format="parquet")
             tbl = dataset.to_table(
@@ -100,22 +110,21 @@ def _load_group_doclens(
             ):
                 ids = np.cumsum(varint_decode(ie).astype(np.int64))
                 dls = varint_decode(de).astype(np.int64)
-                cached[int(g)] = (ids, dls)
-                _DL_CACHE_BYTES[0] += ids.nbytes + dls.nbytes
+                got[int(g)] = (ids, dls)
             for g in missing:  # groups with no sidecar row: pin the miss
-                cached.setdefault(int(g), (np.empty(0, np.int64), np.empty(0, np.int64)))
-            while _DL_CACHE_BYTES[0] > _DL_CACHE_MAX_BYTES and len(_DL_CACHE) > 1:
-                old_key = next(iter(_DL_CACHE))
-                if old_key == key:  # never evict the entry being filled
-                    break
-                evicted = _DL_CACHE.pop(old_key)
-                _DL_CACHE_BYTES[0] -= sum(
-                    i.nbytes + d.nbytes for i, d in evicted.values()
-                )
-        for g in by_bucket[b]:
-            ids, dls = cached[int(g)]
+                got.setdefault(g, (np.empty(0, np.int64), np.empty(0, np.int64)))
+            with _DL_LOCK:  # last in LRU order, so never evicted below
+                cached = _DL_CACHE[key] = _DL_CACHE.pop(key, None) or {}
+                for g in missing:
+                    if g not in cached:
+                        cached[g] = got[g]
+                        _DL_CACHE_BYTES[0] += got[g][0].nbytes + got[g][1].nbytes
+                while _DL_CACHE_BYTES[0] > _DL_CACHE_MAX_BYTES and len(_DL_CACHE) > 1:
+                    evicted = _DL_CACHE.pop(next(iter(_DL_CACHE)))
+                    _DL_CACHE_BYTES[0] -= sum(i.nbytes + d.nbytes for i, d in evicted.values())
+        for g, (ids, dls) in got.items():
             if ids.size:
-                per_group.setdefault(int(g), []).append((ids, dls))
+                per_group.setdefault(g, []).append((ids, dls))
     out: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     for g, parts in per_group.items():
         if len(parts) == 1:
@@ -202,7 +211,7 @@ def _query_plan_meta(catalog: Catalog, qbatch: list[tuple[int, str, int]]):
     All of it comes from the driver caches (Catalog.global_query_stats /
     term_dfs) — zero Spark jobs on a warm repeat query. idf uses the shared
     numpy kernel (textproc.bm25_idf) — the same code the oracle runs.
-    Returns (rows, df_map, n_docs, avgdl, volumes) where rows is
+    Returns (rows, df_map, avgdl, volumes) where rows is
     [(query_id, term, qtf, k, idf)] restricted to indexed terms and volumes
     maps query_id -> total matched postings (sum of its terms' df)."""
     qrows = _query_term_rows(qbatch)
@@ -228,7 +237,7 @@ def _query_plan_meta(catalog: Catalog, qbatch: list[tuple[int, str, int]]):
     volumes: dict[int, int] = {}
     for q, t, _, _, _ in rows:
         volumes[q] = volumes.get(q, 0) + df_map[t]
-    return rows, df_map, n_docs, avgdl, volumes
+    return rows, df_map, avgdl, volumes
 
 
 def _pruned_postings(catalog: Catalog, terms) -> DataFrame:
@@ -245,6 +254,14 @@ def _pruned_postings(catalog: Catalog, terms) -> DataFrame:
         .where(F.col("term").isin(list(terms) or [""]))
         .where(F.col("tp").isin(tps or [-1]))
     )
+
+
+def _block_ub(max_tf, min_dl, idf, qtf, avgdl: float):
+    """Per-block score upper bound from (max_tf, min_dl) under the CURRENT
+    avgdl — a true bound even when blocks were encoded under older
+    collection statistics (incremental appends); see
+    index_build.POSTINGS_SCHEMA. Takes Spark Columns or pandas Series."""
+    return idf * ((max_tf * (K1 + 1.0)) / (max_tf + K1 * (1.0 - B + B * min_dl / avgdl))) * qtf
 
 
 POSTINGS_PER_TASK = 1 << 18  # ~4 doc-groups of postings per WAND task (byte budget knob)
@@ -265,6 +282,16 @@ def _task_fanout(volumes: dict[int, int], postings_per_task: int, max_tasks: int
     return {q: int(min(max_tasks, max(1, -(-v // postings_per_task)))) for q, v in volumes.items()}
 
 
+def _route(catalog: Catalog, qbatch, postings_per_task: int):
+    """(plan meta, in_driver) for a normalized batch. in_driver: one query,
+    fan-out 1 (matched volume <= postings_per_task, which bounds driver
+    memory) and directory (not Iceberg) postings — the batch
+    _wand_driver_topk scores."""
+    meta = _query_plan_meta(catalog, qbatch)
+    one = len(qbatch) == 1 and meta[3].get(qbatch[0][0], 0) <= postings_per_task
+    return meta, one and catalog._is_dir_table("postings")
+
+
 def bm25_topk_wand(
     spark: SparkSession,
     catalog: Catalog,
@@ -273,7 +300,9 @@ def bm25_topk_wand(
 ) -> DataFrame:
     """Block-max scoring with doc-group skipping + threshold pruning.
 
-    Stage 1: blocks are routed to (query_id, task) where task = doc_group %
+    When the batch is one fan-out-1 query (_route), the driver's top-k
+    comes back as a local DataFrame (no exchange, no job of its own). Else,
+    stage 1: blocks are routed to (query_id, task) where task = doc_group %
     tasks_q; one applyInPandas kernel per task runs the pruned scorer and
     emits a local top-k. Stage 2: global top-k per query (window rank over
     <= tasks_q * k candidate rows — negligible).
@@ -287,22 +316,33 @@ def bm25_topk_wand(
     on one task (per-task overhead is not free).
     """
     with catalog.pinned():
-        return _wand_plan(spark, catalog, _query_rows(queries), postings_per_task)
+        qbatch = _query_rows(queries)
+        meta, in_driver = _route(catalog, qbatch, postings_per_task)
+        if in_driver:
+            return spark.createDataFrame(_wand_driver_topk(catalog, qbatch[0], meta), RESULT_SCHEMA)
+        return _wand_plan(spark, catalog, qbatch, meta, postings_per_task)
 
 
-def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, postings_per_task: int) -> DataFrame:
-    rows, df_map, _, avgdl, volumes = _query_plan_meta(catalog, qbatch)
+def bm25_search(spark: SparkSession, catalog: Catalog, query_text: str, k: int = 10) -> pd.DataFrame:
+    """One query -> its ranked top-k as a pandas frame (rank, doc_id, url,
+    bm25_score), from one pinned snapshot: the serving entry point. Scored
+    in the driver when _route allows (a warm call runs no Spark job), else
+    by the Spark plan plus :func:`attach_urls`."""
+    qbatch = [(0, query_text, int(k))]
+    with catalog.pinned():
+        meta, in_driver = _route(catalog, qbatch, POSTINGS_PER_TASK)
+        if in_driver:
+            top = _wand_driver_topk(catalog, qbatch[0], meta, urls=True)
+        else:
+            top = attach_urls(_wand_plan(spark, catalog, qbatch, meta, POSTINGS_PER_TASK), catalog).toPandas()
+    return top.sort_values("rank")[["rank", "doc_id", "url", "bm25_score"]].reset_index(drop=True)
+
+
+def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per_task: int) -> DataFrame:
+    rows, df_map, avgdl, volumes = meta
     # volume per query = sum df of its terms, already known driver-side
     tasks_map = _task_fanout(volumes, postings_per_task, _max_query_fanout(spark))
     single_task = all(v == 1 for v in tasks_map.values())
-    if single_task and len(qbatch) == 1:
-        # interactive fast path: ONE query with fan-out 1 -> the query
-        # constants (qtf, idf, k) ride in the kernel closure instead of a
-        # broadcast-joined literal frame, and coalesce(1) feeds the
-        # pruned scan straight into mapInPandas — a one-stage, one-task,
-        # zero-join, zero-shuffle job (the general plan pays a broadcast
-        # exchange plus the kernel's clustering shuffle).
-        return _wand_single_query_plan(spark, catalog, qbatch[0], rows, avgdl)
     qlit = spark.createDataFrame(rows, "query_id int, term string, qtf int, k int, idf double")
     blocks = _pruned_postings(catalog, df_map).join(F.broadcast(qlit), "term")
     if len(set(tasks_map.values())) <= 1:
@@ -310,15 +350,9 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, postings_per_task:
     else:
         tdf = spark.createDataFrame(list(tasks_map.items()), "query_id int, tasks_q int")
         blocks = blocks.join(F.broadcast(tdf), "query_id")
-    # Per-block upper bound from (max_tf, min_dl) under the CURRENT avgdl —
-    # a true bound even when blocks were encoded under older collection
-    # statistics (incremental appends); see index_build.POSTINGS_SCHEMA.
-    ub_tf_norm = (F.col("max_tf") * (K1 + 1.0)) / (
-        F.col("max_tf") + K1 * (1.0 - B + B * F.col("min_dl") / F.lit(avgdl))
-    )
     blocks = blocks.withColumn(
         "task", (F.shiftright(F.col("first_doc"), DOC_GROUP_BITS) % F.col("tasks_q")).cast("int")
-    ).withColumn("ub", F.col("idf") * ub_tf_norm * F.col("qtf"))
+    ).withColumn("ub", _block_ub(*map(F.col, ("max_tf", "min_dl", "idf", "qtf")), avgdl))
     # Interactive-latency shave: the kernel's groupBy would shuffle into
     # spark.sql.shuffle.partitions tasks even when the batch has far fewer
     # (query, task) groups — ~31 empty task launches for a single query.
@@ -340,7 +374,7 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, postings_per_task:
         # every query has fan-out 1, so each kernel's local top-k IS the
         # final ranked top-k (rank column included) — skip the global-rank
         # window, its shuffle, and the k-bound join entirely. This is the
-        # interactive tail-query common case: one shuffle, one job.
+        # common case of a batch of tail queries: one shuffle, one job.
         return local_topk
     w = Window.partitionBy("query_id").orderBy(F.desc("bm25_score"), F.asc("doc_id"))
     ks = spark.createDataFrame([(q, k) for q, _, k in qbatch], "query_id int, k int")
@@ -352,60 +386,85 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, postings_per_task:
         # no global orderBy: a result sort is one more exchange + job per
         # query (interactive latency), and the result contract is the
         # (query_id, rank) KEY, not row order — callers that render sort
-        # the <= n_queries*k rows driver-side (serving.SearchSession does)
+        # the <= n_queries*k rows driver-side (bm25_search does)
     )
 
 
-def _wand_single_query_plan(
-    spark: SparkSession,
+# bucket=B/v=<version>/tp=T below the postings root (catalog.py layout)
+_POSTINGS_PARTITIONING = ds.partitioning(
+    pa.schema([("bucket", pa.int32()), ("v", pa.string()), ("tp", pa.int32())]), flavor="hive"
+)
+_POSTINGS_COLUMNS = ["term", "first_doc", "last_doc", "n_docs", "max_tf", "min_dl", "bucket", "v", "docs_enc", "tfs_enc"]
+
+
+def _wand_driver_topk(
     catalog: Catalog,
     qrow: tuple[int, str, int],
-    term_rows: list[tuple[int, str, int, int, float]],
-    avgdl: float,
-) -> DataFrame:
-    """One-stage plan for a single fan-out-1 query: pruned postings scan ->
-    coalesce(1) -> mapInPandas running the shared WAND kernel.
+    meta,
+    urls: bool = False,
+) -> pd.DataFrame:
+    """Score one fan-out-1 query in the driver: no Spark job. Memory is
+    bounded by the fan-out-1 precondition (matched volume <=
+    postings_per_task).
 
-    The general plan's per-query literals (qtf, idf, k) travel in the kernel
-    closure, so there is no broadcast-joined query frame, no exchange of any
-    kind, and exactly one task — the minimal Spark plan for an interactive
-    query (per-job fixed overhead dominates single-query latency at small k).
-    coalesce(1) merges the pruned scan's splits without a shuffle; batches
-    are concatenated before scoring because the kernel's doc-group skipping
-    needs every block of a group in one frame. Memory is bounded by the
-    fan-out-1 precondition: matched volume <= postings_per_task.
+    pyarrow reads the pinned snapshot's postings, only the query's tp=T
+    directories (file lists memoized per snapshot:
+    Catalog.version_files), filtered on the term IN-list (row-group min/max on the
+    sorted term column); the shared WAND kernel scores them, doclens read
+    and drift check included. Rows enter the kernel in a fixed order
+    (bucket, then tp, then file name) and the kernel sums each doc's
+    contributions in row order, so repeat runs return identical floats;
+    the Spark plan's row order may differ in the last ulp. Exact equality
+    with the oracle is ROADMAP direction 5, out of scope here. With
+    ``urls``, adds a ``url`` column (:func:`_driver_urls`).
     """
     query_id, _, k = qrow
-    if not term_rows:  # no query term is in the index -> empty result
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    term_w = {t: (qtf, idf) for _, t, qtf, _, idf in term_rows}
-    dl_root = catalog.path("doclens")
+    term_rows, _, avgdl, _ = meta
+    qtf = {t: q for _, t, q, _, _ in term_rows}
+    idf = {t: i for _, t, _, _, i in term_rows}
+    tp_n = catalog.tp_n()
+    tps = sorted({term_prefix(t, tp_n) for t in qtf})
+    files = [
+        f
+        for b in sorted(catalog.version_dirs("postings"))
+        for tp in tps  # a bucket with no term of prefix tp has no tp=T directory
+        for f in catalog.version_files("postings", b, f"tp={tp}")
+    ]
+    if not files:  # no query term is in the index
+        top = _topk_frame(query_id, [])
+        return top.assign(url=pd.Series(dtype=object)) if urls else top
+    pdf = ds.dataset(
+        files, format="parquet", partitioning=_POSTINGS_PARTITIONING, partition_base_dir=catalog.path("postings")
+    ).to_table(columns=_POSTINGS_COLUMNS, filter=ds.field("term").isin(list(qtf))).to_pandas()
+    pdf["qtf"] = pdf["term"].map(qtf).astype(np.int64)
+    pdf["idf"] = pdf["term"].map(idf).astype(np.float64)
+    pdf["ub"] = _block_ub(pdf["max_tf"], pdf["min_dl"], pdf["idf"], pdf["qtf"], avgdl)
+    pdf["query_id"] = np.int32(query_id)
+    pdf["k"] = np.int32(k)
+    top = _wand_task_kernel(pdf, avgdl, catalog.path("doclens"))
+    if urls:
+        top["url"] = _driver_urls(catalog, top["doc_id"].to_numpy(), pdf)
+    return top
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        w = pdf["term"].map(term_w)
-        pdf["qtf"] = np.fromiter((x[0] for x in w), dtype=np.int64, count=len(w))
-        pdf["idf"] = np.fromiter((x[1] for x in w), dtype=np.float64, count=len(w))
-        max_tf = pdf["max_tf"].to_numpy(dtype=np.float64)
-        min_dl = pdf["min_dl"].to_numpy(dtype=np.float64)
-        ub_tf_norm = (max_tf * (K1 + 1.0)) / (max_tf + K1 * (1.0 - B + B * min_dl / avgdl))
-        pdf["ub"] = pdf["idf"].values * ub_tf_norm * pdf["qtf"].values
-        pdf["query_id"] = np.int32(query_id)
-        pdf["k"] = np.int32(k)
-        yield _wand_task_kernel(pdf, avgdl, dl_root)
 
-    scan = _pruned_postings(catalog, term_w).select(
-        "term", "first_doc", "n_docs", "max_tf", "min_dl", "bucket", "v", "docs_enc", "tfs_enc"
+def _driver_urls(catalog: Catalog, doc_ids: np.ndarray, blocks: pd.DataFrame) -> list:
+    """url per doc id (None if absent, like attach_urls' left join): a
+    pyarrow read of ``docs`` (doc_id, url) filtered on doc_id, over only the
+    buckets whose postings ``blocks`` span one of the ids (a doc's docs row
+    lives in the bucket of its postings)."""
+    spans = (blocks["first_doc"].to_numpy()[:, None] <= doc_ids) & (doc_ids <= blocks["last_doc"].to_numpy()[:, None])
+    buckets = sorted(set(blocks["bucket"].to_numpy()[spans.any(axis=1)].tolist()) & set(catalog.version_dirs("docs")))
+    files = [f for b in buckets for f in catalog.version_files("docs", b)]
+    tbl = ds.dataset(files, format="parquet").to_table(
+        columns=["doc_id", "url"], filter=ds.field("doc_id").isin(doc_ids.tolist())
     )
-    return scan.coalesce(1).mapInPandas(run, schema=RESULT_SCHEMA)
+    url_of = dict(zip(tbl["doc_id"].to_pylist(), tbl["url"].to_pylist()))
+    return [url_of.get(d) for d in doc_ids.tolist()]
 
 
 def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataFrame:
-    """The per-(query, task) block-max WAND scorer (shared by the general
-    applyInPandas plan and the single-query one-stage plan): visits the
+    """The per-(query, task) block-max WAND scorer (shared by the Spark
+    plan's applyInPandas tasks and the driver path): visits the
     task's doc-groups in descending upper bound, skips decoding any group
     whose bound cannot beat the running top-k threshold, and returns the
     ranked local top-k. Exact — the bound is a true upper bound. Requires
@@ -486,17 +545,21 @@ def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataF
                     heapq.heappush(heap, (sc, nd))
                 elif (sc, nd) > heap[0]:
                     heapq.heapreplace(heap, (sc, nd))
-        rows = sorted(((sc, -nd) for sc, nd in heap), key=lambda x: (-x[0], x[1]))
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(rows), query_id, dtype=np.int32),
-                "rank": np.arange(1, len(rows) + 1, dtype=np.int32),
-                "doc_id": np.array([d for _, d in rows], dtype=np.int64),
-                "bm25_score": np.array([s for s, _ in rows], dtype=np.float64),
-            }
-        )
+        return _topk_frame(query_id, sorted(((sc, -nd) for sc, nd in heap), key=lambda x: (-x[0], x[1])))
 
     return _body(pdf)
+
+
+def _topk_frame(query_id: int, rows: list[tuple[float, int]]) -> pd.DataFrame:
+    """Ranked [(score, doc_id)] -> the RESULT_SCHEMA-typed pandas frame."""
+    return pd.DataFrame(
+        {
+            "query_id": np.full(len(rows), query_id, dtype=np.int32),
+            "rank": np.arange(1, len(rows) + 1, dtype=np.int32),
+            "doc_id": np.array([d for _, d in rows], dtype=np.int64),
+            "bm25_score": np.array([s for s, _ in rows], dtype=np.float64),
+        }
+    )
 
 
 def attach_urls(results: DataFrame, catalog: Catalog) -> DataFrame:

@@ -9,10 +9,12 @@ Two layers:
 
 - :class:`SearchSession` — the warm-path object a long-lived driver holds:
   one SparkSession + one Catalog whose driver-side metadata caches
-  (global stats, per-term df — ``catalog.py``) stay hot across requests, so
-  a repeat query costs only the pruned scoring job. This is the unit the
-  latency contract is written against (the ``perfbench`` ``search``
-  workload: closed-loop clients on one warm session).
+  (global stats, per-term df — ``catalog.py``) stay hot across requests,
+  so a repeat query whose matched volume fits one task runs no Spark job:
+  ``operators.bm25.bm25_search`` scores it in the driver from the pinned
+  manifest's files. This is the unit the latency contract is written
+  against (the ``perfbench`` ``search`` workload: closed-loop clients on
+  one warm session).
   Its :meth:`SearchSession.append` wraps ``operators.incremental.
   append_bucket`` with HTTP-ingest bucket allocation (a dedicated id range,
   disjoint from build and streaming ranges).
@@ -21,15 +23,16 @@ Two layers:
   ``{"query": ..., "results": [{"rank", "doc_id", "url", "bm25_score"}]}``
   and ``POST /append`` taking ``{"pages": [{"url", "html" (base64),
   "lang"}, ...]}``. The server is THREADED for /search: concurrent queries
-  are independent read-only jobs, each tagged with its own FAIR scheduler
-  pool (session.SPARK_CONF sets spark.scheduler.mode=FAIR) so the driver
-  overlaps them instead of queueing one behind another's stages. /append
-  stays serialized behind a lock (each append commits against the manifest
-  it read; a concurrent one would fail its commit). Horizontal scale beyond
-  one driver comes from read-only replicas over the same warehouse, with
-  ingest on ONE writer: every commit writes new immutable bucket versions
-  and publishes them with one atomic manifest file, and each search pins
-  one manifest, so a replica's queries never see a half-applied write.
+  are independent read-only calls that run side by side in the driver (the
+  pyarrow reads release the GIL). A query that still takes the Spark plan
+  (fan-out above 1, Iceberg postings) runs its jobs in the default pool,
+  so concurrent ones queue FIFO; that case is unmeasured. /append stays serialized behind a lock
+  (each append commits against the manifest it read; a concurrent one
+  would fail its commit). Horizontal scale beyond one driver comes from
+  read-only replicas over the same warehouse, with ingest on ONE writer:
+  every commit writes new immutable bucket versions and publishes them with
+  one atomic manifest file, and each search pins one manifest, so a
+  replica's queries never see a half-applied write.
 
 No new dependencies: stdlib http only. The reference's rate-limit sleep
 (``server.py:152``, sleep(4) per Gemini call) has no analogue — scoring is
@@ -39,7 +42,6 @@ local to the cluster.
 from __future__ import annotations
 
 import base64
-import itertools
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -50,7 +52,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from .catalog import Catalog
-from .operators.bm25 import attach_urls, bm25_topk_wand
+from .operators.bm25 import bm25_search
 
 # HTTP-ingest buckets count up from here: disjoint from build buckets (small
 # ints), streaming micro-batch buckets (1_000_000 + batch_id) and streaming
@@ -64,7 +66,6 @@ class SearchSession:
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.catalog = Catalog(spark, warehouse)
-        self._qid_iter = itertools.count()  # atomic under the GIL
         # appends commit against the manifest they read, so two at once would
         # make one fail; the threaded HTTP server funnels every /append here
         self._append_lock = threading.Lock()
@@ -72,32 +73,10 @@ class SearchSession:
     def search(self, query_text: str, k: int = 10) -> list[dict]:
         """One query -> ranked [{rank, doc_id, url, bm25_score}, ...].
 
-        Thread-safe and overlappable: each call tags its jobs with its own
-        FAIR scheduler pool (local properties are per-Python-thread under
-        PySpark's pinned-thread mode), so two clients' independent read-only
-        scoring jobs round-robin on the cluster instead of head-of-line
-        blocking behind each other's stages. The scoring plan and the url
-        lookup read one pinned catalog snapshot."""
-        qid = next(self._qid_iter)
-        # pass the batch as a plain list: the engine normalizes driver-side,
-        # so no LocalTableScan collect job is spent on the query row itself
-        qbatch = [(qid, query_text, int(k))]
-        sc = self.spark.sparkContext
-        sc.setLocalProperty("spark.scheduler.pool", f"ir_search_{qid % 16}")
-        try:
-            with self.catalog.pinned():
-                rows = attach_urls(bm25_topk_wand(self.spark, self.catalog, qbatch), self.catalog).collect()
-        finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
-        return [
-            {
-                "rank": int(r["rank"]),
-                "doc_id": int(r["doc_id"]),
-                "url": r["url"],
-                "bm25_score": float(r["bm25_score"]),
-            }
-            for r in sorted(rows, key=lambda r: r["rank"])
-        ]
+        Thread-safe: the scoring and the url lookup read one pinned catalog
+        snapshot per call, and a warm query with fan-out 1 runs no Spark
+        job (operators.bm25.bm25_search)."""
+        return bm25_search(self.spark, self.catalog, query_text, int(k)).to_dict("records")
 
     def append(self, pages: list[dict], bucket: int | None = None, lang: str | None = "en") -> dict:
         """Ingest pages (list of {"url", "html" bytes, "lang", optional
@@ -140,8 +119,8 @@ def make_http_server(
     """HTTP wrapper: GET /search?q=...&k=10 (reference server.py:128-177)
     and POST /append with {"pages": [{"url", "html" base64, "lang"}, ...]}
     (reference ingest mutations server.py:50-101). Threaded: /search
-    requests overlap (independent read-only jobs in per-request FAIR
-    pools); /append serializes inside SearchSession.append."""
+    requests overlap (independent read-only calls); /append serializes
+    inside SearchSession.append."""
 
     class Handler(BaseHTTPRequestHandler):
         def _json(self, code: int, obj: dict) -> None:

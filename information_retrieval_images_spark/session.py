@@ -66,9 +66,9 @@ SPARK_CONF = {
     # shuffle partitions near core count so tiny SFs don't drown in tasks.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     # FAIR scheduling across pools: concurrent driver threads (overlapped
-    # bucket pipelines in build_index, sidecar commits in write_bucket,
-    # concurrent /search requests) each tag their jobs with a pool so one
-    # thread's long stage cannot starve another's small commit job. Pools are
+    # bucket pipelines in build_index, sidecar commits in write_bucket) each
+    # tag their jobs with a pool so one thread's long stage cannot starve
+    # another's small commit job. Pools are
     # created on demand (no allocation file): default per-pool config, FAIR
     # round-robin ACROSS pools, plain FIFO for everything in the default pool
     # — single-threaded behavior is unchanged.

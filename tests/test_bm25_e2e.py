@@ -4,18 +4,27 @@ run the frozen query set, compare rank-identically to the oracle scorer
 corpus + committed-CSV pattern, post_test_score.py:9-79)."""
 
 import math
+import sys
+import threading
+import uuid
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from information_retrieval_images_spark import fixtures
-from information_retrieval_images_spark.operators.bm25 import attach_urls, bm25_topk_wand
+from information_retrieval_images_spark.operators.bm25 import (
+    RESULT_SCHEMA,
+    attach_urls,
+    bm25_search,
+    bm25_topk_wand,
+)
 from information_retrieval_images_spark.operators.index_build import build_index
 from information_retrieval_images_spark.oracle import (
     build_oracle_index,
     oracle_results_frame,
 )
+from information_retrieval_images_spark.serving import SearchSession
 
 N_DOCS = 300
 N_QUERIES = 20
@@ -111,12 +120,109 @@ def test_build_engine_guard_keeps_index(spark, corpus, built):
     _assert_rank_identical(got, expected[["query_id", "rank", "doc_id", "bm25_score"]])
 
 
-def test_wand_single_query_one_stage_plan_and_identity(spark, corpus, built):
-    """The interactive fast path (one query, fan-out 1) must plan ZERO
-    exchanges — pruned scan -> coalesce(1) -> mapInPandas, no broadcast of a
-    query-literal frame, no clustering shuffle — and stay rank-identical to
-    the oracle. The general engine (fan-out forced above 1 by a tiny
-    postings_per_task) must agree."""
+def _jobs_in_group(spark, fn):
+    """(fn(), ids of the Spark jobs fn submitted from this thread), read
+    from a job group of its own."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+ABSENT_QUERY = "zzzznotaterm"
+
+
+def _search_frame(got: list[dict], query_id: int) -> pd.DataFrame:
+    return pd.DataFrame(got, columns=["rank", "doc_id", "url", "bm25_score"]).assign(query_id=query_id)
+
+
+def test_warm_search_runs_no_spark_job(spark, corpus, built):
+    """A warm SearchSession.search of a fan-out-1 query is scored in the
+    driver: zero Spark jobs in its job group, oracle-identical ranks, urls
+    and scores, and identical floats on a repeat (fixed row order)."""
+    _, queries, idx, expected = corpus
+    cat, _ = built
+    session = SearchSession(spark, cat.root)
+    exp = expected[["query_id", "rank", "doc_id", "bm25_score"]]
+    for i, row in enumerate(queries.itertuples(index=False)):
+        _, cold_jobs = _jobs_in_group(spark, lambda: session.search(row.query_text, k=row.k))
+        if i == 0:  # the probe sees jobs: the cold call fetches term dfs
+            assert cold_jobs
+        got, jobs = _jobs_in_group(spark, lambda: session.search(row.query_text, k=row.k))
+        assert jobs == [], (row.query_text, jobs)
+        _assert_rank_identical(_search_frame(got, row.query_id), exp[exp["query_id"] == row.query_id])
+        assert [r["url"] for r in got] == [idx.url_of[r["doc_id"]] for r in got]
+        assert session.search(row.query_text, k=row.k) == got
+    # a query whose terms are all absent (a typo) is an empty result, warm
+    # or cold, and a warm one runs no job either
+    session.search(ABSENT_QUERY)
+    got, jobs = _jobs_in_group(spark, lambda: session.search(ABSENT_QUERY))
+    assert got == [] and jobs == [], (got, jobs)
+
+
+def test_forced_spark_plan_agrees_with_driver_path(spark, corpus, built):
+    """postings_per_task=1 pushes every query that matches two or more
+    postings past fan-out 1, onto the Spark plan (it runs jobs); with
+    attach_urls it agrees with the driver path's bm25_search on rank,
+    doc_id and url, with scores within 1e-9."""
+    _, queries, _, _ = corpus
+    cat, _ = built
+
+    def forced_spark(q, k):
+        top = attach_urls(bm25_topk_wand(spark, cat, [(0, q, k)], postings_per_task=1), cat).toPandas()
+        return top.sort_values("rank").reset_index(drop=True)
+
+    on_spark = 0
+    for row in queries.itertuples(index=False):
+        driver, driver_jobs = _jobs_in_group(spark, lambda: bm25_search(spark, cat, row.query_text, row.k))
+        spark_res, jobs = _jobs_in_group(spark, lambda: forced_spark(row.query_text, row.k))
+        assert driver_jobs == [], (row.query_text, driver_jobs)
+        if len(driver) > 1:  # matched volume >= 2 > postings_per_task
+            assert jobs, row.query_text
+            on_spark += 1
+        assert spark_res["rank"].tolist() == driver["rank"].tolist()
+        assert spark_res["doc_id"].tolist() == driver["doc_id"].tolist()
+        assert spark_res["url"].tolist() == driver["url"].tolist()
+        for a, b in zip(spark_res["bm25_score"], driver["bm25_score"]):
+            assert abs(a - b) <= 1e-9, (a, b)
+    assert on_spark >= len(queries) // 2, on_spark
+
+
+def test_iceberg_postings_take_the_spark_plan(spark, corpus, built, monkeypatch):
+    """The driver reads postings version directories, so a catalog whose
+    postings are an Iceberg table sends even a fan-out-1 query to the Spark
+    plan, through both entry points."""
+    from information_retrieval_images_spark.catalog import Catalog
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+
+    _, queries, _, _ = corpus
+    cat, _ = built
+    row = queries.iloc[0]
+    calls = []
+    real_driver = bm25_mod._wand_driver_topk
+    empty = spark.createDataFrame([], bm25_mod.RESULT_SCHEMA)
+    monkeypatch.setattr(bm25_mod, "_wand_plan", lambda *a: calls.append("spark") or empty)
+    monkeypatch.setattr(
+        bm25_mod, "_wand_driver_topk", lambda *a, **kw: calls.append("driver") or real_driver(*a, **kw)
+    )
+    bm25_topk_wand(spark, cat, [(0, row.query_text, int(row.k))])
+    bm25_search(spark, cat, row.query_text, int(row.k))
+    assert calls == ["driver", "driver"]
+    calls.clear()
+    monkeypatch.setattr(Catalog, "_is_dir_table", lambda self, name: name != "postings")
+    bm25_topk_wand(spark, cat, [(0, row.query_text, int(row.k))])
+    bm25_search(spark, cat, row.query_text, int(row.k))
+    assert calls == ["spark", "spark"]
+
+
+def test_single_query_dataframe_plans_no_exchange(spark, corpus, built):
+    """A single fan-out-1 query through the DataFrame API is the driver
+    path's result as a local DataFrame: zero exchanges, oracle-identical.
+    An all-absent query is an empty DataFrame, planned without a job."""
     from information_retrieval_images_spark import plans
 
     _, queries, _, expected = corpus
@@ -125,14 +231,58 @@ def test_wand_single_query_one_stage_plan_and_identity(spark, corpus, built):
     for row in queries.head(3).itertuples(index=False):
         df = bm25_topk_wand(spark, cat, [tuple(row)])
         assert plans.count_exchanges(df) == 0, plans.formatted_plan(df)
-        _assert_rank_identical(
-            df.toPandas(), exp[exp["query_id"] == row.query_id]
-        )
-        # same query through the general (shuffled) engine agrees
-        general = bm25_topk_wand(spark, cat, [tuple(row)], postings_per_task=1)
-        _assert_rank_identical(
-            general.toPandas(), exp[exp["query_id"] == row.query_id]
-        )
+        _assert_rank_identical(df.toPandas(), exp[exp["query_id"] == row.query_id])
+    bm25_topk_wand(spark, cat, [(0, ABSENT_QUERY, 10)])  # cold: term df lookup
+    df, jobs = _jobs_in_group(spark, lambda: bm25_topk_wand(spark, cat, [(0, ABSENT_QUERY, 10)]))
+    assert jobs == [], jobs
+    assert plans.count_exchanges(df) == 0, plans.formatted_plan(df)
+    assert df.schema.simpleString() == spark.createDataFrame([], RESULT_SCHEMA).schema.simpleString()
+    assert df.toPandas().empty
+
+
+def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
+    """Request threads share the driver's doclens cache. Capped at 2 KB
+    (below the three buckets' decoded sidecars), fills evict on every
+    query: 4 threads x 20 searches see zero errors and oracle-identical
+    results, and the cache's byte count matches its contents."""
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+
+    _, queries, _, expected = corpus
+    cat, _ = built
+    monkeypatch.setattr(bm25_mod, "_DL_CACHE", {})
+    monkeypatch.setattr(bm25_mod, "_DL_CACHE_BYTES", [0])
+    monkeypatch.setattr(bm25_mod, "_DL_CACHE_MAX_BYTES", 2048)
+    session = SearchSession(spark, cat.root)
+    rows = list(queries.itertuples(index=False))
+    for row in rows:  # warm the term dfs: the threads then run no Spark job
+        session.search(row.query_text, k=row.k)
+    results, errors = [], []
+
+    def client(c):
+        for i in range(20):
+            row = rows[(c + 4 * i) % len(rows)]
+            try:
+                results.append((row, session.search(row.query_text, k=row.k)))
+            except Exception as e:  # noqa: BLE001 — every error is a failure
+                errors.append(e)
+
+    threads = [threading.Thread(target=client, args=(c,)) for c in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads as often as possible
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not errors, errors[:3]
+    assert len(results) == 80
+    exp = expected[["query_id", "rank", "doc_id", "bm25_score"]]
+    for row, got in results:
+        _assert_rank_identical(_search_frame(got, row.query_id), exp[exp["query_id"] == row.query_id])
+    held = sum(i.nbytes + d.nbytes for e in bm25_mod._DL_CACHE.values() for i, d in e.values())
+    assert bm25_mod._DL_CACHE_BYTES[0] == held
 
 
 def test_query_term_guard(spark, built, monkeypatch):

@@ -76,19 +76,31 @@ def test_term_prefix_dirs_prune_postings_files(spark, tmp_path_factory):
     assert sorted(got["term"]) == sorted(full["term"])
 
 
-def test_query_path_plans_tp_partition_filter(spark, tmp_path_factory):
+def test_query_path_plans_tp_partition_filter(spark, tmp_path_factory, monkeypatch):
     """The BM25 engine's postings scan itself carries the tp partition
-    filter."""
+    filter (the Spark plan, forced by postings_per_task=1), and the driver
+    path opens only the query terms' tp directories."""
+    import os
+
     from information_retrieval_images_spark import fixtures
     from information_retrieval_images_spark.catalog import Catalog
-    from information_retrieval_images_spark.operators.bm25 import bm25_topk_wand
-    from information_retrieval_images_spark.operators.index_build import build_index
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+    from information_retrieval_images_spark.operators.index_build import build_index, term_prefix
 
     cat = Catalog(spark, str(tmp_path_factory.mktemp("wh")))
     build_index(spark, spark.createDataFrame(fixtures.make_pages_pandas(60)), cat, n_buckets=1)
-    res = bm25_topk_wand(spark, cat, [(0, "term000000 term000007", 5)])
+    query = (0, "term000000 term000007", 5)
+    res = bm25_mod.bm25_topk_wand(spark, cat, [query], postings_per_task=1)
     plan = plans.formatted_plan(res)
     assert any("PartitionFilters" in line and "tp" in line for line in plan.splitlines())
+
+    opened = []
+    real_dataset = bm25_mod.ds.dataset
+    monkeypatch.setattr(bm25_mod.ds, "dataset", lambda src, **kw: (opened.append(src), real_dataset(src, **kw))[1])
+    bm25_mod.bm25_topk_wand(spark, cat, [query])
+    files = [f for src in opened if isinstance(src, list) for f in src if os.sep + "postings" + os.sep in f]
+    want = {f"tp={term_prefix(t, cat.tp_n())}" for t in ("term000000", "term000007")}
+    assert files and {os.path.basename(os.path.dirname(f)) for f in files} == want
 
 
 def test_small_dim_join_broadcasts(spark, pages_path):
