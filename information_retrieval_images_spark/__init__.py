@@ -48,4 +48,8 @@ BLOCK_SIZE = 128
 #   6  one commit point: immutable bucket versions <table>/bucket=B/v=<id>
 #      published by an atomic _manifest/<seq>.json that also carries the
 #      global stats (the checkpoints and stats_global tables are gone)
-INDEX_FORMAT = 6
+#   7  the postings are the only copy of document content: docs has no
+#      text column (the extracted text lives in a build-only stage until
+#      the build completes), and blocks drop their build-time tf-norm
+#      bound (queries bound blocks by (max_tf, min_dl))
+INDEX_FORMAT = 7

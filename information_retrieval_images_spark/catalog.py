@@ -5,6 +5,7 @@ Layout under the warehouse root::
 
     <table>/bucket=B/v=<version>/...   one immutable version of bucket B
     _manifest/<seq>.json               one file per commit, never rewritten
+    _stage/<version>/bucket=B/...      the build-only stage (extracted text)
 
 Every write (a build bucket, append, delete, compaction) writes NEW version
 directories and never changes an existing file. It then publishes manifest
@@ -12,20 +13,30 @@ directories and never changes an existing file. It then publishes manifest
 which fails if another writer already took that sequence number. A manifest
 holds the live bucket -> version map of ``docs``, ``postings``, ``stats``,
 ``doclens`` and ``blooms``, the global statistics (n_docs, sum_dl, avgdl,
-max_doc_id, p_logical, tp_n, format) and the commit's lineage record. This
-is Iceberg's model (https://iceberg.apache.org/spec/): write new files, then
-swap the metadata atomically. A reader pins one manifest and reads that
-manifest's explicit directory list, so a concurrent commit is either fully
-visible to it or not at all, and an uncommitted write is invisible.
+max_doc_id, p_logical, tp_n, format), the version of an unfinished build's
+stage and the commit's lineage record. This is Iceberg's model
+(https://iceberg.apache.org/spec/): write new files, then swap the metadata
+atomically. A reader pins one manifest and reads that manifest's explicit
+directory list, so a concurrent commit is either fully visible to it or not
+at all, and an uncommitted write is invisible.
 
 Retired versions stay on disk for ``VACUUM_GRACE_MINUTES`` after the commit
 that retired them, so readers pinned to an older manifest finish; the vacuum
 at the end of each commit then deletes them and the superseded manifests.
 
+The stage (index_build.stage_docs) holds the extracted, numbered rows
+(doc_id, url, dl, text, bucket) between extraction and the bucket encodes:
+the index itself stores no text. A build records its stage in the manifest
+so that resume reads it back; the commit that completes the build retires
+it and deletes it at once, since no reader pins a stage. An append stages
+its own rows and deletes them when it ends; the vacuum removes a stage left
+behind by a crashed append once the grace period has passed.
+
 On Iceberg, ``docs``, ``postings`` and ``stats`` are Iceberg tables; the
 manifest still carries the metadata and the two plain-parquet sidecars
-(``doclens``, ``blooms``). Without the Iceberg runtime jar every table is
-sorted parquet (row-group min/max stats give the scan-time pruning).
+(``doclens``, ``blooms``), and the stage is plain parquet too. Without the
+Iceberg runtime jar every table is sorted parquet (row-group min/max stats
+give the scan-time pruning).
 
 All writers take sorted DataFrames and never repartition — layout decisions
 belong to the build job, not the sink.
@@ -45,12 +56,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the tables of one bucket version, all under one version id
 INDEX_TABLES = ("docs", "postings", "stats", "doclens", "blooms")
-# the tables write_bucket writes per bucket, all under one version id
-BUCKET_TABLES = ("postings", "stats", "doclens", "blooms")
 # tables that are Iceberg tables when the runtime is available
 ICEBERG_TABLES = ("docs", "postings", "stats")
 MANIFEST_DIR = "_manifest"
+STAGE_DIR = "_stage"
 # Retired versions and superseded manifests are kept this long, so a reader
 # pinned to an older manifest never loses a file mid-query.
 VACUUM_GRACE_MINUTES = 10
@@ -58,6 +69,9 @@ VACUUM_GRACE_MINUTES = 10
 
 def _now() -> float:
     return time.time()
+
+
+_KEEP = object()  # Catalog.commit: leave the manifest's stage as it is
 
 
 class CommitConflict(RuntimeError):
@@ -84,6 +98,7 @@ class Snapshot:
             t: {int(b): v for b, v in manifest.get("tables", {}).get(t, {}).items()} for t in INDEX_TABLES
         }
         self.stats: dict | None = manifest.get("stats")
+        self.stage: str | None = manifest.get("stage")
         self.term_df: dict[str, int] = {}
         self.blooms: dict | None = None
         # reusing a DataFrame reuses its file index: a warm query skips the
@@ -207,10 +222,13 @@ class Catalog:
         tables: dict[str, dict[int, str | None]] | None = None,
         stats: dict | None = None,
         base: Snapshot | None = None,
+        stage=_KEEP,
     ) -> Snapshot:
         """Publish the next manifest: ``tables`` maps table -> {bucket:
         version, or None to drop the bucket}; ``stats`` replaces the global
-        statistics. With ``base``, the commit fails (CommitConflict) unless
+        statistics; ``stage`` (a stage version, or None) replaces the
+        build's stage, and a stage it replaces is deleted right after the
+        commit. With ``base``, the commit fails (CommitConflict) unless
         ``base`` is still the latest manifest — the write derived its
         statistics from it. Ends with the vacuum."""
         from . import INDEX_FORMAT
@@ -242,6 +260,7 @@ class Catalog:
                 "committed_at": now,
                 "stats": dict(stats, format=INDEX_FORMAT) if stats is not None else cur.stats,
                 "tables": {t: {str(b): v for b, v in sorted(live[t].items())} for t in INDEX_TABLES},
+                "stage": cur.stage if stage is _KEEP else stage,
                 "lineage": lineage,
                 "retired": [list(r) for r in retired if r[3] >= cutoff],
             }
@@ -258,6 +277,8 @@ class Catalog:
             finally:
                 os.remove(tmp)
             snap = self._snap = Snapshot(cur.seq + 1, manifest)
+            if cur.stage is not None and cur.stage != snap.stage:
+                self.drop_stage(cur.stage)
             self._vacuum(snap, expired, touched, cutoff)
             return snap
 
@@ -277,7 +298,9 @@ class Catalog:
         """Delete what no reader can still need: versions retired before
         ``cutoff``; in the buckets this commit touched, version directories
         no manifest references that are older than ``cutoff`` (left by a
-        crashed write); and manifests superseded before ``cutoff``."""
+        crashed write); stages other than the manifest's that are older
+        than ``cutoff`` (left by a crashed append); and manifests
+        superseded before ``cutoff``."""
         for t, b, v, _ in expired:
             shutil.rmtree(self.version_path(t, b, v), ignore_errors=True)
         retired = {(t, b, v) for t, b, v, _ in snap.manifest["retired"]}
@@ -295,6 +318,14 @@ class Catalog:
                             shutil.rmtree(p, ignore_errors=True)
             with contextlib.suppress(OSError):
                 os.rmdir(bdir)  # only succeeds once the bucket has no version left
+        try:
+            stages = os.listdir(self.path(STAGE_DIR))
+        except FileNotFoundError:
+            stages = []
+        for v in stages:
+            with contextlib.suppress(FileNotFoundError):
+                if v != snap.stage and os.path.getmtime(self.stage_path(v)) < cutoff:
+                    self.drop_stage(v)
         seqs = self._manifest_seqs()
         for seq, successor in zip(seqs, seqs[1:]):
             with contextlib.suppress(FileNotFoundError):
@@ -432,6 +463,20 @@ class Catalog:
                 raise RuntimeError(f"table {name!r} has no committed data in {self.root}")
             snap.dfs[name] = df
         return df
+
+    def stage_path(self, version: str) -> str:
+        return os.path.join(self.path(STAGE_DIR), version)
+
+    def read_stage(self, version: str) -> DataFrame | None:
+        """Stage ``version`` (plain parquet in both catalog modes; ``bucket``
+        comes from the directory names), or None when it holds no row."""
+        path = self.stage_path(version)
+        if not glob.glob(os.path.join(path, "bucket=*")):
+            return None
+        return self.spark.read.parquet(path)
+
+    def drop_stage(self, version: str) -> None:
+        shutil.rmtree(self.stage_path(version), ignore_errors=True)
 
     def exists(self, name: str) -> bool:
         """True when the snapshot lists any bucket of the table (Iceberg

@@ -22,12 +22,16 @@ full-corpus jobs per append). The one remaining whole-table read is the url
 anti-join itself — inherent to ingest-by-anti-join semantics and pruned to
 the url column; at 10^12 docs, route it through the per-bucket url blooms.
 
-Exactly-once contract: the bucket is the commit unit. The bucket's docs and
-index files are written as one new version and published by ONE manifest
-commit, so a crashed append leaves only invisible files: a retry of the same
-batch indexes it, and appends to other buckets are not blocked. A bucket id
-whose postings are already committed is refused outright: re-encoding an
-existing bucket's docs would silently duplicate its postings.
+Exactly-once contract: the bucket is the commit unit. The new pages are
+extracted and numbered once into a stage (index_build.stage_docs, the
+build's staging step); the bucket's text-free docs rows and index files are
+encoded from it as one new version and published by ONE manifest commit,
+and the stage is deleted when the append ends. A crashed append leaves only
+invisible files (the vacuum removes its stage after the grace period): a
+retry of the same batch indexes it, and appends to other buckets are not
+blocked. A bucket id whose postings are already committed is refused
+outright: re-encoding an existing bucket's docs would silently duplicate
+its postings.
 """
 
 from __future__ import annotations
@@ -38,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import INDEX_TABLES, Catalog
-from .index_build import assign_doc_ids, encode_bucket_postings, global_stats
+from .index_build import encode_bucket_postings, global_stats, posting_runs, stage_docs
 
 
 def append_bucket(
@@ -83,24 +87,19 @@ def append_bucket(
         p_logical = catalog.p_logical()  # pinned format parameter — ids derive from it
         tp_n = catalog.tp_n()
         version = catalog.new_version()
-        catalog.write_version(
-            assign_doc_ids(novel, n_buckets=1, start_id=max0 + 1, fixed_bucket=bucket, p_logical=p_logical),
-            "docs",
-            version,
-        )
-        bucket_docs = catalog.read_versions("docs", {bucket: version})
-        if bucket_docs is None:
-            return {"n_new": 0, "n_docs": n0}
-        bnow = bucket_docs.where(F.col("bucket") == bucket).agg(
-            F.count("*").alias("n"), F.sum("dl").alias("s"), F.max("doc_id").alias("mx")
-        ).collect()[0]
-        n_new = int(bnow["n"])
-        if n_new == 0:
-            return {"n_new": 0, "n_docs": n0}
-        stats = global_stats(n0 + n_new, sum0 + int(bnow["s"] or 0), int(bnow["mx"]), p_logical, tp_n)
-        encode_bucket_postings(
-            catalog, bucket_docs, bucket, stats["avgdl"], nparts, tp_n, version=version, n_keys=n_new
-        )
+        try:
+            staged = stage_docs(
+                catalog, novel, version, n_buckets=1, start_id=max0 + 1, fixed_bucket=bucket, p_logical=p_logical
+            )
+            if staged is None:
+                return {"n_new": 0, "n_docs": n0}
+            bnow = staged.agg(F.count("*").alias("n"), F.sum("dl").alias("s"), F.max("doc_id").alias("mx")).collect()[0]
+            n_new = int(bnow["n"])
+            stats = global_stats(n0 + n_new, sum0 + int(bnow["s"] or 0), int(bnow["mx"]), p_logical, tp_n)
+            runs = posting_runs(staged, min_parallelism=nparts)
+            encode_bucket_postings(catalog, runs, staged, bucket, nparts, tp_n, version=version, n_keys=n_new)
+        finally:
+            catalog.drop_stage(version)
         lineage = {
             "job": "append_bucket",
             "bucket": bucket,

@@ -13,27 +13,34 @@ Pipeline (SURVEY.md §3.3 target lifecycle):
        repartition of the extracted rows by group + sorted assign.
        Deterministic on any cluster width, no sampling, no corpus persist,
        no global sort)
-    -> docs table (doc_id, url, dl, text, bucket)
+    -> the build-only STAGE (doc_id, url, dl, text, bucket): the one place
+       the extracted text is stored, recorded in the manifest so resume
+       reads it back, deleted by the commit that completes the build
     -> per BUCKET (committed, resumable; encode_bucket_postings, the one
        bucket encoder that append, delete and compaction also call):
-         mapInPandas SPIMI run generation -> (term, doc_id, tf, dl)
+         runs (term, doc_id, tf, dl): mapInPandas SPIMI over the stage's
+         text (build, append) or decoded_runs over existing postings
+         (delete, compaction)
          -> repartition(P, term, doc_group)  # THE big shuffle; hashing on
             (term, doc_group = doc_id >> 14) splits Zipf head terms across
             partitions at doc-group granularity — skew handling without a
             separate salt column — while keeping every (term, doc_group) run
             whole in one partition, so block boundaries are DETERMINISTIC
-            (kill/resume yields bit-identical block rows) with no
-            boundary-sampling pass
+            (kill/resume, delete and compaction yield bit-identical block
+            rows) with no boundary-sampling pass
          -> sortWithinPartitions(term, doc_id)
          -> mapInPandas block encoder (delta-gap+varint, <=BLOCK_SIZE docs per
             block, blocks never cross fixed doc-range boundaries so query-time
-            doc-group scoring is exact; per-block max_tf_norm = WAND bound)
-         -> postings, stats, doclens, blooms as one new bucket version,
-            published by one manifest commit (catalog.py)
-    -> stats table (term df) derived from postings; global (N, avgdl) from docs
+            doc-group scoring is exact; per-block (max_tf, min_dl) = WAND bound)
+         -> docs (doc_id, url, dl — no text), postings, stats, doclens and
+            blooms as one new bucket version, published by one manifest
+            commit (catalog.py)
+    -> global (N, sum dl, avgdl) from the stage, committed with it
 
-Every Python step is a vectorized pandas/Arrow UDF over the shared textproc
-kernels; there is one build path.
+The postings are the index's only copy of document content: nothing a query
+reads needs the text, and delete and compaction re-encode from decoded
+postings. Every Python step is a vectorized pandas/Arrow UDF over the shared
+textproc and codec kernels; there is one build path.
 
 At 10^12 docs each bucket is an independent commit; resume skips the buckets
 the manifest already lists, like the reference's md5-presence anti-join
@@ -43,6 +50,7 @@ the manifest already lists, like the reference's md5-presence anti-join
 from __future__ import annotations
 
 import os
+import threading
 import time
 from typing import Iterator
 
@@ -52,27 +60,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import BLOCK_SIZE, K1, B
-from ..catalog import BUCKET_TABLES, INDEX_TABLES, MANIFEST_DIR, Catalog
-from ..textproc import (
-    P_LOGICAL,
-    bm25_tf_norm,
-    extract_text_series,
-    term_frequencies_batch,
-)
+from ..catalog import INDEX_TABLES, MANIFEST_DIR, STAGE_DIR, Catalog
+from ..textproc import P_LOGICAL, extract_text_series, term_frequencies_batch
 
 # Blocks never span a DOC_GROUP boundary: every posting of doc d lives in a
 # block with first_doc >> DOC_GROUP_BITS == d >> DOC_GROUP_BITS, which makes
 # query-time (query, doc_group) partial scoring exact (operators.bm25).
 DOC_GROUP_BITS = 14
 
-DOCS_SCHEMA = "doc_id long, url string, dl int, text string, bucket int"
+# docs holds no text: the postings are the only stored copy of document
+# content. The extracted text lives only in the build-only stage
+# (STAGE_SCHEMA, stage_docs) between extraction and the bucket encodes.
+DOCS_SCHEMA = "doc_id long, url string, dl int, bucket int"
+STAGE_SCHEMA = "doc_id long, url string, dl int, text string, bucket int"
 RUNS_SCHEMA = "term string, doc_id long, tf int, dl int"
-# max_tf_norm is the tight WAND bound for the build-time avgdl; (max_tf,
-# min_dl) let the query engine derive a correct (slightly looser) bound for
-# the CURRENT avgdl — tf_norm is increasing in tf and decreasing in dl, so
+# (max_tf, min_dl) let the query engine derive a correct block bound for the
+# CURRENT avgdl — tf_norm is increasing in tf and decreasing in dl, so
 # tf_norm(max_tf, min_dl, avgdl_now) >= tf_norm(tf_i, dl_i, avgdl_now) for
 # every posting in the block. This keeps pruning exact after incremental
-# appends shift collection statistics (operators.incremental).
+# appends shift collection statistics (operators.incremental), and a block
+# depends only on its postings, never on the collection statistics.
 #
 # Format v4: blocks carry NO per-posting doc lengths. A doc's dl used to be
 # repeated in every term's block that contains the doc (~hundreds of copies
@@ -81,8 +88,7 @@ RUNS_SCHEMA = "term string, doc_id long, tf int, dl int"
 # (DOCLENS_SCHEMA below), loaded by the decode kernels per doc-group.
 POSTINGS_SCHEMA = (
     "term string, first_doc long, last_doc long, n_docs int, "
-    "max_tf_norm double, max_tf int, min_dl int, "
-    "docs_enc binary, tfs_enc binary"
+    "max_tf int, min_dl int, docs_enc binary, tfs_enc binary"
 )
 # dl sidecar: one row per (bucket, doc_group) — ids_enc is the group's sorted
 # doc ids as delta-gap varints (first gap absolute), dls_enc their doc
@@ -261,14 +267,33 @@ def assign_doc_ids(
                 }
             )
 
-    return parts.mapInPandas(assign, schema=DOCS_SCHEMA)
+    return parts.mapInPandas(assign, schema=STAGE_SCHEMA)
+
+
+def stage_docs(catalog: Catalog, pages: DataFrame, version: str, **assign_kw) -> DataFrame | None:
+    """Extract and number ``pages`` (assign_doc_ids) and write the rows ONCE,
+    to the build-only stage ``version`` (Catalog.stage_path, partitioned by
+    bucket); returns the stage read back, or None when it holds no row.
+
+    The one staging step of build and append: the bucket pipelines tokenize
+    the stage's text and write each bucket's text-free ``docs`` version from
+    a column-pruned read of it. Directory-partitioning by bucket (each task
+    writes one file per bucket) lets a bucket-filtered read prune
+    directories AND keep full file-level parallelism — never
+    repartition(n, "bucket"), which collapses to n_buckets live partitions.
+    """
+    assign_doc_ids(pages, **assign_kw).write.partitionBy("bucket").parquet(catalog.stage_path(version))
+    staged = catalog.read_stage(version)
+    if staged is None:
+        catalog.drop_stage(version)
+    return staged
 
 
 # --- SPIMI run generation ------------------------------------------------------
 
 
 def posting_runs(docs: DataFrame, min_parallelism: int | None = None) -> DataFrame:
-    """docs -> (term, doc_id, tf, dl) runs via the shared SPIMI kernel.
+    """Stage rows -> (term, doc_id, tf, dl) runs via the shared SPIMI kernel.
 
     min_parallelism guards against tiny-file bin-packing: a parquet scan of
     small files collapses to 1-2 input splits (openCostInBytes packing), which
@@ -288,15 +313,60 @@ def posting_runs(docs: DataFrame, min_parallelism: int | None = None) -> DataFra
     return src.mapInPandas(gen, schema=RUNS_SCHEMA)
 
 
+def decoded_runs(catalog: Catalog, postings: DataFrame, drop_ids=()) -> DataFrame:
+    """Postings rows -> the (term, doc_id, tf, dl) runs they encode, minus
+    the doc ids in ``drop_ids``: the runs delete and compaction re-encode,
+    so neither needs the text (Lucene's segment merge).
+
+    One vectorized pass per Arrow batch: every block's gaps and tfs decode
+    as one varint stream (codec.concat_varint_decode) and doc ids come back
+    by segmented_gap_cumsum. dl comes from the doclens sidecar of each
+    row's own bucket version (rows carry ``bucket`` and ``v``), read with
+    the query kernels' point reader and its drift check. A doc's postings
+    keep their (term, doc_id, tf, dl), so re-encoding the runs gives
+    exactly the blocks a fresh encode of the surviving documents gives.
+    """
+    dl_root = catalog.path("doclens")
+    drop = np.unique(np.asarray(list(drop_ids), dtype=np.int64))
+    src = postings.select("term", "n_docs", "docs_enc", "tfs_enc", "bucket", "v")
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ..codec import concat_varint_decode, segmented_gap_cumsum
+        from .bm25 import _group_dls, _load_group_doclens
+
+        for pdf in batches:
+            counts = pdf["n_docs"].to_numpy(np.int64)
+            d = segmented_gap_cumsum(concat_varint_decode(pdf["docs_enc"]).astype(np.int64), counts)
+            tf = concat_varint_decode(pdf["tfs_enc"]).astype(np.int32)
+            term = np.repeat(pdf["term"].to_numpy(object), counts)
+            bucket = np.repeat(pdf["bucket"].to_numpy(np.int64), counts)
+            keep = ~np.isin(d, drop)
+            d, tf, term, bucket = d[keep], tf[keep], term[keep], bucket[keep]
+            if not d.size:
+                continue
+            dirs = {int(b): os.path.join(dl_root, f"bucket={b}", f"v={v}") for b, v in zip(pdf["bucket"], pdf["v"])}
+            pairs = np.unique(np.stack([bucket, d >> DOC_GROUP_BITS], axis=1), axis=0)
+            # groups are disjoint id ranges: in group order the sidecar ids
+            # are one sorted array
+            groups = sorted(_load_group_doclens(dirs, set(map(tuple, pairs.tolist()))).items())
+            none = np.empty(0, np.int64)
+            ids = np.concatenate([none] + [i for _, (i, _) in groups])
+            dls = np.concatenate([none] + [dl for _, (_, dl) in groups])
+            dl = _group_dls(ids, dls, d).astype(np.int32)
+            yield pd.DataFrame({"term": term, "doc_id": d, "tf": tf, "dl": dl})
+
+    return src.mapInPandas(gen, schema=RUNS_SCHEMA)
+
+
 # --- Block encoder --------------------------------------------------------------
 
 
-def _encode_partition_frame(pdf: pd.DataFrame, avgdl: float) -> pd.DataFrame:
+def _encode_partition_frame(pdf: pd.DataFrame) -> pd.DataFrame:
     """(term, doc_id)-sorted posting rows -> block rows, fully vectorized.
 
     Block boundaries: a new block at every term change, every doc-group
     change, and every BLOCK_SIZE postings within a (term, doc_group) segment.
-    One varint pass encodes ALL blocks' gaps/tfs/dls, split by byte offsets —
+    One varint pass encodes ALL blocks' gaps/tfs, split by byte offsets —
     per-block Python calls would dominate on web text, where half the
     vocabulary are unique single-document tokens (measured 20-30x).
     """
@@ -318,7 +388,6 @@ def _encode_partition_frame(pdf: pd.DataFrame, avgdl: float) -> pd.DataFrame:
     bstarts = np.flatnonzero(block_start)
     bends = np.append(bstarts[1:], n)
 
-    tf_norm = bm25_tf_norm(tf, dl, avgdl, K1, B)
     gaps = d.copy()
     gaps[1:] -= d[:-1]
     gaps[bstarts] = d[bstarts]
@@ -329,7 +398,6 @@ def _encode_partition_frame(pdf: pd.DataFrame, avgdl: float) -> pd.DataFrame:
             "first_doc": d[bstarts],
             "last_doc": d[bends - 1],
             "n_docs": (bends - bstarts).astype("int32"),
-            "max_tf_norm": np.maximum.reduceat(tf_norm, bstarts),
             "max_tf": np.maximum.reduceat(tf, bstarts).astype("int32"),
             "min_dl": np.minimum.reduceat(dl, bstarts).astype("int32"),
             "docs_enc": segmented_varint_encode(gaps.astype(np.uint64), bstarts, bends),
@@ -338,7 +406,7 @@ def _encode_partition_frame(pdf: pd.DataFrame, avgdl: float) -> pd.DataFrame:
     )
 
 
-def encode_blocks(runs_sorted: DataFrame, avgdl: float) -> DataFrame:
+def encode_blocks(runs_sorted: DataFrame) -> DataFrame:
     """Sorted (term, doc_id) runs -> compressed block rows.
 
     mapInPandas with cross-batch buffering: a term's run may span Arrow
@@ -365,7 +433,7 @@ def encode_blocks(runs_sorted: DataFrame, avgdl: float) -> DataFrame:
                 pdf = pdf.iloc[:cut]
             else:
                 tail = None
-            return _encode_partition_frame(pdf, avgdl)
+            return _encode_partition_frame(pdf)
 
         for pdf in batches:
             if tail is not None:
@@ -400,11 +468,14 @@ def build_index(
 ) -> dict:
     """Build (or resume) the full index. Returns build metrics.
 
-    Resumability contract (north rule): the docs version and the global
-    stats commit first, then each bucket pipeline commits its own manifest
-    entry. On resume, buckets whose postings the manifest lists are skipped
-    (left-anti semantics); a killed bucket's uncommitted files are invisible
-    and the bucket is rebuilt. Kill at any point -> identical final index.
+    Resumability contract (north rule): the stage (extracted, numbered
+    rows) and the global stats commit first, then each bucket pipeline
+    commits its own manifest entry — its five tables under one version id.
+    On resume, buckets whose postings the manifest lists are skipped
+    (left-anti semantics) and the rest are rebuilt from the stage the
+    manifest records; a killed bucket's uncommitted files are invisible.
+    Kill at any point -> identical final index. The commit that completes
+    the build retires the stage and deletes it at once (no reader pins it).
 
     ``p_logical`` (default textproc.P_LOGICAL) is the doc-id assignment
     modulus — an index-format parameter recorded in the manifest. Doc ids
@@ -451,8 +522,8 @@ def build_index(
     pages = pages.select("url", "html")
 
     done: set[int] = set()
-    reuse_docs = resume and catalog.snapshot().stats is not None
-    if reuse_docs:
+    resuming = resume and catalog.snapshot().stats is not None
+    if resuming:
         done = catalog.committed_buckets()
         pinned = catalog.p_logical()
         if p_logical is not None and int(p_logical) != pinned:
@@ -474,57 +545,52 @@ def build_index(
             )
         tp_n = pinned_tp
     else:
-        for t in (*INDEX_TABLES, MANIFEST_DIR):
+        for t in (*INDEX_TABLES, MANIFEST_DIR, STAGE_DIR):
             catalog.drop(t)
     if p_logical is None:
         p_logical = P_LOGICAL
     if tp_n is None:
         tp_n = TERM_PREFIX_PARTITIONS
 
-    # Step 0: docs (reused verbatim on resume so doc ids are stable across
-    # kill/restart). Extraction runs ONCE — into the docs parquet write — and
-    # every downstream consumer reads that table back column-pruned (r6: the
-    # old .persist() paid a 4-6 s in-memory columnar cache fill to save
-    # re-reads that parquet serves for <1 s: the bucket pipelines prune to
-    # their bucket=N directory, the stats agg reads only (bucket, dl,
-    # doc_id), bloom only url).
-    if reuse_docs:
-        docs = catalog.read("docs")
+    # Step 0: the stage (reused verbatim on resume so doc ids are stable
+    # across kill/restart; a build whose stage is retired is complete).
+    # Extraction runs ONCE — into the stage write — and every downstream
+    # consumer reads it back column-pruned (r6: the old .persist() paid a
+    # 4-6 s in-memory columnar cache fill to save re-reads that parquet
+    # serves for <1 s: the bucket pipelines prune to their bucket=N
+    # directory, the stats agg reads only (bucket, dl, doc_id)).
+    if resuming:
+        stage_version = catalog.snapshot().stage
+        stage = catalog.read_stage(stage_version) if stage_version else None
     else:
-        docs_version = catalog.new_version()
-        # directory-partition by bucket (each of the nparts tasks writes one
-        # file per bucket): bucket-filtered reads prune directories AND keep
-        # full file-level parallelism — never repartition(n, "bucket"), which
-        # collapses to n_buckets live partitions
-        catalog.write_version(
-            assign_doc_ids(pages, n_buckets=n_buckets, num_partitions=nparts, p_logical=p_logical),
-            "docs",
-            docs_version,
-            mode="overwrite",
+        stage_version = catalog.new_version()
+        stage = stage_docs(
+            catalog, pages, stage_version, n_buckets=n_buckets, num_partitions=nparts, p_logical=p_logical
         )
-        docs = catalog.read_versions("docs", {b: docs_version for b in range(n_buckets)})
-        _tr("docs_assign_write")
+        _tr("stage_assign_write")
 
     # one job yields global AND per-bucket stats (avoids a per-bucket agg job
     # later — every extra action costs a full job round-trip)
     brows = (
-        docs.groupBy("bucket").agg(
+        stage.groupBy("bucket").agg(
             F.count("*").alias("nd"), F.sum("dl").alias("toks"), F.max("doc_id").alias("mx")
         ).collect()
-        if docs is not None
+        if stage is not None
         else []
     )
     per_bucket = {int(r["bucket"]): (int(r["nd"]), int(r["toks"] or 0)) for r in brows}
-    n_docs = sum(nd for nd, _ in per_bucket.values())
-    total_toks = sum(tk for _, tk in per_bucket.values())
-    max_doc_id = max((int(r["mx"]) for r in brows if r["mx"] is not None), default=-1)
-    stats = global_stats(n_docs, total_toks, max_doc_id, p_logical, tp_n)
-    avgdl = stats["avgdl"]
-    if not reuse_docs:
+    if resuming:
+        n_docs, avgdl = catalog.global_query_stats()
+    else:
+        n_docs = sum(nd for nd, _ in per_bucket.values())
+        total_toks = sum(tk for _, tk in per_bucket.values())
+        max_doc_id = max((int(r["mx"]) for r in brows if r["mx"] is not None), default=-1)
+        stats = global_stats(n_docs, total_toks, max_doc_id, p_logical, tp_n)
+        avgdl = stats["avgdl"]
         catalog.commit(
-            {"job": "build_index", "step": "docs", "n_buckets": n_buckets},
-            tables={"docs": {b: docs_version for b in per_bucket}},
+            {"job": "build_index", "step": "stage", "n_buckets": n_buckets},
             stats=stats,
+            stage=stage_version if stage is not None else None,
         )
     _tr("global_stats")
 
@@ -533,6 +599,8 @@ def build_index(
         if b in done:
             metrics["buckets"][b] = "resumed"
     todo = [b for b in range(n_buckets) if b not in done and b in per_bucket]
+    pending = set(todo)
+    commit_lock = threading.Lock()
 
     def _build_bucket(b: int) -> None:
         t0 = time.time()
@@ -541,7 +609,9 @@ def build_index(
         # (parquet) or rows write_bucket DELETEs first (Iceberg). tp_n is the
         # local pinned value, threaded explicitly like every other reader.
         version = catalog.new_version()
-        encode_bucket_postings(catalog, docs, b, avgdl, nparts, tp_n, version=version, n_keys=nd)
+        rows = stage.where(F.col("bucket") == b)
+        runs = posting_runs(rows, min_parallelism=nparts)
+        encode_bucket_postings(catalog, runs, rows, b, nparts, tp_n, version=version, n_keys=nd)
         _tr(f"bucket{b}_postings_stats")
         wall_ms = int((time.time() - t0) * 1000)
         lineage = {
@@ -557,7 +627,13 @@ def build_index(
             "p_logical": int(p_logical),
             "tp_n": int(tp_n),
         }
-        catalog.commit(lineage, tables={t: {b: version} for t in BUCKET_TABLES})
+        # the last bucket's commit retires the stage; a bucket leaves
+        # ``pending`` only once its commit succeeded, so a failed pipeline
+        # keeps the stage for resume
+        with commit_lock:
+            stage_now = None if pending == {b} else stage_version
+            catalog.commit(lineage, tables={t: {b: version} for t in INDEX_TABLES}, stage=stage_now)
+            pending.discard(b)
         _tr(f"bucket{b}_commit")
         metrics["buckets"][b] = {"docs": nd, "wall_ms": wall_ms}
 
@@ -632,23 +708,26 @@ def _write_bucket_stats(catalog: Catalog, blocks: DataFrame, bucket: int, versio
 
 def encode_bucket_postings(
     catalog: Catalog,
+    runs: DataFrame,
     docs: DataFrame,
     bucket: int,
-    avgdl: float,
     nparts: int,
     tp_n: int,
     *,
     version: str,
     n_keys: int | None = None,
+    write_docs: bool = True,
 ) -> None:
-    """Build version ``version`` of one bucket's postings, stats and
-    sidecars from its rows of ``docs`` — the one bucket encoder that build,
-    append, delete and compaction share. ``n_keys`` (the bucket's doc count)
-    sizes the url bloom. The caller commits the version."""
-    bucket_docs = docs.where(F.col("bucket") == bucket)
-    runs = posting_runs(bucket_docs, min_parallelism=nparts).withColumn(
-        "doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS)
-    )
+    """Build version ``version`` of one bucket from its posting ``runs``
+    (term, doc_id, tf, dl) and its rows of ``docs`` (doc_id, url, dl,
+    bucket) — the one bucket encoder that build, append, delete and
+    compaction share. Build and append pass SPIMI runs over the stage's
+    text (posting_runs), delete and compaction decoded postings
+    (decoded_runs); either way the blocks depend only on the set of
+    postings. ``n_keys`` (the bucket's doc count) sizes the url bloom;
+    ``write_docs`` False leaves the docs version to the caller. The caller
+    commits the version."""
+    runs = runs.withColumn("doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS))
     # HASH repartition on (term, doc_group): same co-location and head-term
     # splitting as a range shuffle, but fully deterministic with NO
     # boundary-sampling pass (a range shuffle would re-execute — or force
@@ -658,8 +737,9 @@ def encode_bucket_postings(
     sorted_runs = (
         runs.repartition(nparts, "term", "doc_group").sortWithinPartitions("term", "doc_id").drop("doc_group")
     )
-    blocks = encode_blocks(sorted_runs, avgdl)
-    write_bucket(catalog, blocks, bucket_docs, bucket, version, n_keys=n_keys, tp_n=tp_n)
+    blocks = encode_blocks(sorted_runs)
+    bucket_docs = docs.where(F.col("bucket") == bucket)
+    write_bucket(catalog, blocks, bucket_docs, bucket, version, n_keys=n_keys, tp_n=tp_n, write_docs=write_docs)
 
 
 def write_bucket(
@@ -670,28 +750,31 @@ def write_bucket(
     version: str,
     n_keys: int | None = None,
     tp_n: int = TERM_PREFIX_PARTITIONS,
+    write_docs: bool = True,
 ) -> None:
     """Write version ``version`` of one bucket: postings first (the one big job — it also
-    materializes the ``blocks`` cache), then the three independent sidecars
-    — per-term df stats (from the persisted blocks), the doclens array and
-    the url bloom (both from ``bucket_docs``) — submitted CONCURRENTLY from
+    materializes the ``blocks`` cache), then the independent sidecars
+    — per-term df stats (from the persisted blocks), the text-free docs
+    rows (unless ``write_docs`` is False), the doclens array and the url
+    bloom (all three from ``bucket_docs``) — submitted CONCURRENTLY from
     driver threads. Spark's scheduler accepts jobs from multiple driver
     threads; each sidecar is a small job whose cost at cluster scale is
     dominated by its fixed driver round-trip while the executors idle, so
     overlapping them shortens every bucket commit's serial tail (there is
     one commit per bucket: at production bucket counts the tail is pure
-    serial floor). The writes go to four fresh directories
+    serial floor). The writes go to fresh directories
     (``<table>/bucket=B/v=<version>``), so no two jobs share a
     ``_temporary`` staging dir. Failure of any sidecar propagates after all
-    three finish (no partially-awaited commit). Nothing is visible until
+    of them finish (no partially-awaited commit). Nothing is visible until
     the caller commits the version.
 
-    On Iceberg the postings and stats writes are table appends, so the
-    bucket's existing rows are DELETEd first; otherwise a bucket whose rows
-    landed before a crash (and before its manifest commit) would be
+    On Iceberg the docs, postings and stats writes are table appends, so
+    the bucket's existing rows are DELETEd first; otherwise a bucket whose
+    rows landed before a crash (and before its manifest commit) would be
     appended twice on resume, doubling its df and BM25 contributions.
-    Tables that do not exist yet (a fresh build drops them) get no
-    DELETE."""
+    Tables that do not exist yet (a fresh build drops them) get no DELETE.
+    A delete re-encodes a bucket from its own postings rows, so on Iceberg
+    the blocks are materialized (localCheckpoint) before the DELETE."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..blooms import write_bucket_bloom
@@ -701,11 +784,11 @@ def write_bucket(
 
     def _timed(name, fn, *args):
         # Each sidecar runs in its OWN scheduler pool (r6): pools round-robin
-        # under FAIR mode but are FIFO *within* — with all three sidecars in
-        # the bucket's pool they serialized behind each other (measured: the
-        # last-submitted bloom job's wall was the SUM of the three sidecars
+        # under FAIR mode but are FIFO *within* — with all sidecars in the
+        # bucket's pool they serialized behind each other (measured: the
+        # last-submitted bloom job's wall was the SUM of the sidecars
         # whenever the cluster had free slots). A per-(bucket, sidecar) pool
-        # lets the three small jobs overlap; total work is unchanged.
+        # lets the small jobs overlap; total work is unchanged.
         prev = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"ir_sc_{bucket}_{name}")
         t0 = time.time()
@@ -716,25 +799,39 @@ def write_bucket(
             if trace:
                 print(f"IR_TRACE   wb{bucket}.{name}: {time.time() - t0:.1f}s", flush=True)
 
+    blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n))
     if catalog.use_iceberg:
-        for t in ("postings", "stats"):
+        blocks = blocks.localCheckpoint()
+        for t in ("docs", "postings", "stats") if write_docs else ("postings", "stats"):
             if catalog.exists(t):
                 spark.sql(f"DELETE FROM {t} WHERE bucket = {int(bucket)}")
-    blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n)).persist()
+    else:
+        blocks = blocks.persist()
+    sidecars = [
+        ("stats", _write_bucket_stats, catalog, blocks, bucket, version, tp_n),
+        ("doclens", write_bucket_doclens, catalog, bucket_docs, bucket, version),
+        ("bloom", write_bucket_bloom, catalog, bucket_docs, bucket, version, n_keys),
+    ]
+    if write_docs:
+        sidecars.append(("docs", _write_bucket_docs, catalog, bucket_docs, bucket, version))
     try:
         _timed("postings", _write_postings_rows, catalog, blocks, bucket, version, tp_n)
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            futs = [
-                ex.submit(_timed, "stats", _write_bucket_stats, catalog, blocks, bucket, version, tp_n),
-                ex.submit(_timed, "doclens", write_bucket_doclens, catalog, bucket_docs, bucket, version),
-                ex.submit(_timed, "bloom", write_bucket_bloom, catalog, bucket_docs, bucket, version, n_keys),
-            ]
+        with ThreadPoolExecutor(max_workers=len(sidecars)) as ex:
+            futs = [ex.submit(_timed, *sc) for sc in sidecars]
             errs = [f.exception() for f in futs]
             for e in errs:
                 if e is not None:
                     raise e
     finally:
         blocks.unpersist()
+
+
+def _write_bucket_docs(catalog: Catalog, bucket_docs: DataFrame, bucket: int, version: str) -> None:
+    rows = bucket_docs.select("doc_id", "url", "dl")
+    if catalog.use_iceberg:
+        catalog.write_version(rows.withColumn("bucket", F.lit(bucket)), "docs", version)
+    else:
+        rows.write.parquet(catalog.version_path("docs", bucket, version))
 
 
 def write_bucket_doclens(catalog: Catalog, bucket_docs: DataFrame, bucket: int, version: str) -> None:

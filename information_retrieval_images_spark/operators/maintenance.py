@@ -4,16 +4,22 @@ Reference analogue: single-record delete (``vector_db.py:54-58``) and
 read-modify-write upsert (``vector_db.py:61-91``) against the Milvus
 collection — the most common maintenance ops for a live index. Here the
 natural rewrite unit is the BUCKET: deleting a document writes a new version
-of only the buckets that contain it (the surviving docs, their postings,
-stats and sidecars), never the whole index.
+of only the buckets that contain it (the surviving docs rows, their
+postings, stats and sidecars), never the whole index.
+
+The index stores no text, so delete and compaction re-encode from the
+postings themselves (Lucene's segment merge): index_build.decoded_runs
+decodes a bucket's blocks back to (term, doc_id, tf, dl) runs, drops the
+deleted doc ids, and the build's encoder tail re-encodes them. The blocks
+are bit-identical to a fresh encode of the surviving documents.
 
 Spark-first shape: on Iceberg the docs rows go by ``DELETE FROM docs WHERE
-url IN (...)``. On the parquet fallback the survivors are written as a new
-bucket version. Either way the op ends with ONE manifest commit (catalog.py)
-that swaps the bucket versions and the global statistics together, so a
-concurrent reader sees the index before or after the delete, never between;
-a crashed delete leaves only unreferenced files, and re-running it redoes
-the whole delete.
+url IN (...)``. On the parquet fallback the surviving docs rows are written
+as a new bucket version. Either way the op ends with ONE manifest commit
+(catalog.py) that swaps the bucket versions and the global statistics
+together, so a concurrent reader sees the index before or after the delete,
+never between; a crashed delete leaves only unreferenced files, and
+re-running it redoes the whole delete.
 
 Scores after a delete are exactly what a full rebuild without the documents
 would produce: N/avgdl are refreshed in the manifest, per-term df comes from
@@ -32,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import INDEX_TABLES, Catalog
 from .incremental import append_bucket
-from .index_build import encode_bucket_postings, global_stats
+from .index_build import decoded_runs, encode_bucket_postings, global_stats
 
 
 # upsert url sets at or below this size are collected driver-side so the
@@ -102,20 +108,24 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
     docs = catalog.read("docs")
     if bloom_cands is not None:
         docs = docs.where(F.col("bucket").isin(bloom_cands))
-    # ONE job locates the urls AND measures the deltas: per-bucket totals and
-    # (count, sum dl) of the rows to delete, column-pruned to (url, bucket,
-    # dl) and bucket-pruned by the blooms above. The broadcast LEFT join (vs
-    # a semi join) reads the same rows but also yields each candidate
-    # bucket's total count, so the rebuilt buckets' bloom sizing comes from
-    # total - deleted instead of an extra count job per bucket (ADVICE r4
-    # #5). Everything after touches ONLY the hit buckets.
+    # ONE job locates the urls AND measures the deltas: per-bucket totals,
+    # (count, sum dl) and doc ids of the rows to delete, column-pruned to
+    # (url, bucket, dl, doc_id) and bucket-pruned by the blooms above. The
+    # broadcast LEFT join (vs a semi join) reads the same rows but also
+    # yields each candidate bucket's total count, so the rebuilt buckets'
+    # bloom sizing comes from total - deleted instead of an extra count job
+    # per bucket (ADVICE r4 #5). The deleted ids (8 bytes each in the
+    # driver) are what the postings decode drops. Everything after touches
+    # ONLY the hit buckets.
+    hit = F.col("_hit").isNotNull()
     rows = (
         _locate_join(docs, url_df, bounded)
         .groupBy("bucket")
         .agg(
             F.count("*").alias("total"),
             F.count("_hit").alias("n"),
-            F.sum(F.when(F.col("_hit").isNotNull(), F.col("dl"))).alias("s"),
+            F.sum(F.when(hit, F.col("dl"))).alias("s"),
+            F.collect_list(F.when(hit, F.col("doc_id"))).alias("ids"),
         )
         .collect()
     )
@@ -126,6 +136,7 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
     n_deleted = sum(int(r["n"]) for r in hits)
     sum_deleted = sum(int(r["s"] or 0) for r in hits)
     surviving_counts = {int(r["bucket"]): int(r["total"]) - int(r["n"]) for r in hits}
+    deleted_ids = {int(r["bucket"]): r["ids"] for r in hits}
 
     # 1. the surviving docs of the affected buckets, as a new version
     version = catalog.new_version()
@@ -145,7 +156,7 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
         anti_side = F.broadcast(url_df) if bounded else url_df  # same bounding rule
         surviving = (
             docs.where(F.col("bucket").isin(buckets)).join(anti_side, "url", "left_anti")
-            .select("doc_id", "url", "dl", "text", "bucket")
+            .select("doc_id", "url", "dl", "bucket")
         )
         catalog.write_version(surviving, "docs", version)
     live = {b: version for b in buckets if surviving_counts[b]}
@@ -159,14 +170,17 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
     tp_n = catalog.tp_n()
     stats = global_stats(n0 - n_deleted, sum0 - sum_deleted, max0, catalog.p_logical(), tp_n)
 
-    # 3. re-encode postings + stats for each affected bucket (the rewrite
-    #    unit); surviving counts from the locate job size the blooms — no
-    #    per-bucket count job. An emptied bucket leaves the manifest (on
-    #    Iceberg its postings and stats rows are still DELETEd).
+    # 3. re-encode each affected bucket (the rewrite unit) from its own
+    #    postings minus the deleted ids; surviving counts from the locate job
+    #    size the blooms — no per-bucket count job. An emptied bucket leaves
+    #    the manifest (on Iceberg its postings and stats rows are still
+    #    DELETEd).
+    postings = catalog.read("postings")
     for b in buckets:
         if surviving_counts[b] or catalog.use_iceberg:
+            runs = decoded_runs(catalog, postings.where(F.col("bucket") == b), deleted_ids[b])
             encode_bucket_postings(
-                catalog, new_docs, b, stats["avgdl"], nparts, tp_n, version=version, n_keys=surviving_counts[b]
+                catalog, runs, new_docs, b, nparts, tp_n, version=version, n_keys=surviving_counts[b], write_docs=False
             )
 
     lineage = {
@@ -196,10 +210,13 @@ def compact_buckets(
     one bucket per micro-batch; thousands of tiny buckets mean thousands of
     small postings files and term fragments, which erodes scan pruning and
     per-file parallelism. Compaction moves the docs (ids unchanged — scores
-    and tie-breaks are untouched) into ``target_bucket`` and re-encodes its
-    postings/stats once. On Iceberg the docs move by a row-level UPDATE plus
-    a rewrite-data-files action; on the parquet fallback the moved docs are
-    written as the target's first version. One manifest commit then adds the
+    and tie-breaks are untouched) into ``target_bucket`` and merges the
+    sources' postings into it: decoded_runs decodes the source buckets'
+    blocks and the shared encoder re-encodes them once. On Iceberg the docs
+    move by a row-level UPDATE plus a rewrite-data-files action, and the
+    sources' postings and stats rows are DELETEd after the target is
+    written (the merge reads them); on the parquet fallback the moved docs
+    rows are the target version's docs. One manifest commit then adds the
     target and retires the sources.
 
     ``target_bucket`` must be fresh (same guard as append_bucket).
@@ -214,26 +231,21 @@ def compact_buckets(
         if n_moved == 0:
             return {"n_moved": 0, "buckets": [], "target": target_bucket}
         version = catalog.new_version()
+        runs = decoded_runs(catalog, catalog.read("postings").where(F.col("bucket").isin(buckets)))
+        blist = ", ".join(str(int(b)) for b in buckets)
         if catalog.use_iceberg:
-            # relabel the moved docs' bucket in one row-level UPDATE (snapshot
-            # commit), then let encode_bucket_postings rebuild the target and
-            # drop the source buckets' postings/stats rows; finish with
-            # Iceberg's small-file compaction action on the rewritten tables
-            blist = ", ".join(str(int(b)) for b in buckets)
             spark.sql(f"UPDATE docs SET bucket = {int(target_bucket)} WHERE bucket IN ({blist})")
+            docs = catalog.read("docs")
+        else:
+            docs = docs.withColumn("bucket", F.lit(target_bucket))
+        encode_bucket_postings(
+            catalog, runs, docs, target_bucket, nparts, catalog.tp_n(),
+            version=version, n_keys=n_moved, write_docs=not catalog.use_iceberg,
+        )
+        if catalog.use_iceberg:
             for t in ("postings", "stats"):
                 spark.sql(f"DELETE FROM {t} WHERE bucket IN ({blist})")
             spark.sql("CALL system.rewrite_data_files(table => 'docs')")
-        else:
-            moved = docs.withColumn("bucket", F.lit(target_bucket)).select("doc_id", "url", "dl", "text", "bucket")
-            catalog.write_version(moved, "docs", version)
-
-        # same corpus, same N/avgdl — only the layout changed
-        _, avgdl = catalog.global_query_stats()
-        new_docs = catalog.read_versions("docs", {target_bucket: version})
-        encode_bucket_postings(
-            catalog, new_docs, target_bucket, avgdl, nparts, catalog.tp_n(), version=version, n_keys=n_moved
-        )
         lineage = {
             "job": "compact_buckets",
             "buckets": buckets,

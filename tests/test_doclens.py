@@ -70,17 +70,17 @@ def test_group_dls_raises_on_sidecar_drift():
     ids_g = np.array([10, 20, 30], dtype=np.int64)
     dls_g = np.array([5, 6, 7], dtype=np.int64)
     # healthy lookup
-    got = _group_dls(ids_g, dls_g, np.array([10, 30], dtype=np.int64), 0)
+    got = _group_dls(ids_g, dls_g, np.array([10, 30], dtype=np.int64))
     assert got.tolist() == [5.0, 7.0]
     # missing id in the middle (would have scored with doc 20's length)
     with pytest.raises(RuntimeError, match="sidecar inconsistency"):
-        _group_dls(ids_g, dls_g, np.array([10, 15], dtype=np.int64), 0)
+        _group_dls(ids_g, dls_g, np.array([10, 15], dtype=np.int64))
     # missing id past the end (old code: IndexError or silent clamp)
     with pytest.raises(RuntimeError, match="sidecar inconsistency"):
-        _group_dls(ids_g, dls_g, np.array([99], dtype=np.int64), 0)
+        _group_dls(ids_g, dls_g, np.array([99], dtype=np.int64))
     # empty sidecar
     with pytest.raises(RuntimeError, match="sidecar inconsistency"):
-        _group_dls(np.array([], dtype=np.int64), np.array([], dtype=np.int64), np.array([1], dtype=np.int64), 0)
+        _group_dls(np.array([], dtype=np.int64), np.array([], dtype=np.int64), np.array([1], dtype=np.int64))
 
 
 def test_wand_query_green_after_scoping(spark, built):

@@ -1,8 +1,9 @@
 """Row-level delete/upsert (SURVEY K4/K5, reference vector_db.py:54-91):
 after deleting or replacing documents, the engine ranks exactly as an
-oracle over the post-edit corpus — and only the affected buckets rewrite."""
+oracle over the post-edit corpus — and only the affected buckets rewrite.
+Delete and compaction re-encode from decoded postings, bit-identical to a
+fresh encode of the surviving documents."""
 
-import math
 import os
 
 import pandas as pd
@@ -15,6 +16,7 @@ from information_retrieval_images_spark.operators.bm25 import attach_urls, bm25_
 from information_retrieval_images_spark.operators.index_build import build_index
 from information_retrieval_images_spark.operators.maintenance import delete_docs, upsert_docs
 from information_retrieval_images_spark.oracle import build_oracle_index, oracle_topk
+from test_resume import _postings_key
 
 N_DOCS = 200
 QUERIES = ["term000000", "term000003 term000120", "term000401 term000000"]
@@ -31,9 +33,43 @@ def _assert_matches_oracle(spark, cat, corpus_pdf):
     for qtext in QUERIES:
         want = [(url, score) for _, url, score in oracle_topk(idx, qtext, k=10)]
         got = _rank_urls(spark, cat, qtext)
-        assert [u for u, _ in got] == [u for u, _ in want], qtext
-        for (_, a), (_, b) in zip(got, want):
-            assert math.isclose(a, b, rel_tol=1e-9)
+        assert got == want, qtext
+
+
+def _fresh_postings_key(spark, root, pages, docs, bucket):
+    """_postings_key of ``bucket`` freshly encoded: the docs rows'
+    text re-extracted from ``pages``, under the same doc ids, through the
+    build's encoder."""
+    from information_retrieval_images_spark.operators.index_build import (
+        STAGE_SCHEMA,
+        encode_bucket_postings,
+        posting_runs,
+    )
+    from information_retrieval_images_spark.textproc import extract_text_series
+
+    html = dict(zip(pages["url"], pages["html"]))
+    rows = pd.DataFrame(
+        {
+            "doc_id": docs["doc_id"].to_numpy(),
+            "url": docs["url"].to_numpy(),
+            "dl": docs["dl"].to_numpy(),
+            "text": extract_text_series(pd.Series([html[u] for u in docs["url"]])).to_numpy(),
+            "bucket": bucket,
+        }
+    )
+    rows = spark.createDataFrame(rows, STAGE_SCHEMA)
+    ref = Catalog(spark, root)
+    encode_bucket_postings(ref, posting_runs(rows), rows, bucket, 8, 16, version="ref", n_keys=len(docs))
+    ref.commit({"job": "fresh encode"}, tables={"postings": {bucket: "ref"}})
+    return _postings_key(ref)
+
+
+def _assert_bucket_bit_identical(spark, cat, tmp_path_factory, pages, bucket):
+    docs = cat.read("docs").where(F.col("bucket") == bucket).select("doc_id", "url", "dl").toPandas()
+    key = _postings_key(cat)
+    got = key[key["bucket"] == bucket].reset_index(drop=True)
+    want = _fresh_postings_key(spark, str(tmp_path_factory.mktemp("fresh")), pages, docs, bucket)
+    pd.testing.assert_frame_equal(got, want)
 
 
 @pytest.fixture(scope="module")
@@ -54,6 +90,9 @@ def test_delete_matches_rebuilt_oracle(spark, corpus, tmp_path_factory):
     assert left == 0
     remaining = corpus[~corpus["url"].isin(victims)]
     _assert_matches_oracle(spark, cat, remaining)
+    # each rewritten bucket == a fresh encode of its surviving documents
+    for b in res["buckets"]:
+        _assert_bucket_bit_identical(spark, cat, tmp_path_factory, corpus, b)
     # idempotent: deleting the same urls again is a no-op
     res2 = delete_docs(spark, cat, victims)
     assert res2["n_deleted"] == 0
@@ -110,9 +149,30 @@ def test_compact_buckets_preserves_ranking(spark, corpus, tmp_path_factory):
 
     assert stats_map(cat) == stats_map(rebuilt)
     _assert_matches_oracle(spark, cat, corpus)
+    # the merged target == a fresh encode of the union of the sources
+    _assert_bucket_bit_identical(spark, cat, tmp_path_factory, corpus, 2000)
     # target must be fresh
     with pytest.raises(ValueError, match="not fresh"):
         compact_buckets(spark, cat, [0], target_bucket=2000)
+
+
+def test_delete_then_compact_matches_oracle(spark, corpus, tmp_path_factory):
+    """Delete from a built and two appended buckets, then compact the
+    appended ones: the merge drops nothing more and the index ranks exactly
+    like an oracle over the surviving pages."""
+    from information_retrieval_images_spark.operators.incremental import append_bucket
+    from information_retrieval_images_spark.operators.maintenance import compact_buckets
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("delcmp")))
+    build_index(spark, spark.createDataFrame(corpus.iloc[:120]), cat, n_buckets=1)
+    append_bucket(spark, spark.createDataFrame(corpus.iloc[120:160]), cat, bucket=10)
+    append_bucket(spark, spark.createDataFrame(corpus.iloc[160:]), cat, bucket=11)
+    en = corpus[corpus["lang"] == "en"]
+    victims = en["url"].iloc[[1, 90, 100, 120, 130]].tolist()
+    assert delete_docs(spark, cat, victims)["n_deleted"] == len(victims)
+    compact_buckets(spark, cat, [10, 11], target_bucket=20)
+    assert cat.committed_buckets() == {0, 20}
+    _assert_matches_oracle(spark, cat, corpus[~corpus["url"].isin(victims)])
 
 
 def test_delete_and_append_update_stats_incrementally(spark, corpus, tmp_path_factory):
@@ -135,7 +195,7 @@ def test_delete_and_append_update_stats_incrementally(spark, corpus, tmp_path_fa
     idx = build_oracle_index(post, lang="en")
     n_docs, sum_dl, _ = cat.global_doc_stats()
     assert n_docs == idx.n_docs
-    assert math.isclose(cat.global_query_stats()[1], idx.avgdl, rel_tol=1e-12)
+    assert cat.global_query_stats()[1] == idx.avgdl
     assert sum_dl == cat.read("docs").agg(F.sum("dl")).collect()[0][0]
     # appended ids start strictly after the pre-delete max (no id reuse)
     min_new = cat.read("docs").where(F.col("bucket") == 7000).agg(F.min("doc_id")).collect()[0][0]

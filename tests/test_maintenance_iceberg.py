@@ -51,12 +51,15 @@ def test_delete_docs_iceberg_sql_sequence(icat, monkeypatch):
     # url locator + delta job: urls hit bucket 1 (2 docs, 20 tokens)
     docs = tables.setdefault("docs", MagicMock(name="docs_tbl"))
     docs.join.return_value.groupBy.return_value.agg.return_value.collect.return_value = [
-        {"bucket": 1, "total": 5, "n": 2, "s": 20}
+        {"bucket": 1, "total": 5, "n": 2, "s": 20, "ids": [3, 4]}
     ]
     monkeypatch.setattr(maintenance.F, "broadcast", lambda df: df)
-    encoded = []
+    decoded, encoded = [], []
+    monkeypatch.setattr(maintenance, "decoded_runs", lambda c, postings, drop=(): decoded.append(drop) or "runs")
     monkeypatch.setattr(
-        maintenance, "encode_bucket_postings", lambda c, docs, b, avgdl, np_, tp_n, **kw: encoded.append((b, avgdl))
+        maintenance,
+        "encode_bucket_postings",
+        lambda c, runs, docs, b, np_, tp_n, **kw: encoded.append((runs, b, kw["write_docs"])),
     )
 
     out = maintenance.delete_docs(ms, cat, ["http://a", "http://b"])
@@ -71,8 +74,10 @@ def test_delete_docs_iceberg_sql_sequence(icat, monkeypatch):
     ms.catalog.dropTempView.assert_called_once_with(view)
     # incremental stats: 10-2 docs, (100-20)/8 avgdl — no full-corpus agg
     assert out["n_deleted"] == 2 and out["n_docs"] == 8 and out["avgdl"] == 10.0
-    # only the hit bucket is re-encoded, under the NEW avgdl
-    assert encoded == [(1, 10.0)]
+    # only the hit bucket is re-encoded, from its postings minus the deleted
+    # ids; its docs rows went by the DELETE above
+    assert decoded == [[3, 4]]
+    assert encoded == [("runs", 1, False)]
     # the manifest commit carries the delta'd stats (max preserved) and the
     # bucket's new version
     from information_retrieval_images_spark import INDEX_FORMAT
@@ -88,20 +93,26 @@ def test_compact_buckets_iceberg_sql_sequence(icat, monkeypatch):
     docs = tables.setdefault("docs", MagicMock(name="docs_tbl"))
     docs.where.return_value.count.return_value = 5
     _commit_buckets(cat, [1000000, 1000001])
-    encoded = []
+    log = []
+    ms.sql.side_effect = lambda q: log.append(q)
+    monkeypatch.setattr(maintenance, "decoded_runs", lambda c, postings, drop=(): "runs")
     monkeypatch.setattr(
-        maintenance, "encode_bucket_postings", lambda c, docs, b, avgdl, np_, tp_n, **kw: encoded.append((b, avgdl))
+        maintenance,
+        "encode_bucket_postings",
+        lambda c, runs, docs, b, np_, tp_n, **kw: log.append(("encode", runs, b, kw["write_docs"])),
     )
 
     out = maintenance.compact_buckets(ms, cat, [1000000, 1000001], 999999)
 
-    calls = _sql_calls(ms)
-    assert "UPDATE docs SET bucket = 999999 WHERE bucket IN (1000000, 1000001)" in calls
-    assert "DELETE FROM postings WHERE bucket IN (1000000, 1000001)" in calls
-    assert "DELETE FROM stats WHERE bucket IN (1000000, 1000001)" in calls
-    assert "CALL system.rewrite_data_files(table => 'docs')" in calls
-    # target rebuilt once under the unchanged avgdl (same corpus)
-    assert encoded == [(999999, 10.0)]
+    # the target merges the sources' decoded postings once, BEFORE their
+    # postings and stats rows are DELETEd; the docs moved by the UPDATE
+    assert log == [
+        "UPDATE docs SET bucket = 999999 WHERE bucket IN (1000000, 1000001)",
+        ("encode", "runs", 999999, False),
+        "DELETE FROM postings WHERE bucket IN (1000000, 1000001)",
+        "DELETE FROM stats WHERE bucket IN (1000000, 1000001)",
+        "CALL system.rewrite_data_files(table => 'docs')",
+    ]
     assert out["n_moved"] == 5 and out["target"] == 999999
     # one manifest commit adds the target and retires the sources
     assert cat.committed_buckets() == {999999}
@@ -114,7 +125,7 @@ def test_compact_target_freshness_guard_still_applies(icat, monkeypatch):
         maintenance.compact_buckets(ms, cat, [1000000], 999999)
 
 
-def _log_commits(cat, ms, monkeypatch, existing=("postings", "stats")):
+def _log_commits(cat, ms, monkeypatch, existing=("docs", "postings", "stats")):
     """Record the commit sequence as ("sql", stmt) / ("append", table) /
     ("commit", "manifest") entries. ``existing`` are the tables the mocked
     catalog reports present. The url bloom sidecar writes plain parquet in
@@ -124,8 +135,13 @@ def _log_commits(cat, ms, monkeypatch, existing=("postings", "stats")):
     log = []
     ms.sql.side_effect = lambda q: log.append(("sql", q)) or MagicMock()
     ms.catalog.tableExists.side_effect = lambda name: name in existing
-    append = cat.append
+    append, write_version = cat.append, cat.write_version
     monkeypatch.setattr(cat, "append", lambda df, name: log.append(("append", name)) or append(df, name))
+    monkeypatch.setattr(
+        cat,
+        "write_version",
+        lambda df, name, version, mode="append": log.append(("append", name)) or write_version(df, name, version, mode),
+    )
     commit = cat.commit
     monkeypatch.setattr(cat, "commit", lambda *a, **k: log.append(("commit", "manifest")) or commit(*a, **k))
     monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys=None: None)
@@ -133,42 +149,65 @@ def _log_commits(cat, ms, monkeypatch, existing=("postings", "stats")):
 
 
 def _commits(log):
-    """The log's DELETEs, appends and manifest commits, in order."""
-    return [e for e in log if e[0] in ("append", "commit") or e[1].startswith("DELETE")]
+    """The log's DELETEs, appends and manifest commits, in order; the
+    sidecar appends that run concurrently after the postings append
+    (stats, docs) as one set."""
+    out = []
+    for e in log:
+        if e in (("append", "stats"), ("append", "docs")):
+            if not out or not isinstance(out[-1], set):
+                out.append(set())
+            out[-1].add(e[1])
+        elif e[0] in ("append", "commit") or e[1].startswith("DELETE"):
+            out.append(e)
+    return out
 
 
 def test_encode_bucket_postings_iceberg_deletes_before_append(icat, monkeypatch):
     """Crash-retry idempotency (ADVICE r2): the bucket commit (write_bucket)
-    DELETEs the bucket's existing postings AND stats rows before appending
-    the re-encoded rows — a plain append would double the bucket's df and
-    BM25 contributions."""
+    DELETEs the bucket's existing docs, postings AND stats rows before
+    appending the re-encoded rows — a plain append would double the
+    bucket's df and BM25 contributions. Without its docs write, a bucket
+    keeps its docs rows."""
     cat, ms, _ = icat
     log = _log_commits(cat, ms, monkeypatch)
-    monkeypatch.setattr(index_build, "posting_runs", lambda docs, min_parallelism: MagicMock(name="runs"))
-    monkeypatch.setattr(index_build, "encode_blocks", lambda runs, avgdl: MagicMock(name="blocks"))
+    monkeypatch.setattr(index_build, "encode_blocks", lambda runs: MagicMock(name="blocks"))
 
-    index_build.encode_bucket_postings(cat, cat.read("docs"), 3, 10.0, 8, 16, version="v1")
+    index_build.encode_bucket_postings(cat, MagicMock(name="runs"), cat.read("docs"), 3, 8, 16, version="v1")
 
+    assert _commits(log) == [
+        ("sql", "DELETE FROM docs WHERE bucket = 3"),
+        ("sql", "DELETE FROM postings WHERE bucket = 3"),
+        ("sql", "DELETE FROM stats WHERE bucket = 3"),
+        ("append", "postings"),
+        {"stats", "docs"},
+    ]
+    log.clear()
+    index_build.encode_bucket_postings(
+        cat, MagicMock(name="runs"), cat.read("docs"), 3, 8, 16, version="v2", write_docs=False
+    )
     assert _commits(log) == [
         ("sql", "DELETE FROM postings WHERE bucket = 3"),
         ("sql", "DELETE FROM stats WHERE bucket = 3"),
         ("append", "postings"),
-        ("append", "stats"),
+        {"stats"},
     ]
 
 
 def _mock_build(icat, monkeypatch, done_buckets):
-    """A 2-bucket Iceberg build over mocked tables: docs already assigned
-    (5 docs per bucket), ``done_buckets`` already committed."""
-    cat, _, tables = icat
-    docs = tables.setdefault("docs", MagicMock(name="docs_tbl"))
-    docs.groupBy.return_value.agg.return_value.collect.return_value = [
+    """A 2-bucket Iceberg build over mocked tables: the stage (plain
+    parquet in both catalog modes) holds 5 docs per bucket and is recorded
+    in the manifest, ``done_buckets`` already committed."""
+    cat, _, _ = icat
+    stage = MagicMock(name="stage")
+    stage.groupBy.return_value.agg.return_value.collect.return_value = [
         {"bucket": b, "nd": 5, "toks": 50, "mx": 5 * b + 4} for b in (0, 1)
     ]
-    _commit_buckets(cat, done_buckets)
-    monkeypatch.setattr(index_build, "assign_doc_ids", lambda pages, **kw: MagicMock(name="docs"))
+    Catalog.commit(cat, {"job": "seed"}, tables={"postings": {b: "v0" for b in done_buckets}}, stage="s0")
+    monkeypatch.setattr(index_build, "stage_docs", lambda *a, **kw: stage)
+    monkeypatch.setattr(cat, "read_stage", lambda version: stage)
     monkeypatch.setattr(index_build, "posting_runs", lambda docs, min_parallelism: MagicMock(name="runs"))
-    monkeypatch.setattr(index_build, "encode_blocks", lambda runs, avgdl: MagicMock(name="blocks"))
+    monkeypatch.setattr(index_build, "encode_blocks", lambda runs: MagicMock(name="blocks"))
 
 
 def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkeypatch):
@@ -184,12 +223,14 @@ def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkey
 
     assert metrics["buckets"][0] == "resumed"
     assert _commits(log) == [
+        ("sql", "DELETE FROM docs WHERE bucket = 1"),
         ("sql", "DELETE FROM postings WHERE bucket = 1"),
         ("sql", "DELETE FROM stats WHERE bucket = 1"),
         ("append", "postings"),
-        ("append", "stats"),
+        {"stats", "docs"},
         ("commit", "manifest"),
     ]
+    assert cat.snapshot().stage is None  # the completing commit retired it
 
 
 def test_fresh_build_iceberg_issues_no_delete(icat, monkeypatch):
@@ -203,9 +244,9 @@ def test_fresh_build_iceberg_issues_no_delete(icat, monkeypatch):
 
     assert "DROP TABLE IF EXISTS postings" in [q for kind, q in log if kind == "sql"]
     assert _commits(log) == [
-        ("commit", "manifest"),  # docs version + global stats
+        ("commit", "manifest"),  # stage + global stats
         ("append", "postings"),
-        ("append", "stats"),
+        {"stats", "docs"},
         ("commit", "manifest"),  # the bucket
     ]
 
@@ -242,12 +283,13 @@ def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
         append(df, name)
 
     monkeypatch.setattr(cat, "append", recording_append)
+    monkeypatch.setattr(cat, "write_version", lambda df, name, version, mode="append": recording_append(df, name))
     monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys=None: None)
     _mock_build(icat, monkeypatch, done_buckets=[])
 
     index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=2, bucket_concurrency=2)
 
-    tables = ["postings", "stats"]
+    tables = ["docs", "postings", "stats"]
     assert sorted(n for kind, n in log if kind == "create") == tables
     assert sorted(n for kind, n in log if kind == "append") == tables
     for t in tables:
@@ -257,14 +299,15 @@ def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
 def test_write_bucket_iceberg_appends_both_tables(icat, monkeypatch):
     """The bucket write's Iceberg append contract for postings: a
     tp-clustered (r6), sorted frame with the bucket and version columns,
-    written with writeTo("postings").append()."""
+    written with writeTo("postings").append(), from blocks materialized
+    (localCheckpoint) before the bucket's rows are DELETEd."""
     cat, ms, _ = icat
     _log_commits(cat, ms, monkeypatch)
 
     blocks = MagicMock(name="blocks")
     index_build.write_bucket(cat, blocks, MagicMock(name="bucket_docs"), 2, "v1")
 
-    persisted = blocks.withColumn.return_value.persist.return_value
+    persisted = blocks.withColumn.return_value.localCheckpoint.return_value
     # postings: tp-clustered (r6) + sorted frame + bucket and v columns ->
     # writeTo(postings).append()
     out = (

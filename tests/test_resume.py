@@ -1,8 +1,11 @@
 """Resumability: kill the build mid-way, resume, assert the final index is
 identical to an uninterrupted build (north rule; reference analogue: the
-md5-presence idempotent re-run, db.py:113-116 / anti-join db.py:324-339)."""
+md5-presence idempotent re-run, db.py:113-116 / anti-join db.py:324-339),
+and the lifecycle of the build-only stage that resume reads back."""
 
 import os
+import threading
+import time
 
 import pandas as pd
 import pytest
@@ -30,21 +33,26 @@ def _bucket_commits(cat: Catalog) -> list[dict]:
 
 
 class KillingCatalog(Catalog):
-    """Raises mid-build: after bucket 0's commit, the next bucket's postings
-    get written but its manifest commit is killed — simulating a crash
-    between data write and commit (the worst spot)."""
+    """Dies at its ``die_at``-th bucket commit: that bucket's files get
+    written but its manifest commit, and every later one, is killed —
+    simulating a process killed between data write and commit (the worst
+    spot). die_at=1 dies right after the stage commit; the default 2 after
+    bucket 0's commit."""
 
-    def __init__(self, spark, root):
+    def __init__(self, spark, root, die_at: int = 2):
         super().__init__(spark, root)
         self.bucket_commits = 0
+        self.die_at = die_at
         self.armed = True
+        self._lock = threading.Lock()
 
-    def commit(self, lineage, tables=None, stats=None, base=None):
+    def commit(self, lineage, *args, **kwargs):
         if "bucket" in lineage and self.armed:
-            self.bucket_commits += 1
-            if self.bucket_commits == 2:
-                raise RuntimeError("simulated crash before manifest commit")
-        return super().commit(lineage, tables, stats, base)
+            with self._lock:
+                self.bucket_commits += 1
+                if self.bucket_commits >= self.die_at:
+                    raise RuntimeError("simulated crash before manifest commit")
+        return super().commit(lineage, *args, **kwargs)
 
 
 def _postings_key(cat: Catalog) -> pd.DataFrame:
@@ -55,15 +63,30 @@ def _postings_key(cat: Catalog) -> pd.DataFrame:
     return pdf.sort_values(["term", "bucket", "first_doc"]).reset_index(drop=True)
 
 
+def _docs_key(cat: Catalog) -> pd.DataFrame:
+    return cat.read("docs").drop("v").toPandas().sort_values("doc_id").reset_index(drop=True)
+
+
+def _stage_files(cat: Catalog) -> list[str]:
+    return [
+        os.path.join(r, f) for r, _, fs in os.walk(cat.root) for f in fs if "_stage" in os.path.relpath(r, cat.root)
+    ]
+
+
 @pytest.fixture(scope="module")
 def pages_df(spark):
     return spark.createDataFrame(fixtures.make_pages_pandas(N_DOCS))
 
 
-def test_kill_resume_identical(spark, pages_df, tmp_path_factory):
-    golden_cat = Catalog(spark, str(tmp_path_factory.mktemp("golden")))
-    build_index(spark, pages_df, golden_cat, n_buckets=3)
+@pytest.fixture(scope="module")
+def golden(spark, pages_df, tmp_path_factory):
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("golden")))
+    build_index(spark, pages_df, cat, n_buckets=3)
+    return cat
 
+
+def test_kill_resume_identical(spark, pages_df, golden, tmp_path_factory):
+    golden_cat = golden
     cat = KillingCatalog(spark, str(tmp_path_factory.mktemp("killed")))
     with pytest.raises(RuntimeError, match="simulated crash"):
         build_index(spark, pages_df, cat, n_buckets=3)
@@ -79,6 +102,7 @@ def test_kill_resume_identical(spark, pages_df, tmp_path_factory):
     pd.testing.assert_frame_equal(
         got.drop(columns=[]), want, check_like=False
     )
+    pd.testing.assert_frame_equal(_docs_key(cat), _docs_key(golden_cat))
     assert cat.committed_buckets() == {0, 1, 2}
     # lineage + metrics recorded per partition batch
     ck = _bucket_commits(cat)
@@ -129,10 +153,10 @@ def test_old_format_warehouse_gets_clear_error(spark, pages_df, tmp_path_factory
     latest = os.path.join(cat.path("_manifest"), f"{cat.index_version()}.json")
     with open(latest) as f:
         m = json.load(f)
-    m["stats"]["format"] = 5
+    m["stats"]["format"] = 6
     with open(latest, "w") as f:
         json.dump(m, f)
-    with pytest.raises(RuntimeError, match="format 5 .*rebuild"):
+    with pytest.raises(RuntimeError, match="format 6 .*rebuild"):
         Catalog(spark, cat.root).global_doc_stats()
     shutil.rmtree(cat.path("_manifest"))
     with pytest.raises(RuntimeError, match="no manifest.*rebuild"):
@@ -186,23 +210,21 @@ class FailOneCheckpointCatalog(Catalog):
         self._lock = threading.Lock()
         self.armed = True
 
-    def commit(self, lineage, tables=None, stats=None, base=None):
+    def commit(self, lineage, *args, **kwargs):
         if "bucket" in lineage:
             with self._lock:
                 if self.armed:
                     self.armed = False
                     raise RuntimeError("simulated crash before manifest commit")
-        return super().commit(lineage, tables, stats, base)
+        return super().commit(lineage, *args, **kwargs)
 
 
-def test_concurrent_bucket_build_kill_resume_identical(spark, pages_df, tmp_path_factory):
+def test_concurrent_bucket_build_kill_resume_identical(spark, pages_df, golden, tmp_path_factory):
     """bucket_concurrency > 1 keeps the commit contract: a crash in one
     bucket pipeline leaves it uncommitted while concurrent pipelines
     commit; resume rebuilds exactly the missing buckets and the final index
     is bit-identical to a serial golden build."""
-    golden_cat = Catalog(spark, str(tmp_path_factory.mktemp("cgolden")))
-    build_index(spark, pages_df, golden_cat, n_buckets=3)
-
+    golden_cat = golden
     cat = FailOneCheckpointCatalog(spark, str(tmp_path_factory.mktemp("ckilled")))
     with pytest.raises(RuntimeError, match="simulated crash"):
         build_index(spark, pages_df, cat, n_buckets=3, bucket_concurrency=2)
@@ -222,3 +244,75 @@ def test_concurrent_bucket_build_matches_serial(spark, pages_df, tmp_path_factor
     build_index(spark, pages_df, b, n_buckets=3, bucket_concurrency=3)
     pd.testing.assert_frame_equal(_postings_key(a), _postings_key(b))
     assert a.snapshot().stats == b.snapshot().stats
+
+
+@pytest.mark.parametrize("concurrency", [1, 2])
+@pytest.mark.parametrize("die_at", [1, 2])
+def test_kill_after_stage_or_bucket_commit_resumes_from_stage(
+    spark, pages_df, golden, tmp_path_factory, die_at, concurrency
+):
+    """A build killed right after its stage commit (die_at=1) or after one
+    bucket commit (die_at=2), serial or concurrent, keeps its stage in the
+    manifest; resume rebuilds the rest from it — postings bit-identical to
+    the golden build, identical docs rows — and the completing commit
+    deletes the stage."""
+    cat = KillingCatalog(spark, str(tmp_path_factory.mktemp("stagekill")), die_at=die_at)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index(spark, pages_df, cat, n_buckets=3, bucket_concurrency=concurrency)
+    assert len(cat.committed_buckets()) == die_at - 1
+    assert cat.snapshot().stage is not None and _stage_files(cat)
+
+    cat.armed = False
+    metrics = build_index(spark, pages_df, cat, n_buckets=3, resume=True, bucket_concurrency=concurrency)
+    assert sum(v == "resumed" for v in metrics["buckets"].values()) == die_at - 1
+    pd.testing.assert_frame_equal(_postings_key(cat), _postings_key(golden))
+    pd.testing.assert_frame_equal(_docs_key(cat), _docs_key(golden))
+    assert cat.snapshot().stage is None
+    assert _stage_files(cat) == []
+
+
+def test_no_stage_files_after_build_and_append(spark, tmp_path_factory):
+    """The stage lives only while a build or an append runs: afterwards no
+    file of it remains anywhere under the warehouse root."""
+    from information_retrieval_images_spark.operators.incremental import append_bucket
+
+    pdf = fixtures.make_pages_pandas(N_DOCS)
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("nostage")))
+    build_index(spark, spark.createDataFrame(pdf.iloc[:150]), cat, n_buckets=2, bucket_concurrency=2)
+    assert cat.snapshot().stage is None
+    assert _stage_files(cat) == []
+    assert append_bucket(spark, spark.createDataFrame(pdf.iloc[150:]), cat, bucket=9)["n_new"] > 0
+    assert _stage_files(cat) == []
+
+
+def test_fresh_build_drops_a_crashed_builds_stage(spark, pages_df, tmp_path_factory):
+    cat = KillingCatalog(spark, str(tmp_path_factory.mktemp("restage")), die_at=1)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index(spark, pages_df, cat, n_buckets=2)
+    old = cat.stage_path(cat.snapshot().stage)
+    assert os.path.isdir(old)
+
+    cat.armed = False
+    build_index(spark, pages_df, cat, n_buckets=2)
+    assert not os.path.exists(old)
+    assert _stage_files(cat) == []
+
+
+def test_vacuum_removes_a_crashed_appends_stage_after_grace(spark, pages_df, tmp_path_factory, monkeypatch):
+    """An append killed hard leaves its stage behind, recorded nowhere: the
+    vacuum keeps it through the grace period (the append might still be
+    running) and deletes it after."""
+    from information_retrieval_images_spark import catalog as catalog_mod
+    from information_retrieval_images_spark.operators.index_build import stage_docs
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("appstage")))
+    build_index(spark, pages_df.limit(60), cat, n_buckets=1)
+    leftover = cat.new_version()
+    assert stage_docs(cat, pages_df.select("url", "html").limit(5), leftover, n_buckets=1, fixed_bucket=7) is not None
+
+    cat.commit({"job": "probe"})
+    assert os.path.isdir(cat.stage_path(leftover))
+    later = time.time() + catalog_mod.VACUUM_GRACE_MINUTES * 60 + 60
+    monkeypatch.setattr(catalog_mod, "_now", lambda: later)
+    cat.commit({"job": "probe"})
+    assert not os.path.exists(cat.stage_path(leftover))
