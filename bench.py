@@ -174,7 +174,7 @@ def main() -> None:
     # format v4 storage split: postings no longer carry per-posting dls; the
     # dl sidecar is ~O(docs) vs the old O(postings) in-block copies
     extras["index_bytes"] = {
-        t: _dir_bytes(os.path.join(wh, t)) for t in ("postings", "doclens", "stats", "blooms")
+        t: _dir_bytes(os.path.join(wh, t)) for t in ("postings", "doclens", "blooms")
     }
 
     # --- query latency + headline gates: interleaved best-of-N ----------------

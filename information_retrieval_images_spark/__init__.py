@@ -52,4 +52,6 @@ BLOCK_SIZE = 128
 #      text column (the extracted text lives in a build-only stage until
 #      the build completes), and blocks drop their build-time tf-norm
 #      bound (queries bound blocks by (max_tf, min_dl))
-INDEX_FORMAT = 7
+#   8  no per-bucket stats table: a term's df is the sum of n_docs over its
+#      postings blocks, summed at query time (Catalog.term_dfs)
+INDEX_FORMAT = 8

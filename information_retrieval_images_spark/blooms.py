@@ -129,23 +129,19 @@ def build_bloom(
 BLOOM_FILE = "part-00000.parquet"
 
 
-def write_bucket_bloom(
-    catalog, bucket_docs: DataFrame, bucket: int, version: str, n_keys: int | None = None
-) -> None:
+def write_bucket_bloom(catalog, bucket_docs: DataFrame, bucket: int, version: str, n_keys: int) -> None:
     """Build version ``version`` of one bucket's url bloom — part of the
     bucket version write. An empty bucket gets no bloom.
 
-    ``n_keys`` (the bucket's doc count) sizes the bitmap; pass it when the
-    caller already knows it (build/append/compact do) to save a count job —
-    every extra Spark action costs a full job round-trip at small scale."""
+    ``n_keys`` (the bucket's doc count, which every caller already knows)
+    sizes the bitmap."""
     import time
 
     trace = os.environ.get("IR_TRACE") == "1"
-    n = bucket_docs.count() if n_keys is None else int(n_keys)
-    if n == 0:
+    if n_keys == 0:
         return
     t0 = time.time()
-    m, k, bits = build_bloom(bucket_docs.select("url"), n)
+    m, k, bits = build_bloom(bucket_docs.select("url"), int(n_keys))
     t1 = time.time()
     # The bitmap row is DRIVER data (built here, probed here or by the tiny
     # distributed probe) — write it with pyarrow directly, symmetric to how

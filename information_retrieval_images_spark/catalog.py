@@ -11,8 +11,8 @@ Every write (a build bucket, append, delete, compaction) writes NEW version
 directories and never changes an existing file. It then publishes manifest
 ``seq + 1``: a temp file hard-linked to its final name with ``os.link``,
 which fails if another writer already took that sequence number. A manifest
-holds the live bucket -> version map of ``docs``, ``postings``, ``stats``,
-``doclens`` and ``blooms``, the global statistics (n_docs, sum_dl, avgdl,
+holds the live bucket -> version map of ``docs``, ``postings``, ``doclens``
+and ``blooms``, the global statistics (n_docs, sum_dl, avgdl,
 max_doc_id, p_logical, tp_n, format), the version of an unfinished build's
 stage and the commit's lineage record. This is Iceberg's model
 (https://iceberg.apache.org/spec/): write new files, then swap the metadata
@@ -32,7 +32,10 @@ it and deletes it at once, since no reader pins a stage. An append stages
 its own rows and deletes them when it ends; the vacuum removes a stage left
 behind by a crashed append once the grace period has passed.
 
-On Iceberg, ``docs``, ``postings`` and ``stats`` are Iceberg tables; the
+A term's document frequency is not stored apart from the postings: it is
+the sum of ``n_docs`` over the term's blocks (term_dfs).
+
+On Iceberg, ``docs`` and ``postings`` are Iceberg tables; the
 manifest still carries the metadata and the two plain-parquet sidecars
 (``doclens``, ``blooms``), and the stage is plain parquet too. Without the
 Iceberg runtime jar every table is sorted parquet (row-group min/max stats
@@ -57,9 +60,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # the tables of one bucket version, all under one version id
-INDEX_TABLES = ("docs", "postings", "stats", "doclens", "blooms")
+INDEX_TABLES = ("docs", "postings", "doclens", "blooms")
 # tables that are Iceberg tables when the runtime is available
-ICEBERG_TABLES = ("docs", "postings", "stats")
+ICEBERG_TABLES = ("docs", "postings")
 MANIFEST_DIR = "_manifest"
 STAGE_DIR = "_stage"
 # Retired versions and superseded manifests are kept this long, so a reader
@@ -378,18 +381,20 @@ class Catalog:
         """Per-term document frequency for a query's term set, memoized per
         snapshot.
 
-        Misses are fetched in ONE IN-list-pruned job over ``stats`` (plus
-        term-prefix partition pruning when ``tp_of`` is given); absent terms
-        are cached as 0 so repeat queries with unknown terms stay job-free.
-        The memo is capped to bound driver memory.
+        A term's df is the sum of ``n_docs`` over its postings blocks.
+        Misses are fetched in ONE job that reads ``(term, n_docs)`` of the
+        postings, pruned by the term IN-list (plus term-prefix partition
+        pruning when ``tp_of`` is given); absent terms are cached as 0 so
+        repeat queries with unknown terms stay job-free. The memo is capped
+        to bound driver memory.
         """
         with self.pinned() as snap:
             missing = [t for t in terms if t not in snap.term_df]
             if missing:
-                stats = self.read("stats").where(F.col("term").isin(missing))
+                blocks = self.read("postings").where(F.col("term").isin(missing))
                 if tp_of is not None:
-                    stats = stats.where(F.col("tp").isin(sorted({tp_of(t) for t in missing})))
-                rows = stats.groupBy("term").agg(F.sum("df").alias("df")).collect()
+                    blocks = blocks.where(F.col("tp").isin(sorted({tp_of(t) for t in missing})))
+                rows = blocks.groupBy("term").agg(F.sum("n_docs").alias("df")).collect()
                 found = {r["term"]: int(r["df"]) for r in rows}
                 if len(snap.term_df) + len(missing) > self._term_df_cap:
                     snap.term_df.clear()

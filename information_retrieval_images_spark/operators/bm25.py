@@ -313,7 +313,7 @@ def bm25_topk_wand(
     <= tasks_q * k candidate rows — negligible).
 
     tasks_q is the query's matched-posting volume (sum of its terms'
-    df, already known from the stats lookup) divided by ``postings_per_task``
+    df, already known from the df lookup) divided by ``postings_per_task``
     (the per-task decode-volume budget), clamped to [1,
     _max_query_fanout(spark)] — a cluster-parallelism-derived ceiling: a
     head-term query fans out across executors instead of materializing all

@@ -7,16 +7,17 @@ their own bucket with doc ids continuing after the current maximum.
 
 Correctness under shifting collection statistics: appends change N and avgdl,
 which changes every BM25 score. The query engine always reads the *current*
-manifest's statistics and ``stats`` rows (idf and scoring are query-time),
+manifest's statistics and sums each term's df over the current postings
+blocks (idf and scoring are query-time),
 and WAND bounds derive from per-block ``(max_tf, min_dl)`` under the current
 avgdl — so results after an append are exactly what a full rebuild would
 score, with one intentional deviation: doc ids of appended docs are ordered
 within their batch, not re-ranked globally (a rebuild renumbers; an append
 must not).
 
-Cost contract: one append touches ONLY the new bucket — stats rows are
-additive per bucket (index_build.write_bucket), so no full postings rescan
-per micro-batch, and the global (N, sum dl, max doc_id) bookkeeping is
+Cost contract: one append touches ONLY the new bucket — df is a sum over
+every bucket's blocks (Catalog.term_dfs), so the new bucket's blocks add
+to it without rewriting any other bucket, and the global (N, sum dl, max doc_id) bookkeeping is
 delta-maintained from the manifest plus one bucket-scoped agg (zero
 full-corpus jobs per append). The one remaining whole-table read is the url
 anti-join itself — inherent to ingest-by-anti-join semantics and pruned to

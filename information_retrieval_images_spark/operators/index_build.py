@@ -32,9 +32,10 @@ Pipeline (SURVEY.md §3.3 target lifecycle):
          -> mapInPandas block encoder (delta-gap+varint, <=BLOCK_SIZE docs per
             block, blocks never cross fixed doc-range boundaries so query-time
             doc-group scoring is exact; per-block (max_tf, min_dl) = WAND bound)
-         -> docs (doc_id, url, dl — no text), postings, stats, doclens and
-            blooms as one new bucket version, published by one manifest
-            commit (catalog.py)
+         -> docs (doc_id, url, dl — no text), postings, doclens and blooms
+            as one new bucket version, four independent writes published by
+            one manifest commit (catalog.py); a term's df is the sum of
+            n_docs over its blocks, so no separate df table is written
     -> global (N, sum dl, avgdl) from the stage, committed with it
 
 The postings are the index's only copy of document content: nothing a query
@@ -121,7 +122,7 @@ def global_stats(n_docs: int, sum_dl: int, max_doc_id: int, p_logical: int, tp_n
     }
 
 
-# Second partition dimension on postings/stats: tp = crc32(term) % tp_n.
+# Second partition dimension on postings: tp = crc32(term) % tp_n.
 # Directory layout bucket=B/tp=T means a k-term query prunes to <= k of the
 # tp_n term-prefix directories per bucket (Catalyst PartitionFilters) instead
 # of opening every bucket file — the inverted-index analogue of IVF probe-time
@@ -470,7 +471,7 @@ def build_index(
 
     Resumability contract (north rule): the stage (extracted, numbered
     rows) and the global stats commit first, then each bucket pipeline
-    commits its own manifest entry — its five tables under one version id.
+    commits its own manifest entry — its four tables under one version id.
     On resume, buckets whose postings the manifest lists are skipped
     (left-anti semantics) and the rest are rebuilt from the stage the
     manifest records; a killed bucket's uncommitted files are invisible.
@@ -612,7 +613,7 @@ def build_index(
         rows = stage.where(F.col("bucket") == b)
         runs = posting_runs(rows, min_parallelism=nparts)
         encode_bucket_postings(catalog, runs, rows, b, nparts, tp_n, version=version, n_keys=nd)
-        _tr(f"bucket{b}_postings_stats")
+        _tr(f"bucket{b}_write")
         wall_ms = int((time.time() - t0) * 1000)
         lineage = {
             "job": "build_index",
@@ -645,24 +646,17 @@ def build_index(
         # what's-wrong #5): each bucket's commit tail is fixed driver/commit
         # round-trips during which the executors idle — at production bucket
         # counts that serial floor is the build's width-independent wall.
-        # Spark's scheduler accepts jobs from multiple driver threads; a
-        # distinct FAIR pool per pipeline keeps one bucket's long shuffle
-        # from starving another's small commit jobs (pools round-robin under
-        # spark.scheduler.mode=FAIR, session.SPARK_CONF). The failure model
-        # is the serial one: each bucket commits its own manifest entry after
-        # its files are written, so a crash leaves some buckets committed and
-        # the rest rebuildable by resume.
+        # Spark's scheduler accepts jobs from multiple driver threads; each
+        # write of a pipeline runs its jobs in its own FAIR pool
+        # (write_bucket), so one bucket's long shuffle cannot starve
+        # another's small jobs. The
+        # failure model is the serial one: each bucket commits its own
+        # manifest entry after its files are written, so a crash leaves some
+        # buckets committed and the rest rebuildable by resume.
         from concurrent.futures import ThreadPoolExecutor
 
-        def _in_pool(b: int) -> None:
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"ir_bucket_{b}")
-            try:
-                _build_bucket(b)
-            finally:
-                spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
-
         with ThreadPoolExecutor(max_workers=int(bucket_concurrency)) as ex:
-            futs = {ex.submit(_in_pool, b): b for b in todo}
+            futs = {ex.submit(_build_bucket, b): b for b in todo}
             errs = [(futs[f], f.exception()) for f in futs]
             for b, e in sorted(errs):
                 if e is not None:
@@ -690,22 +684,6 @@ def _write_postings_rows(catalog: Catalog, blocks: DataFrame, bucket: int, versi
         out.write.partitionBy("tp").parquet(catalog.version_path("postings", bucket, version))
 
 
-def _write_bucket_stats(catalog: Catalog, blocks: DataFrame, bucket: int, version: str, tp_n: int) -> None:
-    bstats = (
-        blocks.groupBy("term")
-        .agg(F.sum("n_docs").cast("long").alias("df"))
-        .withColumn("tp", term_prefix_expr(tp_n=tp_n))
-        # cluster by tp so each tp dir gets ONE file (was coalesce(nparts/4)
-        # -> nparts/4 x tp_n files; the term_dfs IN-list lookup opens fewer)
-        .repartition(int(tp_n), "tp")
-        .sortWithinPartitions("tp", "term")
-    )
-    if catalog.use_iceberg:
-        catalog.append(bstats.withColumn("bucket", F.lit(bucket)), "stats")
-    else:
-        bstats.write.partitionBy("tp").parquet(catalog.version_path("stats", bucket, version))
-
-
 def encode_bucket_postings(
     catalog: Catalog,
     runs: DataFrame,
@@ -715,7 +693,7 @@ def encode_bucket_postings(
     tp_n: int,
     *,
     version: str,
-    n_keys: int | None = None,
+    n_keys: int,
     write_docs: bool = True,
 ) -> None:
     """Build version ``version`` of one bucket from its posting ``runs``
@@ -748,29 +726,27 @@ def write_bucket(
     bucket_docs: DataFrame,
     bucket: int,
     version: str,
-    n_keys: int | None = None,
+    n_keys: int,
     tp_n: int = TERM_PREFIX_PARTITIONS,
     write_docs: bool = True,
 ) -> None:
-    """Write version ``version`` of one bucket: postings first (the one big job — it also
-    materializes the ``blocks`` cache), then the independent sidecars
-    — per-term df stats (from the persisted blocks), the text-free docs
+    """Write version ``version`` of one bucket as independent writes: the
+    postings (from ``blocks``), and from ``bucket_docs`` the text-free docs
     rows (unless ``write_docs`` is False), the doclens array and the url
-    bloom (all three from ``bucket_docs``) — submitted CONCURRENTLY from
-    driver threads. Spark's scheduler accepts jobs from multiple driver
-    threads; each sidecar is a small job whose cost at cluster scale is
-    dominated by its fixed driver round-trip while the executors idle, so
-    overlapping them shortens every bucket commit's serial tail (there is
-    one commit per bucket: at production bucket counts the tail is pure
-    serial floor). The writes go to fresh directories
-    (``<table>/bucket=B/v=<version>``), so no two jobs share a
-    ``_temporary`` staging dir. Failure of any sidecar propagates after all
-    of them finish (no partially-awaited commit). Nothing is visible until
-    the caller commits the version.
+    bloom (sized by ``n_keys``, the bucket's doc count). No write reads
+    another's output, so all of them are submitted CONCURRENTLY from
+    driver threads: Spark's scheduler accepts jobs from multiple driver
+    threads, and overlapping the small jobs with the postings job shortens
+    every bucket commit's serial tail (there is one commit per bucket: at
+    production bucket counts the tail is pure serial floor). The writes go
+    to fresh directories (``<table>/bucket=B/v=<version>``), so no two jobs
+    share a ``_temporary`` staging dir. Failure of any write propagates
+    after all of them finish (no partially-awaited commit). Nothing is
+    visible until the caller commits the version.
 
-    On Iceberg the docs, postings and stats writes are table appends, so
-    the bucket's existing rows are DELETEd first; otherwise a bucket whose
-    rows landed before a crash (and before its manifest commit) would be
+    On Iceberg the docs and postings writes are table appends, so the
+    bucket's existing rows are DELETEd first; otherwise a bucket whose rows
+    landed before a crash (and before its manifest commit) would be
     appended twice on resume, doubling its df and BM25 contributions.
     Tables that do not exist yet (a fresh build drops them) get no DELETE.
     A delete re-encodes a bucket from its own postings rows, so on Iceberg
@@ -783,12 +759,12 @@ def write_bucket(
     spark = catalog.spark
 
     def _timed(name, fn, *args):
-        # Each sidecar runs in its OWN scheduler pool (r6): pools round-robin
-        # under FAIR mode but are FIFO *within* — with all sidecars in the
-        # bucket's pool they serialized behind each other (measured: the
-        # last-submitted bloom job's wall was the SUM of the sidecars
-        # whenever the cluster had free slots). A per-(bucket, sidecar) pool
-        # lets the small jobs overlap; total work is unchanged.
+        # Each write runs in its OWN scheduler pool (r6): pools round-robin
+        # under FAIR mode but are FIFO *within* — in one shared pool the
+        # small jobs serialized behind each other (measured: the
+        # last-submitted bloom job's wall was the SUM of the others whenever
+        # the cluster had free slots). A per-(bucket, write) pool lets them
+        # overlap; total work is unchanged.
         prev = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"ir_sc_{bucket}_{name}")
         t0 = time.time()
@@ -802,28 +778,22 @@ def write_bucket(
     blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n))
     if catalog.use_iceberg:
         blocks = blocks.localCheckpoint()
-        for t in ("docs", "postings", "stats") if write_docs else ("postings", "stats"):
+        for t in ("docs", "postings") if write_docs else ("postings",):
             if catalog.exists(t):
                 spark.sql(f"DELETE FROM {t} WHERE bucket = {int(bucket)}")
-    else:
-        blocks = blocks.persist()
-    sidecars = [
-        ("stats", _write_bucket_stats, catalog, blocks, bucket, version, tp_n),
+    writes = [
+        ("postings", _write_postings_rows, catalog, blocks, bucket, version, tp_n),
         ("doclens", write_bucket_doclens, catalog, bucket_docs, bucket, version),
         ("bloom", write_bucket_bloom, catalog, bucket_docs, bucket, version, n_keys),
     ]
     if write_docs:
-        sidecars.append(("docs", _write_bucket_docs, catalog, bucket_docs, bucket, version))
-    try:
-        _timed("postings", _write_postings_rows, catalog, blocks, bucket, version, tp_n)
-        with ThreadPoolExecutor(max_workers=len(sidecars)) as ex:
-            futs = [ex.submit(_timed, *sc) for sc in sidecars]
-            errs = [f.exception() for f in futs]
-            for e in errs:
-                if e is not None:
-                    raise e
-    finally:
-        blocks.unpersist()
+        writes.append(("docs", _write_bucket_docs, catalog, bucket_docs, bucket, version))
+    with ThreadPoolExecutor(max_workers=len(writes)) as ex:
+        futs = [ex.submit(_timed, *w) for w in writes]
+        errs = [f.exception() for f in futs]
+    for e in errs:
+        if e is not None:
+            raise e
 
 
 def _write_bucket_docs(catalog: Catalog, bucket_docs: DataFrame, bucket: int, version: str) -> None:

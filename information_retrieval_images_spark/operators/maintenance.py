@@ -5,7 +5,7 @@ read-modify-write upsert (``vector_db.py:61-91``) against the Milvus
 collection — the most common maintenance ops for a live index. Here the
 natural rewrite unit is the BUCKET: deleting a document writes a new version
 of only the buckets that contain it (the surviving docs rows, their
-postings, stats and sidecars), never the whole index.
+postings and sidecars), never the whole index.
 
 The index stores no text, so delete and compaction re-encode from the
 postings themselves (Lucene's segment merge): index_build.decoded_runs
@@ -22,9 +22,9 @@ never between; a crashed delete leaves only unreferenced files, and
 re-running it redoes the whole delete.
 
 Scores after a delete are exactly what a full rebuild without the documents
-would produce: N/avgdl are refreshed in the manifest, per-term df comes from
-the additive per-bucket ``stats`` rows (rewritten for touched buckets), and
-surviving doc ids are untouched (ranking ties break on doc_id, and both
+would produce: N/avgdl are refreshed in the manifest, per-term df is summed
+from the postings blocks themselves (the re-encoded blocks of a touched
+bucket no longer count the deleted docs), and surviving doc ids are untouched (ranking ties break on doc_id, and both
 engines order by (score, doc_id) — id *gaps* are harmless).
 """
 
@@ -173,8 +173,7 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
     # 3. re-encode each affected bucket (the rewrite unit) from its own
     #    postings minus the deleted ids; surviving counts from the locate job
     #    size the blooms — no per-bucket count job. An emptied bucket leaves
-    #    the manifest (on Iceberg its postings and stats rows are still
-    #    DELETEd).
+    #    the manifest (on Iceberg its postings rows are still DELETEd).
     postings = catalog.read("postings")
     for b in buckets:
         if surviving_counts[b] or catalog.use_iceberg:
@@ -214,8 +213,8 @@ def compact_buckets(
     sources' postings into it: decoded_runs decodes the source buckets'
     blocks and the shared encoder re-encodes them once. On Iceberg the docs
     move by a row-level UPDATE plus a rewrite-data-files action, and the
-    sources' postings and stats rows are DELETEd after the target is
-    written (the merge reads them); on the parquet fallback the moved docs
+    sources' postings rows are DELETEd after the target is written (the
+    merge reads them); on the parquet fallback the moved docs
     rows are the target version's docs. One manifest commit then adds the
     target and retires the sources.
 
@@ -243,8 +242,7 @@ def compact_buckets(
             version=version, n_keys=n_moved, write_docs=not catalog.use_iceberg,
         )
         if catalog.use_iceberg:
-            for t in ("postings", "stats"):
-                spark.sql(f"DELETE FROM {t} WHERE bucket IN ({blist})")
+            spark.sql(f"DELETE FROM postings WHERE bucket IN ({blist})")
             spark.sql("CALL system.rewrite_data_files(table => 'docs')")
         lineage = {
             "job": "compact_buckets",

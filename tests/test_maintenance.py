@@ -137,17 +137,19 @@ def test_compact_buckets_preserves_ranking(spark, corpus, tmp_path_factory):
     assert res["n_moved"] == (corpus.iloc[80:]["lang"] == "en").sum()
     buckets_after = {r["bucket"] for r in cat.read("postings").select("bucket").distinct().collect()}
     assert buckets_after == {0, 2000}
-    # stats identical to a full rebuild's
+    # per-term df identical to a full rebuild's and to the oracle's
     rebuilt = Catalog(spark, str(tmp_path_factory.mktemp("cmpreb")))
     build_index(spark, spark.createDataFrame(corpus), rebuilt, n_buckets=2)
 
-    def stats_map(cc):
-        return {
-            r["term"]: r["df"]
-            for r in cc.read("stats").groupBy("term").agg(F.sum("df").alias("df")).collect()
-        }
+    def df_map(cc):
+        """Catalog.term_dfs over the oracle's whole vocabulary plus a term
+        that is not indexed, from a fresh catalog (no memo)."""
+        return Catalog(spark, cc.root).term_dfs([*idx.postings, "zzz-not-indexed"])
 
-    assert stats_map(cat) == stats_map(rebuilt)
+    idx = build_oracle_index(corpus, lang="en")
+    want = {**{t: len(plist) for t, plist in idx.postings.items()}, "zzz-not-indexed": 0}
+    assert df_map(rebuilt) == want
+    assert df_map(cat) == want
     _assert_matches_oracle(spark, cat, corpus)
     # the merged target == a fresh encode of the union of the sources
     _assert_bucket_bit_identical(spark, cat, tmp_path_factory, corpus, 2000)

@@ -105,12 +105,11 @@ def test_compact_buckets_iceberg_sql_sequence(icat, monkeypatch):
     out = maintenance.compact_buckets(ms, cat, [1000000, 1000001], 999999)
 
     # the target merges the sources' decoded postings once, BEFORE their
-    # postings and stats rows are DELETEd; the docs moved by the UPDATE
+    # postings rows are DELETEd; the docs moved by the UPDATE
     assert log == [
         "UPDATE docs SET bucket = 999999 WHERE bucket IN (1000000, 1000001)",
         ("encode", "runs", 999999, False),
         "DELETE FROM postings WHERE bucket IN (1000000, 1000001)",
-        "DELETE FROM stats WHERE bucket IN (1000000, 1000001)",
         "CALL system.rewrite_data_files(table => 'docs')",
     ]
     assert out["n_moved"] == 5 and out["target"] == 999999
@@ -125,7 +124,7 @@ def test_compact_target_freshness_guard_still_applies(icat, monkeypatch):
         maintenance.compact_buckets(ms, cat, [1000000], 999999)
 
 
-def _log_commits(cat, ms, monkeypatch, existing=("docs", "postings", "stats")):
+def _log_commits(cat, ms, monkeypatch, existing=("docs", "postings")):
     """Record the commit sequence as ("sql", stmt) / ("append", table) /
     ("commit", "manifest") entries. ``existing`` are the tables the mocked
     catalog reports present. The url bloom sidecar writes plain parquet in
@@ -144,53 +143,51 @@ def _log_commits(cat, ms, monkeypatch, existing=("docs", "postings", "stats")):
     )
     commit = cat.commit
     monkeypatch.setattr(cat, "commit", lambda *a, **k: log.append(("commit", "manifest")) or commit(*a, **k))
-    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys=None: None)
+    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys: None)
     return log
 
 
 def _commits(log):
     """The log's DELETEs, appends and manifest commits, in order; the
-    sidecar appends that run concurrently after the postings append
-    (stats, docs) as one set."""
+    appends of one bucket version write, which run concurrently (postings,
+    docs), as one set."""
     out = []
     for e in log:
-        if e in (("append", "stats"), ("append", "docs")):
+        if e[0] == "append":
             if not out or not isinstance(out[-1], set):
                 out.append(set())
             out[-1].add(e[1])
-        elif e[0] in ("append", "commit") or e[1].startswith("DELETE"):
+        elif e[0] == "commit" or e[1].startswith("DELETE"):
             out.append(e)
     return out
 
 
 def test_encode_bucket_postings_iceberg_deletes_before_append(icat, monkeypatch):
     """Crash-retry idempotency (ADVICE r2): the bucket commit (write_bucket)
-    DELETEs the bucket's existing docs, postings AND stats rows before
-    appending the re-encoded rows — a plain append would double the
+    DELETEs the bucket's existing docs AND postings rows before appending
+    the re-encoded rows — a plain append would double the
     bucket's df and BM25 contributions. Without its docs write, a bucket
     keeps its docs rows."""
     cat, ms, _ = icat
     log = _log_commits(cat, ms, monkeypatch)
     monkeypatch.setattr(index_build, "encode_blocks", lambda runs: MagicMock(name="blocks"))
 
-    index_build.encode_bucket_postings(cat, MagicMock(name="runs"), cat.read("docs"), 3, 8, 16, version="v1")
+    index_build.encode_bucket_postings(
+        cat, MagicMock(name="runs"), cat.read("docs"), 3, 8, 16, version="v1", n_keys=5
+    )
 
     assert _commits(log) == [
         ("sql", "DELETE FROM docs WHERE bucket = 3"),
         ("sql", "DELETE FROM postings WHERE bucket = 3"),
-        ("sql", "DELETE FROM stats WHERE bucket = 3"),
-        ("append", "postings"),
-        {"stats", "docs"},
+        {"postings", "docs"},
     ]
     log.clear()
     index_build.encode_bucket_postings(
-        cat, MagicMock(name="runs"), cat.read("docs"), 3, 8, 16, version="v2", write_docs=False
+        cat, MagicMock(name="runs"), cat.read("docs"), 3, 8, 16, version="v2", n_keys=5, write_docs=False
     )
     assert _commits(log) == [
         ("sql", "DELETE FROM postings WHERE bucket = 3"),
-        ("sql", "DELETE FROM stats WHERE bucket = 3"),
-        ("append", "postings"),
-        {"stats"},
+        {"postings"},
     ]
 
 
@@ -212,11 +209,11 @@ def _mock_build(icat, monkeypatch, done_buckets):
 
 def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkeypatch):
     """Resume after a crash between bucket 1's postings append and its
-    manifest commit: bucket 1 is rebuilt, and its leftover postings/stats
+    manifest commit: bucket 1 is rebuilt, and its leftover docs/postings
     rows are DELETEd before the re-encoded rows are appended (a plain append
     would count the bucket twice). Committed bucket 0 is not touched."""
     cat, ms, _ = icat
-    log = _log_commits(cat, ms, monkeypatch, existing=("docs", "postings", "stats"))
+    log = _log_commits(cat, ms, monkeypatch, existing=("docs", "postings"))
     _mock_build(icat, monkeypatch, done_buckets=[0])
 
     metrics = index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=2, resume=True)
@@ -225,9 +222,7 @@ def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkey
     assert _commits(log) == [
         ("sql", "DELETE FROM docs WHERE bucket = 1"),
         ("sql", "DELETE FROM postings WHERE bucket = 1"),
-        ("sql", "DELETE FROM stats WHERE bucket = 1"),
-        ("append", "postings"),
-        {"stats", "docs"},
+        {"postings", "docs"},
         ("commit", "manifest"),
     ]
     assert cat.snapshot().stage is None  # the completing commit retired it
@@ -235,7 +230,7 @@ def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkey
 
 def test_fresh_build_iceberg_issues_no_delete(icat, monkeypatch):
     """A fresh build drops every index table first, so the bucket commit
-    finds no postings/stats table and issues no DELETE."""
+    finds no docs/postings table and issues no DELETE."""
     cat, ms, _ = icat
     log = _log_commits(cat, ms, monkeypatch, existing=())
     _mock_build(icat, monkeypatch, done_buckets=[])
@@ -245,8 +240,7 @@ def test_fresh_build_iceberg_issues_no_delete(icat, monkeypatch):
     assert "DROP TABLE IF EXISTS postings" in [q for kind, q in log if kind == "sql"]
     assert _commits(log) == [
         ("commit", "manifest"),  # stage + global stats
-        ("append", "postings"),
-        {"stats", "docs"},
+        {"postings", "docs"},
         ("commit", "manifest"),  # the bucket
     ]
 
@@ -284,12 +278,12 @@ def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
 
     monkeypatch.setattr(cat, "append", recording_append)
     monkeypatch.setattr(cat, "write_version", lambda df, name, version, mode="append": recording_append(df, name))
-    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys=None: None)
+    monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys: None)
     _mock_build(icat, monkeypatch, done_buckets=[])
 
     index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=2, bucket_concurrency=2)
 
-    tables = ["docs", "postings", "stats"]
+    tables = ["docs", "postings"]
     assert sorted(n for kind, n in log if kind == "create") == tables
     assert sorted(n for kind, n in log if kind == "append") == tables
     for t in tables:
@@ -305,7 +299,7 @@ def test_write_bucket_iceberg_appends_both_tables(icat, monkeypatch):
     _log_commits(cat, ms, monkeypatch)
 
     blocks = MagicMock(name="blocks")
-    index_build.write_bucket(cat, blocks, MagicMock(name="bucket_docs"), 2, "v1")
+    index_build.write_bucket(cat, blocks, MagicMock(name="bucket_docs"), 2, "v1", n_keys=5)
 
     persisted = blocks.withColumn.return_value.localCheckpoint.return_value
     # postings: tp-clustered (r6) + sorted frame + bucket and v columns ->
@@ -316,4 +310,4 @@ def test_write_bucket_iceberg_appends_both_tables(icat, monkeypatch):
     persisted.repartition.assert_called_once_with(16, "tp")  # tp_n default
     out.writeTo.assert_called_once_with("postings")
     out.writeTo.return_value.append.assert_called_once_with()
-    persisted.unpersist.assert_called_once()
+    blocks.withColumn.return_value.localCheckpoint.assert_called_once_with()

@@ -119,16 +119,42 @@ def test_resume_noop_when_complete(spark, pages_df, tmp_path_factory):
     pd.testing.assert_frame_equal(_postings_key(cat), before)
 
 
-def test_exists_sees_partitioned_tables(spark, pages_df, tmp_path_factory):
+def test_exists_sees_partitioned_tables(spark, tmp_path_factory):
     """Every index table keeps its files in bucket=N/v=<version> subdirs,
     and exists() reads the manifest's table map, so it finds all of them
-    (ADVICE r1 medium finding: a miss silently re-runs every resume path)."""
+    (ADVICE r1 medium finding: a miss silently re-runs every resume path).
+    There is no ``stats`` table (a term's df is summed from the postings):
+    a finished build, append, delete or compaction leaves no ``stats``
+    directory and no ``stats`` entry in the manifest's table map, while the
+    manifest keeps its global ``stats``."""
+    from information_retrieval_images_spark import INDEX_FORMAT
+    from information_retrieval_images_spark.operators.incremental import append_bucket
+    from information_retrieval_images_spark.operators.maintenance import compact_buckets, delete_docs
+
+    tables = ("docs", "postings", "doclens", "blooms")
+    pages = fixtures.make_pages_pandas(N_DOCS)
+    built, appended = pages.iloc[:150], pages.iloc[150:]
     cat = Catalog(spark, str(tmp_path_factory.mktemp("exists")))
-    build_index(spark, pages_df, cat, n_buckets=2)
-    for t in ("docs", "postings", "stats", "doclens", "blooms"):
-        assert cat.exists(t), t
-        assert set(cat.version_dirs(t)) == {0, 1}, t
-    assert not cat.exists("nope")
+
+    def assert_four_tables(buckets):
+        for t in tables:
+            assert cat.exists(t), t
+            assert set(cat.version_dirs(t)) == buckets, t
+        assert not cat.exists("nope")
+        assert not os.path.exists(cat.path("stats"))
+        m = cat.snapshot().manifest
+        assert set(m["tables"]) == set(tables), m["tables"]
+        assert m["stats"]["format"] == INDEX_FORMAT
+
+    build_index(spark, spark.createDataFrame(built), cat, n_buckets=2)
+    assert_four_tables({0, 1})
+    assert append_bucket(spark, spark.createDataFrame(appended), cat, bucket=10)["n_new"] > 0
+    assert_four_tables({0, 1, 10})
+    victim = built.loc[built["lang"] == "en", "url"].iloc[0]
+    assert delete_docs(spark, cat, [victim])["n_deleted"] == 1
+    assert_four_tables({0, 1, 10})
+    compact_buckets(spark, cat, [10], target_bucket=20)
+    assert_four_tables({0, 1, 20})
 
 
 def _docs_file_state(cat: Catalog) -> dict:
@@ -153,10 +179,10 @@ def test_old_format_warehouse_gets_clear_error(spark, pages_df, tmp_path_factory
     latest = os.path.join(cat.path("_manifest"), f"{cat.index_version()}.json")
     with open(latest) as f:
         m = json.load(f)
-    m["stats"]["format"] = 6
+    m["stats"]["format"] = 7
     with open(latest, "w") as f:
         json.dump(m, f)
-    with pytest.raises(RuntimeError, match="format 6 .*rebuild"):
+    with pytest.raises(RuntimeError, match="format 7 .*rebuild"):
         Catalog(spark, cat.root).global_doc_stats()
     shutil.rmtree(cat.path("_manifest"))
     with pytest.raises(RuntimeError, match="no manifest.*rebuild"):
