@@ -171,10 +171,10 @@ def main() -> None:
             total += sum(os.path.getsize(os.path.join(dirpath, f)) for f in files)
         return total
 
-    # format v4 storage split: postings no longer carry per-posting dls; the
-    # dl sidecar is ~O(docs) vs the old O(postings) in-block copies
+    # storage split: postings carry no per-posting dls (a doc's dl is stored
+    # once, in its docs row)
     extras["index_bytes"] = {
-        t: _dir_bytes(os.path.join(wh, t)) for t in ("postings", "doclens", "blooms")
+        t: _dir_bytes(os.path.join(wh, t)) for t in ("postings", "blooms")
     }
 
     # --- query latency + headline gates: interleaved best-of-N ----------------

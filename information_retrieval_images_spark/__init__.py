@@ -54,4 +54,7 @@ BLOCK_SIZE = 128
 #      bound (queries bound blocks by (max_tf, min_dl))
 #   8  no per-bucket stats table: a term's df is the sum of n_docs over its
 #      postings blocks, summed at query time (Catalog.term_dfs)
-INDEX_FORMAT = 8
+#   9  one per-document table: every docs file is sorted by doc_id and the
+#      query kernels read dl from it (the doclens sidecar is gone); docs is
+#      a manifest-pinned parquet version in both catalog modes
+INDEX_FORMAT = 9

@@ -25,8 +25,10 @@ Design:
   nparts of them (at a 10^9-doc bucket m/8 ~ 1.25 GB per partial — a
   driver-side collect would hold nparts x 1.25 GB).
 - storage: one parquet row (m, k, bits) under ``blooms/bucket=B/v=<version>`` — plain
-  parquet in BOTH catalog modes, like the doclens sidecar: it is a driver
-  point-lookup table, not a Catalyst scan input.
+  parquet in BOTH catalog modes, like ``docs``: it is a driver point-lookup
+  table, not a Catalyst scan input. Written without column statistics: a
+  binary value's min/max would store the bitmap twice more (page header and
+  footer), and no reader prunes on them.
 
 Reference analogue: the reference prunes its delete path with a SQLite
 primary-key lookup (``db.py:393-397``); a bloom-per-commit-unit is the
@@ -161,7 +163,7 @@ def write_bucket_bloom(catalog, bucket_docs: DataFrame, bucket: int, version: st
             "bits": pa.array([bits], type=pa.binary()),
         }
     )
-    pq.write_table(tbl, os.path.join(d, BLOOM_FILE))
+    pq.write_table(tbl, os.path.join(d, BLOOM_FILE), write_statistics=False)
     if trace:
         print(
             f"IR_TRACE     bloom{bucket}.build: {t1 - t0:.1f}s write: {time.time() - t1:.1f}s",
@@ -175,8 +177,8 @@ def load_blooms(catalog) -> dict[int, tuple[int, bytes]]:
     treat them as might-contain.
 
     Driver-side pyarrow reads of the snapshot's explicit bloom files (the
-    rows are driver point-lookup data, not a Catalyst input, same as the
-    doclens sidecar) — zero Spark jobs, no directory listing."""
+    rows are driver point-lookup data, not a Catalyst input) — zero Spark
+    jobs, no directory listing."""
     import pyarrow.parquet as pq
 
     out = {}

@@ -11,8 +11,8 @@ Every write (a build bucket, append, delete, compaction) writes NEW version
 directories and never changes an existing file. It then publishes manifest
 ``seq + 1``: a temp file hard-linked to its final name with ``os.link``,
 which fails if another writer already took that sequence number. A manifest
-holds the live bucket -> version map of ``docs``, ``postings``, ``doclens``
-and ``blooms``, the global statistics (n_docs, sum_dl, avgdl,
+holds the live bucket -> version map of ``docs``, ``postings`` and
+``blooms``, the global statistics (n_docs, sum_dl, avgdl,
 max_doc_id, p_logical, tp_n, format), the version of an unfinished build's
 stage and the commit's lineage record. This is Iceberg's model
 (https://iceberg.apache.org/spec/): write new files, then swap the metadata
@@ -35,11 +35,12 @@ behind by a crashed append once the grace period has passed.
 A term's document frequency is not stored apart from the postings: it is
 the sum of ``n_docs`` over the term's blocks (term_dfs).
 
-On Iceberg, ``docs`` and ``postings`` are Iceberg tables; the
-manifest still carries the metadata and the two plain-parquet sidecars
-(``doclens``, ``blooms``), and the stage is plain parquet too. Without the
-Iceberg runtime jar every table is sorted parquet (row-group min/max stats
-give the scan-time pruning).
+On Iceberg, only ``postings`` is an Iceberg table; the manifest still
+carries the metadata and the plain-parquet versions of ``docs`` (the one
+per-document table: doc_id, url, dl, every file sorted by doc_id) and
+``blooms``, and the stage is plain parquet too. Without the Iceberg
+runtime jar every table is sorted parquet (row-group min/max stats give
+the scan-time pruning).
 
 All writers take sorted DataFrames and never repartition — layout decisions
 belong to the build job, not the sink.
@@ -60,9 +61,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # the tables of one bucket version, all under one version id
-INDEX_TABLES = ("docs", "postings", "doclens", "blooms")
+INDEX_TABLES = ("docs", "postings", "blooms")
 # tables that are Iceberg tables when the runtime is available
-ICEBERG_TABLES = ("docs", "postings")
+ICEBERG_TABLES = ("postings",)
 MANIFEST_DIR = "_manifest"
 STAGE_DIR = "_stage"
 # Retired versions and superseded manifests are kept this long, so a reader
@@ -294,7 +295,7 @@ class Catalog:
 
     def _is_dir_table(self, name: str) -> bool:
         """True when the table's bucket versions are directories (every
-        table on parquet; only the sidecars on Iceberg)."""
+        table on parquet; all but the postings on Iceberg)."""
         return not (self.use_iceberg and name in ICEBERG_TABLES)
 
     def _vacuum(self, snap: Snapshot, expired: list, touched: list, cutoff: float) -> None:
@@ -417,56 +418,28 @@ class Catalog:
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-        """Iceberg table write: ``overwrite`` creates or replaces the table,
-        ``append`` appends (creating the table on first use)."""
+    def append(self, df: DataFrame, name: str) -> None:
+        """Iceberg table append, creating the table on first use."""
         writer = df.writeTo(f"{name}")
-        if partition_by:
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        if mode == "overwrite":
-            writer.createOrReplace()
-            return
         with self._create_lock:
             if not self.exists(name):
                 writer.create()
                 return
         writer.append()
 
-    def append(self, df: DataFrame, name: str) -> None:
-        self.write(df, name, mode="append")
-
-    def write_version(self, df: DataFrame, name: str, version: str, mode: str = "append") -> None:
-        """Write ``df`` (with a ``bucket`` column) as version ``version`` of
-        every bucket it holds: ``<name>/bucket=B/v=<version>`` on parquet,
-        a table write (``mode``) on Iceberg. Uncommitted until the caller
-        publishes the version in a manifest."""
-        if self.use_iceberg:
-            self.write(df, name, mode=mode, partition_by=["bucket"])
-        else:
-            df.withColumn("v", F.lit(version)).write.mode("append").partitionBy("bucket", "v").parquet(self.path(name))
-
-    def read_versions(self, name: str, versions: dict[int, str]) -> DataFrame | None:
-        """The given bucket versions of a table as one DataFrame (``bucket``,
-        ``v`` and any ``tp`` come from the directory names), or None when
-        none of them holds data. Iceberg tables read whole."""
-        if not self._is_dir_table(name):
-            return self.spark.table(name)
-        dirs = [p for b, v in sorted(versions.items()) if os.path.isdir(p := self.version_path(name, b, v))]
-        if not dirs:
-            return None
-        return self.spark.read.option("basePath", self.path(name)).parquet(*dirs)
-
     def read(self, name: str) -> DataFrame:
-        """The table as of the snapshot: its explicit live directory list."""
+        """The table as of the snapshot: its explicit live directory list
+        (``bucket``, ``v`` and any ``tp`` come from the directory names).
+        Iceberg tables read whole."""
         if not self._is_dir_table(name):
             return self.spark.table(name)
         snap = self.snapshot()
         df = snap.dfs.get(name)
         if df is None:
-            df = self.read_versions(name, snap.tables[name])
-            if df is None:
+            dirs = [d for _, d in sorted(self.version_dirs(name).items()) if os.path.isdir(d)]
+            if not dirs:
                 raise RuntimeError(f"table {name!r} has no committed data in {self.root}")
-            snap.dfs[name] = df
+            df = snap.dfs[name] = self.spark.read.option("basePath", self.path(name)).parquet(*dirs)
         return df
 
     def stage_path(self, version: str) -> str:

@@ -93,27 +93,3 @@ def segmented_gap_cumsum(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
     np.cumsum(counts[:-1], out=starts[1:])
     base = np.where(starts > 0, c[starts - 1], 0)
     return c - np.repeat(base, counts)
-
-
-def encode_doc_gaps(doc_ids: np.ndarray) -> bytes:
-    """Strictly-increasing doc ids -> delta-gap varint payload."""
-    d = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    gaps = np.empty_like(d)
-    gaps[0:1] = d[0:1]
-    np.subtract(d[1:], d[:-1], out=gaps[1:])
-    if gaps.size and gaps[1:].size and (gaps[1:] <= 0).any():
-        raise ValueError("doc_ids must be strictly increasing within a block")
-    return varint_encode(gaps.astype(np.uint64))
-
-
-def decode_doc_gaps(buf: bytes) -> np.ndarray:
-    gaps = varint_decode(buf).astype(np.int64)
-    return np.cumsum(gaps)
-
-
-def encode_tfs(tfs: np.ndarray) -> bytes:
-    return varint_encode(np.ascontiguousarray(tfs, dtype=np.uint64))
-
-
-def decode_tfs(buf: bytes) -> np.ndarray:
-    return varint_decode(buf).astype(np.int32)

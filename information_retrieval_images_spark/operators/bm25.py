@@ -27,15 +27,17 @@ doc-groups across executors so a head-term query does not serialize on one
 task, and bounds the driver path's memory. The driver path lists each
 version directory once per snapshot (Catalog.version_files), so a warm
 query makes no directory listing. The driver's url read prunes to
-the top-k docs' buckets, but every ``docs`` file spans nearly the whole
-doc_id range, so its doc_id row-group pruning still opens about one row
-group per file. A query pins one catalog snapshot (catalog.py), so a
-concurrent commit never changes its inputs.
+the top-k docs' buckets; every ``docs`` file is sorted by doc_id but still
+spans nearly the whole doc_id range of its bucket, so its doc_id row-group
+pruning still opens about one row group per file. A query pins one catalog
+snapshot (catalog.py), so a concurrent commit never changes its inputs.
 """
 
 from __future__ import annotations
 
+import functools
 import heapq
+import operator
 import os
 import threading
 from collections import Counter
@@ -49,45 +51,44 @@ from pyspark.sql import functions as F
 
 from .. import K1, B
 from ..catalog import Catalog
-from ..codec import concat_varint_decode, segmented_gap_cumsum, varint_decode
+from ..codec import concat_varint_decode, segmented_gap_cumsum
 from ..textproc import bm25_idf, bm25_tf_norm, tokenize_series
 from .index_build import DOC_GROUP_BITS, term_prefix
 
 RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 
 
-# Process-wide cache of DECODED doclens sidecar groups (guide §4.5:
-# heavyweight per-task state amortized across tasks via worker reuse). Every
-# decode kernel batch used to re-read + re-varint-decode its (bucket, group)
-# sidecar rows — for a 50-query batch the same few dozen groups were decoded
-# hundreds of times per run. Keyed by the bucket's version directory: a
-# version is immutable (catalog.py), so an entry can never go stale; a
-# rewritten bucket is a new directory and its old entry ages out of the LRU.
-# Driver-side queries share it across request threads, so one lock guards
-# lookup, fill and eviction; the sidecar read and decode run outside it.
+# Process-wide cache of per-doc-group (doc_ids, dls) arrays read from the
+# ``docs`` table (guide §4.5: heavyweight per-task state amortized across
+# tasks via worker reuse): for a 50-query batch the same few dozen groups
+# would otherwise be read hundreds of times per run. Keyed by the bucket's
+# docs version directory: a version is immutable (catalog.py), so an entry
+# can never go stale; a rewritten bucket is a new directory and its old
+# entry ages out of the LRU. Driver-side queries share it across request
+# threads, so one lock guards lookup, fill and eviction; the parquet read
+# runs outside it.
 _DL_CACHE: dict[str, dict[int, tuple[np.ndarray, np.ndarray]]] = {}
 _DL_CACHE_BYTES = [0]
-_DL_CACHE_MAX_BYTES = 256 << 20  # decoded sidecars are ~16 B/doc; LRU-bounded
+_DL_CACHE_MAX_BYTES = 256 << 20  # the arrays are 16 B/doc; LRU-bounded
 _DL_LOCK = threading.Lock()
 
 
-def _load_group_doclens(
+def _load_group_dls(
     dirs: dict[int, str], pairs: set[tuple[int, int]]
 ) -> dict[int, tuple[np.ndarray, np.ndarray]]:
     """doc_group -> (sorted doc_ids, dls) for the requested (bucket, group)
     pairs, merged across buckets (consecutive doc ids round-robin over
-    buckets, so one group's docs span several buckets' sidecar rows).
-    ``dirs`` maps each bucket to its doclens version directory.
+    buckets, so one group's docs span several buckets). ``dirs`` maps each
+    bucket to its docs version directory.
 
-    pyarrow point read (in an executor or the driver) of the ``doclens``
-    sidecar (format v4: blocks no longer repeat dl per posting —
-    index_build.DOCLENS_SCHEMA). Discovery is scoped to the CANDIDATE
-    buckets' version directories (VERDICT r4 what's-wrong #2): a dataset
-    over the doclens root would list every bucket directory before pruning
-    — O(buckets) metadata RPCs per query on object storage at 10^4-10^5
-    buckets. Each candidate directory becomes its own tiny dataset, so the
-    sidecar IO is O(its buckets); parquet row-group min/max pruning on the
-    doc_group sort column then skips to the requested groups. Decoded
+    A pyarrow point read (in an executor or the driver) of ``(doc_id, dl)``
+    from ``docs``, with one pushed doc_id range per requested group: every
+    docs file is sorted by doc_id, so parquet row-group min/max pruning
+    skips to the groups' rows. Discovery is scoped to the CANDIDATE
+    buckets' version directories: a dataset over the docs root would list
+    every bucket directory before pruning — O(buckets) metadata RPCs per
+    query on object storage at 10^4-10^5 buckets. Each candidate directory
+    becomes its own tiny dataset, so the IO is O(its buckets). The
     (bucket, group) arrays are memoized per process in _DL_CACHE.
     """
     by_bucket: dict[int, set[int]] = {}
@@ -101,21 +102,19 @@ def _load_group_doclens(
             got = {g: cached[g] for g in by_bucket[b] if g in cached}
         missing = sorted(g for g in by_bucket[b] if g not in got)
         if missing:
-            dataset = ds.dataset(key, format="parquet")
-            tbl = dataset.to_table(
-                columns=["doc_group", "ids_enc", "dls_enc"],
-                filter=ds.field("doc_group").isin(missing),
+            doc_id = ds.field("doc_id")
+            ranges = [(doc_id >= (g << DOC_GROUP_BITS)) & (doc_id < ((g + 1) << DOC_GROUP_BITS)) for g in missing]
+            tbl = ds.dataset(key, format="parquet").to_table(
+                columns=["doc_id", "dl"], filter=functools.reduce(operator.or_, ranges)
             )
-            for g, ie, de in zip(
-                tbl["doc_group"].to_pylist(),
-                tbl["ids_enc"].to_pylist(),
-                tbl["dls_enc"].to_pylist(),
-            ):
-                ids = np.cumsum(varint_decode(ie).astype(np.int64))
-                dls = varint_decode(de).astype(np.int64)
-                got[int(g)] = (ids, dls)
-            for g in missing:  # groups with no sidecar row: pin the miss
-                got.setdefault(g, (np.empty(0, np.int64), np.empty(0, np.int64)))
+            ids = tbl["doc_id"].to_numpy().astype(np.int64)
+            dls = tbl["dl"].to_numpy().astype(np.int64)
+            order = np.argsort(ids, kind="stable")  # files are sorted, not merged
+            ids, dls = ids[order], dls[order]
+            cuts = np.searchsorted(ids, [g << DOC_GROUP_BITS for g in missing] + [(missing[-1] + 1) << DOC_GROUP_BITS])
+            for g, s, e in zip(missing, cuts[:-1], cuts[1:]):
+                # a group with no row gets empty arrays: the miss is pinned
+                got[g] = (ids[s:e], dls[s:e])
             with _DL_LOCK:  # last in LRU order, so never evicted below
                 cached = _DL_CACHE[key] = _DL_CACHE.pop(key, None) or {}
                 for g in missing:
@@ -142,10 +141,10 @@ def _load_group_doclens(
 
 
 def _group_dls(ids_g: np.ndarray, dls_g: np.ndarray, doc_ids: np.ndarray) -> np.ndarray:
-    """dl per posting doc_id from sorted sidecar arrays (one doc-group's, or
+    """dl per posting doc_id from sorted docs arrays (one doc-group's, or
     several groups' concatenated in order), with a drift check (ADVICE r4
-    #3): searchsorted assumes every posting doc_id exists in the sidecar — a
-    partial/corrupt sidecar would otherwise silently score with a
+    #3): searchsorted assumes every posting doc_id has a docs row — a
+    partial/corrupt docs version would otherwise silently score with a
     NEIGHBOR's doc length (or IndexError only at the array end). The
     membership test is one vectorized compare over ids the kernel already
     decoded; failure is a loud index-inconsistency error, never a wrong
@@ -155,9 +154,9 @@ def _group_dls(ids_g: np.ndarray, dls_g: np.ndarray, doc_ids: np.ndarray) -> np.
     if ids_g.size == 0 or not (ids_g[pos] == doc_ids).all():
         missing = doc_ids if ids_g.size == 0 else doc_ids[ids_g[pos] != doc_ids]
         raise RuntimeError(
-            f"doclens sidecar inconsistency: doc_group {int(missing[0]) >> DOC_GROUP_BITS} "
-            f"postings contain doc ids absent from the sidecar (e.g. {missing[:3].tolist()}) — "
-            "postings and doclens were written by different commits; re-encode "
+            f"docs/postings inconsistency: doc_group {int(missing[0]) >> DOC_GROUP_BITS} "
+            f"postings contain doc ids absent from docs (e.g. {missing[:3].tolist()}) — "
+            "postings and docs were written by different commits; re-encode "
             "the affected bucket (operators.index_build.encode_bucket_postings)"
         )
     return dls_g[pos].astype(np.float64)
@@ -368,7 +367,7 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per
     if 0 < n_groups < int(spark.conf.get("spark.sql.shuffle.partitions")):
         blocks = blocks.repartition(n_groups, "query_id", "task")
 
-    dl_root = catalog.path("doclens")
+    dl_root = catalog.path("docs")
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return _wand_task_kernel(pdf, avgdl, dl_root)
@@ -415,8 +414,8 @@ def _wand_driver_topk(
     pyarrow reads the pinned snapshot's postings, only the query's tp=T
     directories (file lists memoized per snapshot:
     Catalog.version_files), filtered on the term IN-list (row-group min/max on the
-    sorted term column); the shared WAND kernel scores them, doclens read
-    and drift check included, with the same floats as the Spark plan and
+    sorted term column); the shared WAND kernel scores them, dl read and
+    drift check included, with the same floats as the Spark plan and
     the oracle. With ``urls``, adds a ``url`` column (:func:`_driver_urls`).
     """
     query_id, _, k = qrow
@@ -440,7 +439,7 @@ def _wand_driver_topk(
     pdf["ub"] = _block_ub(pdf["max_tf"], pdf["min_dl"], pdf["idf"], pdf["qtf"], avgdl)
     pdf["query_id"] = np.int32(query_id)
     pdf["k"] = np.int32(k)
-    top = _wand_task_kernel(pdf, avgdl, catalog.path("doclens"))
+    top = _wand_task_kernel(pdf, avgdl, catalog.path("docs"))
     if urls:
         top["url"] = _driver_urls(catalog, top["doc_id"].to_numpy(), pdf)
     return top
@@ -487,14 +486,14 @@ def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataF
         # per-group upper bound = sum over terms of the max block ub in group
         gdf = pd.DataFrame({"g": groups, "term": pdf["term"].values, "ub": pdf["ub"].values})
         g_ub = gdf.groupby(["g", "term"])["ub"].max().groupby(level=0).sum()
-        # dl sidecar for every (bucket, group) this task may decode — ONE
-        # pyarrow point read up front (pruned to the task's doc-groups);
+        # dl for every (bucket, group) this task may decode — ONE pyarrow
+        # point read of docs up front (pruned to the task's doc-groups);
         # loading lazily per visited group would be one IO per group
         buckets = pdf["bucket"].values.astype(int).tolist()
         pairs = set(zip(buckets, groups.tolist()))
-        # a bucket's postings and doclens share one version id (write_bucket)
+        # a bucket's postings and docs share one version id (write_bucket)
         dirs = {b: os.path.join(dl_root, f"bucket={b}", f"v={v}") for b, v in zip(buckets, pdf["v"].values)}
-        dl_map = _load_group_doclens(dirs, pairs)
+        dl_map = _load_group_dls(dirs, pairs)
         # visit groups in descending upper bound: threshold grows fastest
         heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of size k
 

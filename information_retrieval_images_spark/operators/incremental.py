@@ -70,10 +70,6 @@ def append_bucket(
                 f"bucket {bucket} already committed; append requires a fresh "
                 "bucket id — rebuild or delete first"
             )
-        if catalog.use_iceberg:
-            # docs rows land in the Iceberg table before the manifest commit:
-            # rows of this uncommitted bucket are a crashed attempt's
-            spark.sql(f"DELETE FROM docs WHERE bucket = {int(bucket)}")
         if lang is not None:
             new_pages = new_pages.where(F.col("lang") == lang)
         novel = new_pages.select("url", "html").join(catalog.read("docs").select("url"), "url", "left_anti")

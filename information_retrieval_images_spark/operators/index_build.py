@@ -32,10 +32,11 @@ Pipeline (SURVEY.md §3.3 target lifecycle):
          -> mapInPandas block encoder (delta-gap+varint, <=BLOCK_SIZE docs per
             block, blocks never cross fixed doc-range boundaries so query-time
             doc-group scoring is exact; per-block (max_tf, min_dl) = WAND bound)
-         -> docs (doc_id, url, dl — no text), postings, doclens and blooms
-            as one new bucket version, four independent writes published by
-            one manifest commit (catalog.py); a term's df is the sum of
-            n_docs over its blocks, so no separate df table is written
+         -> docs (doc_id, url, dl — no text — sorted by doc_id), postings
+            and blooms as one new bucket version, three independent writes
+            published by one manifest commit (catalog.py); a term's df is
+            the sum of n_docs over its blocks, so no separate df table is
+            written
     -> global (N, sum dl, avgdl) from the stage, committed with it
 
 The postings are the index's only copy of document content: nothing a query
@@ -72,6 +73,11 @@ DOC_GROUP_BITS = 14
 # docs holds no text: the postings are the only stored copy of document
 # content. The extracted text lives only in the build-only stage
 # (STAGE_SCHEMA, stage_docs) between extraction and the bucket encodes.
+# docs is the index's one per-document table: every file of a bucket version
+# is sorted by doc_id, so the query kernels read a doc-group's dl with one
+# pushed doc_id range (operators.bm25._load_group_dls). It is plain parquet
+# under docs/bucket=B/v=<version> in BOTH catalog modes, published by the
+# manifest like blooms.
 DOCS_SCHEMA = "doc_id long, url string, dl int, bucket int"
 STAGE_SCHEMA = "doc_id long, url string, dl int, text string, bucket int"
 RUNS_SCHEMA = "term string, doc_id long, tf int, dl int"
@@ -82,24 +88,15 @@ RUNS_SCHEMA = "term string, doc_id long, tf int, dl int"
 # appends shift collection statistics (operators.incremental), and a block
 # depends only on its postings, never on the collection statistics.
 #
-# Format v4: blocks carry NO per-posting doc lengths. A doc's dl used to be
-# repeated in every term's block that contains the doc (~hundreds of copies
-# for a typical web page — measured ~45% of total posting payload bytes);
-# it now lives ONCE per (bucket, doc_group) in the ``doclens`` sidecar
-# (DOCLENS_SCHEMA below), loaded by the decode kernels per doc-group.
+# Blocks carry NO per-posting doc lengths: a doc's dl would be repeated in
+# every term's block that contains the doc (~hundreds of copies for a
+# typical web page — measured ~45% of total posting payload bytes). It
+# lives ONCE, in the doc's docs row, read by the decode kernels per
+# doc-group.
 POSTINGS_SCHEMA = (
     "term string, first_doc long, last_doc long, n_docs int, "
     "max_tf int, min_dl int, docs_enc binary, tfs_enc binary"
 )
-# dl sidecar: one row per (bucket, doc_group) — ids_enc is the group's sorted
-# doc ids as delta-gap varints (first gap absolute), dls_enc their doc
-# lengths as varints, positionally aligned. Written with every bucket version
-# (build/append/delete/compact). Stored as plain sorted parquet under
-# <root>/doclens/bucket=B/v=<version> even when the index tables are
-# Iceberg: the decode kernels read it executor-side via pyarrow with
-# (bucket, doc_group) pushdown — a point-lookup side table, not a scan input
-# Catalyst ever plans over.
-DOCLENS_SCHEMA = "doc_group long, ids_enc binary, dls_enc binary"
 # The manifest's global statistics (Catalog.commit adds ``format``). sum_dl
 # and max_doc_id make every maintenance op O(touched buckets): append/delete
 # update (N, sum dl) by bucket-scoped deltas instead of re-aggregating the
@@ -321,19 +318,19 @@ def decoded_runs(catalog: Catalog, postings: DataFrame, drop_ids=()) -> DataFram
 
     One vectorized pass per Arrow batch: every block's gaps and tfs decode
     as one varint stream (codec.concat_varint_decode) and doc ids come back
-    by segmented_gap_cumsum. dl comes from the doclens sidecar of each
-    row's own bucket version (rows carry ``bucket`` and ``v``), read with
-    the query kernels' point reader and its drift check. A doc's postings
+    by segmented_gap_cumsum. dl comes from the docs version of each row's
+    own bucket version (rows carry ``bucket`` and ``v``), read with the
+    query kernels' point reader and its drift check. A doc's postings
     keep their (term, doc_id, tf, dl), so re-encoding the runs gives
     exactly the blocks a fresh encode of the surviving documents gives.
     """
-    dl_root = catalog.path("doclens")
+    dl_root = catalog.path("docs")
     drop = np.unique(np.asarray(list(drop_ids), dtype=np.int64))
     src = postings.select("term", "n_docs", "docs_enc", "tfs_enc", "bucket", "v")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..codec import concat_varint_decode, segmented_gap_cumsum
-        from .bm25 import _group_dls, _load_group_doclens
+        from .bm25 import _group_dls, _load_group_dls
 
         for pdf in batches:
             counts = pdf["n_docs"].to_numpy(np.int64)
@@ -347,9 +344,9 @@ def decoded_runs(catalog: Catalog, postings: DataFrame, drop_ids=()) -> DataFram
                 continue
             dirs = {int(b): os.path.join(dl_root, f"bucket={b}", f"v={v}") for b, v in zip(pdf["bucket"], pdf["v"])}
             pairs = np.unique(np.stack([bucket, d >> DOC_GROUP_BITS], axis=1), axis=0)
-            # groups are disjoint id ranges: in group order the sidecar ids
-            # are one sorted array
-            groups = sorted(_load_group_doclens(dirs, set(map(tuple, pairs.tolist()))).items())
+            # groups are disjoint id ranges: in group order their ids are
+            # one sorted array
+            groups = sorted(_load_group_dls(dirs, set(map(tuple, pairs.tolist()))).items())
             none = np.empty(0, np.int64)
             ids = np.concatenate([none] + [i for _, (i, _) in groups])
             dls = np.concatenate([none] + [dl for _, (_, dl) in groups])
@@ -471,7 +468,7 @@ def build_index(
 
     Resumability contract (north rule): the stage (extracted, numbered
     rows) and the global stats commit first, then each bucket pipeline
-    commits its own manifest entry — its four tables under one version id.
+    commits its own manifest entry — its three tables under one version id.
     On resume, buckets whose postings the manifest lists are skipped
     (left-anti semantics) and the rest are rebuilt from the stage the
     manifest records; a killed bucket's uncommitted files are invisible.
@@ -607,7 +604,7 @@ def build_index(
         t0 = time.time()
         nd, toks = per_bucket[b]
         # a killed earlier run of this bucket left only unreferenced files
-        # (parquet) or rows write_bucket DELETEs first (Iceberg). tp_n is the
+        # (and, on Iceberg, postings rows write_bucket DELETEs first). tp_n is the
         # local pinned value, threaded explicitly like every other reader.
         version = catalog.new_version()
         rows = stage.where(F.col("bucket") == b)
@@ -676,8 +673,8 @@ def _write_postings_rows(catalog: Catalog, blocks: DataFrame, bucket: int, versi
     # per-file (term, first_doc) sort keeps row-group min/max pruning.
     out = blocks.repartition(int(tp_n), "tp").sortWithinPartitions("tp", "term", "first_doc")
     # every postings row carries its bucket version (on parquet from the
-    # v=<version> directory): the query kernels find the bucket's doclens
-    # sidecar, written under the same version, without a manifest lookup
+    # v=<version> directory): the query kernels find the bucket's docs
+    # version, written under the same version id, without a manifest lookup
     if catalog.use_iceberg:
         catalog.append(out.withColumns({"bucket": F.lit(bucket), "v": F.lit(version)}), "postings")
     else:
@@ -694,7 +691,6 @@ def encode_bucket_postings(
     *,
     version: str,
     n_keys: int,
-    write_docs: bool = True,
 ) -> None:
     """Build version ``version`` of one bucket from its posting ``runs``
     (term, doc_id, tf, dl) and its rows of ``docs`` (doc_id, url, dl,
@@ -702,9 +698,8 @@ def encode_bucket_postings(
     compaction share. Build and append pass SPIMI runs over the stage's
     text (posting_runs), delete and compaction decoded postings
     (decoded_runs); either way the blocks depend only on the set of
-    postings. ``n_keys`` (the bucket's doc count) sizes the url bloom;
-    ``write_docs`` False leaves the docs version to the caller. The caller
-    commits the version."""
+    postings. ``n_keys`` (the bucket's doc count) sizes the url bloom. The
+    caller commits the version."""
     runs = runs.withColumn("doc_group", F.shiftright(F.col("doc_id"), DOC_GROUP_BITS))
     # HASH repartition on (term, doc_group): same co-location and head-term
     # splitting as a range shuffle, but fully deterministic with NO
@@ -717,7 +712,7 @@ def encode_bucket_postings(
     )
     blocks = encode_blocks(sorted_runs)
     bucket_docs = docs.where(F.col("bucket") == bucket)
-    write_bucket(catalog, blocks, bucket_docs, bucket, version, n_keys=n_keys, tp_n=tp_n, write_docs=write_docs)
+    write_bucket(catalog, blocks, bucket_docs, bucket, version, n_keys=n_keys, tp_n=tp_n)
 
 
 def write_bucket(
@@ -728,13 +723,11 @@ def write_bucket(
     version: str,
     n_keys: int,
     tp_n: int = TERM_PREFIX_PARTITIONS,
-    write_docs: bool = True,
 ) -> None:
     """Write version ``version`` of one bucket as independent writes: the
-    postings (from ``blocks``), and from ``bucket_docs`` the text-free docs
-    rows (unless ``write_docs`` is False), the doclens array and the url
-    bloom (sized by ``n_keys``, the bucket's doc count). No write reads
-    another's output, so all of them are submitted CONCURRENTLY from
+    postings (from ``blocks``), and from ``bucket_docs`` the docs rows and
+    the url bloom (sized by ``n_keys``, the bucket's doc count). No write
+    reads another's output, so all of them are submitted CONCURRENTLY from
     driver threads: Spark's scheduler accepts jobs from multiple driver
     threads, and overlapping the small jobs with the postings job shortens
     every bucket commit's serial tail (there is one commit per bucket: at
@@ -744,11 +737,11 @@ def write_bucket(
     after all of them finish (no partially-awaited commit). Nothing is
     visible until the caller commits the version.
 
-    On Iceberg the docs and postings writes are table appends, so the
-    bucket's existing rows are DELETEd first; otherwise a bucket whose rows
+    On Iceberg the postings write is a table append, so the bucket's
+    existing postings rows are DELETEd first; otherwise a bucket whose rows
     landed before a crash (and before its manifest commit) would be
-    appended twice on resume, doubling its df and BM25 contributions.
-    Tables that do not exist yet (a fresh build drops them) get no DELETE.
+    appended twice on resume, doubling its df and BM25 contributions. A
+    table that does not exist yet (a fresh build drops it) gets no DELETE.
     A delete re-encodes a bucket from its own postings rows, so on Iceberg
     the blocks are materialized (localCheckpoint) before the DELETE."""
     from concurrent.futures import ThreadPoolExecutor
@@ -778,16 +771,13 @@ def write_bucket(
     blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n))
     if catalog.use_iceberg:
         blocks = blocks.localCheckpoint()
-        for t in ("docs", "postings") if write_docs else ("postings",):
-            if catalog.exists(t):
-                spark.sql(f"DELETE FROM {t} WHERE bucket = {int(bucket)}")
+        if catalog.exists("postings"):
+            spark.sql(f"DELETE FROM postings WHERE bucket = {int(bucket)}")
     writes = [
         ("postings", _write_postings_rows, catalog, blocks, bucket, version, tp_n),
-        ("doclens", write_bucket_doclens, catalog, bucket_docs, bucket, version),
+        ("docs", _write_bucket_docs, catalog, bucket_docs, bucket, version),
         ("bloom", write_bucket_bloom, catalog, bucket_docs, bucket, version, n_keys),
     ]
-    if write_docs:
-        writes.append(("docs", _write_bucket_docs, catalog, bucket_docs, bucket, version))
     with ThreadPoolExecutor(max_workers=len(writes)) as ex:
         futs = [ex.submit(_timed, *w) for w in writes]
         errs = [f.exception() for f in futs]
@@ -797,47 +787,7 @@ def write_bucket(
 
 
 def _write_bucket_docs(catalog: Catalog, bucket_docs: DataFrame, bucket: int, version: str) -> None:
-    rows = bucket_docs.select("doc_id", "url", "dl")
-    if catalog.use_iceberg:
-        catalog.write_version(rows.withColumn("bucket", F.lit(bucket)), "docs", version)
-    else:
-        rows.write.parquet(catalog.version_path("docs", bucket, version))
-
-
-def write_bucket_doclens(catalog: Catalog, bucket_docs: DataFrame, bucket: int, version: str) -> None:
-    """Persist ONE bucket's dl sidecar (DOCLENS_SCHEMA): per doc_group, the
-    sorted doc ids (delta-gap varint) and their doc lengths (varint).
-
-    Written as part of every bucket version, next to the bucket's postings.
-    Storage is O(docs) instead of the old O(postings) per-posting dls_enc —
-    a doc's dl was repeated once per distinct term in the doc (~45% of
-    posting payload bytes on the fixture corpus). One write of
-    doclens/bucket=B/v=<version>; deliberately plain parquet in BOTH catalog modes (see
-    DOCLENS_SCHEMA comment), sorted by doc_group for row-group min/max
-    pruning by the kernels' pyarrow point reads.
-    """
-    from ..codec import varint_encode
-
-    src = bucket_docs.select(
-        F.shiftright(F.col("doc_id"), DOC_GROUP_BITS).alias("doc_group"), "doc_id", "dl"
-    )
-
-    def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        ids = pdf["doc_id"].to_numpy(np.int64)
-        gaps = ids.copy()
-        gaps[1:] -= ids[:-1]
-        return pd.DataFrame(
-            {
-                "doc_group": [int(key[0])],
-                "ids_enc": [varint_encode(gaps.astype(np.uint64))],
-                "dls_enc": [varint_encode(pdf["dl"].to_numpy(np.uint64))],
-            }
-        )
-
-    out = (
-        src.groupBy("doc_group")
-        .applyInPandas(enc, schema=DOCLENS_SCHEMA)
-        .sortWithinPartitions("doc_group")
-    )
-    out.write.parquet(catalog.version_path("doclens", bucket, version))
+    # sorted by doc_id within each file (no shuffle): a doc-group's rows are
+    # one contiguous doc_id range, so the kernels' range read prunes row groups
+    rows = bucket_docs.select("doc_id", "url", "dl").sortWithinPartitions("doc_id")
+    rows.write.parquet(catalog.version_path("docs", bucket, version))

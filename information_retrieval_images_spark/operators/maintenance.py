@@ -5,7 +5,7 @@ read-modify-write upsert (``vector_db.py:61-91``) against the Milvus
 collection — the most common maintenance ops for a live index. Here the
 natural rewrite unit is the BUCKET: deleting a document writes a new version
 of only the buckets that contain it (the surviving docs rows, their
-postings and sidecars), never the whole index.
+postings and url bloom), never the whole index.
 
 The index stores no text, so delete and compaction re-encode from the
 postings themselves (Lucene's segment merge): index_build.decoded_runs
@@ -13,9 +13,10 @@ decodes a bucket's blocks back to (term, doc_id, tf, dl) runs, drops the
 deleted doc ids, and the build's encoder tail re-encodes them. The blocks
 are bit-identical to a fresh encode of the surviving documents.
 
-Spark-first shape: on Iceberg the docs rows go by ``DELETE FROM docs WHERE
-url IN (...)``. On the parquet fallback the surviving docs rows are written
-as a new bucket version. Either way the op ends with ONE manifest commit
+The surviving docs rows are the touched buckets' rows minus the located doc
+ids, and the shared encoder writes them as each bucket's new docs version,
+as it does for build, append and compaction (``docs`` is a manifest-pinned
+directory table in both catalog modes). The op ends with ONE manifest commit
 (catalog.py) that swaps the bucket versions and the global statistics
 together, so a concurrent reader sees the index before or after the delete,
 never between; a crashed delete leaves only unreferenced files, and
@@ -31,7 +32,6 @@ engines order by (score, doc_id) — id *gaps* are harmless).
 from __future__ import annotations
 
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -138,31 +138,7 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
     surviving_counts = {int(r["bucket"]): int(r["total"]) - int(r["n"]) for r in hits}
     deleted_ids = {int(r["bucket"]): r["ids"] for r in hits}
 
-    # 1. the surviving docs of the affected buckets, as a new version
-    version = catalog.new_version()
-    if catalog.use_iceberg:
-        # one row-level DELETE (an Iceberg snapshot commit). The url set
-        # rides along as a temp view (an IN-list literal would not scale to
-        # DataFrame-sized deletes). The view name is unique per call: two
-        # concurrent delete_docs sharing one SparkSession must not stomp each
-        # other's url set between view creation and the DELETE.
-        view = f"_ir_delete_urls_{uuid.uuid4().hex}"
-        url_df.createOrReplaceTempView(view)
-        try:
-            spark.sql(f"DELETE FROM docs WHERE url IN (SELECT url FROM {view})")
-        finally:
-            spark.catalog.dropTempView(view)
-    else:
-        anti_side = F.broadcast(url_df) if bounded else url_df  # same bounding rule
-        surviving = (
-            docs.where(F.col("bucket").isin(buckets)).join(anti_side, "url", "left_anti")
-            .select("doc_id", "url", "dl", "bucket")
-        )
-        catalog.write_version(surviving, "docs", version)
-    live = {b: version for b in buckets if surviving_counts[b]}
-    new_docs = catalog.read_versions("docs", live)
-
-    # 2. global stats by delta: committed (N, sum dl) minus the measured
+    # 1. global stats by delta: committed (N, sum dl) minus the measured
     #    deltas — never a full-corpus count/avg job (VERDICT r2 what's-wrong
     #    #1); max_doc_id is never lowered (id reuse would collide doc-group
     #    scoring; see append_bucket)
@@ -170,16 +146,19 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
     tp_n = catalog.tp_n()
     stats = global_stats(n0 - n_deleted, sum0 - sum_deleted, max0, catalog.p_logical(), tp_n)
 
-    # 3. re-encode each affected bucket (the rewrite unit) from its own
-    #    postings minus the deleted ids; surviving counts from the locate job
+    # 2. re-encode each affected bucket (the rewrite unit) from its own
+    #    postings and docs rows minus the deleted ids — a pushed doc_id
+    #    filter, no second url join; surviving counts from the locate job
     #    size the blooms — no per-bucket count job. An emptied bucket leaves
     #    the manifest (on Iceberg its postings rows are still DELETEd).
+    version = catalog.new_version()
     postings = catalog.read("postings")
     for b in buckets:
         if surviving_counts[b] or catalog.use_iceberg:
             runs = decoded_runs(catalog, postings.where(F.col("bucket") == b), deleted_ids[b])
+            surviving = docs.where(~F.col("doc_id").isin(deleted_ids[b]))
             encode_bucket_postings(
-                catalog, runs, new_docs, b, nparts, tp_n, version=version, n_keys=surviving_counts[b], write_docs=False
+                catalog, runs, surviving, b, nparts, tp_n, version=version, n_keys=surviving_counts[b]
             )
 
     lineage = {
@@ -189,9 +168,8 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
         "avgdl": stats["avgdl"],
         "wall_ms": int((time.time() - t0) * 1000),
     }
-    catalog.commit(
-        lineage, tables={t: {b: live.get(b) for b in buckets} for t in INDEX_TABLES}, stats=stats, base=base
-    )
+    live = {b: version if surviving_counts[b] else None for b in buckets}
+    catalog.commit(lineage, tables={t: live for t in INDEX_TABLES}, stats=stats, base=base)
     return {"n_deleted": n_deleted, "buckets": buckets, "n_docs": stats["n_docs"], "avgdl": stats["avgdl"]}
 
 
@@ -211,12 +189,10 @@ def compact_buckets(
     per-file parallelism. Compaction moves the docs (ids unchanged — scores
     and tie-breaks are untouched) into ``target_bucket`` and merges the
     sources' postings into it: decoded_runs decodes the source buckets'
-    blocks and the shared encoder re-encodes them once. On Iceberg the docs
-    move by a row-level UPDATE plus a rewrite-data-files action, and the
-    sources' postings rows are DELETEd after the target is written (the
-    merge reads them); on the parquet fallback the moved docs
-    rows are the target version's docs. One manifest commit then adds the
-    target and retires the sources.
+    blocks and the shared encoder re-encodes them once, with the moved docs
+    rows as the target version's docs. On Iceberg the sources' postings rows
+    are DELETEd after the target is written (the merge reads them). One
+    manifest commit then adds the target and retires the sources.
 
     ``target_bucket`` must be fresh (same guard as append_bucket).
     """
@@ -231,19 +207,13 @@ def compact_buckets(
             return {"n_moved": 0, "buckets": [], "target": target_bucket}
         version = catalog.new_version()
         runs = decoded_runs(catalog, catalog.read("postings").where(F.col("bucket").isin(buckets)))
-        blist = ", ".join(str(int(b)) for b in buckets)
-        if catalog.use_iceberg:
-            spark.sql(f"UPDATE docs SET bucket = {int(target_bucket)} WHERE bucket IN ({blist})")
-            docs = catalog.read("docs")
-        else:
-            docs = docs.withColumn("bucket", F.lit(target_bucket))
+        moved = docs.withColumn("bucket", F.lit(target_bucket))
         encode_bucket_postings(
-            catalog, runs, docs, target_bucket, nparts, catalog.tp_n(),
-            version=version, n_keys=n_moved, write_docs=not catalog.use_iceberg,
+            catalog, runs, moved, target_bucket, nparts, catalog.tp_n(), version=version, n_keys=n_moved
         )
         if catalog.use_iceberg:
+            blist = ", ".join(str(int(b)) for b in buckets)
             spark.sql(f"DELETE FROM postings WHERE bucket IN ({blist})")
-            spark.sql("CALL system.rewrite_data_files(table => 'docs')")
         lineage = {
             "job": "compact_buckets",
             "buckets": buckets,

@@ -66,7 +66,7 @@ SPARK_CONF = {
     # shuffle partitions near core count so tiny SFs don't drown in tasks.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     # FAIR scheduling across pools: each write of a bucket version
-    # (write_bucket: postings, docs, doclens, bloom) runs from its own driver
+    # (write_bucket: postings, docs, bloom) runs from its own driver
     # thread and tags its jobs with its own pool, so the long postings stage
     # cannot starve the small writes, nor one overlapped bucket pipeline of
     # build_index another's. Pools are created on demand (no allocation

@@ -74,6 +74,31 @@ def test_missing_bloom_is_always_candidate():
     assert candidate_buckets({0: (m, bits)}, {0, 1}, ["u"]) == [1]
 
 
+def test_bloom_file_has_no_statistics_and_round_trips(spark, tmp_path):
+    """A bloom file stores its bitmap once: the ``bits`` column chunk
+    carries no min/max (a binary min/max would copy the bitmap into the
+    page header and the footer, about 7x the file), and load_blooms reads
+    back exactly the bitmap build_bloom made."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from information_retrieval_images_spark.blooms import BLOOM_FILE, load_blooms, write_bucket_bloom
+
+    urls = [f"https://site{i % 7}.example/x/{i:06d}" for i in range(3000)]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    cat = Catalog(spark, str(tmp_path))
+    write_bucket_bloom(cat, df, 4, "v1", len(urls))
+    cat.commit({"job": "test"}, tables={"blooms": {4: "v1"}})
+    path = os.path.join(cat.version_path("blooms", 4, "v1"), BLOOM_FILE)
+    meta = pq.ParquetFile(path).metadata
+    chunk = meta.row_group(0).column(meta.schema.names.index("bits"))
+    assert chunk.statistics is None or not chunk.statistics.has_min_max
+    m, _, bits = build_bloom(df, len(urls))
+    assert os.path.getsize(path) < 2 * len(bits)
+    assert load_blooms(cat) == {4: (m, bits)}
+
+
 def test_tree_reduce_bloom_path_identical(spark):
     """VERDICT r4 what's-wrong #3: the executor-side treeReduce OR is a real
     code path (threshold forced to 0), produces the exact driver-OR bitmap,

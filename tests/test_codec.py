@@ -4,10 +4,9 @@ import numpy as np
 import pytest
 
 from information_retrieval_images_spark.codec import (
-    decode_doc_gaps,
-    decode_tfs,
-    encode_doc_gaps,
-    encode_tfs,
+    concat_varint_decode,
+    segmented_gap_cumsum,
+    segmented_varint_encode,
     varint_decode,
     varint_encode,
 )
@@ -53,25 +52,54 @@ def test_varint_boundaries():
     np.testing.assert_array_equal(varint_decode(varint_encode(vals)), vals)
 
 
+def _segments(counts):
+    counts = np.asarray(counts, dtype=np.int64)
+    starts = np.concatenate(([0], np.cumsum(counts)[:-1])).astype(np.int64)
+    return starts, starts + counts
+
+
+def _encode_gaps(ids, starts, ends):
+    """The block encoder's gap layout: the first gap of a segment is its
+    absolute id (index_build._encode_partition_frame)."""
+    gaps = ids.copy()
+    gaps[1:] -= ids[:-1]
+    gaps[starts] = ids[starts]
+    return segmented_varint_encode(gaps.astype(np.uint64), starts, ends)
+
+
 @pytest.mark.parametrize("seed", range(5))
 def test_doc_gap_roundtrip(seed):
+    """Doc ids of many segments (single-posting ones included) round-trip
+    through the engine's codec: one segmented encode, one concatenated
+    decode and the segmented cumsum."""
     rng = np.random.default_rng(100 + seed)
-    n = int(rng.integers(1, 500))
-    doc_ids = np.cumsum(rng.integers(1, 10_000, n)).astype(np.int64)
-    assert decode_doc_gaps(encode_doc_gaps(doc_ids)).tolist() == doc_ids.tolist()
-
-
-def test_doc_gap_rejects_unsorted():
-    with pytest.raises(ValueError):
-        encode_doc_gaps(np.array([5, 3, 9]))
+    counts = rng.integers(1, 130, int(rng.integers(1, 60)))
+    counts[::3] = 1  # single-posting segments, as unique terms make
+    starts, ends = _segments(counts)
+    segs = [np.cumsum(rng.integers(1, 10_000, int(c))) + int(rng.integers(0, 1 << 40)) for c in counts]
+    ids = np.concatenate(segs).astype(np.int64)
+    payloads = _encode_gaps(ids, starts, ends)
+    assert len(payloads) == counts.size
+    got = segmented_gap_cumsum(concat_varint_decode(payloads).astype(np.int64), counts)
+    assert got.tolist() == ids.tolist()
+    # each segment's payload decodes on its own too (a block is self-contained)
+    for seg, buf in zip(segs, payloads):
+        assert np.cumsum(varint_decode(buf).astype(np.int64)).tolist() == seg.tolist()
 
 
 def test_tf_roundtrip():
-    tfs = np.array([1, 1, 2, 200, 7, 1], dtype=np.int64)
-    assert decode_tfs(encode_tfs(tfs)).tolist() == tfs.tolist()
+    """tfs, 10-byte varints included, split into segments and decoded as
+    one stream."""
+    tfs = np.array([1, 1, 2, 200, 7, 1, (1 << 64) - 1, 1 << 63, 3], dtype=np.uint64)
+    starts, ends = _segments([2, 1, 3, 1, 2])
+    payloads = segmented_varint_encode(tfs, starts, ends)
+    assert [len(p) for p in payloads] == [2, 1, 4, 10, 11]
+    assert concat_varint_decode(payloads).tolist() == tfs.tolist()
+    assert segmented_gap_cumsum(np.empty(0, np.int64), np.empty(0, np.int64)).size == 0
 
 
 def test_compression_is_compact():
     # dense doc ids -> 1-byte gaps: payload ~n bytes, 8x under int64
-    doc_ids = np.arange(0, 128, dtype=np.int64) * 3
-    assert len(encode_doc_gaps(doc_ids)) <= 130
+    ids = np.arange(0, 128, dtype=np.int64) * 3
+    starts, ends = _segments([64, 64])
+    assert sum(len(p) for p in _encode_gaps(ids, starts, ends)) <= 130

@@ -10,6 +10,7 @@ pyspark.sql.functions expressions (F.col/F.lit) used inside the operators can
 be constructed; all IO goes through MagicMocks.
 """
 
+import os
 import time
 from unittest.mock import MagicMock
 
@@ -38,8 +39,13 @@ def icat(spark, tmp_path):
 
 
 def _commit_buckets(cat, buckets):
-    """Seed committed buckets (past any commit logger on the instance)."""
-    Catalog.commit(cat, {"job": "seed"}, tables={"postings": {b: "v0" for b in buckets}})
+    """Seed committed buckets (past any commit logger on the instance):
+    Iceberg postings rows and, as in both catalog modes, docs version
+    directories. Returns the session's mock of their docs read."""
+    Catalog.commit(cat, {"job": "seed"}, tables={t: {b: "v0" for b in buckets} for t in ("docs", "postings")})
+    for b in buckets:
+        os.makedirs(cat.version_path("docs", b, "v0"))
+    return cat.spark.read.option.return_value.parquet.return_value
 
 
 def _sql_calls(ms):
@@ -47,9 +53,9 @@ def _sql_calls(ms):
 
 
 def test_delete_docs_iceberg_sql_sequence(icat, monkeypatch):
-    cat, ms, tables = icat
+    cat, ms, _ = icat
     # url locator + delta job: urls hit bucket 1 (2 docs, 20 tokens)
-    docs = tables.setdefault("docs", MagicMock(name="docs_tbl"))
+    docs = _commit_buckets(cat, [0, 1])
     docs.join.return_value.groupBy.return_value.agg.return_value.collect.return_value = [
         {"bucket": 1, "total": 5, "n": 2, "s": 20, "ids": [3, 4]}
     ]
@@ -59,25 +65,23 @@ def test_delete_docs_iceberg_sql_sequence(icat, monkeypatch):
     monkeypatch.setattr(
         maintenance,
         "encode_bucket_postings",
-        lambda c, runs, docs, b, np_, tp_n, **kw: encoded.append((runs, b, kw["write_docs"])),
+        lambda c, runs, docs, b, np_, tp_n, **kw: encoded.append((runs, docs, b, kw["n_keys"])),
     )
 
     out = maintenance.delete_docs(ms, cat, ["http://a", "http://b"])
 
-    # row-level DELETE via a per-call unique temp view (concurrent deletes
-    # sharing one session must not stomp each other's url set), one snapshot
-    # commit, view dropped after
-    url_df = ms.createDataFrame.return_value.distinct.return_value
-    (view,) = url_df.createOrReplaceTempView.call_args.args
-    assert view.startswith("_ir_delete_urls_") and len(view) > len("_ir_delete_urls_")
-    assert f"DELETE FROM docs WHERE url IN (SELECT url FROM {view})" in _sql_calls(ms)
-    ms.catalog.dropTempView.assert_called_once_with(view)
+    # no docs DML: docs is a manifest-pinned version in both catalog modes,
+    # so the delete issues no SQL at all (its postings DELETE runs inside
+    # the encoder's bucket write)
+    assert _sql_calls(ms) == []
     # incremental stats: 10-2 docs, (100-20)/8 avgdl — no full-corpus agg
     assert out["n_deleted"] == 2 and out["n_docs"] == 8 and out["avgdl"] == 10.0
     # only the hit bucket is re-encoded, from its postings minus the deleted
-    # ids; its docs rows went by the DELETE above
+    # ids and its docs rows minus the same ids (a doc_id filter, no url join)
     assert decoded == [[3, 4]]
-    assert encoded == [("runs", 1, False)]
+    assert encoded == [("runs", docs.where.return_value, 1, 3)]
+    docs.join.return_value.groupBy.assert_called_once_with("bucket")
+    assert docs.join.call_count == 1
     # the manifest commit carries the delta'd stats (max preserved) and the
     # bucket's new version
     from information_retrieval_images_spark import INDEX_FORMAT
@@ -85,36 +89,38 @@ def test_delete_docs_iceberg_sql_sequence(icat, monkeypatch):
     snap = cat.snapshot()
     assert snap.stats == dict(STATS, n_docs=8, sum_dl=80, avgdl=10.0, format=INDEX_FORMAT)
     assert snap.manifest["lineage"]["job"] == "delete_docs"
-    assert set(snap.tables["postings"]) == {1}
+    assert snap.tables["docs"][1] == snap.tables["postings"][1] != "v0"
+    assert snap.tables["docs"][0] == "v0"
 
 
 def test_compact_buckets_iceberg_sql_sequence(icat, monkeypatch):
-    cat, ms, tables = icat
-    docs = tables.setdefault("docs", MagicMock(name="docs_tbl"))
+    cat, ms, _ = icat
+    docs = _commit_buckets(cat, [1000000, 1000001])
     docs.where.return_value.count.return_value = 5
-    _commit_buckets(cat, [1000000, 1000001])
     log = []
     ms.sql.side_effect = lambda q: log.append(q)
     monkeypatch.setattr(maintenance, "decoded_runs", lambda c, postings, drop=(): "runs")
     monkeypatch.setattr(
         maintenance,
         "encode_bucket_postings",
-        lambda c, runs, docs, b, np_, tp_n, **kw: log.append(("encode", runs, b, kw["write_docs"])),
+        lambda c, runs, docs, b, np_, tp_n, **kw: log.append(("encode", runs, docs, b)),
     )
 
     out = maintenance.compact_buckets(ms, cat, [1000000, 1000001], 999999)
 
     # the target merges the sources' decoded postings once, BEFORE their
-    # postings rows are DELETEd; the docs moved by the UPDATE
+    # postings rows are DELETEd; the moved docs rows (bucket = target) go
+    # through the encoder as the target version's docs, with no docs DML
+    moved = docs.where.return_value.withColumn.return_value
     assert log == [
-        "UPDATE docs SET bucket = 999999 WHERE bucket IN (1000000, 1000001)",
-        ("encode", "runs", 999999, False),
+        ("encode", "runs", moved, 999999),
         "DELETE FROM postings WHERE bucket IN (1000000, 1000001)",
-        "CALL system.rewrite_data_files(table => 'docs')",
     ]
+    assert docs.where.return_value.withColumn.call_args.args[0] == "bucket"
     assert out["n_moved"] == 5 and out["target"] == 999999
     # one manifest commit adds the target and retires the sources
     assert cat.committed_buckets() == {999999}
+    assert set(cat.snapshot().tables["docs"]) == {999999}
 
 
 def test_compact_target_freshness_guard_still_applies(icat, monkeypatch):
@@ -124,23 +130,19 @@ def test_compact_target_freshness_guard_still_applies(icat, monkeypatch):
         maintenance.compact_buckets(ms, cat, [1000000], 999999)
 
 
-def _log_commits(cat, ms, monkeypatch, existing=("docs", "postings")):
+def _log_commits(cat, ms, monkeypatch, existing=("postings",)):
     """Record the commit sequence as ("sql", stmt) / ("append", table) /
     ("commit", "manifest") entries. ``existing`` are the tables the mocked
-    catalog reports present. The url bloom sidecar writes plain parquet in
-    both catalog modes and is stubbed out."""
+    catalog reports present. The url bloom writes plain parquet in both
+    catalog modes and is stubbed out; the docs write (plain parquet too)
+    goes to the mocked bucket docs frame."""
     from information_retrieval_images_spark import blooms
 
     log = []
     ms.sql.side_effect = lambda q: log.append(("sql", q)) or MagicMock()
     ms.catalog.tableExists.side_effect = lambda name: name in existing
-    append, write_version = cat.append, cat.write_version
+    append = cat.append
     monkeypatch.setattr(cat, "append", lambda df, name: log.append(("append", name)) or append(df, name))
-    monkeypatch.setattr(
-        cat,
-        "write_version",
-        lambda df, name, version, mode="append": log.append(("append", name)) or write_version(df, name, version, mode),
-    )
     commit = cat.commit
     monkeypatch.setattr(cat, "commit", lambda *a, **k: log.append(("commit", "manifest")) or commit(*a, **k))
     monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys: None)
@@ -149,8 +151,7 @@ def _log_commits(cat, ms, monkeypatch, existing=("docs", "postings")):
 
 def _commits(log):
     """The log's DELETEs, appends and manifest commits, in order; the
-    appends of one bucket version write, which run concurrently (postings,
-    docs), as one set."""
+    appends of one bucket version write as one set."""
     out = []
     for e in log:
         if e[0] == "append":
@@ -164,31 +165,25 @@ def _commits(log):
 
 def test_encode_bucket_postings_iceberg_deletes_before_append(icat, monkeypatch):
     """Crash-retry idempotency (ADVICE r2): the bucket commit (write_bucket)
-    DELETEs the bucket's existing docs AND postings rows before appending
-    the re-encoded rows — a plain append would double the
-    bucket's df and BM25 contributions. Without its docs write, a bucket
-    keeps its docs rows."""
+    DELETEs the bucket's existing postings rows before appending the
+    re-encoded rows — a plain append would double the bucket's df and BM25
+    contributions. The docs rows need no DELETE: they are written, sorted
+    by doc_id, to the version's own directory."""
     cat, ms, _ = icat
     log = _log_commits(cat, ms, monkeypatch)
     monkeypatch.setattr(index_build, "encode_blocks", lambda runs: MagicMock(name="blocks"))
+    docs = MagicMock(name="docs")
 
-    index_build.encode_bucket_postings(
-        cat, MagicMock(name="runs"), cat.read("docs"), 3, 8, 16, version="v1", n_keys=5
-    )
+    index_build.encode_bucket_postings(cat, MagicMock(name="runs"), docs, 3, 8, 16, version="v1", n_keys=5)
 
-    assert _commits(log) == [
-        ("sql", "DELETE FROM docs WHERE bucket = 3"),
-        ("sql", "DELETE FROM postings WHERE bucket = 3"),
-        {"postings", "docs"},
-    ]
-    log.clear()
-    index_build.encode_bucket_postings(
-        cat, MagicMock(name="runs"), cat.read("docs"), 3, 8, 16, version="v2", n_keys=5, write_docs=False
-    )
     assert _commits(log) == [
         ("sql", "DELETE FROM postings WHERE bucket = 3"),
         {"postings"},
     ]
+    rows = docs.where.return_value.select.return_value
+    docs.where.return_value.select.assert_called_once_with("doc_id", "url", "dl")
+    rows.sortWithinPartitions.assert_called_once_with("doc_id")
+    rows.sortWithinPartitions.return_value.write.parquet.assert_called_once_with(cat.version_path("docs", 3, "v1"))
 
 
 def _mock_build(icat, monkeypatch, done_buckets):
@@ -209,20 +204,19 @@ def _mock_build(icat, monkeypatch, done_buckets):
 
 def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkeypatch):
     """Resume after a crash between bucket 1's postings append and its
-    manifest commit: bucket 1 is rebuilt, and its leftover docs/postings
-    rows are DELETEd before the re-encoded rows are appended (a plain append
+    manifest commit: bucket 1 is rebuilt, and its leftover postings rows
+    are DELETEd before the re-encoded rows are appended (a plain append
     would count the bucket twice). Committed bucket 0 is not touched."""
     cat, ms, _ = icat
-    log = _log_commits(cat, ms, monkeypatch, existing=("docs", "postings"))
+    log = _log_commits(cat, ms, monkeypatch, existing=("postings",))
     _mock_build(icat, monkeypatch, done_buckets=[0])
 
     metrics = index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=2, resume=True)
 
     assert metrics["buckets"][0] == "resumed"
     assert _commits(log) == [
-        ("sql", "DELETE FROM docs WHERE bucket = 1"),
         ("sql", "DELETE FROM postings WHERE bucket = 1"),
-        {"postings", "docs"},
+        {"postings"},
         ("commit", "manifest"),
     ]
     assert cat.snapshot().stage is None  # the completing commit retired it
@@ -230,7 +224,7 @@ def test_resumed_build_iceberg_deletes_crashed_bucket_before_append(icat, monkey
 
 def test_fresh_build_iceberg_issues_no_delete(icat, monkeypatch):
     """A fresh build drops every index table first, so the bucket commit
-    finds no docs/postings table and issues no DELETE."""
+    finds no postings table and issues no DELETE."""
     cat, ms, _ = icat
     log = _log_commits(cat, ms, monkeypatch, existing=())
     _mock_build(icat, monkeypatch, done_buckets=[])
@@ -240,7 +234,7 @@ def test_fresh_build_iceberg_issues_no_delete(icat, monkeypatch):
     assert "DROP TABLE IF EXISTS postings" in [q for kind, q in log if kind == "sql"]
     assert _commits(log) == [
         ("commit", "manifest"),  # stage + global stats
-        {"postings", "docs"},
+        {"postings"},
         ("commit", "manifest"),  # the bucket
     ]
 
@@ -277,13 +271,12 @@ def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
         append(df, name)
 
     monkeypatch.setattr(cat, "append", recording_append)
-    monkeypatch.setattr(cat, "write_version", lambda df, name, version, mode="append": recording_append(df, name))
     monkeypatch.setattr(blooms, "write_bucket_bloom", lambda c, docs, b, version, n_keys: None)
     _mock_build(icat, monkeypatch, done_buckets=[])
 
     index_build.build_index(ms, MagicMock(name="pages"), cat, n_buckets=2, bucket_concurrency=2)
 
-    tables = ["docs", "postings"]
+    tables = ["postings"]
     assert sorted(n for kind, n in log if kind == "create") == tables
     assert sorted(n for kind, n in log if kind == "append") == tables
     for t in tables:
@@ -291,15 +284,20 @@ def test_fresh_build_iceberg_creates_each_table_once(icat, monkeypatch):
 
 
 def test_write_bucket_iceberg_appends_both_tables(icat, monkeypatch):
-    """The bucket write's Iceberg append contract for postings: a
-    tp-clustered (r6), sorted frame with the bucket and version columns,
+    """The bucket write's Iceberg contract for its two tables: postings are
+    a tp-clustered (r6), sorted frame with the bucket and version columns,
     written with writeTo("postings").append(), from blocks materialized
-    (localCheckpoint) before the bucket's rows are DELETEd."""
+    (localCheckpoint) before the bucket's rows are DELETEd; docs are a
+    plain parquet write of the version's own directory."""
     cat, ms, _ = icat
     _log_commits(cat, ms, monkeypatch)
 
     blocks = MagicMock(name="blocks")
-    index_build.write_bucket(cat, blocks, MagicMock(name="bucket_docs"), 2, "v1", n_keys=5)
+    bucket_docs = MagicMock(name="bucket_docs")
+    index_build.write_bucket(cat, blocks, bucket_docs, 2, "v1", n_keys=5)
+    sorted_docs = bucket_docs.select.return_value.sortWithinPartitions.return_value
+    sorted_docs.write.parquet.assert_called_once_with(cat.version_path("docs", 2, "v1"))
+    sorted_docs.writeTo.assert_not_called()
 
     persisted = blocks.withColumn.return_value.localCheckpoint.return_value
     # postings: tp-clustered (r6) + sorted frame + bucket and v columns ->

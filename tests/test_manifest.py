@@ -148,11 +148,13 @@ def _dirs(cat):
 
 
 def test_vacuum_after_grace_period_only(spark, tmp_path_factory, monkeypatch):
-    """Retired versions and superseded manifests survive every commit inside
-    the grace period. Once the clock passes it, a commit deletes them and
-    the files a crashed write left in the buckets it touches, never a live
-    directory; the index still ranks like the oracle."""
-    from information_retrieval_images_spark.operators import maintenance
+    """Retired versions, superseded manifests and the files a crashed
+    delete left (its docs and bloom versions) survive every commit inside
+    the grace period, also one to the crashed buckets. Once the clock
+    passes it, a commit deletes them and the crashed write's files in the
+    buckets it touches, never a live directory; the index still ranks like
+    the oracle."""
+    from information_retrieval_images_spark.operators import index_build
 
     full = fixtures.make_pages_pandas(170)
     pdf = full.iloc[:150]
@@ -166,11 +168,12 @@ def test_vacuum_after_grace_period_only(spark, tmp_path_factory, monkeypatch):
     retired = built - _dirs(cat)
     assert retired, "the delete retired no version"
 
-    # a crashed delete leaves unreferenced files in the buckets it targets
+    # a crashed delete leaves unreferenced files in the buckets it targets:
+    # its postings write dies, the docs and bloom writes beside it land
     def crash(*a, **k):
         raise RuntimeError("simulated crash")
 
-    monkeypatch.setattr(maintenance, "encode_bucket_postings", crash)
+    monkeypatch.setattr(index_build, "_write_postings_rows", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         delete_docs(spark, cat, second)
     monkeypatch.undo()
@@ -188,10 +191,14 @@ def test_vacuum_after_grace_period_only(spark, tmp_path_factory, monkeypatch):
     manifests = sorted(os.listdir(cat.path("_manifest")))
     assert len(manifests) > 1
     assert all(os.path.isdir(p) for p in retired | orphans), "vacuum ran inside the grace period"
+    # the retry commits to the crashed buckets, so its vacuum visits the
+    # orphans; inside the grace period it must keep them
+    delete_docs(spark, cat, second)
+    assert all(os.path.isdir(p) for p in retired | orphans), "vacuum ran inside the grace period"
 
     later = time.time() + catalog_mod.VACUUM_GRACE_MINUTES * 60 + 60
     monkeypatch.setattr(catalog_mod, "_now", lambda: later)
-    delete_docs(spark, cat, second)  # the retry touches the crashed buckets
+    compact_buckets(spark, cat, [0, 1], target_bucket=20)  # touches the crashed buckets
     assert not any(os.path.exists(p) for p in retired | orphans)
     live = _dirs(cat)
     assert all(os.path.isdir(p) for p in live)

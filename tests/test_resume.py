@@ -123,38 +123,40 @@ def test_exists_sees_partitioned_tables(spark, tmp_path_factory):
     """Every index table keeps its files in bucket=N/v=<version> subdirs,
     and exists() reads the manifest's table map, so it finds all of them
     (ADVICE r1 medium finding: a miss silently re-runs every resume path).
-    There is no ``stats`` table (a term's df is summed from the postings):
-    a finished build, append, delete or compaction leaves no ``stats``
-    directory and no ``stats`` entry in the manifest's table map, while the
+    There is no ``stats`` table (a term's df is summed from the postings)
+    and no ``doclens`` table (dl is read from ``docs``): a finished build,
+    append, delete or compaction leaves neither directory, and the
+    manifest's table map holds exactly the three index tables, while the
     manifest keeps its global ``stats``."""
     from information_retrieval_images_spark import INDEX_FORMAT
     from information_retrieval_images_spark.operators.incremental import append_bucket
     from information_retrieval_images_spark.operators.maintenance import compact_buckets, delete_docs
 
-    tables = ("docs", "postings", "doclens", "blooms")
+    tables = ("docs", "postings", "blooms")
     pages = fixtures.make_pages_pandas(N_DOCS)
     built, appended = pages.iloc[:150], pages.iloc[150:]
     cat = Catalog(spark, str(tmp_path_factory.mktemp("exists")))
 
-    def assert_four_tables(buckets):
+    def assert_three_tables(buckets):
         for t in tables:
             assert cat.exists(t), t
             assert set(cat.version_dirs(t)) == buckets, t
         assert not cat.exists("nope")
         assert not os.path.exists(cat.path("stats"))
+        assert not os.path.exists(cat.path("doclens"))
         m = cat.snapshot().manifest
-        assert set(m["tables"]) == set(tables), m["tables"]
+        assert sorted(m["tables"]) == sorted(tables), m["tables"]
         assert m["stats"]["format"] == INDEX_FORMAT
 
     build_index(spark, spark.createDataFrame(built), cat, n_buckets=2)
-    assert_four_tables({0, 1})
+    assert_three_tables({0, 1})
     assert append_bucket(spark, spark.createDataFrame(appended), cat, bucket=10)["n_new"] > 0
-    assert_four_tables({0, 1, 10})
+    assert_three_tables({0, 1, 10})
     victim = built.loc[built["lang"] == "en", "url"].iloc[0]
     assert delete_docs(spark, cat, [victim])["n_deleted"] == 1
-    assert_four_tables({0, 1, 10})
+    assert_three_tables({0, 1, 10})
     compact_buckets(spark, cat, [10], target_bucket=20)
-    assert_four_tables({0, 1, 20})
+    assert_three_tables({0, 1, 20})
 
 
 def _docs_file_state(cat: Catalog) -> dict:
@@ -179,10 +181,10 @@ def test_old_format_warehouse_gets_clear_error(spark, pages_df, tmp_path_factory
     latest = os.path.join(cat.path("_manifest"), f"{cat.index_version()}.json")
     with open(latest) as f:
         m = json.load(f)
-    m["stats"]["format"] = 7
+    m["stats"]["format"] = 8
     with open(latest, "w") as f:
         json.dump(m, f)
-    with pytest.raises(RuntimeError, match="format 7 .*rebuild"):
+    with pytest.raises(RuntimeError, match="format 8 .*rebuild"):
         Catalog(spark, cat.root).global_doc_stats()
     shutil.rmtree(cat.path("_manifest"))
     with pytest.raises(RuntimeError, match="no manifest.*rebuild"):
@@ -190,26 +192,27 @@ def test_old_format_warehouse_gets_clear_error(spark, pages_df, tmp_path_factory
 
 
 def test_postings_carry_no_per_posting_dls(spark, pages_df, tmp_path_factory):
-    """Format v4 (VERDICT r3 what's-wrong #2): posting blocks store no
-    per-posting doc lengths; dl lives once per (bucket, doc_group) in the
-    doclens sidecar, one row per group per bucket."""
+    """Posting blocks store no per-posting doc lengths, and there is no
+    doclens table: dl lives once per document in ``docs``, every file of
+    which is sorted by doc_id (the kernels read a doc-group's dl with one
+    doc_id range), and whose ids cover every document exactly once."""
+    import pyarrow.parquet as pq
+
     cat = Catalog(spark, str(tmp_path_factory.mktemp("nodls")))
     build_index(spark, pages_df, cat, n_buckets=2)
     assert "dls_enc" not in cat.read("postings").columns
-    dl = cat.read("doclens")
-    assert set(dl.columns) == {"doc_group", "ids_enc", "dls_enc", "bucket", "v"}
-    # one sidecar row per (bucket, doc_group); ids cover every doc exactly once
-    import numpy as np
-
-    from information_retrieval_images_spark.codec import varint_decode
-
-    rows = dl.toPandas()
-    assert not rows.duplicated(["bucket", "doc_group"]).any()
-    ids = np.concatenate(
-        [np.cumsum(varint_decode(bytes(r.ids_enc)).astype(np.int64)) for r in rows.itertuples()]
-    )
-    docs_ids = cat.read("docs").select("doc_id").toPandas()["doc_id"].to_numpy()
-    assert sorted(ids.tolist()) == sorted(docs_ids.tolist())
+    assert not os.path.exists(cat.path("doclens"))
+    ids = []
+    for b in sorted(cat.version_dirs("docs")):
+        files = cat.version_files("docs", b)
+        assert files
+        for f in files:
+            got = pq.read_table(f, columns=["doc_id", "dl"])["doc_id"].to_pylist()
+            assert got == sorted(got), f
+            ids.extend(got)
+    # a fresh build numbers its documents densely from 0
+    n_en = int((fixtures.make_pages_pandas(N_DOCS)["lang"] == "en").sum())
+    assert sorted(ids) == list(range(n_en))
 
 
 def test_resume_reuses_docs_without_reassign(spark, pages_df, tmp_path_factory):
