@@ -137,14 +137,9 @@ def write_bucket_bloom(catalog, bucket_docs: DataFrame, bucket: int, version: st
 
     ``n_keys`` (the bucket's doc count, which every caller already knows)
     sizes the bitmap."""
-    import time
-
-    trace = os.environ.get("IR_TRACE") == "1"
     if n_keys == 0:
         return
-    t0 = time.time()
     m, k, bits = build_bloom(bucket_docs.select("url"), int(n_keys))
-    t1 = time.time()
     # The bitmap row is DRIVER data (built here, probed here or by the tiny
     # distributed probe) — write it with pyarrow directly, symmetric to how
     # load_blooms reads it. Pushing one 356 KB binary row through
@@ -164,11 +159,6 @@ def write_bucket_bloom(catalog, bucket_docs: DataFrame, bucket: int, version: st
         }
     )
     pq.write_table(tbl, os.path.join(d, BLOOM_FILE), write_statistics=False)
-    if trace:
-        print(
-            f"IR_TRACE     bloom{bucket}.build: {t1 - t0:.1f}s write: {time.time() - t1:.1f}s",
-            flush=True,
-        )
 
 
 def load_blooms(catalog) -> dict[int, tuple[int, bytes]]:

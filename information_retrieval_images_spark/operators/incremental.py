@@ -93,7 +93,7 @@ def append_bucket(
             bnow = staged.agg(F.count("*").alias("n"), F.sum("dl").alias("s"), F.max("doc_id").alias("mx")).collect()[0]
             n_new = int(bnow["n"])
             stats = global_stats(n0 + n_new, sum0 + int(bnow["s"] or 0), int(bnow["mx"]), p_logical, tp_n)
-            runs = posting_runs(staged, min_parallelism=nparts)
+            runs = posting_runs(staged)
             encode_bucket_postings(catalog, runs, staged, bucket, nparts, tp_n, version=version, n_keys=n_new)
         finally:
             catalog.drop_stage(version)

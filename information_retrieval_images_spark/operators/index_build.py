@@ -32,6 +32,8 @@ Pipeline (SURVEY.md §3.3 target lifecycle):
          -> mapInPandas block encoder (delta-gap+varint, <=BLOCK_SIZE docs per
             block, blocks never cross fixed doc-range boundaries so query-time
             doc-group scoring is exact; per-block (max_tf, min_dl) = WAND bound)
+         -> repartition(tp_n, tp) of the compressed blocks: one postings
+            file per tp directory, whatever the bucket's doc-group count
          -> docs (doc_id, url, dl — no text — sorted by doc_id), postings
             and blooms as one new bucket version, three independent writes
             published by one manifest commit (catalog.py); a term's df is
@@ -151,6 +153,16 @@ def _group_expr(p_logical: int = P_LOGICAL):
     return F.conv(F.substring(F.md5("url"), 1, 15), 16, 10).cast("long") % p_logical
 
 
+def _split_per_core(df: DataFrame) -> DataFrame:
+    """``df`` re-split round-robin to one partition per core, only when its
+    scan has fewer input splits than that: a scan of a tiny or bin-packed
+    input (openCostInBytes packing) collapses to 1-2 splits, which would
+    serialize the pandas kernel fed by it (~100x the per-byte cost of a JVM
+    scan). A scan with a split per core is returned as it is."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(cores) if df.rdd.getNumPartitions() < cores else df
+
+
 def assign_doc_ids(
     pages: DataFrame,
     n_buckets: int,
@@ -176,11 +188,12 @@ def assign_doc_ids(
        markup for 1-2 KB of text), so extracting first means the id shuffle
        moves text, never html — at 100 TB of pages that is the difference
        between shuffling 100 TB and shuffling ~3 TB. When the parquet scan
-       under-splits (tiny corpora bin-packed into few input splits), a cheap
-       round-robin repartition restores kernel parallelism first — by
+       has fewer splits than cores (tiny corpora bin-packed into few input
+       splits), _split_per_core restores kernel parallelism first — by
        construction that only happens when the corpus is small enough for
        the html shuffle to be trivial;
-    3. hash-repartition the extracted rows by url_group (equal keys
+    3. hash-repartition the extracted rows by url_group into
+       ``num_partitions`` (default: one per core; equal keys
        co-locate; no boundary sampling), sort (url_group, url) within
        partitions, then an Arrow-batched mapInPandas assigns
        offset[group] + position.
@@ -195,10 +208,7 @@ def assign_doc_ids(
     """
     spark = pages.sparkSession
     nparts = num_partitions or spark.sparkContext.defaultParallelism
-    _t0 = time.time()
     counts = pages.select(_group_expr(p_logical).alias("g")).groupBy("g").count().collect()
-    if os.environ.get("IR_TRACE") == "1":
-        print(f"IR_TRACE   assign.counts_job: {time.time() - _t0:.1f}s", flush=True)
     by_g = {int(r["g"]): int(r["count"]) for r in counts}
     offsets = {}
     acc = 0
@@ -207,9 +217,7 @@ def assign_doc_ids(
         acc += by_g.get(g, 0)
     boff = spark.sparkContext.broadcast(offsets)
 
-    src = pages.select("url", "html").withColumn("g", _group_expr(p_logical))
-    if src.rdd.getNumPartitions() < nparts:
-        src = src.repartition(nparts)
+    src = _split_per_core(pages.select("url", "html").withColumn("g", _group_expr(p_logical)))
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -290,19 +298,11 @@ def stage_docs(catalog: Catalog, pages: DataFrame, version: str, **assign_kw) ->
 # --- SPIMI run generation ------------------------------------------------------
 
 
-def posting_runs(docs: DataFrame, min_parallelism: int | None = None) -> DataFrame:
-    """Stage rows -> (term, doc_id, tf, dl) runs via the shared SPIMI kernel.
-
-    min_parallelism guards against tiny-file bin-packing: a parquet scan of
-    small files collapses to 1-2 input splits (openCostInBytes packing), which
-    would serialize the Python kernel AND everything it feeds (persist,
-    range-boundary sampling, shuffle map side). The pandas kernel costs ~100x
-    more per byte than a JVM scan, so a cheap row shuffle to restore
-    parallelism always pays for itself when the scan under-splits.
-    """
-    src = docs.select("doc_id", "text")
-    if min_parallelism and src.rdd.getNumPartitions() < min_parallelism:
-        src = src.repartition(min_parallelism)
+def posting_runs(docs: DataFrame) -> DataFrame:
+    """Stage rows -> (term, doc_id, tf, dl) runs via the shared SPIMI kernel,
+    over a scan with at least one split per core (_split_per_core: a bucket's
+    stage files of a tiny build or append bin-pack into 1-2 splits)."""
+    src = _split_per_core(docs.select("doc_id", "text"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -503,15 +503,6 @@ def build_index(
     if engine != "arrow":
         raise ValueError(f"unknown build engine {engine!r}: the only index-build engine is 'arrow'")
     t_start = time.time()
-    trace = os.environ.get("IR_TRACE") == "1"
-    t_last = [t_start]
-
-    def _tr(step: str) -> None:
-        if trace:
-            now = time.time()
-            print(f"IR_TRACE {step}: {now - t_last[0]:.1f}s", flush=True)
-            t_last[0] = now
-
     nparts = num_term_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if lang is not None:
         pages = pages.where(F.col("lang") == lang)
@@ -565,7 +556,6 @@ def build_index(
         stage = stage_docs(
             catalog, pages, stage_version, n_buckets=n_buckets, num_partitions=nparts, p_logical=p_logical
         )
-        _tr("stage_assign_write")
 
     # one job yields global AND per-bucket stats (avoids a per-bucket agg job
     # later — every extra action costs a full job round-trip)
@@ -590,7 +580,6 @@ def build_index(
             stats=stats,
             stage=stage_version if stage is not None else None,
         )
-    _tr("global_stats")
 
     metrics = {"n_docs": n_docs, "avgdl": avgdl, "buckets": {}}
     for b in range(n_buckets):
@@ -608,9 +597,8 @@ def build_index(
         # local pinned value, threaded explicitly like every other reader.
         version = catalog.new_version()
         rows = stage.where(F.col("bucket") == b)
-        runs = posting_runs(rows, min_parallelism=nparts)
+        runs = posting_runs(rows)
         encode_bucket_postings(catalog, runs, rows, b, nparts, tp_n, version=version, n_keys=nd)
-        _tr(f"bucket{b}_write")
         wall_ms = int((time.time() - t0) * 1000)
         lineage = {
             "job": "build_index",
@@ -632,7 +620,6 @@ def build_index(
             stage_now = None if pending == {b} else stage_version
             catalog.commit(lineage, tables={t: {b: version} for t in INDEX_TABLES}, stage=stage_now)
             pending.discard(b)
-        _tr(f"bucket{b}_commit")
         metrics["buckets"][b] = {"docs": nd, "wall_ms": wall_ms}
 
     if bucket_concurrency <= 1 or len(todo) <= 1:
@@ -643,13 +630,12 @@ def build_index(
         # what's-wrong #5): each bucket's commit tail is fixed driver/commit
         # round-trips during which the executors idle — at production bucket
         # counts that serial floor is the build's width-independent wall.
-        # Spark's scheduler accepts jobs from multiple driver threads; each
-        # write of a pipeline runs its jobs in its own FAIR pool
-        # (write_bucket), so one bucket's long shuffle cannot starve
-        # another's small jobs. The
-        # failure model is the serial one: each bucket commits its own
-        # manifest entry after its files are written, so a crash leaves some
-        # buckets committed and the rest rebuildable by resume.
+        # Spark's scheduler accepts jobs from multiple driver threads and,
+        # FIFO, gives the free task slots of an earlier job's stage to a
+        # later one, so the pipelines overlap. The failure model is the
+        # serial one: each bucket commits its own manifest entry after its
+        # files are written, so a crash leaves some buckets committed and the
+        # rest rebuildable by resume.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=int(bucket_concurrency)) as ex:
@@ -671,6 +657,9 @@ def _write_postings_rows(catalog: Catalog, blocks: DataFrame, bucket: int, versi
     # overhead, and every query paid the file-open/listing cost back). One
     # cheap shuffle of the compressed block rows -> one file per tp dir;
     # per-file (term, first_doc) sort keeps row-group min/max pruning.
+    # Keying the encoder's shuffle by (tp, doc_group) instead drops this
+    # shuffle only while the index has one doc group (< 16,384 docs): at
+    # 114k docs (8 groups, 8 partitions) it wrote 144 postings files, not 32.
     out = blocks.repartition(int(tp_n), "tp").sortWithinPartitions("tp", "term", "first_doc")
     # every postings row carries its bucket version (on parquet from the
     # v=<version> directory): the query kernels find the bucket's docs
@@ -748,38 +737,18 @@ def write_bucket(
 
     from ..blooms import write_bucket_bloom
 
-    trace = os.environ.get("IR_TRACE") == "1"
-    spark = catalog.spark
-
-    def _timed(name, fn, *args):
-        # Each write runs in its OWN scheduler pool (r6): pools round-robin
-        # under FAIR mode but are FIFO *within* — in one shared pool the
-        # small jobs serialized behind each other (measured: the
-        # last-submitted bloom job's wall was the SUM of the others whenever
-        # the cluster had free slots). A per-(bucket, write) pool lets them
-        # overlap; total work is unchanged.
-        prev = spark.sparkContext.getLocalProperty("spark.scheduler.pool")
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"ir_sc_{bucket}_{name}")
-        t0 = time.time()
-        try:
-            return fn(*args)
-        finally:
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", prev)
-            if trace:
-                print(f"IR_TRACE   wb{bucket}.{name}: {time.time() - t0:.1f}s", flush=True)
-
     blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n))
     if catalog.use_iceberg:
         blocks = blocks.localCheckpoint()
         if catalog.exists("postings"):
-            spark.sql(f"DELETE FROM postings WHERE bucket = {int(bucket)}")
+            catalog.spark.sql(f"DELETE FROM postings WHERE bucket = {int(bucket)}")
     writes = [
-        ("postings", _write_postings_rows, catalog, blocks, bucket, version, tp_n),
-        ("docs", _write_bucket_docs, catalog, bucket_docs, bucket, version),
-        ("bloom", write_bucket_bloom, catalog, bucket_docs, bucket, version, n_keys),
+        (_write_postings_rows, catalog, blocks, bucket, version, tp_n),
+        (_write_bucket_docs, catalog, bucket_docs, bucket, version),
+        (write_bucket_bloom, catalog, bucket_docs, bucket, version, n_keys),
     ]
     with ThreadPoolExecutor(max_workers=len(writes)) as ex:
-        futs = [ex.submit(_timed, *w) for w in writes]
+        futs = [ex.submit(*w) for w in writes]
         errs = [f.exception() for f in futs]
     for e in errs:
         if e is not None:

@@ -65,15 +65,6 @@ SPARK_CONF = {
     # Partition sizing: at 100 TB these come from cluster conf; locally keep
     # shuffle partitions near core count so tiny SFs don't drown in tasks.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
-    # FAIR scheduling across pools: each write of a bucket version
-    # (write_bucket: postings, docs, bloom) runs from its own driver
-    # thread and tags its jobs with its own pool, so the long postings stage
-    # cannot starve the small writes, nor one overlapped bucket pipeline of
-    # build_index another's. Pools are created on demand (no allocation
-    # file): default per-pool config, FAIR round-robin ACROSS pools, plain
-    # FIFO for everything in the default pool — single-threaded behavior is
-    # unchanged.
-    "spark.scheduler.mode": "FAIR",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.parquet.filterPushdown": "true",

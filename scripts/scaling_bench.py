@@ -57,7 +57,8 @@ RUNS = os.path.join(REPO, "BENCH", "scaling_runs.jsonl")
 # comparable within one generation. r5 audit: campaign legs run --buckets 1,
 # where build_index's new bucket_concurrency is a NO-OP (nothing to overlap),
 # and every other r5 change on the buckets=1 build path is plan-neutral
-# (tp_n is a metadata int; FAIR mode adds no pool to single-threaded jobs;
+# (tp_n is a metadata int; r5's FAIR mode, since removed, added no pool to
+# single-threaded jobs;
 # codingErrorAction only alters decode's malformed-byte handling; doclens
 # scoping is query-side) — so r4 and r5 campaign samples remain ONE perf
 # generation and r4's accumulated clean samples stay usable. The overlapped-

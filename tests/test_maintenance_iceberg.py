@@ -198,7 +198,7 @@ def _mock_build(icat, monkeypatch, done_buckets):
     Catalog.commit(cat, {"job": "seed"}, tables={"postings": {b: "v0" for b in done_buckets}}, stage="s0")
     monkeypatch.setattr(index_build, "stage_docs", lambda *a, **kw: stage)
     monkeypatch.setattr(cat, "read_stage", lambda version: stage)
-    monkeypatch.setattr(index_build, "posting_runs", lambda docs, min_parallelism: MagicMock(name="runs"))
+    monkeypatch.setattr(index_build, "posting_runs", lambda docs: MagicMock(name="runs"))
     monkeypatch.setattr(index_build, "encode_blocks", lambda runs: MagicMock(name="blocks"))
 
 

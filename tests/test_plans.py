@@ -75,6 +75,18 @@ def test_term_prefix_dirs_prune_postings_files(spark, tmp_path_factory):
     assert len(got) == len(full) > 0
     assert sorted(got["term"]) == sorted(full["term"])
 
+    # the write's tp shuffle puts each tp directory in one task, which
+    # writes it as ONE file, sorted by (term, first_doc) for row-group
+    # pruning
+    import pyarrow.parquet as pq
+
+    for d in tp_dirs:
+        files = glob.glob(os.path.join(d, "*.parquet"))
+        assert len(files) == 1, d
+        rows = pq.read_table(files[0], columns=["term", "first_doc"]).to_pylist()
+        keys = [(r["term"], r["first_doc"]) for r in rows]
+        assert keys == sorted(keys), d
+
 
 def test_query_path_plans_tp_partition_filter(spark, tmp_path_factory, monkeypatch):
     """The BM25 engine's postings scan itself carries the tp partition
@@ -101,6 +113,56 @@ def test_query_path_plans_tp_partition_filter(spark, tmp_path_factory, monkeypat
     files = [f for src in opened if isinstance(src, list) for f in src if os.sep + "postings" + os.sep in f]
     want = {f"tp={term_prefix(t, cat.tp_n())}" for t in ("term000000", "term000007")}
     assert files and {os.path.basename(os.path.dirname(f)) for f in files} == want
+
+
+def test_one_postings_file_per_tp_dir_across_doc_groups(spark, tmp_path):
+    """A bucket version whose doc ids span several doc groups (an index of
+    more than 16,384 docs) still writes ONE parquet file per tp directory:
+    the encoder's shuffle splits a term's rows by doc group, so the write
+    re-clusters the compressed blocks by tp."""
+    import glob
+    import os
+
+    import pandas as pd
+
+    from information_retrieval_images_spark.catalog import Catalog
+    from information_retrieval_images_spark.operators.index_build import RUNS_SCHEMA, encode_bucket_postings
+
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    ids = [g * 16_384 + i for g in range(3) for i in range(40)]
+    runs = spark.createDataFrame(
+        pd.DataFrame({"term": [f"term{i % 7}" for i in ids], "doc_id": ids, "tf": 1, "dl": 5}), schema=RUNS_SCHEMA
+    )
+    docs = spark.createDataFrame([(i, f"u{i}", 5, 0) for i in ids], "doc_id long, url string, dl int, bucket int")
+    encode_bucket_postings(cat, runs, docs, 0, 8, 4, version="v1", n_keys=len(ids))
+    tp_dirs = glob.glob(os.path.join(cat.version_path("postings", 0, "v1"), "tp=*"))
+    assert len(tp_dirs) > 1
+    for d in tp_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+def test_split_per_core_only_when_under_split(spark, tmp_path):
+    """The round-robin re-split before a pandas kernel fires only when the
+    scan has fewer splits than cores, and then gives one split per core."""
+    from information_retrieval_images_spark.operators.index_build import _split_per_core, posting_runs
+
+    cores = spark.sparkContext.defaultParallelism
+    wide = spark.range(100, numPartitions=cores)
+    assert _split_per_core(wide) is wide
+    wider = spark.range(100, numPartitions=cores + 2)
+    assert _split_per_core(wider) is wider
+
+    path = str(tmp_path / "one")
+    spark.range(100).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert scan.rdd.getNumPartitions() == 1
+    split = _split_per_core(scan)
+    assert split.rdd.getNumPartitions() == cores
+
+    # the SPIMI kernel's input is re-split only under the same condition
+    stage = wide.select(F.col("id").alias("doc_id"), F.concat(F.lit("w"), F.col("id")).alias("text"))
+    assert plans.count_exchanges(posting_runs(stage)) == 0
+    one = spark.read.parquet(path).select(F.col("id").alias("doc_id"), F.lit("w").alias("text"))
+    assert plans.count_exchanges(posting_runs(one)) == 1
 
 
 def test_small_dim_join_broadcasts(spark, pages_path):
