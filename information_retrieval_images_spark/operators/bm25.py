@@ -217,7 +217,11 @@ def _query_plan_meta(catalog: Catalog, qbatch: list[tuple[int, str, int]]):
     Returns (rows, df_map, avgdl, volumes) where rows is
     [(query_id, term, qpos, qtf, k, idf)] (one per query-token occurrence)
     restricted to indexed terms and volumes maps query_id -> total matched
-    postings (sum of its distinct terms' df)."""
+    postings (sum of its distinct terms' df). Every entry point comes
+    through here, so a query with k < 1 (no top-k) raises ValueError here."""
+    bad = [k for _, _, k in qbatch if k < 1]
+    if bad:
+        raise ValueError(f"k must be >= 1, got {bad[0]}")
     qrows = _query_term_rows(qbatch)
     terms = sorted({r[1] for r in qrows})
     if len(terms) > MAX_QUERY_TERMS:
@@ -475,82 +479,78 @@ def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataF
     order and every posting adds ``idf * tf_norm`` to its doc in that
     order, so a score is the oracle's sum, float for float, whatever the
     row order of the frame or the task split."""
+    query_id = int(pdf["query_id"].iloc[0])
+    k = int(pdf["k"].iloc[0])
+    groups = (pdf["first_doc"].values >> DOC_GROUP_BITS).astype(np.int64)
+    order = np.lexsort((pdf["qpos"].values, groups))
+    pdf = pdf.iloc[order]
+    groups = groups[order]
+    # per-group upper bound = sum over terms of the max block ub in group
+    gdf = pd.DataFrame({"g": groups, "term": pdf["term"].values, "ub": pdf["ub"].values})
+    g_ub = gdf.groupby(["g", "term"])["ub"].max().groupby(level=0).sum()
+    # dl for every (bucket, group) this task may decode — ONE pyarrow
+    # point read of docs up front (pruned to the task's doc-groups);
+    # loading lazily per visited group would be one IO per group
+    buckets = pdf["bucket"].values.astype(int).tolist()
+    pairs = set(zip(buckets, groups.tolist()))
+    # a bucket's postings and docs share one version id (write_bucket)
+    dirs = {b: os.path.join(dl_root, f"bucket={b}", f"v={v}") for b, v in zip(buckets, pdf["v"].values)}
+    dl_map = _load_group_dls(dirs, pairs)
+    # visit groups in descending upper bound: threshold grows fastest
+    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of size k
 
-    def _body(pdf: pd.DataFrame) -> pd.DataFrame:
-        query_id = int(pdf["query_id"].iloc[0])
-        k = int(pdf["k"].iloc[0])
-        groups = (pdf["first_doc"].values >> DOC_GROUP_BITS).astype(np.int64)
-        order = np.lexsort((pdf["qpos"].values, groups))
-        pdf = pdf.iloc[order]
-        groups = groups[order]
-        # per-group upper bound = sum over terms of the max block ub in group
-        gdf = pd.DataFrame({"g": groups, "term": pdf["term"].values, "ub": pdf["ub"].values})
-        g_ub = gdf.groupby(["g", "term"])["ub"].max().groupby(level=0).sum()
-        # dl for every (bucket, group) this task may decode — ONE pyarrow
-        # point read of docs up front (pruned to the task's doc-groups);
-        # loading lazily per visited group would be one IO per group
-        buckets = pdf["bucket"].values.astype(int).tolist()
-        pairs = set(zip(buckets, groups.tolist()))
-        # a bucket's postings and docs share one version id (write_bucket)
-        dirs = {b: os.path.join(dl_root, f"bucket={b}", f"v={v}") for b, v in zip(buckets, pdf["v"].values)}
-        dl_map = _load_group_dls(dirs, pairs)
-        # visit groups in descending upper bound: threshold grows fastest
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of size k
+    def theta() -> float:
+        return heap[0][0] if len(heap) >= k else -np.inf
 
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -np.inf
-
-        starts = np.flatnonzero(np.concatenate(([True], groups[1:] != groups[:-1])))
-        ends = np.append(starts[1:], groups.size)
-        group_ids = groups[starts]
-        visit = np.argsort(-g_ub.loc[group_ids].values, kind="stable")
-        docs_enc = pdf["docs_enc"].values
-        tfs_enc = pdf["tfs_enc"].values
-        ndocs_col = pdf["n_docs"].values.astype(np.int64)
-        idfs = pdf["idf"].values
-        for vi in visit:
-            s, e = starts[vi], ends[vi]
-            # strict inequality: a group whose bound EQUALS the threshold may
-            # still contain a doc with score == theta and a smaller doc_id,
-            # which wins the deterministic (score desc, doc_id asc) tie-break
-            if g_ub.loc[group_ids[vi]] < theta():
-                continue  # skip decode of the whole doc-group
-            base = int(group_ids[vi]) << DOC_GROUP_BITS
-            # batch-decode every block of the group in one varint pass
-            counts = ndocs_col[s:e]
-            gaps = concat_varint_decode(docs_enc[s:e]).astype(np.int64)
-            d = segmented_gap_cumsum(gaps, counts)
-            t = concat_varint_decode(tfs_enc[s:e]).astype(np.float64)
-            ids_g, dls_g = dl_map[int(group_ids[vi])]
-            l = _group_dls(ids_g, dls_g, d)
-            w = np.repeat(idfs[s:e].astype(np.float64), counts)
-            contrib = w * bm25_tf_norm(t, l, avgdl, K1, B)
-            off = d - base
-            local = np.zeros(1 << DOC_GROUP_BITS, dtype=np.float64)
-            np.add.at(local, off, contrib)  # in row order: query-position order
-            offs = np.unique(off)
-            scores = local[offs]
-            ids = base + offs
-            # vectorized candidate selection: threshold-filter (conservative:
-            # uses the heap state BEFORE this group; the heapq pass below is
-            # exact), then lexsort-cap to k so the Python loop runs <= k times
-            # per visited group instead of once per surviving doc
-            if len(heap) >= k:
-                th, tie_nd = heap[0]
-                keep = (scores > th) | ((scores == th) & (-ids > tie_nd))
-                if not keep.all():
-                    scores, ids = scores[keep], ids[keep]
-            if scores.size > k:
-                sel = np.lexsort((ids, -scores))[:k]
-                scores, ids = scores[sel], ids[sel]
-            for sc, nd in zip(scores.tolist(), (-ids).tolist()):
-                if len(heap) < k:
-                    heapq.heappush(heap, (sc, nd))
-                elif (sc, nd) > heap[0]:
-                    heapq.heapreplace(heap, (sc, nd))
-        return _topk_frame(query_id, sorted(((sc, -nd) for sc, nd in heap), key=lambda x: (-x[0], x[1])))
-
-    return _body(pdf)
+    starts = np.flatnonzero(np.concatenate(([True], groups[1:] != groups[:-1])))
+    ends = np.append(starts[1:], groups.size)
+    group_ids = groups[starts]
+    visit = np.argsort(-g_ub.loc[group_ids].values, kind="stable")
+    docs_enc = pdf["docs_enc"].values
+    tfs_enc = pdf["tfs_enc"].values
+    ndocs_col = pdf["n_docs"].values.astype(np.int64)
+    idfs = pdf["idf"].values
+    for vi in visit:
+        s, e = starts[vi], ends[vi]
+        # strict inequality: a group whose bound EQUALS the threshold may
+        # still contain a doc with score == theta and a smaller doc_id,
+        # which wins the deterministic (score desc, doc_id asc) tie-break
+        if g_ub.loc[group_ids[vi]] < theta():
+            continue  # skip decode of the whole doc-group
+        base = int(group_ids[vi]) << DOC_GROUP_BITS
+        # batch-decode every block of the group in one varint pass
+        counts = ndocs_col[s:e]
+        gaps = concat_varint_decode(docs_enc[s:e]).astype(np.int64)
+        d = segmented_gap_cumsum(gaps, counts)
+        t = concat_varint_decode(tfs_enc[s:e]).astype(np.float64)
+        ids_g, dls_g = dl_map[int(group_ids[vi])]
+        l = _group_dls(ids_g, dls_g, d)
+        w = np.repeat(idfs[s:e].astype(np.float64), counts)
+        contrib = w * bm25_tf_norm(t, l, avgdl, K1, B)
+        off = d - base
+        local = np.zeros(1 << DOC_GROUP_BITS, dtype=np.float64)
+        np.add.at(local, off, contrib)  # in row order: query-position order
+        offs = np.unique(off)
+        scores = local[offs]
+        ids = base + offs
+        # vectorized candidate selection: threshold-filter (conservative:
+        # uses the heap state BEFORE this group; the heapq pass below is
+        # exact), then lexsort-cap to k so the Python loop runs <= k times
+        # per visited group instead of once per surviving doc
+        if len(heap) >= k:
+            th, tie_nd = heap[0]
+            keep = (scores > th) | ((scores == th) & (-ids > tie_nd))
+            if not keep.all():
+                scores, ids = scores[keep], ids[keep]
+        if scores.size > k:
+            sel = np.lexsort((ids, -scores))[:k]
+            scores, ids = scores[sel], ids[sel]
+        for sc, nd in zip(scores.tolist(), (-ids).tolist()):
+            if len(heap) < k:
+                heapq.heappush(heap, (sc, nd))
+            elif (sc, nd) > heap[0]:
+                heapq.heapreplace(heap, (sc, nd))
+    return _topk_frame(query_id, sorted(((sc, -nd) for sc, nd in heap), key=lambda x: (-x[0], x[1])))
 
 
 def _topk_frame(query_id: int, rows: list[tuple[float, int]]) -> pd.DataFrame:

@@ -90,9 +90,9 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
     # per-bucket url blooms decide which buckets might contain them BEFORE
     # the locate scan — a delete of absent urls runs zero docs jobs, and a
     # real delete scans only candidate buckets instead of the whole docs
-    # table. The probe itself is driver-cached below the catalog's bloom
-    # byte cap and ONE executor-side job above it (r6 — the driver never
-    # materializes O(corpus) bloom bytes; blooms.candidate_buckets_auto).
+    # table. The probe (blooms.candidate_buckets_auto) runs no Spark job:
+    # it streams the live bloom files through the driver one bitmap at a
+    # time, so driver memory does not grow with the bucket count.
     # DataFrame-shaped url sets (unknown driver-side, e.g. upsert's
     # distinct-url frame) skip the probe and take the full locate scan.
     bloom_cands: list[int] | None = None

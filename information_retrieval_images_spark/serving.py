@@ -171,18 +171,13 @@ def make_http_server(
                 return
             try:
                 results = session.search(q, k=k)
-            except Exception as e:  # surface engine errors as 500 JSON
-                self.send_response(500)
-                self.send_header("Content-Type", "application/json")
-                self.end_headers()
-                self.wfile.write(json.dumps({"error": str(e)[:500]}).encode())
+            except ValueError as e:  # a query the engine refuses (k < 1, too many terms)
+                self._json(400, {"error": str(e)[:500]})
                 return
-            body = json.dumps({"query": q, "k": k, "results": results}).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
+            except Exception as e:  # surface engine errors as 500 JSON
+                self._json(500, {"error": str(e)[:500]})
+                return
+            self._json(200, {"query": q, "k": k, "results": results})
 
         def log_message(self, *args):  # quiet: the driver log is the log
             pass

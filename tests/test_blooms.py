@@ -1,27 +1,53 @@
 """Per-bucket url bloom filters (blooms.py): the delete-path locate-scan
 pruning structure (VERDICT r3 what's-wrong #4 / next-round #7)."""
 
-import numpy as np
+import hashlib
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from information_retrieval_images_spark import fixtures
 from information_retrieval_images_spark.blooms import (
-    bloom_contains,
+    BLOOM_FILE,
+    _hash_pairs,
     build_bloom,
-    candidate_buckets,
+    candidate_buckets_auto,
+    may_contain,
+    write_bucket_bloom,
 )
 from information_retrieval_images_spark.catalog import Catalog
 from information_retrieval_images_spark.operators.index_build import build_index
 from information_retrieval_images_spark.operators.maintenance import delete_docs
+
+ABSENT_URL = "https://definitely-not-indexed.example/nope"
+
+
+def _pairs(urls):
+    return _hash_pairs([hashlib.md5(u.encode("utf-8")).digest() for u in urls])
+
+
+def _jobs_in_group(spark, fn):
+    """(fn(), ids of the Spark jobs fn submitted from this thread)."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
 
 
 def test_bloom_no_false_negatives_and_sane_fp_rate(spark):
     urls = [f"https://site{i % 7}.example/x/{i:06d}" for i in range(1500)]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     m, k, bits = build_bloom(df, len(urls))
-    assert all(bloom_contains(m, bits, u) for u in urls), "false negative"
+    assert may_contain(m, bits, _pairs(urls)).all(), "false negative"
     absent = [f"https://other.example/y/{i:06d}" for i in range(2000)]
-    fp = sum(bloom_contains(m, bits, u) for u in absent) / len(absent)
+    fp = may_contain(m, bits, _pairs(absent)).mean()
     assert fp < 0.05, fp  # 10 bits/key, 7 hashes -> ~0.8% expected
 
 
@@ -44,8 +70,52 @@ def test_delete_of_absent_url_reads_zero_docs_buckets(spark, built, monkeypatch)
         return orig_read(name)
 
     monkeypatch.setattr(cat, "read", guarded)
-    res = delete_docs(spark, cat, ["https://definitely-not-indexed.example/nope"])
+    res, jobs = _jobs_in_group(spark, lambda: delete_docs(spark, cat, [ABSENT_URL]))
     assert res == {"n_deleted": 0, "buckets": [], "bloom_pruned": True}
+    assert jobs == []
+
+
+def test_probe_keeps_every_bucket_that_holds_a_url(built):
+    """Checked against ``docs``: a present url, the absent url and a mixed
+    list each keep the bucket that holds the url, and no indexed url's
+    bucket is ever dropped."""
+    cat, _ = built
+    docs = cat.read("docs").select("url", "bucket").toPandas()
+    bucket_of = dict(zip(docs["url"], docs["bucket"].astype(int)))
+    assert set(bucket_of.values()) == {0, 1, 2}
+    present = docs["url"].iloc[0]
+    assert bucket_of[present] in candidate_buckets_auto(cat, {0, 1, 2}, [present])
+    assert candidate_buckets_auto(cat, {0, 1, 2}, [ABSENT_URL]) == []
+    mixed = [ABSENT_URL, docs["url"].iloc[1], docs["url"].iloc[-1]]
+    cands = candidate_buckets_auto(cat, {0, 1, 2}, mixed)
+    assert cands == sorted(cands)
+    assert {bucket_of[u] for u in mixed[1:]} <= set(cands)
+    for url, b in bucket_of.items():
+        assert b in candidate_buckets_auto(cat, {0, 1, 2}, [url]), url
+    # only the buckets asked about are probed and returned
+    assert candidate_buckets_auto(cat, {bucket_of[present]}, [present]) == [bucket_of[present]]
+
+
+def test_probe_runs_no_job_and_reads_each_bloom_once(spark, built, monkeypatch):
+    """The probe is driver-side: zero Spark jobs, and exactly one pyarrow
+    read of each live bloom file per call (no cache across calls)."""
+    cat, pdf = built
+    reads = []
+    orig = pq.read_table
+
+    def counting(path, *a, **kw):
+        reads.append(path)
+        return orig(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "read_table", counting)
+    urls = list(pdf["url"].iloc[:50]) + [ABSENT_URL]
+    want = sorted(os.path.join(d, BLOOM_FILE) for d in cat.version_dirs("blooms").values())
+    for _ in range(2):
+        reads.clear()
+        cands, jobs = _jobs_in_group(spark, lambda: candidate_buckets_auto(cat, {0, 1, 2}, urls))
+        assert jobs == []
+        assert cands == [0, 1, 2]
+        assert sorted(reads) == want
 
 
 def test_delete_scan_prunes_to_candidate_buckets(spark, built):
@@ -55,36 +125,38 @@ def test_delete_scan_prunes_to_candidate_buckets(spark, built):
     cat, pdf = built
     en = pdf[pdf["lang"] == "en"]
     victim = en["url"].iloc[0]
-    blooms = cat.bucket_blooms()
-    assert set(blooms) == {0, 1, 2}
-    cands = candidate_buckets(blooms, {0, 1, 2}, [victim])
+    assert set(cat.version_dirs("blooms")) == {0, 1, 2}
+    cands = candidate_buckets_auto(cat, {0, 1, 2}, [victim])
     res = delete_docs(spark, cat, [victim])
     assert res["n_deleted"] == 1
     assert set(res["buckets"]) <= set(cands)
-    # blooms were rewritten with the bucket (rewrite unit): fresh catalog
-    # sees a bloom set consistent with the surviving docs
+    # blooms were rewritten with the bucket (rewrite unit): a fresh catalog
+    # pins every bucket's bloom at the version of its docs
     fresh = Catalog(spark, cat.root)
-    assert set(fresh.bucket_blooms()) == {0, 1, 2}
+    tables = fresh.snapshot().tables
+    assert set(tables["blooms"]) == {0, 1, 2}
+    assert tables["blooms"] == tables["docs"]
 
 
-def test_missing_bloom_is_always_candidate():
-    assert candidate_buckets({}, {0, 1}, ["u"]) == [0, 1]
+def test_missing_bloom_is_always_candidate(spark, tmp_path):
+    """A bucket without a bloom is a candidate; a bloom whose bitmap is
+    empty matches nothing; a snapshot that lists no bloom gives None."""
+    cat = Catalog(spark, str(tmp_path))
+    assert candidate_buckets_auto(cat, {0, 1}, ["u"]) is None
     m = 64
-    bits = bytes(m // 8)  # empty bloom matches nothing
-    assert candidate_buckets({0: (m, bits)}, {0, 1}, ["u"]) == [1]
+    d = cat.version_path("blooms", 0, "v1")
+    os.makedirs(d)
+    empty = {"m": pa.array([m], pa.int64()), "k": pa.array([7], pa.int32()), "bits": pa.array([bytes(m // 8)])}
+    pq.write_table(pa.table(empty), os.path.join(d, BLOOM_FILE))
+    cat.commit({"job": "test"}, tables={"blooms": {0: "v1"}})
+    assert candidate_buckets_auto(cat, {0, 1}, ["u"]) == [1]
 
 
 def test_bloom_file_has_no_statistics_and_round_trips(spark, tmp_path):
     """A bloom file stores its bitmap once: the ``bits`` column chunk
     carries no min/max (a binary min/max would copy the bitmap into the
-    page header and the footer, about 7x the file), and load_blooms reads
-    back exactly the bitmap build_bloom made."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from information_retrieval_images_spark.blooms import BLOOM_FILE, load_blooms, write_bucket_bloom
-
+    page header and the footer, about 7x the file), it reads back exactly
+    the bitmap build_bloom made, and the probe finds its urls."""
     urls = [f"https://site{i % 7}.example/x/{i:06d}" for i in range(3000)]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
     cat = Catalog(spark, str(tmp_path))
@@ -94,9 +166,10 @@ def test_bloom_file_has_no_statistics_and_round_trips(spark, tmp_path):
     meta = pq.ParquetFile(path).metadata
     chunk = meta.row_group(0).column(meta.schema.names.index("bits"))
     assert chunk.statistics is None or not chunk.statistics.has_min_max
-    m, _, bits = build_bloom(df, len(urls))
+    m, k, bits = build_bloom(df, len(urls))
     assert os.path.getsize(path) < 2 * len(bits)
-    assert load_blooms(cat) == {4: (m, bits)}
+    assert pq.read_table(path).to_pylist() == [{"m": m, "k": k, "bits": bits}]
+    assert candidate_buckets_auto(cat, {4}, urls[:5]) == [4]
 
 
 def test_tree_reduce_bloom_path_identical(spark):
@@ -109,57 +182,4 @@ def test_tree_reduce_bloom_path_identical(spark):
     m2, k2, bits2 = build_bloom(df, len(urls), tree_reduce_min_bytes=0)  # tree path
     assert (m1, k1) == (m2, k2)
     assert bits1 == bits2
-    assert all(bloom_contains(m2, bits2, u) for u in urls), "false negative"
-
-
-def test_distributed_probe_matches_driver_probe(spark, built):
-    """The executor-side membership probe (cap exceeded) returns the same
-    candidate sets as the driver-side bitmap probe, for present and absent
-    urls — same double-hash family, vectorized."""
-    from information_retrieval_images_spark.blooms import (
-        candidate_buckets_distributed,
-    )
-
-    cat, pdf = built
-    urls = [pdf["url"].iloc[0], pdf["url"].iloc[37], "https://absent.example/z"]
-    blooms = cat.bucket_blooms()
-    for probe_urls in ([urls[0]], [urls[1]], [urls[2]], urls):
-        want = candidate_buckets(blooms, {0, 1, 2}, probe_urls)
-        got = candidate_buckets_distributed(cat, {0, 1, 2}, probe_urls)
-        assert got == want, (probe_urls, got, want)
-
-
-def test_bloom_cap_forces_executor_probe_and_keeps_delete_green(
-    spark, corpus_free_wh, monkeypatch
-):
-    """VERDICT r5 next-round #1 done-bar: with the driver cache cap forced
-    to 0, (a) a delete of absent urls runs the probe job but never scans
-    docs, (b) a real delete stays correct, (c) the driver cache never
-    materializes a bitmap."""
-    cat, pdf = corpus_free_wh
-    monkeypatch.setattr(cat, "bloom_driver_cache_cap", 0)
-    orig_read = cat.read
-
-    def guarded(name):
-        assert name != "docs", "capped probe must not touch the docs table"
-        return orig_read(name)
-
-    monkeypatch.setattr(cat, "read", guarded)
-    res = delete_docs(spark, cat, ["https://definitely-not-indexed.example/nope"])
-    assert res == {"n_deleted": 0, "buckets": [], "bloom_pruned": True}
-    assert cat.snapshot().blooms is None, "driver bloom cache materialized despite cap"
-
-    monkeypatch.setattr(cat, "read", orig_read)
-    victim = pdf[pdf["lang"] == "en"]["url"].iloc[0]
-    res = delete_docs(spark, cat, [victim])
-    assert res["n_deleted"] == 1
-    assert cat.snapshot().blooms is None, "driver bloom cache materialized despite cap"
-
-
-@pytest.fixture()
-def corpus_free_wh(spark, tmp_path_factory):
-    """Function-scoped build (the cap test mutates the warehouse)."""
-    pdf = fixtures.make_pages_pandas(120)
-    cat = Catalog(spark, str(tmp_path_factory.mktemp("bloomcapwh")))
-    build_index(spark, spark.createDataFrame(pdf), cat, n_buckets=3)
-    return cat, pdf
+    assert may_contain(m2, bits2, _pairs(urls)).all(), "false negative"

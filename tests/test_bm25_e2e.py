@@ -350,6 +350,26 @@ def test_query_term_guard(spark, built, monkeypatch):
         bm25_topk_wand(spark, cat, qdf).count()
 
 
+@pytest.mark.parametrize("k", [0, -1])
+def test_search_rejects_k_below_one(spark, built, k):
+    """A top-k needs k >= 1: bm25_search raises ValueError before scoring
+    (the kernel's threshold would read the top of an empty heap)."""
+    cat, _ = built
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        bm25_search(spark, cat, "term000000 term000003", k=k)
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_topk_wand_rejects_k_below_one(spark, built, k):
+    """The batch entry point refuses a batch holding any query with k < 1,
+    on the driver path (one query) and the Spark plan (two queries)."""
+    cat, _ = built
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        bm25_topk_wand(spark, cat, [(0, "term000000", k)])
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        bm25_topk_wand(spark, cat, [(0, "term000000", 10), (1, "term000003", k)])
+
+
 def test_wand_task_cap_scales_with_parallelism_and_identity_holds(spark, corpus, built):
     """Scale-derived fan-out cap (VERDICT r2 what's-wrong #3): the ceiling
     derives from cluster parallelism (4 waves of defaultParallelism, floored

@@ -207,3 +207,19 @@ def test_vacuum_after_grace_period_only(spark, tmp_path_factory, monkeypatch):
     kept = full[~full["url"].isin(first + second)]
     fresh = SearchSession(spark, cat.root)
     assert _same(_search(fresh), _oracle(kept))
+
+
+def test_read_raises_when_a_listed_version_is_missing(spark, tmp_path):
+    """A version directory the manifest lists but the disk lacks (e.g.
+    vacuumed under a reader pinned past the grace period) fails the read
+    with its path, instead of returning a table without that bucket."""
+    import shutil
+
+    cat = Catalog(spark, str(tmp_path))
+    build_index(spark, spark.createDataFrame(fixtures.make_pages_pandas(40)), cat, n_buckets=2)
+    assert cat.read("docs").count() > 0
+    gone = cat.version_dirs("docs")[1]
+    shutil.rmtree(gone)
+    with pytest.raises(FileNotFoundError, match="missing") as ei:
+        Catalog(spark, cat.root).read("docs")
+    assert gone in str(ei.value)

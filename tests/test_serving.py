@@ -63,6 +63,37 @@ def test_http_search_endpoint(served):
         srv.server_close()
 
 
+def test_http_search_error_replies_are_json(served, monkeypatch):
+    """k < 1 is the client's error: 400 with a JSON body. An engine failure
+    is a 500 JSON reply that, like every JSON reply, carries its
+    Content-Length."""
+    session, _ = served
+    srv = make_http_server(session, port=0)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    try:
+        port = srv.server_address[1]
+        for k in (0, -1):
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(f"http://127.0.0.1:{port}/search?q=term000001&k={k}")
+            assert ei.value.code == 400
+            assert "k must be >= 1" in json.loads(ei.value.read())["error"]
+
+        def broken(q, k=10):
+            raise RuntimeError("engine down")
+
+        monkeypatch.setattr(session, "search", broken)
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            urllib.request.urlopen(f"http://127.0.0.1:{port}/search?q=term000001")
+        assert ei.value.code == 500
+        body = ei.value.read()
+        assert int(ei.value.headers["Content-Length"]) == len(body)
+        assert json.loads(body) == {"error": "engine down"}
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
 def test_http_append_roundtrip(spark, tmp_path_factory):
     """Ingest over HTTP then query over HTTP (VERDICT r3 next #8): the
     appended page is immediately searchable and the combined corpus stays
