@@ -375,9 +375,18 @@ class Catalog:
         pruning when ``tp_of`` is given); absent terms are cached as 0 so
         repeat queries with unknown terms stay job-free. The memo is capped
         to bound driver memory.
+
+        Another thread may clear the shared memo at any time (its fetch
+        overflowed the cap), so the answer is built from this call's own
+        reads: each memo hit is read once, each miss comes from the fetch.
         """
         with self.pinned() as snap:
-            missing = [t for t in terms if t not in snap.term_df]
+            dfs = {}
+            for t in terms:
+                df = snap.term_df.get(t)
+                if df is not None:
+                    dfs[t] = df
+            missing = [t for t in terms if t not in dfs]
             if missing:
                 blocks = self.read("postings").where(F.col("term").isin(missing))
                 if tp_of is not None:
@@ -387,8 +396,8 @@ class Catalog:
                 if len(snap.term_df) + len(missing) > self._term_df_cap:
                     snap.term_df.clear()
                 for t in missing:
-                    snap.term_df[t] = found.get(t, 0)
-            return {t: snap.term_df.get(t, 0) for t in terms}
+                    dfs[t] = snap.term_df[t] = found.get(t, 0)
+            return {t: dfs[t] for t in terms}
 
     # --- table IO ---------------------------------------------------------------
 

@@ -13,9 +13,11 @@ bit-identical scores: a doc's score adds one ``idf * tf_norm`` term per
 query-token occurrence, in query-position order, as the oracle does.
 
 One query with fan-out 1 (matched volume <= ``postings_per_task``) on
-directory postings is scored IN THE DRIVER over pyarrow reads of the pinned
-manifest's files, urls included: a warm :func:`bm25_search` runs no Spark
-job. Batches, fan-out above 1 and Iceberg postings run the Spark plan.
+directory postings is scored IN THE DRIVER over a pyarrow read of the
+pinned manifest's postings files, with numpy arrays and no pandas frame: a
+warm :func:`bm25_search_records` runs no Spark job. The kernel is the
+Spark plan's, called with the one task's arrays. Batches, fan-out above 1
+and Iceberg postings run the Spark plan.
 
 Scale notes (100 TB): the postings scan is pruned at the directory level by
 the term-prefix (tp) partition and at the row-group level by the pushed
@@ -26,11 +28,13 @@ contract is the (query_id, rank) key. ``postings_per_task`` splits a query's
 doc-groups across executors so a head-term query does not serialize on one
 task, and bounds the driver path's memory. The driver path lists each
 version directory once per snapshot (Catalog.version_files), so a warm
-query makes no directory listing. The driver's url read prunes to
-the top-k docs' buckets; every ``docs`` file is sorted by doc_id but still
-spans nearly the whole doc_id range of its bucket, so its doc_id row-group
-pruning still opens about one row group per file. A query pins one catalog
-snapshot (catalog.py), so a concurrent commit never changes its inputs.
+query makes no directory listing. A result's urls come from the
+doc-group cache that also holds the groups' dls (_load_group_dls), so a
+warm query opens no ``docs`` file. A cold group still reads every ``docs``
+file of its bucket: each is sorted by doc_id but spans nearly the whole
+doc_id range of the bucket, so the doc_id row-group pruning opens about
+one row group per file. A query pins one catalog snapshot (catalog.py), so
+a concurrent commit never changes its inputs.
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ from collections import Counter
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -52,39 +57,45 @@ from pyspark.sql import functions as F
 from .. import K1, B
 from ..catalog import Catalog
 from ..codec import concat_varint_decode, segmented_gap_cumsum
-from ..textproc import bm25_idf, bm25_tf_norm, tokenize_series
+from ..textproc import bm25_idf, bm25_tf_norm, tokenize
 from .index_build import DOC_GROUP_BITS, term_prefix
 
 RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 
 
-# Process-wide cache of per-doc-group (doc_ids, dls) arrays read from the
+# Process-wide cache of per-doc-group (doc_ids, dls, urls) read from the
 # ``docs`` table (guide §4.5: heavyweight per-task state amortized across
 # tasks via worker reuse): for a 50-query batch the same few dozen groups
-# would otherwise be read hundreds of times per run. Keyed by the bucket's
-# docs version directory: a version is immutable (catalog.py), so an entry
-# can never go stale; a rewritten bucket is a new directory and its old
-# entry ages out of the LRU. Driver-side queries share it across request
-# threads, so one lock guards lookup, fill and eviction; the parquet read
-# runs outside it.
-_DL_CACHE: dict[str, dict[int, tuple[np.ndarray, np.ndarray]]] = {}
+# would otherwise be read hundreds of times per run, and a warm driver query
+# takes its dls and its result's urls from it without opening a docs file.
+# Keyed by the bucket's docs version directory: a version is immutable
+# (catalog.py), so an entry can never go stale; a rewritten bucket is a new
+# directory and its old entry ages out of the LRU. Driver-side queries share
+# it across request threads, so one lock guards lookup, fill and eviction;
+# the parquet read runs outside it.
+_DL_CACHE: dict[str, dict[int, tuple[np.ndarray, np.ndarray, pa.Array]]] = {}
 _DL_CACHE_BYTES = [0]
-_DL_CACHE_MAX_BYTES = 256 << 20  # the arrays are 16 B/doc; LRU-bounded
+_DL_CACHE_MAX_BYTES = 256 << 20  # 16 B/doc of arrays plus the url bytes; LRU-bounded
 _DL_LOCK = threading.Lock()
+
+
+def _entry_nbytes(entry: tuple[np.ndarray, np.ndarray, pa.Array]) -> int:
+    ids, dls, urls = entry
+    return ids.nbytes + dls.nbytes + urls.nbytes  # a slice counts only its own range
 
 
 def _load_group_dls(
     dirs: dict[int, str], pairs: set[tuple[int, int]]
-) -> dict[int, tuple[np.ndarray, np.ndarray]]:
-    """doc_group -> (sorted doc_ids, dls) for the requested (bucket, group)
-    pairs, merged across buckets (consecutive doc ids round-robin over
-    buckets, so one group's docs span several buckets). ``dirs`` maps each
-    bucket to its docs version directory.
+) -> dict[int, tuple[np.ndarray, np.ndarray, pa.Array]]:
+    """doc_group -> (sorted doc_ids, dls, urls) for the requested (bucket,
+    group) pairs, merged across buckets (consecutive doc ids round-robin
+    over buckets, so one group's docs span several buckets). ``dirs`` maps
+    each bucket to its docs version directory.
 
-    A pyarrow point read (in an executor or the driver) of ``(doc_id, dl)``
-    from ``docs``, with one pushed doc_id range per requested group: every
-    docs file is sorted by doc_id, so parquet row-group min/max pruning
-    skips to the groups' rows. Discovery is scoped to the CANDIDATE
+    A pyarrow point read (in an executor or the driver) of ``(doc_id, dl,
+    url)`` from ``docs``, with one pushed doc_id range per requested group:
+    every docs file is sorted by doc_id, so parquet row-group min/max
+    pruning skips to the groups' rows. Discovery is scoped to the CANDIDATE
     buckets' version directories: a dataset over the docs root would list
     every bucket directory before pruning — O(buckets) metadata RPCs per
     query on object storage at 10^4-10^5 buckets. Each candidate directory
@@ -94,7 +105,7 @@ def _load_group_dls(
     by_bucket: dict[int, set[int]] = {}
     for b, g in pairs:
         by_bucket.setdefault(int(b), set()).add(int(g))
-    per_group: dict[int, list[tuple[np.ndarray, np.ndarray]]] = {}
+    per_group: dict[int, list[tuple[np.ndarray, np.ndarray, pa.Array]]] = {}
     for b in sorted(by_bucket):
         key = dirs[b]
         with _DL_LOCK:  # the entry moves to the LRU end
@@ -104,39 +115,39 @@ def _load_group_dls(
         if missing:
             doc_id = ds.field("doc_id")
             ranges = [(doc_id >= (g << DOC_GROUP_BITS)) & (doc_id < ((g + 1) << DOC_GROUP_BITS)) for g in missing]
-            tbl = ds.dataset(key, format="parquet").to_table(
-                columns=["doc_id", "dl"], filter=functools.reduce(operator.or_, ranges)
+            tbl = (
+                ds.dataset(key, format="parquet")
+                .to_table(columns=["doc_id", "dl", "url"], filter=functools.reduce(operator.or_, ranges))
+                .sort_by("doc_id")  # files are sorted, not merged
             )
             ids = tbl["doc_id"].to_numpy().astype(np.int64)
             dls = tbl["dl"].to_numpy().astype(np.int64)
-            order = np.argsort(ids, kind="stable")  # files are sorted, not merged
-            ids, dls = ids[order], dls[order]
+            urls = tbl["url"].combine_chunks()
             cuts = np.searchsorted(ids, [g << DOC_GROUP_BITS for g in missing] + [(missing[-1] + 1) << DOC_GROUP_BITS])
-            for g, s, e in zip(missing, cuts[:-1], cuts[1:]):
+            for g, s, e in zip(missing, cuts[:-1].tolist(), cuts[1:].tolist()):
                 # a group with no row gets empty arrays: the miss is pinned
-                got[g] = (ids[s:e], dls[s:e])
+                got[g] = (ids[s:e], dls[s:e], urls.slice(s, e - s))
             with _DL_LOCK:  # last in LRU order, so never evicted below
                 cached = _DL_CACHE[key] = _DL_CACHE.pop(key, None) or {}
                 for g in missing:
                     if g not in cached:
                         cached[g] = got[g]
-                        _DL_CACHE_BYTES[0] += got[g][0].nbytes + got[g][1].nbytes
+                        _DL_CACHE_BYTES[0] += _entry_nbytes(got[g])
                 while _DL_CACHE_BYTES[0] > _DL_CACHE_MAX_BYTES and len(_DL_CACHE) > 1:
                     evicted = _DL_CACHE.pop(next(iter(_DL_CACHE)))
-                    _DL_CACHE_BYTES[0] -= sum(i.nbytes + d.nbytes for i, d in evicted.values())
-        for g, (ids, dls) in got.items():
-            if ids.size:
-                per_group.setdefault(g, []).append((ids, dls))
-    out: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+                    _DL_CACHE_BYTES[0] -= sum(map(_entry_nbytes, evicted.values()))
+        for g, entry in got.items():
+            if entry[0].size:
+                per_group.setdefault(g, []).append(entry)
+    out: dict[int, tuple[np.ndarray, np.ndarray, pa.Array]] = {}
     for g, parts in per_group.items():
         if len(parts) == 1:
-            ids, dls = parts[0]
+            out[g] = parts[0]
         else:
             ids = np.concatenate([p[0] for p in parts])
-            dls = np.concatenate([p[1] for p in parts])
-            order = np.argsort(ids)
-            ids, dls = ids[order], dls[order]
-        out[g] = (ids, dls)
+            order = np.argsort(ids, kind="stable")
+            dls = np.concatenate([p[1] for p in parts])[order]
+            out[g] = (ids[order], dls, pa.concat_arrays([p[2] for p in parts]).take(order))
     return out
 
 
@@ -194,14 +205,14 @@ def _query_rows(queries) -> list[tuple[int, str, int]]:
 def _query_term_rows(qrows: list[tuple[int, str, int]]) -> list[tuple[int, str, int, int, int]]:
     """[(query_id, query_text, k)] -> [(query_id, term, qpos, qtf, k)], one
     row per query-token occurrence at position qpos, tokenized ON THE
-    DRIVER with the same kernel the build uses (bag semantics: a term
-    repeated in the query contributes once per occurrence, like the
-    oracle). Queries are tiny by construction — a Spark stage to tokenize
+    DRIVER by textproc.tokenize, the analyzer of the build and the oracle
+    (bag semantics: a term repeated in the query contributes once per
+    occurrence, like the oracle). Queries are tiny by construction — a Spark stage to tokenize
     them costs a full job round-trip per invocation, which dominated
     single-query latency (VERDICT r2 what's-wrong #2)."""
-    toks = tokenize_series(pd.Series([t for _, t, _ in qrows], dtype=object))
     out: list[tuple[int, str, int, int, int]] = []
-    for (qid, _, k), tlist in zip(qrows, toks):
+    for qid, text, k in qrows:
+        tlist = tokenize(text)
         qtf = Counter(tlist)
         out.extend((qid, t, pos, qtf[t], k) for pos, t in enumerate(tlist))
     return out
@@ -268,7 +279,7 @@ def _block_ub(max_tf, min_dl, idf, qtf, avgdl: float):
     """Per-block score upper bound from (max_tf, min_dl) under the CURRENT
     avgdl — a true bound even when blocks were encoded under older
     collection statistics (incremental appends); see
-    index_build.POSTINGS_SCHEMA. Takes Spark Columns or pandas Series."""
+    index_build.POSTINGS_SCHEMA. Takes Spark Columns or numpy arrays."""
     return idf * ((max_tf * (K1 + 1.0)) / (max_tf + K1 * (1.0 - B + B * min_dl / avgdl))) * qtf
 
 
@@ -327,23 +338,34 @@ def bm25_topk_wand(
         qbatch = _query_rows(queries)
         meta, in_driver = _route(catalog, qbatch, postings_per_task)
         if in_driver:
-            return spark.createDataFrame(_wand_driver_topk(catalog, qbatch[0], meta), RESULT_SCHEMA)
+            top = _wand_driver_topk(catalog, qbatch[0], meta)
+            return spark.createDataFrame(_topk_frame(qbatch[0][0], [(d, sc) for d, _, sc in top]), RESULT_SCHEMA)
         return _wand_plan(spark, catalog, qbatch, meta, postings_per_task)
 
 
-def bm25_search(spark: SparkSession, catalog: Catalog, query_text: str, k: int = 10) -> pd.DataFrame:
-    """One query -> its ranked top-k as a pandas frame (rank, doc_id, url,
-    bm25_score), from one pinned snapshot: the serving entry point. Scored
-    in the driver when _route allows (a warm call runs no Spark job), else
-    by the Spark plan plus :func:`attach_urls`."""
+SEARCH_COLUMNS = ["rank", "doc_id", "url", "bm25_score"]
+
+
+def bm25_search_records(spark: SparkSession, catalog: Catalog, query_text: str, k: int = 10) -> list[dict]:
+    """One query -> its ranked top-k as records {rank, doc_id, url,
+    bm25_score}, from one pinned snapshot: the serving entry point. Scored
+    in the driver when _route allows (a warm call runs no Spark job and
+    builds no pandas frame), else by the Spark plan plus
+    :func:`attach_urls`."""
     qbatch = [(0, query_text, int(k))]
     with catalog.pinned():
         meta, in_driver = _route(catalog, qbatch, POSTINGS_PER_TASK)
         if in_driver:
-            top = _wand_driver_topk(catalog, qbatch[0], meta, urls=True)
-        else:
-            top = attach_urls(_wand_plan(spark, catalog, qbatch, meta, POSTINGS_PER_TASK), catalog).toPandas()
-    return top.sort_values("rank")[["rank", "doc_id", "url", "bm25_score"]].reset_index(drop=True)
+            top = _wand_driver_topk(catalog, qbatch[0], meta)
+            return [dict(zip(SEARCH_COLUMNS, (rank, *row))) for rank, row in enumerate(top, 1)]
+        top = attach_urls(_wand_plan(spark, catalog, qbatch, meta, POSTINGS_PER_TASK), catalog).toPandas()
+    return top.sort_values("rank")[SEARCH_COLUMNS].to_dict("records")
+
+
+def bm25_search(spark: SparkSession, catalog: Catalog, query_text: str, k: int = 10) -> pd.DataFrame:
+    """:func:`bm25_search_records` as a pandas frame (rank, doc_id, url,
+    bm25_score)."""
+    return pd.DataFrame(bm25_search_records(spark, catalog, query_text, k), columns=SEARCH_COLUMNS)
 
 
 def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per_task: int) -> DataFrame:
@@ -374,10 +396,13 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per
     dl_root = catalog.path("docs")
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _wand_task_kernel(pdf, avgdl, dl_root)
+        return _wand_frame_kernel(pdf, avgdl, dl_root)
 
-    cols = ["query_id", "k", "term", "qpos", "idf", "ub", "first_doc", "n_docs", "bucket", "v", "docs_enc", "tfs_enc"]
-    local_topk = blocks.select(*cols, "task").groupBy("query_id", "task").applyInPandas(kernel, schema=RESULT_SCHEMA)
+    local_topk = (
+        blocks.select("query_id", "k", *_KERNEL_COLUMNS, "task")
+        .groupBy("query_id", "task")
+        .applyInPandas(kernel, schema=RESULT_SCHEMA)
+    )
     if single_task:
         # every query has fan-out 1, so each kernel's local top-k IS the
         # final ranked top-k (rank column included) — skip the global-rank
@@ -394,7 +419,7 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per
         # no global orderBy: a result sort is one more exchange + job per
         # query (interactive latency), and the result contract is the
         # (query_id, rank) KEY, not row order — callers that render sort
-        # the <= n_queries*k rows driver-side (bm25_search does)
+        # the <= n_queries*k rows driver-side (bm25_search_records does)
     )
 
 
@@ -402,31 +427,29 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per
 _POSTINGS_PARTITIONING = ds.partitioning(
     pa.schema([("bucket", pa.int32()), ("v", pa.string()), ("tp", pa.int32())]), flavor="hive"
 )
-_POSTINGS_COLUMNS = ["term", "first_doc", "last_doc", "n_docs", "max_tf", "min_dl", "bucket", "v", "docs_enc", "tfs_enc"]
+_POSTINGS_COLUMNS = ["term", "first_doc", "n_docs", "max_tf", "min_dl", "bucket", "v", "docs_enc", "tfs_enc"]
 
 
-def _wand_driver_topk(
-    catalog: Catalog,
-    qrow: tuple[int, str, int],
-    meta,
-    urls: bool = False,
-) -> pd.DataFrame:
-    """Score one fan-out-1 query in the driver: no Spark job. Memory is
-    bounded by the fan-out-1 precondition (matched volume <=
-    postings_per_task).
+def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> list[tuple[int, str, float]]:
+    """Score one fan-out-1 query in the driver: no Spark job and no pandas
+    frame. Memory is bounded by the fan-out-1 precondition (matched volume
+    <= postings_per_task). Returns the ranked (doc_id, url, bm25_score).
 
     pyarrow reads the pinned snapshot's postings, only the query's tp=T
     directories (file lists memoized per snapshot:
     Catalog.version_files), filtered on the term IN-list (row-group min/max on the
-    sorted term column); the shared WAND kernel scores them, dl read and
-    drift check included, with the same floats as the Spark plan and
-    the oracle. With ``urls``, adds a ``url`` column (:func:`_driver_urls`).
+    sorted term column). Each block row becomes one kernel row per
+    occurrence of its term in the query, by index over the Arrow columns,
+    and the shared WAND kernel scores them, dl read and drift check
+    included, with the same floats as the Spark plan and the oracle. The
+    urls come from the doc-group arrays the kernel loaded for the dls, so a
+    warm query opens no ``docs`` file.
     """
-    query_id, _, k = qrow
+    _, _, k = qrow
     term_rows, _, avgdl, _ = meta
-    occ = pd.DataFrame([r[1:4] + r[5:] for r in term_rows], columns=["term", "qpos", "qtf", "idf"])
+    terms = sorted({r[1] for r in term_rows})
     tp_n = catalog.tp_n()
-    tps = sorted({term_prefix(t, tp_n) for t in occ["term"]})
+    tps = sorted({term_prefix(t, tp_n) for t in terms})
     files = [
         f
         for b in sorted(catalog.version_dirs("postings"))
@@ -434,67 +457,66 @@ def _wand_driver_topk(
         for f in catalog.version_files("postings", b, f"tp={tp}")
     ]
     if not files:  # no query term is in the index
-        top = _topk_frame(query_id, [])
-        return top.assign(url=pd.Series(dtype=object)) if urls else top
-    pdf = ds.dataset(
+        return []
+    tbl = ds.dataset(
         files, format="parquet", partitioning=_POSTINGS_PARTITIONING, partition_base_dir=catalog.path("postings")
-    ).to_table(columns=_POSTINGS_COLUMNS, filter=ds.field("term").isin(list(set(occ["term"])))).to_pandas()
-    pdf = pdf.merge(occ, on="term")  # one copy of a block per occurrence of its term
-    pdf["ub"] = _block_ub(pdf["max_tf"], pdf["min_dl"], pdf["idf"], pdf["qtf"], avgdl)
-    pdf["query_id"] = np.int32(query_id)
-    pdf["k"] = np.int32(k)
-    top = _wand_task_kernel(pdf, avgdl, catalog.path("docs"))
-    if urls:
-        top["url"] = _driver_urls(catalog, top["doc_id"].to_numpy(), pdf)
-    return top
+    ).to_table(columns=_POSTINGS_COLUMNS, filter=ds.field("term").isin(terms))
+    # one copy of a block per occurrence of its term: (occurrence, block row) pairs
+    row_term = pc.index_in(tbl["term"], value_set=pa.array(terms)).to_numpy()
+    _, occ_term, qpos, qtf, _, idf = map(np.array, zip(*term_rows))
+    occ, row = np.nonzero(np.searchsorted(terms, occ_term)[:, None] == row_term)
+    cols = {c: tbl[c].to_numpy()[row] for c in _POSTINGS_COLUMNS[1:]}
+    cols.update(term=row_term[row], qpos=qpos[occ], idf=idf[occ])
+    cols["ub"] = _block_ub(cols.pop("max_tf"), cols.pop("min_dl"), cols["idf"], qtf[occ], avgdl)
+    ranked, groups = _wand_task_kernel(cols, k, avgdl, catalog.path("docs"))
+    out = []
+    for d, score in ranked:  # every scored doc has its row in its group's arrays
+        ids, _, urls = groups[d >> DOC_GROUP_BITS]
+        out.append((d, urls[int(np.searchsorted(ids, d))].as_py(), score))
+    return out
 
 
-def _driver_urls(catalog: Catalog, doc_ids: np.ndarray, blocks: pd.DataFrame) -> list:
-    """url per doc id (None if absent, like attach_urls' left join): a
-    pyarrow read of ``docs`` (doc_id, url) filtered on doc_id, over only the
-    buckets whose postings ``blocks`` span one of the ids (a doc's docs row
-    lives in the bucket of its postings)."""
-    spans = (blocks["first_doc"].to_numpy()[:, None] <= doc_ids) & (doc_ids <= blocks["last_doc"].to_numpy()[:, None])
-    buckets = sorted(set(blocks["bucket"].to_numpy()[spans.any(axis=1)].tolist()) & set(catalog.version_dirs("docs")))
-    files = [f for b in buckets for f in catalog.version_files("docs", b)]
-    tbl = ds.dataset(files, format="parquet").to_table(
-        columns=["doc_id", "url"], filter=ds.field("doc_id").isin(doc_ids.tolist())
-    )
-    url_of = dict(zip(tbl["doc_id"].to_pylist(), tbl["url"].to_pylist()))
-    return [url_of.get(d) for d in doc_ids.tolist()]
+# one array per name, one entry per (block, query-token occurrence) row
+_KERNEL_COLUMNS = ("term", "qpos", "idf", "ub", "first_doc", "n_docs", "bucket", "v", "docs_enc", "tfs_enc")
 
 
-def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataFrame:
+def _wand_task_kernel(cols: dict[str, np.ndarray], k: int, avgdl: float, dl_root: str):
     """The per-(query, task) block-max WAND scorer (shared by the Spark
     plan's applyInPandas tasks and the driver path): visits the
     task's doc-groups in descending upper bound, skips decoding any group
     whose bound cannot beat the running top-k threshold, and returns the
-    ranked local top-k. Exact — the bound is a true upper bound. Requires
-    ALL of the task's blocks in one frame: group skipping aggregates scores
-    across a group's blocks, so a group split across calls would drop
-    contributions.
+    ranked local top-k as [(doc_id, bm25_score)] plus the doc-group arrays
+    it loaded (group -> (doc_ids, dls, urls), see _load_group_dls). Exact —
+    the bound is a true upper bound. Requires ALL of the task's blocks:
+    group skipping aggregates scores across a group's blocks, so a group
+    split across calls would drop contributions.
 
-    A frame holds one copy of a block per occurrence of its term in the
-    query (``qpos``). Each group's blocks are decoded in query-position
-    order and every posting adds ``idf * tf_norm`` to its doc in that
-    order, so a score is the oracle's sum, float for float, whatever the
-    row order of the frame or the task split."""
-    query_id = int(pdf["query_id"].iloc[0])
-    k = int(pdf["k"].iloc[0])
-    groups = (pdf["first_doc"].values >> DOC_GROUP_BITS).astype(np.int64)
-    order = np.lexsort((pdf["qpos"].values, groups))
-    pdf = pdf.iloc[order]
+    ``cols`` maps each _KERNEL_COLUMNS name to an array with one entry per
+    copy of a block per occurrence of its term in the query (``qpos``).
+    Each group's blocks are decoded in query-position order and every
+    posting adds ``idf * tf_norm`` to its doc in that order, so a score is
+    the oracle's sum, float for float, whatever the row order of the arrays
+    or the task split."""
+    groups = cols["first_doc"].astype(np.int64) >> DOC_GROUP_BITS
+    order = np.lexsort((cols["qpos"], groups))
     groups = groups[order]
+    starts = np.flatnonzero(np.concatenate(([True], groups[1:] != groups[:-1])))
+    ends = np.append(starts[1:], groups.size)
+    group_ids = groups[starts]
     # per-group upper bound = sum over terms of the max block ub in group
-    gdf = pd.DataFrame({"g": groups, "term": pdf["term"].values, "ub": pdf["ub"].values})
-    g_ub = gdf.groupby(["g", "term"])["ub"].max().groupby(level=0).sum()
+    # (every ub is >= 0: idf > 0)
+    terms = np.unique(cols["term"], return_inverse=True)[1][order]
+    best = np.zeros((group_ids.size, int(terms.max()) + 1))
+    np.maximum.at(best, (np.repeat(np.arange(group_ids.size), ends - starts), terms), cols["ub"][order])
+    g_ub = best.sum(axis=1)
     # dl for every (bucket, group) this task may decode — ONE pyarrow
     # point read of docs up front (pruned to the task's doc-groups);
     # loading lazily per visited group would be one IO per group
-    buckets = pdf["bucket"].values.astype(int).tolist()
-    pairs = set(zip(buckets, groups.tolist()))
+    buckets = cols["bucket"].astype(np.int64)
+    pairs = set(zip(buckets[order].tolist(), groups.tolist()))
     # a bucket's postings and docs share one version id (write_bucket)
-    dirs = {b: os.path.join(dl_root, f"bucket={b}", f"v={v}") for b, v in zip(buckets, pdf["v"].values)}
+    _, first = np.unique(buckets, return_index=True)
+    dirs = {int(buckets[i]): os.path.join(dl_root, f"bucket={buckets[i]}", f"v={cols['v'][i]}") for i in first}
     dl_map = _load_group_dls(dirs, pairs)
     # visit groups in descending upper bound: threshold grows fastest
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of size k
@@ -502,20 +524,17 @@ def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataF
     def theta() -> float:
         return heap[0][0] if len(heap) >= k else -np.inf
 
-    starts = np.flatnonzero(np.concatenate(([True], groups[1:] != groups[:-1])))
-    ends = np.append(starts[1:], groups.size)
-    group_ids = groups[starts]
-    visit = np.argsort(-g_ub.loc[group_ids].values, kind="stable")
-    docs_enc = pdf["docs_enc"].values
-    tfs_enc = pdf["tfs_enc"].values
-    ndocs_col = pdf["n_docs"].values.astype(np.int64)
-    idfs = pdf["idf"].values
-    for vi in visit:
+    visit = np.argsort(-g_ub, kind="stable")
+    docs_enc = cols["docs_enc"][order]
+    tfs_enc = cols["tfs_enc"][order]
+    ndocs_col = cols["n_docs"][order].astype(np.int64)
+    idfs = cols["idf"][order].astype(np.float64)
+    for vi in visit.tolist():
         s, e = starts[vi], ends[vi]
         # strict inequality: a group whose bound EQUALS the threshold may
         # still contain a doc with score == theta and a smaller doc_id,
         # which wins the deterministic (score desc, doc_id asc) tie-break
-        if g_ub.loc[group_ids[vi]] < theta():
+        if g_ub[vi] < theta():
             continue  # skip decode of the whole doc-group
         base = int(group_ids[vi]) << DOC_GROUP_BITS
         # batch-decode every block of the group in one varint pass
@@ -523,9 +542,9 @@ def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataF
         gaps = concat_varint_decode(docs_enc[s:e]).astype(np.int64)
         d = segmented_gap_cumsum(gaps, counts)
         t = concat_varint_decode(tfs_enc[s:e]).astype(np.float64)
-        ids_g, dls_g = dl_map[int(group_ids[vi])]
+        ids_g, dls_g, _ = dl_map[int(group_ids[vi])]
         l = _group_dls(ids_g, dls_g, d)
-        w = np.repeat(idfs[s:e].astype(np.float64), counts)
+        w = np.repeat(idfs[s:e], counts)
         contrib = w * bm25_tf_norm(t, l, avgdl, K1, B)
         off = d - base
         local = np.zeros(1 << DOC_GROUP_BITS, dtype=np.float64)
@@ -550,17 +569,25 @@ def _wand_task_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataF
                 heapq.heappush(heap, (sc, nd))
             elif (sc, nd) > heap[0]:
                 heapq.heapreplace(heap, (sc, nd))
-    return _topk_frame(query_id, sorted(((sc, -nd) for sc, nd in heap), key=lambda x: (-x[0], x[1])))
+    return sorted(((-nd, sc) for sc, nd in heap), key=lambda x: (-x[1], x[0])), dl_map
 
 
-def _topk_frame(query_id: int, rows: list[tuple[float, int]]) -> pd.DataFrame:
-    """Ranked [(score, doc_id)] -> the RESULT_SCHEMA-typed pandas frame."""
+def _wand_frame_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataFrame:
+    """The Spark plan's applyInPandas entry: one (query, task) group's
+    block rows -> its ranked local top-k as a RESULT_SCHEMA frame."""
+    cols = {c: pdf[c].to_numpy() for c in _KERNEL_COLUMNS}
+    ranked, _ = _wand_task_kernel(cols, int(pdf["k"].iloc[0]), avgdl, dl_root)
+    return _topk_frame(int(pdf["query_id"].iloc[0]), ranked)
+
+
+def _topk_frame(query_id: int, rows: list[tuple[int, float]]) -> pd.DataFrame:
+    """Ranked [(doc_id, score)] -> the RESULT_SCHEMA-typed pandas frame."""
     return pd.DataFrame(
         {
             "query_id": np.full(len(rows), query_id, dtype=np.int32),
             "rank": np.arange(1, len(rows) + 1, dtype=np.int32),
-            "doc_id": np.array([d for _, d in rows], dtype=np.int64),
-            "bm25_score": np.array([s for s, _ in rows], dtype=np.float64),
+            "doc_id": np.array([d for d, _ in rows], dtype=np.int64),
+            "bm25_score": np.array([s for _, s in rows], dtype=np.float64),
         }
     )
 

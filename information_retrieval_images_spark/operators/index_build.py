@@ -348,8 +348,8 @@ def decoded_runs(catalog: Catalog, postings: DataFrame, drop_ids=()) -> DataFram
             # one sorted array
             groups = sorted(_load_group_dls(dirs, set(map(tuple, pairs.tolist()))).items())
             none = np.empty(0, np.int64)
-            ids = np.concatenate([none] + [i for _, (i, _) in groups])
-            dls = np.concatenate([none] + [dl for _, (_, dl) in groups])
+            ids = np.concatenate([none] + [i for _, (i, _, _) in groups])
+            dls = np.concatenate([none] + [dl for _, (_, dl, _) in groups])
             dl = _group_dls(ids, dls, d).astype(np.int32)
             yield pd.DataFrame({"term": term, "doc_id": d, "tf": tf, "dl": dl})
 

@@ -11,10 +11,10 @@ Two layers:
   one SparkSession + one Catalog whose driver-side metadata caches
   (global stats, per-term df — ``catalog.py``) stay hot across requests,
   so a repeat query whose matched volume fits one task runs no Spark job:
-  ``operators.bm25.bm25_search`` scores it in the driver from the pinned
-  manifest's files. This is the unit the latency contract is written
-  against (the ``perfbench`` ``search`` workload: closed-loop clients on
-  one warm session).
+  ``operators.bm25.bm25_search_records`` scores it in the driver from the
+  pinned manifest's postings files and the cached doc groups. This is the
+  unit the latency contract is written against (the ``perfbench``
+  ``search`` workload: closed-loop clients on one warm session).
   Its :meth:`SearchSession.append` wraps ``operators.incremental.
   append_bucket`` with HTTP-ingest bucket allocation (a dedicated id range,
   disjoint from build and streaming ranges).
@@ -28,8 +28,7 @@ Two layers:
   (fan-out above 1, Iceberg postings) submits its jobs to Spark's FIFO
   scheduler, so concurrent ones queue, and one that arrives during an
   /append waits behind the append's jobs (6,000-page index, local[4]:
-  1.5 s alone, 3.7 s median during an append; with per-write FAIR pools
-  it was 1.3 s and 3.5 s, over 9 and 6 samples). /append
+  1.5 s alone, 3.7 s median during an append, over 9 and 6 samples). /append
   stays serialized behind a lock (each append commits against the
   manifest it read; a concurrent one would fail its commit). Horizontal
   scale beyond one driver comes from read-only replicas over the same
@@ -56,7 +55,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from .catalog import Catalog
-from .operators.bm25 import bm25_search
+from .operators.bm25 import bm25_search_records
 
 # HTTP-ingest buckets count up from here: disjoint from build buckets (small
 # ints), streaming micro-batch buckets (1_000_000 + batch_id) and streaming
@@ -79,8 +78,8 @@ class SearchSession:
 
         Thread-safe: the scoring and the url lookup read one pinned catalog
         snapshot per call, and a warm query with fan-out 1 runs no Spark
-        job (operators.bm25.bm25_search)."""
-        return bm25_search(self.spark, self.catalog, query_text, int(k)).to_dict("records")
+        job (operators.bm25.bm25_search_records)."""
+        return bm25_search_records(self.spark, self.catalog, query_text, int(k))
 
     def append(self, pages: list[dict], bucket: int | None = None, lang: str | None = "en") -> dict:
         """Ingest pages (list of {"url", "html" bytes, "lang", optional

@@ -114,6 +114,37 @@ def test_stats_match_oracle(spark, corpus, built):
     assert dfs == {**{t: len(plist) for t, plist in idx.postings.items()}, absent: 0}
 
 
+class _MemoClearedByAnotherThread(dict):
+    """A df memo that another thread clears (its fetch overflowed the cap)
+    right after each read and each store this call makes."""
+
+    def get(self, key, default=None):
+        value = super().get(key, default)
+        self.clear()
+        return value
+
+    def __setitem__(self, key, value):
+        super().__setitem__(key, value)
+        self.clear()
+
+
+def test_term_dfs_survive_a_concurrent_memo_clear(spark, corpus, built):
+    """Catalog.term_dfs answers from its own reads: a memo cleared between
+    a call's lookup and its return changes none of the dfs it returns, for
+    memo hits and for fetched misses alike (an indexed term read back as 0
+    would silently drop out of the query)."""
+    _, _, idx, _ = corpus
+    cat, _ = built
+    terms = [*sorted(idx.postings)[:5], "zzz-not-indexed"]
+    want = {t: len(idx.postings.get(t, [])) for t in terms}
+    fresh = Catalog(spark, cat.root)
+    snap = fresh.snapshot()
+    snap.term_df = _MemoClearedByAnotherThread()  # every term is a miss
+    assert fresh.term_dfs(terms) == want
+    snap.term_df = _MemoClearedByAnotherThread(want)  # every term is a hit
+    assert fresh.term_dfs(terms) == want
+
+
 def test_wand_rank_identity(spark, corpus, built):
     _, queries, _, expected = corpus
     cat, _ = built
@@ -178,6 +209,70 @@ def test_warm_search_runs_no_spark_job(spark, corpus, built):
     session.search(ABSENT_QUERY)
     got, jobs = _jobs_in_group(spark, lambda: session.search(ABSENT_QUERY))
     assert got == [] and jobs == [], (got, jobs)
+
+
+def test_warm_search_opens_no_docs_file(spark, corpus, built, monkeypatch):
+    """A warm search takes its result's urls from the doc-group cache the
+    kernel filled for the dls: no pyarrow dataset is opened under the docs
+    table, and the urls still equal the oracle's."""
+    import pyarrow.dataset as pads
+
+    _, queries, idx, expected = corpus
+    cat, _ = built
+    session = SearchSession(spark, cat.root)
+    docs_root = cat.path("docs")
+    exp = expected[["query_id", "rank", "doc_id", "bm25_score"]]
+    rows = list(queries.itertuples(index=False))
+    for row in rows:  # cold: term dfs and the doc groups
+        session.search(row.query_text, k=row.k)
+    opened = []
+    orig = pads.dataset
+
+    def spy(source, *a, **kw):
+        opened.extend([source] if isinstance(source, str) else source)
+        return orig(source, *a, **kw)
+
+    monkeypatch.setattr(pads, "dataset", spy)
+    for row in rows:
+        got = session.search(row.query_text, k=row.k)
+        _assert_rank_identical(_search_frame(got, row.query_id), exp[exp["query_id"] == row.query_id])
+        assert [r["url"] for r in got] == [idx.url_of[r["doc_id"]] for r in got]
+    assert opened, "the spy saw no postings read"
+    assert not [p for p in opened if str(p).startswith(docs_root)], opened
+
+
+def test_kernel_is_independent_of_row_order(spark, built, monkeypatch):
+    """Permuting a task's block rows leaves the kernel's ranked (doc_id,
+    bm25_score) list identical, float for float, on the driver entry (the
+    column arrays) and on the Spark plan's applyInPandas wrapper (a frame).
+    The query repeats a term, so equal-qpos and repeated-term rows both
+    move; k=3 keeps the threshold pruning active."""
+    import numpy as np
+
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+
+    cat, _ = built
+    real = bm25_mod._wand_task_kernel
+    calls = []
+    monkeypatch.setattr(
+        bm25_mod, "_wand_task_kernel", lambda cols, *a: calls.append((cols, *a)) or real(cols, *a)
+    )
+    for k in (3, 10):
+        bm25_search(spark, cat, "term000007 term000001 term000007 term000007 term000002", k)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    rng = np.random.default_rng(0)
+    for cols, k, avgdl, dl_root in calls:
+        want = real(cols, k, avgdl, dl_root)[0]
+        assert len(want) == k
+        n = len(cols["qpos"])
+        assert n > 4, n
+        pdf = pd.DataFrame(cols).assign(query_id=0, k=k)
+        for _ in range(5):
+            perm = rng.permutation(n)
+            assert real({c: a[perm] for c, a in cols.items()}, k, avgdl, dl_root)[0] == want
+            top = bm25_mod._wand_frame_kernel(pdf.iloc[perm].reset_index(drop=True), avgdl, dl_root)
+            assert list(zip(top["doc_id"].tolist(), top["bm25_score"].tolist())) == want
 
 
 def test_forced_spark_plan_agrees_with_driver_path(spark, corpus, built):
@@ -292,13 +387,14 @@ def test_single_query_dataframe_plans_no_exchange(spark, corpus, built):
 
 
 def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
-    """Request threads share the driver's doclens cache. Capped at 2 KB
-    (below the three buckets' decoded sidecars), fills evict on every
-    query: 4 threads x 20 searches see zero errors and oracle-identical
-    results, and the cache's byte count matches its contents."""
+    """Request threads share the driver's doc-group cache (doc ids, dls
+    and urls per group). Capped at 2 KB (below the three buckets' groups),
+    fills evict on every query: 4 threads x 20 searches see zero errors and
+    oracle-identical ranks, scores and urls, and the cache's byte count
+    matches its contents, url bytes included."""
     from information_retrieval_images_spark.operators import bm25 as bm25_mod
 
-    _, queries, _, expected = corpus
+    _, queries, idx, expected = corpus
     cat, _ = built
     monkeypatch.setattr(bm25_mod, "_DL_CACHE", {})
     monkeypatch.setattr(bm25_mod, "_DL_CACHE_BYTES", [0])
@@ -332,7 +428,8 @@ def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
     exp = expected[["query_id", "rank", "doc_id", "bm25_score"]]
     for row, got in results:
         _assert_rank_identical(_search_frame(got, row.query_id), exp[exp["query_id"] == row.query_id])
-    held = sum(i.nbytes + d.nbytes for e in bm25_mod._DL_CACHE.values() for i, d in e.values())
+        assert [r["url"] for r in got] == [idx.url_of[r["doc_id"]] for r in got]
+    held = sum(i.nbytes + d.nbytes + u.nbytes for e in bm25_mod._DL_CACHE.values() for i, d, u in e.values())
     assert bm25_mod._DL_CACHE_BYTES[0] == held
 
 

@@ -1,5 +1,5 @@
-"""The kernels' dl read path (operators.bm25._load_group_dls over the
-``docs`` table): discovery scoping + drift guard (VERDICT r4 what's-wrong
+"""The kernels' dl and url read path (operators.bm25._load_group_dls over
+the ``docs`` table): discovery scoping + drift guard (VERDICT r4 what's-wrong
 #2, ADVICE r4 #3)."""
 
 import numpy as np
@@ -45,8 +45,8 @@ def test_doclens_discovery_scoped_to_candidate_buckets(built, monkeypatch):
     out = _load_group_dls(dirs, {(1, 0)})
     assert opened == [dirs[1]]
     assert set(out) == {0}
-    ids, dls = out[0]
-    assert ids.size == dls.size > 0
+    ids, dls, urls = out[0]
+    assert ids.size == dls.size == len(urls) > 0
     # multi-bucket request opens exactly the candidate set, no root listing
     opened.clear()
     _load_group_dls(dirs, {(0, 0), (2, 0)})
@@ -56,13 +56,14 @@ def test_doclens_discovery_scoped_to_candidate_buckets(built, monkeypatch):
 
 def test_doclens_merge_across_buckets_matches_docs_table(built):
     """Consecutive doc ids round-robin over buckets, so one group's docs span
-    several buckets' docs versions; the merged (ids, dls) must equal the
-    docs table's (doc_id, dl) for the group."""
-    docs = built.read("docs").select("doc_id", "dl").toPandas().sort_values("doc_id")
+    several buckets' docs versions; the merged (ids, dls, urls) must equal
+    the docs table's (doc_id, dl, url) for the group."""
+    docs = built.read("docs").select("doc_id", "dl", "url").toPandas().sort_values("doc_id")
     out = _load_group_dls(built.version_dirs("docs"), {(0, 0), (1, 0), (2, 0)})
-    ids, dls = out[0]
+    ids, dls, urls = out[0]
     assert ids.tolist() == docs["doc_id"].tolist()
     assert dls.tolist() == docs["dl"].tolist()
+    assert urls.to_pylist() == docs["url"].tolist()
 
 
 def test_group_dls_raises_on_sidecar_drift():

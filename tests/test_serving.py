@@ -168,13 +168,13 @@ def test_http_search_requests_overlap(served, monkeypatch):
 
     session, idx = served
     barrier = threading.Barrier(2, timeout=60)
-    real_engine = serving.bm25_search
+    real_engine = serving.bm25_search_records
 
     def barriered(*args, **kw):
         barrier.wait()  # passes only when BOTH requests are in-flight
         return real_engine(*args, **kw)
 
-    monkeypatch.setattr(serving, "bm25_search", barriered)
+    monkeypatch.setattr(serving, "bm25_search_records", barriered)
     srv = make_http_server(session, port=0)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
