@@ -13,28 +13,33 @@ bit-identical scores: a doc's score adds one ``idf * tf_norm`` term per
 query-token occurrence, in query-position order, as the oracle does.
 
 One query with fan-out 1 (matched volume <= ``postings_per_task``) on
-directory postings is scored IN THE DRIVER over a pyarrow read of the
-pinned manifest's postings files, with numpy arrays and no pandas frame: a
-warm :func:`bm25_search_records` runs no Spark job. The kernel is the
-Spark plan's, called with the one task's arrays. Batches, fan-out above 1
-and Iceberg postings run the Spark plan.
+directory postings is scored IN THE DRIVER from the pinned manifest's
+postings files, with numpy arrays and no pandas frame: a warm
+:func:`bm25_search_records` runs no Spark job and opens no file. The kernel
+is the Spark plan's, called with the one task's arrays. Batches, fan-out
+above 1 and Iceberg postings run the Spark plan.
 
-Scale notes (100 TB): the postings scan is pruned at the directory level by
-the term-prefix (tp) partition and at the row-group level by the pushed
-``term`` IN-list (min-max on the sort column). The Spark plan's only
-shuffles are the per-task candidate routing and (when a query fans out past
-one task) the global rank window; results are NOT globally sorted — the
-contract is the (query_id, rank) key. ``postings_per_task`` splits a query's
-doc-groups across executors so a head-term query does not serialize on one
-task, and bounds the driver path's memory. The driver path lists each
-version directory once per snapshot (Catalog.version_files), so a warm
-query makes no directory listing. A result's urls come from the
-doc-group cache that also holds the groups' dls (_load_group_dls), so a
-warm query opens no ``docs`` file. A cold group still reads every ``docs``
-file of its bucket: each is sorted by doc_id but spans nearly the whole
-doc_id range of the bucket, so the doc_id row-group pruning opens about
-one row group per file. A query pins one catalog snapshot (catalog.py), so
-a concurrent commit never changes its inputs.
+Scale notes (100 TB): the Spark plan's postings scan is pruned at the
+directory level by the term-prefix (tp) partition and at the row-group
+level by the pushed ``term`` IN-list (min-max on the sort column). At the
+sizes measured here every tp file is one row group (Spark's default row
+group is 128 MB), so the IN-list prunes no row group. The driver path reads
+each tp file a query needs once per process, whole, into the in-process
+cache (_cached) and finds the query's terms by binary search over the
+cached term column; a file larger than the cache's whole bound is read
+whole on every query that needs it. The Spark plan's only shuffles are the
+per-task candidate routing and (when a query fans out past one task) the
+global rank window; results are NOT globally sorted — the contract is the
+(query_id, rank) key. ``postings_per_task`` splits a query's doc-groups
+across executors so a head-term query does not serialize on one task, and
+bounds the driver path's memory. The driver path lists each version
+directory once per snapshot (Catalog.version_files), so a warm query makes
+no directory listing. A result's urls come from the doc-group cache that
+also holds the groups' dls (_load_group_dls). A cold group still reads
+every ``docs`` file of its bucket: each is sorted by doc_id but spans
+nearly the whole doc_id range of the bucket, so the doc_id row-group
+pruning opens about one row group per file. A query pins one catalog
+snapshot (catalog.py), so a concurrent commit never changes its inputs.
 """
 
 from __future__ import annotations
@@ -63,25 +68,56 @@ from .index_build import DOC_GROUP_BITS, term_prefix
 RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 
 
-# Process-wide cache of per-doc-group (doc_ids, dls, urls) read from the
-# ``docs`` table (guide §4.5: heavyweight per-task state amortized across
-# tasks via worker reuse): for a 50-query batch the same few dozen groups
-# would otherwise be read hundreds of times per run, and a warm driver query
-# takes its dls and its result's urls from it without opening a docs file.
-# Keyed by the bucket's docs version directory: a version is immutable
-# (catalog.py), so an entry can never go stale; a rewritten bucket is a new
-# directory and its old entry ages out of the LRU. Driver-side queries share
-# it across request threads, so one lock guards lookup, fill and eviction;
-# the parquet read runs outside it.
-_DL_CACHE: dict[str, dict[int, tuple[np.ndarray, np.ndarray, pa.Array]]] = {}
-_DL_CACHE_BYTES = [0]
-_DL_CACHE_MAX_BYTES = 256 << 20  # 16 B/doc of arrays plus the url bytes; LRU-bounded
-_DL_LOCK = threading.Lock()
+# Process-wide LRU cache of immutable index data (guide §4.5: heavyweight
+# per-task state amortized across tasks via worker reuse). Two kinds of
+# entry share one lock, one LRU order and one byte bound:
+# - a doc group's (doc_ids, dls, urls) from one bucket's ``docs`` version,
+#   keyed by (version directory, group) (_load_group_dls): for a 50-query
+#   batch the same few dozen groups would otherwise be read hundreds of
+#   times per run, and a warm driver query takes its dls and its result's
+#   urls from it;
+# - one ``postings`` file's columns, keyed by its path (_postings_files):
+#   the driver path reads each tp=T file once per process.
+# A version directory is immutable and its id is unique (catalog.py), so an
+# entry never goes stale; a rewritten bucket is a new directory and the old
+# entries age out of the LRU. Driver-side queries share the cache across
+# request threads; the lock guards lookup, insert and eviction, and the
+# parquet reads run outside it.
+_CACHE: dict = {}  # key -> (value, nbytes), least recently used first
+_CACHE_BYTES = [0]
+_CACHE_MAX_BYTES = 256 << 20  # about 2 MB of postings for 6,000 pages; 16 B/doc plus url bytes of docs
+_CACHE_LOCK = threading.Lock()
 
 
-def _entry_nbytes(entry: tuple[np.ndarray, np.ndarray, pa.Array]) -> int:
-    ids, dls, urls = entry
-    return ids.nbytes + dls.nbytes + urls.nbytes  # a slice counts only its own range
+def _cached(keys: list, fill) -> dict:
+    """key -> value for ``keys``: hits come from the cache and move to its
+    LRU end; ``fill(missing)`` -> {key: value} reads the misses outside the
+    lock, and each is inserted unless another thread got there first. Then
+    the least recently used entries go until the bytes fit the bound. A
+    value is a tuple of numpy arrays and Arrow arrays or tables; its bytes
+    are theirs (a slice counts only its own range). A value larger than the
+    whole bound is returned but never kept, so one huge file cannot flush
+    the cache."""
+    got = {}
+    with _CACHE_LOCK:
+        for key in keys:
+            hit = _CACHE.pop(key, None)
+            if hit is not None:
+                _CACHE[key] = hit
+                got[key] = hit[0]
+    missing = [key for key in keys if key not in got]
+    if missing:
+        filled = fill(missing)
+        with _CACHE_LOCK:
+            for key in missing:
+                got[key] = value = filled[key]
+                nbytes = sum(a.nbytes for a in value)
+                if key not in _CACHE and nbytes <= _CACHE_MAX_BYTES:
+                    _CACHE[key] = (value, nbytes)
+                    _CACHE_BYTES[0] += nbytes
+            while _CACHE_BYTES[0] > _CACHE_MAX_BYTES:
+                _CACHE_BYTES[0] -= _CACHE.pop(next(iter(_CACHE)))[1]
+    return got
 
 
 def _load_group_dls(
@@ -100,45 +136,13 @@ def _load_group_dls(
     every bucket directory before pruning — O(buckets) metadata RPCs per
     query on object storage at 10^4-10^5 buckets. Each candidate directory
     becomes its own tiny dataset, so the IO is O(its buckets). The
-    (bucket, group) arrays are memoized per process in _DL_CACHE.
+    (bucket, group) arrays are memoized per process (_cached).
     """
-    by_bucket: dict[int, set[int]] = {}
-    for b, g in pairs:
-        by_bucket.setdefault(int(b), set()).add(int(g))
+    got = _cached(sorted((dirs[int(b)], int(g)) for b, g in pairs), _read_groups)
     per_group: dict[int, list[tuple[np.ndarray, np.ndarray, pa.Array]]] = {}
-    for b in sorted(by_bucket):
-        key = dirs[b]
-        with _DL_LOCK:  # the entry moves to the LRU end
-            cached = _DL_CACHE[key] = _DL_CACHE.pop(key, None) or {}
-            got = {g: cached[g] for g in by_bucket[b] if g in cached}
-        missing = sorted(g for g in by_bucket[b] if g not in got)
-        if missing:
-            doc_id = ds.field("doc_id")
-            ranges = [(doc_id >= (g << DOC_GROUP_BITS)) & (doc_id < ((g + 1) << DOC_GROUP_BITS)) for g in missing]
-            tbl = (
-                ds.dataset(key, format="parquet")
-                .to_table(columns=["doc_id", "dl", "url"], filter=functools.reduce(operator.or_, ranges))
-                .sort_by("doc_id")  # files are sorted, not merged
-            )
-            ids = tbl["doc_id"].to_numpy().astype(np.int64)
-            dls = tbl["dl"].to_numpy().astype(np.int64)
-            urls = tbl["url"].combine_chunks()
-            cuts = np.searchsorted(ids, [g << DOC_GROUP_BITS for g in missing] + [(missing[-1] + 1) << DOC_GROUP_BITS])
-            for g, s, e in zip(missing, cuts[:-1].tolist(), cuts[1:].tolist()):
-                # a group with no row gets empty arrays: the miss is pinned
-                got[g] = (ids[s:e], dls[s:e], urls.slice(s, e - s))
-            with _DL_LOCK:  # last in LRU order, so never evicted below
-                cached = _DL_CACHE[key] = _DL_CACHE.pop(key, None) or {}
-                for g in missing:
-                    if g not in cached:
-                        cached[g] = got[g]
-                        _DL_CACHE_BYTES[0] += _entry_nbytes(got[g])
-                while _DL_CACHE_BYTES[0] > _DL_CACHE_MAX_BYTES and len(_DL_CACHE) > 1:
-                    evicted = _DL_CACHE.pop(next(iter(_DL_CACHE)))
-                    _DL_CACHE_BYTES[0] -= sum(map(_entry_nbytes, evicted.values()))
-        for g, entry in got.items():
-            if entry[0].size:
-                per_group.setdefault(g, []).append(entry)
+    for (_, g), entry in got.items():
+        if entry[0].size:
+            per_group.setdefault(g, []).append(entry)
     out: dict[int, tuple[np.ndarray, np.ndarray, pa.Array]] = {}
     for g, parts in per_group.items():
         if len(parts) == 1:
@@ -148,6 +152,32 @@ def _load_group_dls(
             order = np.argsort(ids, kind="stable")
             dls = np.concatenate([p[1] for p in parts])[order]
             out[g] = (ids[order], dls, pa.concat_arrays([p[2] for p in parts]).take(order))
+    return out
+
+
+def _read_groups(keys: list[tuple[str, int]]) -> dict[tuple[str, int], tuple[np.ndarray, np.ndarray, pa.Array]]:
+    """(docs version directory, group) -> the group's (doc_ids, dls, urls),
+    one read per directory; a group with no row gets empty arrays, so the
+    miss is cached too."""
+    by_dir: dict[str, list[int]] = {}
+    for d, g in keys:
+        by_dir.setdefault(d, []).append(g)
+    out = {}
+    for d, groups in by_dir.items():
+        groups.sort()
+        doc_id = ds.field("doc_id")
+        ranges = [(doc_id >= (g << DOC_GROUP_BITS)) & (doc_id < ((g + 1) << DOC_GROUP_BITS)) for g in groups]
+        tbl = (
+            ds.dataset(d, format="parquet")
+            .to_table(columns=["doc_id", "dl", "url"], filter=functools.reduce(operator.or_, ranges))
+            .sort_by("doc_id")  # files are sorted, not merged
+        )
+        ids = tbl["doc_id"].to_numpy().astype(np.int64)
+        dls = tbl["dl"].to_numpy().astype(np.int64)
+        urls = tbl["url"].combine_chunks()
+        cuts = np.searchsorted(ids, [g << DOC_GROUP_BITS for g in groups] + [(groups[-1] + 1) << DOC_GROUP_BITS])
+        for g, s, e in zip(groups, cuts[:-1].tolist(), cuts[1:].tolist()):
+            out[d, g] = (ids[s:e], dls[s:e], urls.slice(s, e - s))
     return out
 
 
@@ -423,11 +453,25 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per
     )
 
 
-# bucket=B/v=<version>/tp=T below the postings root (catalog.py layout)
-_POSTINGS_PARTITIONING = ds.partitioning(
-    pa.schema([("bucket", pa.int32()), ("v", pa.string()), ("tp", pa.int32())]), flavor="hive"
-)
-_POSTINGS_COLUMNS = ["term", "first_doc", "n_docs", "max_tf", "min_dl", "bucket", "v", "docs_enc", "tfs_enc"]
+# the columns of a postings file; bucket and v come from the manifest
+_POSTINGS_COLUMNS = ["term", "first_doc", "n_docs", "max_tf", "min_dl", "docs_enc", "tfs_enc"]
+
+
+def _postings_files(files: list[str]) -> dict[str, tuple[np.ndarray, pa.Table]]:
+    """path -> (its term column, its other columns), in file order, from
+    one pyarrow dataset over ``files``. The terms are a numpy bytes array:
+    every file is sorted by (term, first_doc) (index_build.
+    _write_postings_rows) and Spark orders strings by their UTF-8 bytes,
+    so a query finds a term's rows by binary search. A file out of that
+    order is an index inconsistency and raises."""
+    out = {}
+    for frag in ds.dataset(files, format="parquet").get_fragments():
+        tbl = frag.to_table(columns=_POSTINGS_COLUMNS)
+        terms = pc.cast(tbl["term"], pa.binary()).to_numpy(zero_copy_only=False).astype(bytes)
+        if (terms[1:] < terms[:-1]).any():
+            raise RuntimeError(f"postings file {frag.path} is not sorted by term; rebuild its bucket")
+        out[frag.path] = (terms, tbl.drop_columns(["term"]))
+    return out
 
 
 def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> list[tuple[int, str, float]]:
@@ -435,15 +479,16 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
     frame. Memory is bounded by the fan-out-1 precondition (matched volume
     <= postings_per_task). Returns the ranked (doc_id, url, bm25_score).
 
-    pyarrow reads the pinned snapshot's postings, only the query's tp=T
-    directories (file lists memoized per snapshot:
-    Catalog.version_files), filtered on the term IN-list (row-group min/max on the
-    sorted term column). Each block row becomes one kernel row per
+    The postings are the pinned snapshot's files of the query's tp=T
+    directories (file lists memoized per snapshot: Catalog.version_files),
+    each read once per process into the cache (_cached, _postings_files),
+    so a warm query opens no file. A binary search over each file's sorted
+    term column picks the query terms' rows, which are concatenated in
+    bucket/tp/file order. Each block row becomes one kernel row per
     occurrence of its term in the query, by index over the Arrow columns,
     and the shared WAND kernel scores them, dl read and drift check
     included, with the same floats as the Spark plan and the oracle. The
-    urls come from the doc-group arrays the kernel loaded for the dls, so a
-    warm query opens no ``docs`` file.
+    urls come from the doc-group arrays the kernel loaded for the dls.
     """
     _, _, k = qrow
     term_rows, _, avgdl, _ = meta
@@ -451,22 +496,33 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
     tp_n = catalog.tp_n()
     tps = sorted({term_prefix(t, tp_n) for t in terms})
     files = [
-        f
-        for b in sorted(catalog.version_dirs("postings"))
+        (b, v, f)
+        for b, v in sorted(catalog.snapshot().tables["postings"].items())
         for tp in tps  # a bucket with no term of prefix tp has no tp=T directory
         for f in catalog.version_files("postings", b, f"tp={tp}")
     ]
-    if not files:  # no query term is in the index
+    cached = _cached([f for _, _, f in files], _postings_files)
+    term_bytes = np.array([t.encode() for t in terms])  # in the files' order
+    parts, runs = [], []  # row slices, and (bucket, version, term index, rows) per slice
+    for b, v, f in files:
+        file_terms, tbl = cached[f]
+        lo, hi = np.searchsorted(file_terms, term_bytes, "left"), np.searchsorted(file_terms, term_bytes, "right")
+        for t, (s, e) in enumerate(zip(lo.tolist(), hi.tolist())):
+            if e > s:
+                parts.append(tbl.slice(s, e - s))
+                runs.append((b, v, t, e - s))
+    if not parts:  # no query term is in the index
         return []
-    tbl = ds.dataset(
-        files, format="parquet", partitioning=_POSTINGS_PARTITIONING, partition_base_dir=catalog.path("postings")
-    ).to_table(columns=_POSTINGS_COLUMNS, filter=ds.field("term").isin(terms))
+    tbl = pa.concat_tables(parts)
+    bucket, v, row_term, n = map(np.array, zip(*runs))
+    row_term = np.repeat(row_term, n)
     # one copy of a block per occurrence of its term: (occurrence, block row) pairs
-    row_term = pc.index_in(tbl["term"], value_set=pa.array(terms)).to_numpy()
     _, occ_term, qpos, qtf, _, idf = map(np.array, zip(*term_rows))
     occ, row = np.nonzero(np.searchsorted(terms, occ_term)[:, None] == row_term)
-    cols = {c: tbl[c].to_numpy()[row] for c in _POSTINGS_COLUMNS[1:]}
-    cols.update(term=row_term[row], qpos=qpos[occ], idf=idf[occ])
+    cols = {c: tbl[c].to_numpy()[row] for c in tbl.column_names}
+    cols.update(
+        term=row_term[row], bucket=np.repeat(bucket, n)[row], v=np.repeat(v, n)[row], qpos=qpos[occ], idf=idf[occ]
+    )
     cols["ub"] = _block_ub(cols.pop("max_tf"), cols.pop("min_dl"), cols["idf"], qtf[occ], avgdl)
     ranked, groups = _wand_task_kernel(cols, k, avgdl, catalog.path("docs"))
     out = []

@@ -212,19 +212,23 @@ def test_warm_search_runs_no_spark_job(spark, corpus, built):
 
 
 def test_warm_search_opens_no_docs_file(spark, corpus, built, monkeypatch):
-    """A warm search takes its result's urls from the doc-group cache the
-    kernel filled for the dls: no pyarrow dataset is opened under the docs
-    table, and the urls still equal the oracle's."""
+    """A warm search reads no file: its postings rows come from the
+    postings-file cache, its dls and urls from the doc-group cache. A spy
+    on pyarrow.dataset.dataset, the reader both cache fills use, sees the
+    cold searches (on an emptied cache) open postings and docs files and
+    the warm ones open nothing, while ranks, scores and urls still equal
+    the oracle's."""
     import pyarrow.dataset as pads
+
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
 
     _, queries, idx, expected = corpus
     cat, _ = built
+    monkeypatch.setattr(bm25_mod, "_CACHE", {})
+    monkeypatch.setattr(bm25_mod, "_CACHE_BYTES", [0])
     session = SearchSession(spark, cat.root)
-    docs_root = cat.path("docs")
     exp = expected[["query_id", "rank", "doc_id", "bm25_score"]]
     rows = list(queries.itertuples(index=False))
-    for row in rows:  # cold: term dfs and the doc groups
-        session.search(row.query_text, k=row.k)
     opened = []
     orig = pads.dataset
 
@@ -233,12 +237,78 @@ def test_warm_search_opens_no_docs_file(spark, corpus, built, monkeypatch):
         return orig(source, *a, **kw)
 
     monkeypatch.setattr(pads, "dataset", spy)
+    for row in rows:  # cold: term dfs, postings files and doc groups
+        session.search(row.query_text, k=row.k)
+    for root in (cat.path("postings"), cat.path("docs")):
+        assert [p for p in opened if str(p).startswith(root)], f"the spy saw no read under {root}"
+    opened.clear()
     for row in rows:
         got = session.search(row.query_text, k=row.k)
         _assert_rank_identical(_search_frame(got, row.query_id), exp[exp["query_id"] == row.query_id])
         assert [r["url"] for r in got] == [idx.url_of[r["doc_id"]] for r in got]
-    assert opened, "the spy saw no postings read"
-    assert not [p for p in opened if str(p).startswith(docs_root)], opened
+    assert opened == [], opened
+
+
+def test_cache_serves_no_superseded_version(spark, tmp_path_factory):
+    """The cache keys entries by immutable version paths, so a commit can
+    never be answered from a superseded version: in one warm SearchSession,
+    after an append_bucket and then a delete_docs of urls it ranks top,
+    every search equals an oracle over the new page set, while the cache
+    still holds the superseded files."""
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+    from information_retrieval_images_spark.operators.incremental import append_bucket
+    from information_retrieval_images_spark.operators.maintenance import delete_docs
+    from information_retrieval_images_spark.oracle import oracle_topk
+
+    pages = fixtures.make_pages_pandas(220)
+    wh = str(tmp_path_factory.mktemp("superseded"))
+    build_index(spark, spark.createDataFrame(pages.iloc[:150]), Catalog(spark, wh), n_buckets=2)
+    session = SearchSession(spark, wh)
+    texts = ["term000000", "term000003 term000120", "term000401"]
+
+    def assert_oracle(corpus: pd.DataFrame) -> None:
+        idx = build_oracle_index(corpus, lang="en")
+        for q in texts:
+            session.search(q)  # the first search after a commit fetches its term dfs
+            got = session.search(q)
+            assert [(r["url"], r["bm25_score"]) for r in got] == [(u, sc) for _, u, sc in oracle_topk(idx, q, 10)], q
+
+    assert_oracle(pages.iloc[:150])
+    warm = set(bm25_mod._CACHE)
+    assert any(str(key).startswith(session.catalog.path("postings")) for key in warm), warm
+    append_bucket(spark, spark.createDataFrame(pages), session.catalog, bucket=1000)
+    assert_oracle(pages)
+    victims = [r["url"] for q in texts for r in session.search(q)[:2]]
+    res = delete_docs(spark, session.catalog, victims)
+    assert res["n_deleted"] == len(set(victims)) and res["buckets"], res
+    assert_oracle(pages[~pages["url"].isin(victims)])
+    assert warm <= set(bm25_mod._CACHE)  # superseded entries are held, never served
+
+
+def test_postings_file_out_of_term_order_raises(tmp_path):
+    """The driver path binary-searches each cached postings file's term
+    column, so a file that is not sorted by term would silently lose rows:
+    the cache fill refuses it instead, and reads a sorted one in file
+    order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+
+    def write(name, terms):
+        n = len(terms)
+        cols = {"term": terms, "first_doc": list(range(n)), "n_docs": [1] * n, "max_tf": [1] * n}
+        cols.update(min_dl=[1] * n, docs_enc=[b"\x00"] * n, tfs_enc=[b"\x01"] * n)
+        pq.write_table(pa.table(cols), str(tmp_path / name))
+        return str(tmp_path / name)
+
+    good = write("sorted.parquet", ["b", "b", "é", "éa"])
+    terms, tbl = bm25_mod._postings_files([good])[good]
+    assert terms.tolist() == [t.encode() for t in ["b", "b", "é", "éa"]]
+    assert tbl["first_doc"].to_pylist() == [0, 1, 2, 3]
+    bad = write("unsorted.parquet", ["b", "a"])
+    with pytest.raises(RuntimeError, match="not sorted by term"):
+        bm25_mod._postings_files([bad])
 
 
 def test_kernel_is_independent_of_row_order(spark, built, monkeypatch):
@@ -387,18 +457,20 @@ def test_single_query_dataframe_plans_no_exchange(spark, corpus, built):
 
 
 def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
-    """Request threads share the driver's doc-group cache (doc ids, dls
-    and urls per group). Capped at 2 KB (below the three buckets' groups),
-    fills evict on every query: 4 threads x 20 searches see zero errors and
-    oracle-identical ranks, scores and urls, and the cache's byte count
-    matches its contents, url bytes included."""
+    """Request threads share the driver's cache of postings files and doc
+    groups (doc ids, dls and urls per group). Capped at 32 KB (a few of the
+    5-7 KB entries this index's files and groups take; all of them take
+    about 270 KB), fills evict on most queries: 4 threads x 20 searches see
+    zero errors and oracle-identical ranks, scores and urls, and the one
+    byte count equals the bytes of every entry held, postings files and
+    doc groups alike, within the bound."""
     from information_retrieval_images_spark.operators import bm25 as bm25_mod
 
     _, queries, idx, expected = corpus
     cat, _ = built
-    monkeypatch.setattr(bm25_mod, "_DL_CACHE", {})
-    monkeypatch.setattr(bm25_mod, "_DL_CACHE_BYTES", [0])
-    monkeypatch.setattr(bm25_mod, "_DL_CACHE_MAX_BYTES", 2048)
+    monkeypatch.setattr(bm25_mod, "_CACHE", {})
+    monkeypatch.setattr(bm25_mod, "_CACHE_BYTES", [0])
+    monkeypatch.setattr(bm25_mod, "_CACHE_MAX_BYTES", 32 << 10)
     session = SearchSession(spark, cat.root)
     rows = list(queries.itertuples(index=False))
     for row in rows:  # warm the term dfs: the threads then run no Spark job
@@ -429,8 +501,10 @@ def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
     for row, got in results:
         _assert_rank_identical(_search_frame(got, row.query_id), exp[exp["query_id"] == row.query_id])
         assert [r["url"] for r in got] == [idx.url_of[r["doc_id"]] for r in got]
-    held = sum(i.nbytes + d.nbytes + u.nbytes for e in bm25_mod._DL_CACHE.values() for i, d, u in e.values())
-    assert bm25_mod._DL_CACHE_BYTES[0] == held
+    held = sum(a.nbytes for value, _ in bm25_mod._CACHE.values() for a in value)
+    assert bm25_mod._CACHE_BYTES[0] == held <= 32 << 10
+    # postings files are keyed by path, doc groups by (docs directory, group)
+    assert {type(key) for key in bm25_mod._CACHE} == {str, tuple}, list(bm25_mod._CACHE)
 
 
 def test_query_term_guard(spark, built, monkeypatch):

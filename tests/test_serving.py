@@ -63,32 +63,43 @@ def test_http_search_endpoint(served):
         srv.server_close()
 
 
+def _json_error(req, code: int) -> dict:
+    """The JSON body of the error reply ``req`` gets, after checking its
+    status, content type and Content-Length."""
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        urllib.request.urlopen(req)
+    assert ei.value.code == code
+    assert ei.value.headers["Content-Type"] == "application/json"
+    body = ei.value.read()
+    assert int(ei.value.headers["Content-Length"]) == len(body)
+    return json.loads(body)
+
+
 def test_http_search_error_replies_are_json(served, monkeypatch):
-    """k < 1 is the client's error: 400 with a JSON body. An engine failure
-    is a 500 JSON reply that, like every JSON reply, carries its
-    Content-Length."""
+    """Every error reply is JSON with its Content-Length: a missing q, a
+    non-integer k and k < 1 are the client's errors (400), a wrong path or a
+    POST to a path other than /append is a 404, and an engine failure is a
+    500."""
     session, _ = served
     srv = make_http_server(session, port=0)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     try:
         port = srv.server_address[1]
+        base = f"http://127.0.0.1:{port}"
         for k in (0, -1):
-            with pytest.raises(urllib.error.HTTPError) as ei:
-                urllib.request.urlopen(f"http://127.0.0.1:{port}/search?q=term000001&k={k}")
-            assert ei.value.code == 400
-            assert "k must be >= 1" in json.loads(ei.value.read())["error"]
+            assert "k must be >= 1" in _json_error(f"{base}/search?q=term000001&k={k}", 400)["error"]
+        assert _json_error(f"{base}/search?q=term000001&k=abc", 400) == {"error": "k must be an int"}
+        assert _json_error(f"{base}/search?k=3", 400) == {"error": "missing q parameter"}
+        assert _json_error(f"{base}/nope", 404) == {"error": "only /search is served"}
+        post = urllib.request.Request(f"{base}/search", data=b"{}", method="POST")
+        assert _json_error(post, 404) == {"error": "only /append accepts POST"}
 
         def broken(q, k=10):
             raise RuntimeError("engine down")
 
         monkeypatch.setattr(session, "search", broken)
-        with pytest.raises(urllib.error.HTTPError) as ei:
-            urllib.request.urlopen(f"http://127.0.0.1:{port}/search?q=term000001")
-        assert ei.value.code == 500
-        body = ei.value.read()
-        assert int(ei.value.headers["Content-Length"]) == len(body)
-        assert json.loads(body) == {"error": "engine down"}
+        assert _json_error(f"{base}/search?q=term000001", 500) == {"error": "engine down"}
     finally:
         srv.shutdown()
         srv.server_close()
