@@ -7,12 +7,15 @@ carrying LEB128-varint-encoded doc-id gaps and term frequencies.
 
 Both encode and decode are fully vectorized (no per-value Python loops):
 encode scatters 7-bit groups by byte position; decode reassembles with
-``np.add.reduceat`` over continuation-bit boundaries.
+``np.add.reduceat`` over continuation-bit boundaries. :func:`decode_blocks`
+is the one block decoder: the query kernels and the postings re-encode of
+delete and compaction call it.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _MAX_VARINT_BYTES = 10  # 64 bits / 7
 
@@ -36,8 +39,9 @@ def varint_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def varint_decode(buf: bytes) -> np.ndarray:
-    """Inverse of :func:`varint_encode` -> uint64 array (vectorized)."""
+def varint_decode(buf) -> np.ndarray:
+    """Inverse of :func:`varint_encode` -> uint64 array (vectorized).
+    ``buf`` is any contiguous byte buffer (bytes, a uint8 array)."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.uint64)
@@ -93,3 +97,40 @@ def segmented_gap_cumsum(gaps: np.ndarray, counts: np.ndarray) -> np.ndarray:
     np.cumsum(counts[:-1], out=starts[1:])
     base = np.where(starts > 0, c[starts - 1], 0)
     return c - np.repeat(base, counts)
+
+
+def _payload_stream(payloads) -> np.ndarray:
+    """A column of varint payloads as one uint8 stream. An Arrow binary
+    array (or chunked array) is read from its data buffer, so no row
+    becomes a Python ``bytes`` object; any other sequence of ``bytes`` (a
+    pandas column) is joined."""
+    if isinstance(payloads, pa.ChunkedArray):
+        payloads = payloads.combine_chunks()
+    if not isinstance(payloads, pa.Array):
+        return np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    lo = hi = 0
+    if len(payloads):
+        _, offsets, data = payloads.buffers()
+        width = np.int64 if pa.types.is_large_binary(payloads.type) else np.int32
+        lo, hi = np.frombuffer(offsets, dtype=width)[[payloads.offset, payloads.offset + len(payloads)]].tolist()
+    if hi == lo:  # no payload byte: the data buffer may be absent
+        return np.empty(0, dtype=np.uint8)
+    return np.frombuffer(data, dtype=np.uint8, count=hi - lo, offset=lo)
+
+
+def decode_blocks(docs_payloads, tfs_payloads, n_docs) -> tuple[np.ndarray, np.ndarray]:
+    """Posting blocks -> (doc ids as int64, tfs as uint64), flat in block
+    order: block i's postings are the next ``n_docs[i]`` values of both.
+    Each column of payloads (``docs_enc``, ``tfs_enc``: an Arrow binary
+    array or a sequence of ``bytes``) decodes as one varint stream, and the
+    doc ids come back by :func:`segmented_gap_cumsum` (a block's first gap
+    is its absolute first doc id). Payloads that do not hold ``sum(n_docs)``
+    values each raise ``ValueError``."""
+    counts = np.asarray(n_docs, dtype=np.int64)
+    gaps = varint_decode(_payload_stream(docs_payloads))
+    tfs = varint_decode(_payload_stream(tfs_payloads))
+    if not gaps.size == tfs.size == int(counts.sum()):
+        raise ValueError(
+            f"posting payloads hold {gaps.size} doc gaps and {tfs.size} tfs for {int(counts.sum())} postings"
+        )
+    return segmented_gap_cumsum(gaps.astype(np.int64), counts), tfs

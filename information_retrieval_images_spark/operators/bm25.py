@@ -3,7 +3,7 @@
 Reference analogue: the central ANN top-k search operator
 (``vector_db.py:93-103``, called from ``server.py:146-147``) — replaced by
 BM25 (k1=1.2, b=0.75). Block-max WAND is the one scorer: a per (query,
-task) partial top-k maintains a score threshold and skips *decoding* any
+task) partial top-k maintains a score threshold and skips *scoring* any
 2^14-doc group whose summed per-term block-max upper bound cannot beat it
 (the inverted-index analogue of the reference's IVF nprobe pruning). Exact:
 the bound is a true upper bound, so no true top-k member is ever pruned.
@@ -15,31 +15,34 @@ query-token occurrence, in query-position order, as the oracle does.
 One query with fan-out 1 (matched volume <= ``postings_per_task``) on
 directory postings is scored IN THE DRIVER from the pinned manifest's
 postings files, with numpy arrays and no pandas frame: a warm
-:func:`bm25_search_records` runs no Spark job and opens no file. The kernel
-is the Spark plan's, called with the one task's arrays. Batches, fan-out
-above 1 and Iceberg postings run the Spark plan.
+:func:`bm25_search_records` runs no Spark job, opens no file and decodes no
+posting. The kernel is the Spark plan's, called with the one task's arrays;
+it takes decoded postings, which the driver path decodes once per file per
+process (the cache) and the Spark plan once per task frame. Batches,
+fan-out above 1 and Iceberg postings run the Spark plan.
 
 Scale notes (100 TB): the Spark plan's postings scan is pruned at the
 directory level by the term-prefix (tp) partition and at the row-group
 level by the pushed ``term`` IN-list (min-max on the sort column). At the
 sizes measured here every tp file is one row group (Spark's default row
 group is 128 MB), so the IN-list prunes no row group. The driver path reads
-each tp file a query needs once per process, whole, into the in-process
-cache (_cached) and finds the query's terms by binary search over the
-cached term column; a file larger than the cache's whole bound is read
-whole on every query that needs it. The Spark plan's only shuffles are the
-per-task candidate routing and (when a query fans out past one task) the
-global rank window; results are NOT globally sorted — the contract is the
-(query_id, rank) key. ``postings_per_task`` splits a query's doc-groups
-across executors so a head-term query does not serialize on one task, and
-bounds the driver path's memory. The driver path lists each version
-directory once per snapshot (Catalog.version_files), so a warm query makes
-no directory listing. A result's urls come from the doc-group cache that
-also holds the groups' dls (_load_group_dls). A cold group still reads
-every ``docs`` file of its bucket: each is sorted by doc_id but spans
-nearly the whole doc_id range of the bucket, so the doc_id row-group
-pruning opens about one row group per file. A query pins one catalog
-snapshot (catalog.py), so a concurrent commit never changes its inputs.
+and decodes each tp file a query needs once per process, whole, into the
+in-process cache (_cached) and finds the query's terms by binary search over
+the cached term column; a file larger than the cache's whole bound is read
+and decoded whole on every query that needs it. The Spark plan's only
+shuffles are the per-task candidate routing and (when a query fans out past
+one task) the global rank window; results are NOT globally sorted — the
+contract is the (query_id, rank) key. ``postings_per_task`` splits a
+query's doc-groups across executors so a head-term query does not serialize
+on one task, and bounds the driver path's memory. The driver path lists
+each version directory once per snapshot (Catalog.version_files), so a warm
+query makes no directory listing. A result's urls come from the doc-group
+cache that also holds the groups' dls, merged across buckets
+(_load_group_dls). A cold group still reads every ``docs`` file of its
+bucket: each is sorted by doc_id but spans nearly the whole doc_id range of
+the bucket, so the doc_id row-group pruning opens about one row group per
+file. A query pins one catalog snapshot (catalog.py), so a concurrent
+commit never changes its inputs.
 """
 
 from __future__ import annotations
@@ -50,6 +53,7 @@ import operator
 import os
 import threading
 from collections import Counter
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -61,7 +65,7 @@ from pyspark.sql import functions as F
 
 from .. import K1, B
 from ..catalog import Catalog
-from ..codec import concat_varint_decode, segmented_gap_cumsum
+from ..codec import decode_blocks
 from ..textproc import bm25_idf, bm25_tf_norm, tokenize
 from .index_build import DOC_GROUP_BITS, term_prefix
 
@@ -71,21 +75,23 @@ RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 # Process-wide LRU cache of immutable index data (guide §4.5: heavyweight
 # per-task state amortized across tasks via worker reuse). Two kinds of
 # entry share one lock, one LRU order and one byte bound:
-# - a doc group's (doc_ids, dls, urls) from one bucket's ``docs`` version,
-#   keyed by (version directory, group) (_load_group_dls): for a 50-query
-#   batch the same few dozen groups would otherwise be read hundreds of
-#   times per run, and a warm driver query takes its dls and its result's
-#   urls from it;
-# - one ``postings`` file's columns, keyed by its path (_postings_files):
-#   the driver path reads each tp=T file once per process.
+# - a doc group's (doc_ids, dls, urls), merged across the buckets asked
+#   for, keyed by (group, tuple of those buckets' docs version directories)
+#   (_load_group_dls): for a 50-query batch the same few dozen groups would
+#   otherwise be read hundreds of times per run, and a warm driver query
+#   takes its dls and its result's urls from it;
+# - one ``postings`` file, decoded, keyed by its path (_postings_files):
+#   the driver path reads and decodes each tp=T file once per process.
 # A version directory is immutable and its id is unique (catalog.py), so an
 # entry never goes stale; a rewritten bucket is a new directory and the old
 # entries age out of the LRU. Driver-side queries share the cache across
 # request threads; the lock guards lookup, insert and eviction, and the
-# parquet reads run outside it.
+# parquet reads run outside it. Every cached numpy array is read-only, so
+# an in-place write from any thread raises instead of corrupting the
+# shared entry.
 _CACHE: dict = {}  # key -> (value, nbytes), least recently used first
 _CACHE_BYTES = [0]
-_CACHE_MAX_BYTES = 256 << 20  # about 2 MB of postings for 6,000 pages; 16 B/doc plus url bytes of docs
+_CACHE_MAX_BYTES = 256 << 20  # about 4 MB of postings for 6,000 pages; 16 B/doc plus url bytes of docs
 _CACHE_LOCK = threading.Lock()
 
 
@@ -94,10 +100,10 @@ def _cached(keys: list, fill) -> dict:
     LRU end; ``fill(missing)`` -> {key: value} reads the misses outside the
     lock, and each is inserted unless another thread got there first. Then
     the least recently used entries go until the bytes fit the bound. A
-    value is a tuple of numpy arrays and Arrow arrays or tables; its bytes
-    are theirs (a slice counts only its own range). A value larger than the
-    whole bound is returned but never kept, so one huge file cannot flush
-    the cache."""
+    value is a tuple of numpy arrays (made read-only here) and Arrow
+    arrays; its bytes are theirs (a slice counts only its own range). A
+    value larger than the whole bound is returned but never kept, so one
+    huge file cannot flush the cache."""
     got = {}
     with _CACHE_LOCK:
         for key in keys:
@@ -108,6 +114,10 @@ def _cached(keys: list, fill) -> dict:
     missing = [key for key in keys if key not in got]
     if missing:
         filled = fill(missing)
+        for value in filled.values():
+            for a in value:
+                if isinstance(a, np.ndarray):
+                    a.flags.writeable = False
         with _CACHE_LOCK:
             for key in missing:
                 got[key] = value = filled[key]
@@ -126,7 +136,8 @@ def _load_group_dls(
     """doc_group -> (sorted doc_ids, dls, urls) for the requested (bucket,
     group) pairs, merged across buckets (consecutive doc ids round-robin
     over buckets, so one group's docs span several buckets). ``dirs`` maps
-    each bucket to its docs version directory.
+    each bucket to its docs version directory. A group with no docs row
+    maps to empty arrays (the drift check then raises on its postings).
 
     A pyarrow point read (in an executor or the driver) of ``(doc_id, dl,
     url)`` from ``docs``, with one pushed doc_id range per requested group:
@@ -135,34 +146,25 @@ def _load_group_dls(
     buckets' version directories: a dataset over the docs root would list
     every bucket directory before pruning — O(buckets) metadata RPCs per
     query on object storage at 10^4-10^5 buckets. Each candidate directory
-    becomes its own tiny dataset, so the IO is O(its buckets). The
-    (bucket, group) arrays are memoized per process (_cached).
+    becomes its own tiny dataset, so the IO is O(its buckets). The merged
+    group is memoized per process (_cached) under the group and the tuple
+    of its buckets' directories, so a warm query merges nothing.
     """
-    got = _cached(sorted((dirs[int(b)], int(g)) for b, g in pairs), _read_groups)
-    per_group: dict[int, list[tuple[np.ndarray, np.ndarray, pa.Array]]] = {}
-    for (_, g), entry in got.items():
-        if entry[0].size:
-            per_group.setdefault(g, []).append(entry)
-    out: dict[int, tuple[np.ndarray, np.ndarray, pa.Array]] = {}
-    for g, parts in per_group.items():
-        if len(parts) == 1:
-            out[g] = parts[0]
-        else:
-            ids = np.concatenate([p[0] for p in parts])
-            order = np.argsort(ids, kind="stable")
-            dls = np.concatenate([p[1] for p in parts])[order]
-            out[g] = (ids[order], dls, pa.concat_arrays([p[2] for p in parts]).take(order))
-    return out
+    by_group: dict[int, set[str]] = {}
+    for b, g in pairs:
+        by_group.setdefault(int(g), set()).add(dirs[int(b)])
+    got = _cached(sorted((g, tuple(sorted(d))) for g, d in by_group.items()), _read_groups)
+    return {g: entry for (g, _), entry in got.items()}
 
 
-def _read_groups(keys: list[tuple[str, int]]) -> dict[tuple[str, int], tuple[np.ndarray, np.ndarray, pa.Array]]:
-    """(docs version directory, group) -> the group's (doc_ids, dls, urls),
-    one read per directory; a group with no row gets empty arrays, so the
-    miss is cached too."""
+def _read_groups(keys: list[tuple[int, tuple[str, ...]]]) -> dict:
+    """(group, docs version directories) -> the group's (doc_ids, dls,
+    urls) merged across those directories, one read per directory."""
     by_dir: dict[str, list[int]] = {}
-    for d, g in keys:
-        by_dir.setdefault(d, []).append(g)
-    out = {}
+    for g, dirs in keys:
+        for d in dirs:
+            by_dir.setdefault(d, []).append(g)
+    parts = {}
     for d, groups in by_dir.items():
         groups.sort()
         doc_id = ds.field("doc_id")
@@ -177,7 +179,18 @@ def _read_groups(keys: list[tuple[str, int]]) -> dict[tuple[str, int], tuple[np.
         urls = tbl["url"].combine_chunks()
         cuts = np.searchsorted(ids, [g << DOC_GROUP_BITS for g in groups] + [(groups[-1] + 1) << DOC_GROUP_BITS])
         for g, s, e in zip(groups, cuts[:-1].tolist(), cuts[1:].tolist()):
-            out[d, g] = (ids[s:e], dls[s:e], urls.slice(s, e - s))
+            parts[d, g] = (ids[s:e], dls[s:e], urls.slice(s, e - s))
+    out = {}
+    for g, dirs in keys:
+        # a group with no row anywhere keeps one bucket's empty arrays
+        found = [parts[d, g] for d in dirs if parts[d, g][0].size] or [parts[dirs[0], g]]
+        if len(found) == 1:
+            out[g, dirs] = found[0]
+        else:
+            ids = np.concatenate([p[0] for p in found])
+            order = np.argsort(ids, kind="stable")
+            dls = np.concatenate([p[1] for p in found])[order]
+            out[g, dirs] = (ids[order], dls, pa.concat_arrays([p[2] for p in found]).take(order))
     return out
 
 
@@ -429,7 +442,7 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per
         return _wand_frame_kernel(pdf, avgdl, dl_root)
 
     local_topk = (
-        blocks.select("query_id", "k", *_KERNEL_COLUMNS, "task")
+        blocks.select("query_id", "k", *_BLOCK_COLUMNS, "docs_enc", "tfs_enc", "task")
         .groupBy("query_id", "task")
         .applyInPandas(kernel, schema=RESULT_SCHEMA)
     )
@@ -455,22 +468,54 @@ def _wand_plan(spark: SparkSession, catalog: Catalog, qbatch, meta, postings_per
 
 # the columns of a postings file; bucket and v come from the manifest
 _POSTINGS_COLUMNS = ["term", "first_doc", "n_docs", "max_tf", "min_dl", "docs_enc", "tfs_enc"]
+_GROUP_MASK = (1 << DOC_GROUP_BITS) - 1
 
 
-def _postings_files(files: list[str]) -> dict[str, tuple[np.ndarray, pa.Table]]:
-    """path -> (its term column, its other columns), in file order, from
-    one pyarrow dataset over ``files``. The terms are a numpy bytes array:
-    every file is sorted by (term, first_doc) (index_build.
-    _write_postings_rows) and Spark orders strings by their UTF-8 bytes,
-    so a query finds a term's rows by binary search. A file out of that
-    order is an index inconsistency and raises."""
+class _PostingsFile(NamedTuple):
+    """One postings file, decoded: one entry per block row in file order,
+    and the rows' postings as flat arrays."""
+
+    terms: np.ndarray  # UTF-8 bytes, sorted
+    first_doc: np.ndarray
+    n_docs: np.ndarray
+    max_tf: np.ndarray
+    min_dl: np.ndarray
+    start: np.ndarray  # row i's postings are offs/tfs[start[i]:start[i + 1]]
+    offs: np.ndarray  # doc id minus its group's first id, uint16
+    tfs: np.ndarray
+
+
+def _decode_rows(docs_enc, tfs_enc, first_doc: np.ndarray, n_docs: np.ndarray):
+    """Block rows' payloads -> (start, offs, tfs): row i's postings are
+    ``offs[start[i]:start[i + 1]]`` (doc ids minus the first id of the
+    row's doc group, uint16: a block never crosses a group and a group
+    spans 2^DOC_GROUP_BITS ids) and the same range of ``tfs`` (int32). A
+    posting outside its block's group is an index inconsistency and
+    raises."""
+    d, tfs = decode_blocks(docs_enc, tfs_enc, n_docs)
+    start = np.zeros(n_docs.size + 1, dtype=np.int64)
+    np.cumsum(n_docs, out=start[1:])
+    if ((d >> DOC_GROUP_BITS) != np.repeat(first_doc >> DOC_GROUP_BITS, n_docs)).any():
+        raise RuntimeError("postings block crosses a doc group; re-encode its bucket")
+    return start, (d & _GROUP_MASK).astype(np.uint16), tfs.astype(np.int32)
+
+
+def _postings_files(files: list[str]) -> dict[str, _PostingsFile]:
+    """path -> the file decoded (_PostingsFile), from one pyarrow dataset
+    over ``files``. The terms are a numpy bytes array: every file is sorted
+    by (term, first_doc) (index_build._write_postings_rows) and Spark
+    orders strings by their UTF-8 bytes, so a query finds a term's rows by
+    binary search. A file out of that order is an index inconsistency and
+    raises. The payloads decode straight from the Arrow data buffers."""
     out = {}
     for frag in ds.dataset(files, format="parquet").get_fragments():
         tbl = frag.to_table(columns=_POSTINGS_COLUMNS)
         terms = pc.cast(tbl["term"], pa.binary()).to_numpy(zero_copy_only=False).astype(bytes)
         if (terms[1:] < terms[:-1]).any():
             raise RuntimeError(f"postings file {frag.path} is not sorted by term; rebuild its bucket")
-        out[frag.path] = (terms, tbl.drop_columns(["term"]))
+        first_doc, n_docs, max_tf, min_dl = (tbl[c].to_numpy() for c in ("first_doc", "n_docs", "max_tf", "min_dl"))
+        rows = _decode_rows(tbl["docs_enc"], tbl["tfs_enc"], first_doc, n_docs)
+        out[frag.path] = _PostingsFile(terms, first_doc, n_docs, max_tf, min_dl, *rows)
     return out
 
 
@@ -481,14 +526,15 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
 
     The postings are the pinned snapshot's files of the query's tp=T
     directories (file lists memoized per snapshot: Catalog.version_files),
-    each read once per process into the cache (_cached, _postings_files),
-    so a warm query opens no file. A binary search over each file's sorted
-    term column picks the query terms' rows, which are concatenated in
-    bucket/tp/file order. Each block row becomes one kernel row per
-    occurrence of its term in the query, by index over the Arrow columns,
-    and the shared WAND kernel scores them, dl read and drift check
-    included, with the same floats as the Spark plan and the oracle. The
-    urls come from the doc-group arrays the kernel loaded for the dls.
+    each read and decoded once per process into the cache (_cached,
+    _postings_files), so a warm query opens no file and decodes no
+    payload. A binary search over each file's sorted term column picks the
+    query terms' rows; their block metadata and their postings (one
+    contiguous range per file and term) are concatenated in bucket/tp/file
+    order. Each block row becomes one kernel row per occurrence of its term
+    in the query, and the shared WAND kernel scores them, dl read and drift
+    check included, with the same floats as the Spark plan and the oracle.
+    The urls come from the doc-group arrays the kernel loaded for the dls.
     """
     _, _, k = qrow
     term_rows, _, avgdl, _ = meta
@@ -503,28 +549,32 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
     ]
     cached = _cached([f for _, _, f in files], _postings_files)
     term_bytes = np.array([t.encode() for t in terms])  # in the files' order
-    parts, runs = [], []  # row slices, and (bucket, version, term index, rows) per slice
+    rows, postings, runs = [], [], []  # row slices, posting slices, (bucket, version, term index, rows)
+    n_postings = 0
     for b, v, f in files:
-        file_terms, tbl = cached[f]
-        lo, hi = np.searchsorted(file_terms, term_bytes, "left"), np.searchsorted(file_terms, term_bytes, "right")
+        pf = cached[f]
+        lo, hi = np.searchsorted(pf.terms, term_bytes, "left"), np.searchsorted(pf.terms, term_bytes, "right")
         for t, (s, e) in enumerate(zip(lo.tolist(), hi.tolist())):
             if e > s:
-                parts.append(tbl.slice(s, e - s))
+                p0, p1 = int(pf.start[s]), int(pf.start[e])
+                start = pf.start[s:e] + (n_postings - p0)  # into the concatenated postings
+                rows.append((pf.first_doc[s:e], pf.n_docs[s:e], pf.max_tf[s:e], pf.min_dl[s:e], start))
+                postings.append((pf.offs[p0:p1], pf.tfs[p0:p1]))
                 runs.append((b, v, t, e - s))
-    if not parts:  # no query term is in the index
+                n_postings += p1 - p0
+    if not rows:  # no query term is in the index
         return []
-    tbl = pa.concat_tables(parts)
+    first_doc, n_docs, max_tf, min_dl, start = map(np.concatenate, zip(*rows))
+    offs, tfs = map(np.concatenate, zip(*postings))
     bucket, v, row_term, n = map(np.array, zip(*runs))
     row_term = np.repeat(row_term, n)
     # one copy of a block per occurrence of its term: (occurrence, block row) pairs
     _, occ_term, qpos, qtf, _, idf = map(np.array, zip(*term_rows))
     occ, row = np.nonzero(np.searchsorted(terms, occ_term)[:, None] == row_term)
-    cols = {c: tbl[c].to_numpy()[row] for c in tbl.column_names}
-    cols.update(
-        term=row_term[row], bucket=np.repeat(bucket, n)[row], v=np.repeat(v, n)[row], qpos=qpos[occ], idf=idf[occ]
-    )
-    cols["ub"] = _block_ub(cols.pop("max_tf"), cols.pop("min_dl"), cols["idf"], qtf[occ], avgdl)
-    ranked, groups = _wand_task_kernel(cols, k, avgdl, catalog.path("docs"))
+    cols = {"term": row_term[row], "qpos": qpos[occ], "idf": idf[occ], "start": start[row]}
+    cols.update(first_doc=first_doc[row], n_docs=n_docs[row], bucket=np.repeat(bucket, n)[row], v=np.repeat(v, n)[row])
+    cols["ub"] = _block_ub(max_tf[row], min_dl[row], cols["idf"], qtf[occ], avgdl)
+    ranked, groups = _wand_task_kernel(cols, offs, tfs, k, avgdl, catalog.path("docs"))
     out = []
     for d, score in ranked:  # every scored doc has its row in its group's arrays
         ids, _, urls = groups[d >> DOC_GROUP_BITS]
@@ -532,14 +582,17 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
     return out
 
 
-# one array per name, one entry per (block, query-token occurrence) row
-_KERNEL_COLUMNS = ("term", "qpos", "idf", "ub", "first_doc", "n_docs", "bucket", "v", "docs_enc", "tfs_enc")
+# one array per name, one entry per (block, query-token occurrence) row; the
+# kernel also takes each row's ``start`` into its flat postings arrays
+_BLOCK_COLUMNS = ("term", "qpos", "idf", "ub", "first_doc", "n_docs", "bucket", "v")
 
 
-def _wand_task_kernel(cols: dict[str, np.ndarray], k: int, avgdl: float, dl_root: str):
+def _wand_task_kernel(
+    cols: dict[str, np.ndarray], offs: np.ndarray, tfs: np.ndarray, k: int, avgdl: float, dl_root: str
+):
     """The per-(query, task) block-max WAND scorer (shared by the Spark
     plan's applyInPandas tasks and the driver path): visits the
-    task's doc-groups in descending upper bound, skips decoding any group
+    task's doc-groups in descending upper bound, skips scoring any group
     whose bound cannot beat the running top-k threshold, and returns the
     ranked local top-k as [(doc_id, bm25_score)] plus the doc-group arrays
     it loaded (group -> (doc_ids, dls, urls), see _load_group_dls). Exact —
@@ -547,12 +600,16 @@ def _wand_task_kernel(cols: dict[str, np.ndarray], k: int, avgdl: float, dl_root
     group skipping aggregates scores across a group's blocks, so a group
     split across calls would drop contributions.
 
-    ``cols`` maps each _KERNEL_COLUMNS name to an array with one entry per
-    copy of a block per occurrence of its term in the query (``qpos``).
-    Each group's blocks are decoded in query-position order and every
-    posting adds ``idf * tf_norm`` to its doc in that order, so a score is
-    the oracle's sum, float for float, whatever the row order of the arrays
-    or the task split."""
+    ``cols`` maps each _BLOCK_COLUMNS name and ``start`` to an array with
+    one entry per copy of a block per occurrence of its term in the query
+    (``qpos``). The postings come decoded: a row's are ``offs[start:start +
+    n_docs]`` (doc id minus its group's first id) and the same range of
+    ``tfs``, so copies of a block share them. A visited group gathers its
+    rows' postings by index, in query-position order, and every posting
+    adds ``idf * tf_norm`` to its doc in that order, so a score is the
+    oracle's sum, float for float, whatever the row order of the arrays or
+    the task split. A skipped group costs no gather, no dl lookup and no
+    scoring."""
     groups = cols["first_doc"].astype(np.int64) >> DOC_GROUP_BITS
     order = np.lexsort((cols["qpos"], groups))
     groups = groups[order]
@@ -565,7 +622,7 @@ def _wand_task_kernel(cols: dict[str, np.ndarray], k: int, avgdl: float, dl_root
     best = np.zeros((group_ids.size, int(terms.max()) + 1))
     np.maximum.at(best, (np.repeat(np.arange(group_ids.size), ends - starts), terms), cols["ub"][order])
     g_ub = best.sum(axis=1)
-    # dl for every (bucket, group) this task may decode — ONE pyarrow
+    # dl for every (bucket, group) this task may score — ONE pyarrow
     # point read of docs up front (pruned to the task's doc-groups);
     # loading lazily per visited group would be one IO per group
     buckets = cols["bucket"].astype(np.int64)
@@ -581,33 +638,35 @@ def _wand_task_kernel(cols: dict[str, np.ndarray], k: int, avgdl: float, dl_root
         return heap[0][0] if len(heap) >= k else -np.inf
 
     visit = np.argsort(-g_ub, kind="stable")
-    docs_enc = cols["docs_enc"][order]
-    tfs_enc = cols["tfs_enc"][order]
     ndocs_col = cols["n_docs"][order].astype(np.int64)
     idfs = cols["idf"][order].astype(np.float64)
+    # posting j of the rows taken in this order is offs/tfs[j + shift[row]]
+    pos = np.zeros(order.size + 1, dtype=np.int64)
+    np.cumsum(ndocs_col, out=pos[1:])
+    shift = cols["start"][order] - pos[:-1]
     for vi in visit.tolist():
         s, e = starts[vi], ends[vi]
         # strict inequality: a group whose bound EQUALS the threshold may
         # still contain a doc with score == theta and a smaller doc_id,
         # which wins the deterministic (score desc, doc_id asc) tie-break
         if g_ub[vi] < theta():
-            continue  # skip decode of the whole doc-group
+            continue  # skip the whole doc-group
         base = int(group_ids[vi]) << DOC_GROUP_BITS
-        # batch-decode every block of the group in one varint pass
         counts = ndocs_col[s:e]
-        gaps = concat_varint_decode(docs_enc[s:e]).astype(np.int64)
-        d = segmented_gap_cumsum(gaps, counts)
-        t = concat_varint_decode(tfs_enc[s:e]).astype(np.float64)
+        at = np.arange(pos[s], pos[e]) + np.repeat(shift[s:e], counts)
+        off = offs[at]
         ids_g, dls_g, _ = dl_map[int(group_ids[vi])]
-        l = _group_dls(ids_g, dls_g, d)
+        l = _group_dls(ids_g, dls_g, np.add(off, base, dtype=np.int64))
         w = np.repeat(idfs[s:e], counts)
-        contrib = w * bm25_tf_norm(t, l, avgdl, K1, B)
-        off = d - base
-        local = np.zeros(1 << DOC_GROUP_BITS, dtype=np.float64)
-        np.add.at(local, off, contrib)  # in row order: query-position order
-        offs = np.unique(off)
-        scores = local[offs]
-        ids = base + offs
+        contrib = w * bm25_tf_norm(tfs[at], l, avgdl, K1, B)
+        # bincount adds the weights in index order from 0.0, as np.add.at
+        # does: in query-position order. Every contribution is > 0 (idf > 0
+        # since a term's df <= n_docs, and tf >= 1), so an offset's sum is
+        # nonzero exactly when the group has a posting of that doc.
+        local = np.bincount(off, weights=contrib)
+        offs_g = np.flatnonzero(local)
+        scores = local[offs_g]
+        ids = base + offs_g
         # vectorized candidate selection: threshold-filter (conservative:
         # uses the heap state BEFORE this group; the heapq pass below is
         # exact), then lexsort-cap to k so the Python loop runs <= k times
@@ -630,9 +689,12 @@ def _wand_task_kernel(cols: dict[str, np.ndarray], k: int, avgdl: float, dl_root
 
 def _wand_frame_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataFrame:
     """The Spark plan's applyInPandas entry: one (query, task) group's
-    block rows -> its ranked local top-k as a RESULT_SCHEMA frame."""
-    cols = {c: pdf[c].to_numpy() for c in _KERNEL_COLUMNS}
-    ranked, _ = _wand_task_kernel(cols, int(pdf["k"].iloc[0]), avgdl, dl_root)
+    block rows -> its ranked local top-k as a RESULT_SCHEMA frame. The
+    frame's payloads decode once, into the kernel's input form."""
+    cols = {c: pdf[c].to_numpy() for c in _BLOCK_COLUMNS}
+    start, offs, tfs = _decode_rows(pdf["docs_enc"], pdf["tfs_enc"], cols["first_doc"], cols["n_docs"])
+    cols["start"] = start[:-1]
+    ranked, _ = _wand_task_kernel(cols, offs, tfs, int(pdf["k"].iloc[0]), avgdl, dl_root)
     return _topk_frame(int(pdf["query_id"].iloc[0]), ranked)
 
 

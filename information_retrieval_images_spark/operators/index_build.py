@@ -316,9 +316,9 @@ def decoded_runs(catalog: Catalog, postings: DataFrame, drop_ids=()) -> DataFram
     the doc ids in ``drop_ids``: the runs delete and compaction re-encode,
     so neither needs the text (Lucene's segment merge).
 
-    One vectorized pass per Arrow batch: every block's gaps and tfs decode
-    as one varint stream (codec.concat_varint_decode) and doc ids come back
-    by segmented_gap_cumsum. dl comes from the docs version of each row's
+    One vectorized pass per Arrow batch: the one block decoder
+    (codec.decode_blocks) turns every block's payloads into flat doc ids
+    and tfs. dl comes from the docs version of each row's
     own bucket version (rows carry ``bucket`` and ``v``), read with the
     query kernels' point reader and its drift check. A doc's postings
     keep their (term, doc_id, tf, dl), so re-encoding the runs gives
@@ -329,13 +329,13 @@ def decoded_runs(catalog: Catalog, postings: DataFrame, drop_ids=()) -> DataFram
     src = postings.select("term", "n_docs", "docs_enc", "tfs_enc", "bucket", "v")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..codec import concat_varint_decode, segmented_gap_cumsum
+        from ..codec import decode_blocks
         from .bm25 import _group_dls, _load_group_dls
 
         for pdf in batches:
             counts = pdf["n_docs"].to_numpy(np.int64)
-            d = segmented_gap_cumsum(concat_varint_decode(pdf["docs_enc"]).astype(np.int64), counts)
-            tf = concat_varint_decode(pdf["tfs_enc"]).astype(np.int32)
+            d, tf = decode_blocks(pdf["docs_enc"], pdf["tfs_enc"], counts)
+            tf = tf.astype(np.int32)
             term = np.repeat(pdf["term"].to_numpy(object), counts)
             bucket = np.repeat(pdf["bucket"].to_numpy(np.int64), counts)
             keep = ~np.isin(d, drop)

@@ -24,11 +24,12 @@ Two layers:
   and ``POST /append`` taking ``{"pages": [{"url", "html" (base64),
   "lang"}, ...]}``. The server is THREADED for /search: concurrent queries
   are independent read-only calls in the driver. A warm query reads no file
-  (its postings and doc groups come from the in-process cache), so it is
-  all Python and numpy under the GIL and 4 clients get no more done than
-  one: on the 6,000-page perfbench ``search`` index (local[4], 4 vCPUs, in
-  process, 5 s each) 1 client ran 469 queries/s at a 2.0 ms median and 4
-  clients 401 queries/s at 9.5 ms. A query that still takes the Spark plan
+  and decodes no posting (its decoded postings and merged doc groups come
+  from the in-process cache), so it is all Python and numpy under the GIL
+  and 4 clients get no more done than one: on the 6,000-page perfbench
+  ``search`` index (local[4], 4 vCPUs, in process, 5 s each) 1 client ran
+  818-894 queries/s at a 1.1-1.2 ms median and 4 clients 631-644
+  queries/s at 6.0 ms. A query that still takes the Spark plan
   (fan-out above 1, Iceberg postings) submits its jobs to Spark's FIFO
   scheduler, so concurrent ones queue, and one that arrives during an
   /append waits behind the append's jobs (6,000-page index, local[4]:

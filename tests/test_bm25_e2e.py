@@ -249,6 +249,60 @@ def test_warm_search_opens_no_docs_file(spark, corpus, built, monkeypatch):
     assert opened == [], opened
 
 
+def test_warm_search_decodes_nothing(spark, corpus, built, monkeypatch):
+    """A warm search decodes no posting payload: the postings-file cache
+    holds each file decoded. A spy on codec.varint_decode, which every
+    block decode runs through, sees the cold searches (on an emptied cache)
+    decode and the warm ones decode nothing, while ranks, scores and urls
+    still equal the oracle's."""
+    from information_retrieval_images_spark import codec
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+
+    _, queries, idx, expected = corpus
+    cat, _ = built
+    monkeypatch.setattr(bm25_mod, "_CACHE", {})
+    monkeypatch.setattr(bm25_mod, "_CACHE_BYTES", [0])
+    session = SearchSession(spark, cat.root)
+    exp = expected[["query_id", "rank", "doc_id", "bm25_score"]]
+    rows = list(queries.itertuples(index=False))
+    decoded = []
+    real = codec.varint_decode
+    monkeypatch.setattr(codec, "varint_decode", lambda buf: decoded.append(len(buf)) or real(buf))
+    for row in rows:  # cold: term dfs, postings files and doc groups
+        session.search(row.query_text, k=row.k)
+    assert decoded, "the spy saw no decode"
+    decoded.clear()
+    for row in rows:
+        got = session.search(row.query_text, k=row.k)
+        _assert_rank_identical(_search_frame(got, row.query_id), exp[exp["query_id"] == row.query_id])
+        assert [r["url"] for r in got] == [idx.url_of[r["doc_id"]] for r in got]
+    assert decoded == [], decoded
+
+
+def test_cached_arrays_are_read_only(spark, corpus, built):
+    """Request threads share the cached arrays, so every numpy array the
+    cache holds, postings files and doc groups alike, is read-only: an
+    in-place write raises instead of changing what later queries score."""
+    import numpy as np
+
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+
+    _, queries, _, _ = corpus
+    cat, _ = built
+    session = SearchSession(spark, cat.root)
+    for row in queries.head(4).itertuples(index=False):
+        session.search(row.query_text, k=row.k)
+    held = {type(key): value for key, (value, _) in bm25_mod._CACHE.items()}
+    assert set(held) == {str, tuple}, held  # a postings file and a doc group
+    for value in held.values():
+        arrays = [a for a in value if isinstance(a, np.ndarray)]
+        assert arrays
+        for a in arrays:
+            assert not a.flags.writeable
+            with pytest.raises(ValueError, match="read-only"):
+                a[:1] = a[:1]
+
+
 def test_cache_serves_no_superseded_version(spark, tmp_path_factory):
     """The cache keys entries by immutable version paths, so a commit can
     never be answered from a superseded version: in one warm SearchSession,
@@ -288,8 +342,8 @@ def test_cache_serves_no_superseded_version(spark, tmp_path_factory):
 def test_postings_file_out_of_term_order_raises(tmp_path):
     """The driver path binary-searches each cached postings file's term
     column, so a file that is not sorted by term would silently lose rows:
-    the cache fill refuses it instead, and reads a sorted one in file
-    order."""
+    the cache fill refuses it instead, and reads (and decodes) a sorted
+    one in file order."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -303,9 +357,10 @@ def test_postings_file_out_of_term_order_raises(tmp_path):
         return str(tmp_path / name)
 
     good = write("sorted.parquet", ["b", "b", "é", "éa"])
-    terms, tbl = bm25_mod._postings_files([good])[good]
-    assert terms.tolist() == [t.encode() for t in ["b", "b", "é", "éa"]]
-    assert tbl["first_doc"].to_pylist() == [0, 1, 2, 3]
+    pf = bm25_mod._postings_files([good])[good]
+    assert pf.terms.tolist() == [t.encode() for t in ["b", "b", "é", "éa"]]
+    assert pf.first_doc.tolist() == [0, 1, 2, 3]
+    assert (pf.start.tolist(), pf.offs.tolist(), pf.tfs.tolist()) == ([0, 1, 2, 3, 4], [0] * 4, [1] * 4)
     bad = write("unsorted.parquet", ["b", "a"])
     with pytest.raises(RuntimeError, match="not sorted by term"):
         bm25_mod._postings_files([bad])
@@ -314,33 +369,42 @@ def test_postings_file_out_of_term_order_raises(tmp_path):
 def test_kernel_is_independent_of_row_order(spark, built, monkeypatch):
     """Permuting a task's block rows leaves the kernel's ranked (doc_id,
     bm25_score) list identical, float for float, on the driver entry (the
-    column arrays) and on the Spark plan's applyInPandas wrapper (a frame).
-    The query repeats a term, so equal-qpos and repeated-term rows both
-    move; k=3 keeps the threshold pruning active."""
+    row arrays with their starts into the flat decoded postings) and on the
+    Spark plan's applyInPandas wrapper (a frame of encoded blocks, which
+    decodes into a new flat layout in the permuted row order). The query
+    repeats a term, so equal-qpos and repeated-term rows both move; k=3
+    keeps the threshold pruning active."""
     import numpy as np
 
+    from information_retrieval_images_spark.codec import varint_encode
     from information_retrieval_images_spark.operators import bm25 as bm25_mod
+    from information_retrieval_images_spark.operators.index_build import DOC_GROUP_BITS
 
     cat, _ = built
     real = bm25_mod._wand_task_kernel
     calls = []
-    monkeypatch.setattr(
-        bm25_mod, "_wand_task_kernel", lambda cols, *a: calls.append((cols, *a)) or real(cols, *a)
-    )
+    monkeypatch.setattr(bm25_mod, "_wand_task_kernel", lambda *a: calls.append(a) or real(*a))
     for k in (3, 10):
         bm25_search(spark, cat, "term000007 term000001 term000007 term000007 term000002", k)
     monkeypatch.undo()
     assert len(calls) == 2
     rng = np.random.default_rng(0)
-    for cols, k, avgdl, dl_root in calls:
-        want = real(cols, k, avgdl, dl_root)[0]
+    for cols, offs, tfs, k, avgdl, dl_root in calls:
+        want = real(cols, offs, tfs, k, avgdl, dl_root)[0]
         assert len(want) == k
         n = len(cols["qpos"])
         assert n > 4, n
-        pdf = pd.DataFrame(cols).assign(query_id=0, k=k)
+        # each row's postings as the block payloads the Spark plan ships
+        base = (cols["first_doc"] >> DOC_GROUP_BITS) << DOC_GROUP_BITS
+        docs_enc, tfs_enc = [], []
+        for b, s, c in zip(base.tolist(), cols["start"].tolist(), cols["n_docs"].tolist()):
+            docs_enc.append(varint_encode(np.diff(b + offs[s : s + c].astype(np.int64), prepend=0)))
+            tfs_enc.append(varint_encode(tfs[s : s + c]))
+        pdf = pd.DataFrame({c: cols[c] for c in bm25_mod._BLOCK_COLUMNS})
+        pdf = pdf.assign(docs_enc=docs_enc, tfs_enc=tfs_enc, query_id=0, k=k)
         for _ in range(5):
             perm = rng.permutation(n)
-            assert real({c: a[perm] for c, a in cols.items()}, k, avgdl, dl_root)[0] == want
+            assert real({c: a[perm] for c, a in cols.items()}, offs, tfs, k, avgdl, dl_root)[0] == want
             top = bm25_mod._wand_frame_kernel(pdf.iloc[perm].reset_index(drop=True), avgdl, dl_root)
             assert list(zip(top["doc_id"].tolist(), top["bm25_score"].tolist())) == want
 
@@ -457,13 +521,13 @@ def test_single_query_dataframe_plans_no_exchange(spark, corpus, built):
 
 
 def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
-    """Request threads share the driver's cache of postings files and doc
-    groups (doc ids, dls and urls per group). Capped at 32 KB (a few of the
-    5-7 KB entries this index's files and groups take; all of them take
-    about 270 KB), fills evict on most queries: 4 threads x 20 searches see
-    zero errors and oracle-identical ranks, scores and urls, and the one
-    byte count equals the bytes of every entry held, postings files and
-    doc groups alike, within the bound."""
+    """Request threads share the driver's cache of decoded postings files
+    and merged doc groups (doc ids, dls and urls per group). Capped at 32 KB
+    (a few of the 5-15 KB entries this index's files and groups take; all
+    of them take about 340 KB), fills evict on most queries: 4 threads x 20
+    searches see zero errors and oracle-identical ranks, scores and urls,
+    and the one byte count equals the bytes of every entry held, postings
+    files and doc groups alike, within the bound."""
     from information_retrieval_images_spark.operators import bm25 as bm25_mod
 
     _, queries, idx, expected = corpus
@@ -503,7 +567,7 @@ def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
         assert [r["url"] for r in got] == [idx.url_of[r["doc_id"]] for r in got]
     held = sum(a.nbytes for value, _ in bm25_mod._CACHE.values() for a in value)
     assert bm25_mod._CACHE_BYTES[0] == held <= 32 << 10
-    # postings files are keyed by path, doc groups by (docs directory, group)
+    # postings files are keyed by path, doc groups by (group, docs directories)
     assert {type(key) for key in bm25_mod._CACHE} == {str, tuple}, list(bm25_mod._CACHE)
 
 

@@ -1,10 +1,12 @@
 """Varint/delta-gap codec round-trip tests (SURVEY.md §5 unit tier)."""
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from information_retrieval_images_spark.codec import (
     concat_varint_decode,
+    decode_blocks,
     segmented_gap_cumsum,
     segmented_varint_encode,
     varint_decode,
@@ -103,3 +105,41 @@ def test_compression_is_compact():
     ids = np.arange(0, 128, dtype=np.int64) * 3
     starts, ends = _segments([64, 64])
     assert sum(len(p) for p in _encode_gaps(ids, starts, ends)) <= 130
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_decode_blocks_matches_stream_decode(seed):
+    """The one block decoder gives what concat_varint_decode plus
+    segmented_gap_cumsum give, on random blocks with empty and
+    one-posting ones among them, whether the payloads come as a list of
+    bytes (a pandas column), an Arrow binary array read from its data
+    buffer, a slice of one or a chunked array."""
+    rng = np.random.default_rng(200 + seed)
+    counts = rng.integers(1, 130, int(rng.integers(3, 60)))
+    counts[::3] = 1
+    counts[1::5] = 0  # empty blocks: no posting, empty payloads
+    starts, ends = _segments(counts)
+    ids = np.concatenate(
+        [np.cumsum(rng.integers(1, 10_000, int(c))) + int(rng.integers(0, 1 << 40)) for c in counts]
+    ).astype(np.int64)
+    tfs = rng.integers(1, 1 << 20, ids.size).astype(np.uint64)
+    docs_enc = _encode_gaps(ids, starts, ends)
+    tfs_enc = segmented_varint_encode(tfs, starts, ends)
+    want_d = segmented_gap_cumsum(concat_varint_decode(docs_enc).astype(np.int64), counts)
+    want_t = concat_varint_decode(tfs_enc)
+    assert want_d.tolist() == ids.tolist()
+    cut = counts.size // 2
+    forms = [
+        (docs_enc, tfs_enc),
+        (pa.array(docs_enc, pa.binary()), pa.array(tfs_enc, pa.binary())),
+        (pa.array([b"x"] + docs_enc, pa.binary()).slice(1), pa.array([b"y"] + tfs_enc, pa.large_binary()).slice(1)),
+        (pa.chunked_array([docs_enc[:cut], docs_enc[cut:]], pa.binary()), pa.chunked_array([tfs_enc], pa.binary())),
+    ]
+    for docs, tf in forms:
+        d, t = decode_blocks(docs, tf, counts)
+        assert d.dtype == np.int64 and d.tolist() == want_d.tolist()
+        assert t.tolist() == want_t.tolist()
+    empty = decode_blocks(pa.array([b""], pa.binary()), [b""], [0])
+    assert [a.size for a in empty] == [0, 0]
+    with pytest.raises(ValueError, match="postings"):
+        decode_blocks(docs_enc, tfs_enc[1:], counts)  # block 0 holds one posting
