@@ -108,11 +108,12 @@ def _payload_stream(payloads) -> np.ndarray:
         payloads = payloads.combine_chunks()
     if not isinstance(payloads, pa.Array):
         return np.frombuffer(b"".join(payloads), dtype=np.uint8)
+    if payloads.type != pa.binary():  # int32 offsets; parquet reads payloads back as binary
+        raise TypeError(f"varint payloads must be an Arrow binary array, not {payloads.type}")
     lo = hi = 0
     if len(payloads):
         _, offsets, data = payloads.buffers()
-        width = np.int64 if pa.types.is_large_binary(payloads.type) else np.int32
-        lo, hi = np.frombuffer(offsets, dtype=width)[[payloads.offset, payloads.offset + len(payloads)]].tolist()
+        lo, hi = np.frombuffer(offsets, dtype=np.int32)[[payloads.offset, payloads.offset + len(payloads)]].tolist()
     if hi == lo:  # no payload byte: the data buffer may be absent
         return np.empty(0, dtype=np.uint8)
     return np.frombuffer(data, dtype=np.uint8, count=hi - lo, offset=lo)

@@ -17,9 +17,10 @@ directory postings is scored IN THE DRIVER from the pinned manifest's
 postings files, with numpy arrays and no pandas frame: a warm
 :func:`bm25_search_records` runs no Spark job, opens no file and decodes no
 posting. The kernel is the Spark plan's, called with the one task's arrays;
-it takes decoded postings, which the driver path decodes once per file per
-process (the cache) and the Spark plan once per task frame. Batches,
-fan-out above 1 and Iceberg postings run the Spark plan.
+it asks for a visited group's postings, which the driver path gathers from
+postings files decoded once per file per process (the cache) and the Spark
+plan decodes from the group's block rows. Batches, fan-out above 1 and
+Iceberg postings run the Spark plan.
 
 Scale notes (100 TB): the Spark plan's postings scan is pruned at the
 directory level by the term-prefix (tp) partition and at the row-group
@@ -37,7 +38,7 @@ query's doc-groups across executors so a head-term query does not serialize
 on one task, and bounds the driver path's memory. The driver path lists
 each version directory once per snapshot (Catalog.version_files), so a warm
 query makes no directory listing. A result's urls come from the doc-group
-cache that also holds the groups' dls, merged across buckets
+cache that also holds the groups' dls, one entry per bucket and group
 (_load_group_dls). A cold group still reads every ``docs`` file of its
 bucket: each is sorted by doc_id but spans nearly the whole doc_id range of
 the bucket, so the doc_id row-group pruning opens about one row group per
@@ -75,11 +76,11 @@ RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 # Process-wide LRU cache of immutable index data (guide §4.5: heavyweight
 # per-task state amortized across tasks via worker reuse). Two kinds of
 # entry share one lock, one LRU order and one byte bound:
-# - a doc group's (doc_ids, dls, urls), merged across the buckets asked
-#   for, keyed by (group, tuple of those buckets' docs version directories)
-#   (_load_group_dls): for a 50-query batch the same few dozen groups would
-#   otherwise be read hundreds of times per run, and a warm driver query
-#   takes its dls and its result's urls from it;
+# - a doc group's (doc_ids, dls, urls) from one bucket's ``docs`` version,
+#   keyed by (version directory, group) (_load_group_dls): for a 50-query
+#   batch the same few dozen groups would otherwise be read hundreds of
+#   times per run, and a warm driver query takes its dls and its result's
+#   urls from it, whatever subset of a group's buckets its terms touch;
 # - one ``postings`` file, decoded, keyed by its path (_postings_files):
 #   the driver path reads and decodes each tp=T file once per process.
 # A version directory is immutable and its id is unique (catalog.py), so an
@@ -132,12 +133,14 @@ def _cached(keys: list, fill) -> dict:
 
 def _load_group_dls(
     dirs: dict[int, str], pairs: set[tuple[int, int]]
-) -> dict[int, tuple[np.ndarray, np.ndarray, pa.Array]]:
-    """doc_group -> (sorted doc_ids, dls, urls) for the requested (bucket,
-    group) pairs, merged across buckets (consecutive doc ids round-robin
-    over buckets, so one group's docs span several buckets). ``dirs`` maps
-    each bucket to its docs version directory. A group with no docs row
-    maps to empty arrays (the drift check then raises on its postings).
+) -> dict[tuple[int, int], tuple[np.ndarray, np.ndarray, pa.Array]]:
+    """(bucket, doc_group) -> that bucket's (sorted doc_ids, dls, urls) of
+    the group, for the requested pairs. Consecutive doc ids round-robin
+    over buckets, so one group's docs span several buckets; a posting row
+    carries its bucket, so its docs are looked up in its own bucket's
+    arrays (_rows_dls) and no group is merged. ``dirs`` maps each bucket to
+    its docs version directory. A pair with no docs row maps to empty
+    arrays (the drift check then raises on its postings).
 
     A pyarrow point read (in an executor or the driver) of ``(doc_id, dl,
     url)`` from ``docs``, with one pushed doc_id range per requested group:
@@ -146,25 +149,24 @@ def _load_group_dls(
     buckets' version directories: a dataset over the docs root would list
     every bucket directory before pruning — O(buckets) metadata RPCs per
     query on object storage at 10^4-10^5 buckets. Each candidate directory
-    becomes its own tiny dataset, so the IO is O(its buckets). The merged
-    group is memoized per process (_cached) under the group and the tuple
-    of its buckets' directories, so a warm query merges nothing.
+    becomes its own tiny dataset, so the IO is O(its buckets). The
+    (bucket, group) arrays are memoized per process (_cached) under (docs
+    version directory, group), so any subset of a group's buckets is warm
+    once each of them was read.
     """
-    by_group: dict[int, set[str]] = {}
-    for b, g in pairs:
-        by_group.setdefault(int(g), set()).add(dirs[int(b)])
-    got = _cached(sorted((g, tuple(sorted(d))) for g, d in by_group.items()), _read_groups)
-    return {g: entry for (g, _), entry in got.items()}
+    pairs = sorted((int(b), int(g)) for b, g in pairs)
+    got = _cached([(dirs[b], g) for b, g in pairs], _read_groups)
+    return {(b, g): got[dirs[b], g] for b, g in pairs}
 
 
-def _read_groups(keys: list[tuple[int, tuple[str, ...]]]) -> dict:
-    """(group, docs version directories) -> the group's (doc_ids, dls,
-    urls) merged across those directories, one read per directory."""
+def _read_groups(keys: list[tuple[str, int]]) -> dict[tuple[str, int], tuple[np.ndarray, np.ndarray, pa.Array]]:
+    """(docs version directory, group) -> the group's (doc_ids, dls, urls),
+    one read per directory; a group with no row gets empty arrays, so the
+    miss is cached too."""
     by_dir: dict[str, list[int]] = {}
-    for g, dirs in keys:
-        for d in dirs:
-            by_dir.setdefault(d, []).append(g)
-    parts = {}
+    for d, g in keys:
+        by_dir.setdefault(d, []).append(g)
+    out = {}
     for d, groups in by_dir.items():
         groups.sort()
         doc_id = ds.field("doc_id")
@@ -179,18 +181,21 @@ def _read_groups(keys: list[tuple[int, tuple[str, ...]]]) -> dict:
         urls = tbl["url"].combine_chunks()
         cuts = np.searchsorted(ids, [g << DOC_GROUP_BITS for g in groups] + [(groups[-1] + 1) << DOC_GROUP_BITS])
         for g, s, e in zip(groups, cuts[:-1].tolist(), cuts[1:].tolist()):
-            parts[d, g] = (ids[s:e], dls[s:e], urls.slice(s, e - s))
-    out = {}
-    for g, dirs in keys:
-        # a group with no row anywhere keeps one bucket's empty arrays
-        found = [parts[d, g] for d in dirs if parts[d, g][0].size] or [parts[dirs[0], g]]
-        if len(found) == 1:
-            out[g, dirs] = found[0]
-        else:
-            ids = np.concatenate([p[0] for p in found])
-            order = np.argsort(ids, kind="stable")
-            dls = np.concatenate([p[1] for p in found])[order]
-            out[g, dirs] = (ids[order], dls, pa.concat_arrays([p[2] for p in found]).take(order))
+            out[d, g] = (ids[s:e], dls[s:e], urls.slice(s, e - s))
+    return out
+
+
+def _rows_dls(dl_map: dict, group: int, row_buckets: np.ndarray, counts: np.ndarray, doc_ids: np.ndarray) -> np.ndarray:
+    """dl per posting of one doc group's block rows: row i holds the next
+    ``counts[i]`` of ``doc_ids`` and is in bucket ``row_buckets[i]``, so its
+    postings are looked up in that bucket's arrays of the group
+    (``dl_map``, see _load_group_dls), drift check included."""
+    per_posting = np.repeat(row_buckets, counts)
+    out = np.empty(doc_ids.size)
+    for b in np.unique(row_buckets).tolist():
+        m = per_posting == b
+        ids_b, dls_b, _ = dl_map[b, group]
+        out[m] = _group_dls(ids_b, dls_b, doc_ids[m])
     return out
 
 
@@ -533,8 +538,10 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
     contiguous range per file and term) are concatenated in bucket/tp/file
     order. Each block row becomes one kernel row per occurrence of its term
     in the query, and the shared WAND kernel scores them, dl read and drift
-    check included, with the same floats as the Spark plan and the oracle.
-    The urls come from the doc-group arrays the kernel loaded for the dls.
+    check included, with the same floats as the Spark plan and the oracle;
+    it gathers a visited group's postings from the concatenated arrays by
+    index. The urls come from the (bucket, group) arrays the kernel loaded
+    for the dls: one binary search per array of a result group.
     """
     _, _, k = qrow
     term_rows, _, avgdl, _ = meta
@@ -571,44 +578,57 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
     # one copy of a block per occurrence of its term: (occurrence, block row) pairs
     _, occ_term, qpos, qtf, _, idf = map(np.array, zip(*term_rows))
     occ, row = np.nonzero(np.searchsorted(terms, occ_term)[:, None] == row_term)
-    cols = {"term": row_term[row], "qpos": qpos[occ], "idf": idf[occ], "start": start[row]}
+    cols = {"term": row_term[row], "qpos": qpos[occ], "idf": idf[occ]}
     cols.update(first_doc=first_doc[row], n_docs=n_docs[row], bucket=np.repeat(bucket, n)[row], v=np.repeat(v, n)[row])
     cols["ub"] = _block_ub(max_tf[row], min_dl[row], cols["idf"], qtf[occ], avgdl)
-    ranked, groups = _wand_task_kernel(cols, offs, tfs, k, avgdl, catalog.path("docs"))
-    out = []
-    for d, score in ranked:  # every scored doc has its row in its group's arrays
-        ids, _, urls = groups[d >> DOC_GROUP_BITS]
-        out.append((d, urls[int(np.searchsorted(ids, d))].as_py(), score))
-    return out
+    start = start[row]
+
+    def postings(idx: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        counts = cols["n_docs"][idx].astype(np.int64)
+        pos = np.cumsum(counts) - counts  # where each row's run begins in the gather
+        at = np.arange(int(counts.sum())) + np.repeat(start[idx] - pos, counts)
+        return offs[at], tfs[at]
+
+    ranked, dl_map = _wand_task_kernel(cols, postings, k, avgdl, catalog.path("docs"))
+    doc = np.array([d for d, _ in ranked], dtype=np.int64)
+    urls: list = [None] * doc.size
+    for (_, g), (ids_b, _, urls_b) in dl_map.items():  # every scored doc has its row in its bucket's arrays
+        sel = np.flatnonzero(doc >> DOC_GROUP_BITS == g)
+        if sel.size and ids_b.size:
+            at = np.minimum(np.searchsorted(ids_b, doc[sel]), ids_b.size - 1)
+            hit = ids_b[at] == doc[sel]
+            for j, url in zip(sel[hit].tolist(), urls_b.take(at[hit]).to_pylist()):
+                urls[j] = url
+    return [(d, url, score) for (d, score), url in zip(ranked, urls)]
 
 
-# one array per name, one entry per (block, query-token occurrence) row; the
-# kernel also takes each row's ``start`` into its flat postings arrays
+# one array per name, one entry per (block, query-token occurrence) row
 _BLOCK_COLUMNS = ("term", "qpos", "idf", "ub", "first_doc", "n_docs", "bucket", "v")
 
 
-def _wand_task_kernel(
-    cols: dict[str, np.ndarray], offs: np.ndarray, tfs: np.ndarray, k: int, avgdl: float, dl_root: str
-):
+def _wand_task_kernel(cols: dict[str, np.ndarray], postings, k: int, avgdl: float, dl_root: str):
     """The per-(query, task) block-max WAND scorer (shared by the Spark
     plan's applyInPandas tasks and the driver path): visits the
     task's doc-groups in descending upper bound, skips scoring any group
     whose bound cannot beat the running top-k threshold, and returns the
     ranked local top-k as [(doc_id, bm25_score)] plus the doc-group arrays
-    it loaded (group -> (doc_ids, dls, urls), see _load_group_dls). Exact —
+    it loaded ((bucket, group) -> (doc_ids, dls, urls), see
+    _load_group_dls). Exact —
     the bound is a true upper bound. Requires ALL of the task's blocks:
     group skipping aggregates scores across a group's blocks, so a group
     split across calls would drop contributions.
 
-    ``cols`` maps each _BLOCK_COLUMNS name and ``start`` to an array with
-    one entry per copy of a block per occurrence of its term in the query
-    (``qpos``). The postings come decoded: a row's are ``offs[start:start +
-    n_docs]`` (doc id minus its group's first id) and the same range of
-    ``tfs``, so copies of a block share them. A visited group gathers its
-    rows' postings by index, in query-position order, and every posting
-    adds ``idf * tf_norm`` to its doc in that order, so a score is the
-    oracle's sum, float for float, whatever the row order of the arrays or
-    the task split. A skipped group costs no gather, no dl lookup and no
+    ``cols`` maps each _BLOCK_COLUMNS name to an array with one entry per
+    copy of a block per occurrence of its term in the query (``qpos``).
+    ``postings(rows)`` -> (offs, tfs) gives the postings of those rows
+    (indices into ``cols``), concatenated in that order: each row's
+    ``n_docs`` doc ids minus its group's first id, and their tfs. The
+    driver path gathers them from its decoded postings files; the Spark
+    plan decodes the rows' payloads. A visited group takes its rows'
+    postings in query-position order, and every posting adds ``idf *
+    tf_norm`` to its doc in that order, so a score is the oracle's sum,
+    float for float, whatever the row order of the arrays or the task
+    split. A skipped group costs no postings call, no dl lookup and no
     scoring."""
     groups = cols["first_doc"].astype(np.int64) >> DOC_GROUP_BITS
     order = np.lexsort((cols["qpos"], groups))
@@ -640,10 +660,7 @@ def _wand_task_kernel(
     visit = np.argsort(-g_ub, kind="stable")
     ndocs_col = cols["n_docs"][order].astype(np.int64)
     idfs = cols["idf"][order].astype(np.float64)
-    # posting j of the rows taken in this order is offs/tfs[j + shift[row]]
-    pos = np.zeros(order.size + 1, dtype=np.int64)
-    np.cumsum(ndocs_col, out=pos[1:])
-    shift = cols["start"][order] - pos[:-1]
+    buckets = buckets[order]
     for vi in visit.tolist():
         s, e = starts[vi], ends[vi]
         # strict inequality: a group whose bound EQUALS the threshold may
@@ -651,14 +668,13 @@ def _wand_task_kernel(
         # which wins the deterministic (score desc, doc_id asc) tie-break
         if g_ub[vi] < theta():
             continue  # skip the whole doc-group
-        base = int(group_ids[vi]) << DOC_GROUP_BITS
+        g = int(group_ids[vi])
+        base = g << DOC_GROUP_BITS
         counts = ndocs_col[s:e]
-        at = np.arange(pos[s], pos[e]) + np.repeat(shift[s:e], counts)
-        off = offs[at]
-        ids_g, dls_g, _ = dl_map[int(group_ids[vi])]
-        l = _group_dls(ids_g, dls_g, np.add(off, base, dtype=np.int64))
+        off, tf = postings(order[s:e])
+        l = _rows_dls(dl_map, g, buckets[s:e], counts, np.add(off, base, dtype=np.int64))
         w = np.repeat(idfs[s:e], counts)
-        contrib = w * bm25_tf_norm(tfs[at], l, avgdl, K1, B)
+        contrib = w * bm25_tf_norm(tf, l, avgdl, K1, B)
         # bincount adds the weights in index order from 0.0, as np.add.at
         # does: in query-position order. Every contribution is > 0 (idf > 0
         # since a term's df <= n_docs, and tf >= 1), so an offset's sum is
@@ -689,12 +705,17 @@ def _wand_task_kernel(
 
 def _wand_frame_kernel(pdf: pd.DataFrame, avgdl: float, dl_root: str) -> pd.DataFrame:
     """The Spark plan's applyInPandas entry: one (query, task) group's
-    block rows -> its ranked local top-k as a RESULT_SCHEMA frame. The
-    frame's payloads decode once, into the kernel's input form."""
+    block rows -> its ranked local top-k as a RESULT_SCHEMA frame. Only
+    the rows of a group the kernel visits decode (_decode_rows), so the
+    WAND skip saves a skipped group's decode."""
     cols = {c: pdf[c].to_numpy() for c in _BLOCK_COLUMNS}
-    start, offs, tfs = _decode_rows(pdf["docs_enc"], pdf["tfs_enc"], cols["first_doc"], cols["n_docs"])
-    cols["start"] = start[:-1]
-    ranked, _ = _wand_task_kernel(cols, offs, tfs, int(pdf["k"].iloc[0]), avgdl, dl_root)
+    docs_enc, tfs_enc = pdf["docs_enc"].to_numpy(), pdf["tfs_enc"].to_numpy()
+
+    def postings(rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        _, offs, tfs = _decode_rows(docs_enc[rows], tfs_enc[rows], cols["first_doc"][rows], cols["n_docs"][rows])
+        return offs, tfs
+
+    ranked, _ = _wand_task_kernel(cols, postings, int(pdf["k"].iloc[0]), avgdl, dl_root)
     return _topk_frame(int(pdf["query_id"].iloc[0]), ranked)
 
 

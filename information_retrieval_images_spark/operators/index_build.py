@@ -320,7 +320,9 @@ def decoded_runs(catalog: Catalog, postings: DataFrame, drop_ids=()) -> DataFram
     (codec.decode_blocks) turns every block's payloads into flat doc ids
     and tfs. dl comes from the docs version of each row's
     own bucket version (rows carry ``bucket`` and ``v``), read with the
-    query kernels' point reader and its drift check. A doc's postings
+    query kernels' point reader (memoized per docs version and group, so
+    batches share the reads) and looked up in that bucket's arrays with
+    the drift check. A doc's postings
     keep their (term, doc_id, tf, dl), so re-encoding the runs gives
     exactly the blocks a fresh encode of the surviving documents gives.
     """
@@ -343,14 +345,15 @@ def decoded_runs(catalog: Catalog, postings: DataFrame, drop_ids=()) -> DataFram
             if not d.size:
                 continue
             dirs = {int(b): os.path.join(dl_root, f"bucket={b}", f"v={v}") for b, v in zip(pdf["bucket"], pdf["v"])}
-            pairs = np.unique(np.stack([bucket, d >> DOC_GROUP_BITS], axis=1), axis=0)
-            # groups are disjoint id ranges: in group order their ids are
-            # one sorted array
-            groups = sorted(_load_group_dls(dirs, set(map(tuple, pairs.tolist()))).items())
-            none = np.empty(0, np.int64)
-            ids = np.concatenate([none] + [i for _, (i, _, _) in groups])
-            dls = np.concatenate([none] + [dl for _, (_, dl, _) in groups])
-            dl = _group_dls(ids, dls, d).astype(np.int32)
+            pairs = np.unique(np.stack([bucket, d >> DOC_GROUP_BITS], axis=1), axis=0)  # sorted
+            got = _load_group_dls(dirs, set(map(tuple, pairs.tolist())))
+            dl = np.empty(d.size, np.int32)
+            for b in np.unique(pairs[:, 0]).tolist():
+                # a bucket's groups are disjoint id ranges: in group order
+                # their ids are one sorted array
+                parts = [got[b, g] for g in pairs[pairs[:, 0] == b, 1].tolist()]
+                m = bucket == b
+                dl[m] = _group_dls(np.concatenate([p[0] for p in parts]), np.concatenate([p[1] for p in parts]), d[m])
             yield pd.DataFrame({"term": term, "doc_id": d, "tf": tf, "dl": dl})
 
     return src.mapInPandas(gen, schema=RUNS_SCHEMA)

@@ -249,6 +249,45 @@ def test_warm_search_opens_no_docs_file(spark, corpus, built, monkeypatch):
     assert opened == [], opened
 
 
+def test_warm_search_of_a_bucket_subset_opens_no_docs_file(spark, corpus, built, monkeypatch):
+    """Doc groups are cached per (docs version, group), so a query whose
+    terms touch only some of a group's buckets is served from the entries
+    an earlier query left: after a search for a term with postings in every
+    bucket of doc group 0, a search for a term with postings in one bucket
+    opens no docs file, and its ranks, scores and urls equal the
+    oracle's."""
+    import pyarrow.dataset as pads
+
+    from information_retrieval_images_spark.operators import bm25 as bm25_mod
+    from information_retrieval_images_spark.oracle import oracle_topk
+    from information_retrieval_images_spark.textproc import tokenize
+
+    _, _, idx, _ = corpus
+    cat, _ = built
+    monkeypatch.setattr(bm25_mod, "_CACHE", {})
+    monkeypatch.setattr(bm25_mod, "_CACHE_BYTES", [0])
+    rows = cat.read("postings").select("term", "bucket", "first_doc").toPandas()
+    assert (rows["first_doc"].to_numpy() >> 14 == 0).all()  # one doc group
+    spread = rows.groupby("term")["bucket"].nunique()
+    wide = next(t for t in spread[spread == 3].index if tokenize(t) == [t])
+    narrow = next(t for t in spread[spread == 1].index if tokenize(t) == [t])
+    session = SearchSession(spark, cat.root)
+    session.search(wide)
+    opened = []
+    orig = pads.dataset
+
+    def spy(source, *a, **kw):
+        opened.extend([source] if isinstance(source, str) else source)
+        return orig(source, *a, **kw)
+
+    monkeypatch.setattr(pads, "dataset", spy)
+    got = session.search(narrow)
+    assert got
+    assert [(r["doc_id"], r["url"], r["bm25_score"]) for r in got] == oracle_topk(idx, narrow, 10)
+    assert [p for p in opened if str(p).startswith(cat.path("postings"))], "the spy saw no read"
+    assert not [p for p in opened if str(p).startswith(cat.path("docs"))], opened
+
+
 def test_warm_search_decodes_nothing(spark, corpus, built, monkeypatch):
     """A warm search decodes no posting payload: the postings-file cache
     holds each file decoded. A spy on codec.varint_decode, which every
@@ -369,9 +408,10 @@ def test_postings_file_out_of_term_order_raises(tmp_path):
 def test_kernel_is_independent_of_row_order(spark, built, monkeypatch):
     """Permuting a task's block rows leaves the kernel's ranked (doc_id,
     bm25_score) list identical, float for float, on the driver entry (the
-    row arrays with their starts into the flat decoded postings) and on the
-    Spark plan's applyInPandas wrapper (a frame of encoded blocks, which
-    decodes into a new flat layout in the permuted row order). The query
+    row arrays, with their postings gathered from the decoded postings
+    files) and on the Spark plan's applyInPandas wrapper (a frame of
+    encoded blocks, whose visited groups decode in the permuted row order).
+    The query
     repeats a term, so equal-qpos and repeated-term rows both move; k=3
     keeps the threshold pruning active."""
     import numpy as np
@@ -389,22 +429,25 @@ def test_kernel_is_independent_of_row_order(spark, built, monkeypatch):
     monkeypatch.undo()
     assert len(calls) == 2
     rng = np.random.default_rng(0)
-    for cols, offs, tfs, k, avgdl, dl_root in calls:
-        want = real(cols, offs, tfs, k, avgdl, dl_root)[0]
+    for cols, postings, k, avgdl, dl_root in calls:
+        want = real(cols, postings, k, avgdl, dl_root)[0]
         assert len(want) == k
         n = len(cols["qpos"])
         assert n > 4, n
         # each row's postings as the block payloads the Spark plan ships
         base = (cols["first_doc"] >> DOC_GROUP_BITS) << DOC_GROUP_BITS
         docs_enc, tfs_enc = [], []
-        for b, s, c in zip(base.tolist(), cols["start"].tolist(), cols["n_docs"].tolist()):
-            docs_enc.append(varint_encode(np.diff(b + offs[s : s + c].astype(np.int64), prepend=0)))
-            tfs_enc.append(varint_encode(tfs[s : s + c]))
+        for i, b in enumerate(base.tolist()):
+            offs, tfs = postings(np.array([i]))
+            assert offs.size == cols["n_docs"][i]
+            docs_enc.append(varint_encode(np.diff(b + offs.astype(np.int64), prepend=0)))
+            tfs_enc.append(varint_encode(tfs))
         pdf = pd.DataFrame({c: cols[c] for c in bm25_mod._BLOCK_COLUMNS})
         pdf = pdf.assign(docs_enc=docs_enc, tfs_enc=tfs_enc, query_id=0, k=k)
         for _ in range(5):
             perm = rng.permutation(n)
-            assert real({c: a[perm] for c, a in cols.items()}, offs, tfs, k, avgdl, dl_root)[0] == want
+            permuted = {c: a[perm] for c, a in cols.items()}
+            assert real(permuted, lambda rows: postings(perm[rows]), k, avgdl, dl_root)[0] == want
             top = bm25_mod._wand_frame_kernel(pdf.iloc[perm].reset_index(drop=True), avgdl, dl_root)
             assert list(zip(top["doc_id"].tolist(), top["bm25_score"].tolist())) == want
 
@@ -522,7 +565,7 @@ def test_single_query_dataframe_plans_no_exchange(spark, corpus, built):
 
 def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
     """Request threads share the driver's cache of decoded postings files
-    and merged doc groups (doc ids, dls and urls per group). Capped at 32 KB
+    and doc groups (doc ids, dls and urls per bucket and group). Capped at 32 KB
     (a few of the 5-15 KB entries this index's files and groups take; all
     of them take about 340 KB), fills evict on most queries: 4 threads x 20
     searches see zero errors and oracle-identical ranks, scores and urls,
@@ -567,7 +610,7 @@ def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
         assert [r["url"] for r in got] == [idx.url_of[r["doc_id"]] for r in got]
     held = sum(a.nbytes for value, _ in bm25_mod._CACHE.values() for a in value)
     assert bm25_mod._CACHE_BYTES[0] == held <= 32 << 10
-    # postings files are keyed by path, doc groups by (group, docs directories)
+    # postings files are keyed by path, doc groups by (docs directory, group)
     assert {type(key) for key in bm25_mod._CACHE} == {str, tuple}, list(bm25_mod._CACHE)
 
 

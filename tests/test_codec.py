@@ -113,7 +113,8 @@ def test_decode_blocks_matches_stream_decode(seed):
     segmented_gap_cumsum give, on random blocks with empty and
     one-posting ones among them, whether the payloads come as a list of
     bytes (a pandas column), an Arrow binary array read from its data
-    buffer, a slice of one or a chunked array."""
+    buffer, a slice of one or a chunked array. Another Arrow type (whose
+    offsets are not int32) is refused."""
     rng = np.random.default_rng(200 + seed)
     counts = rng.integers(1, 130, int(rng.integers(3, 60)))
     counts[::3] = 1
@@ -132,7 +133,7 @@ def test_decode_blocks_matches_stream_decode(seed):
     forms = [
         (docs_enc, tfs_enc),
         (pa.array(docs_enc, pa.binary()), pa.array(tfs_enc, pa.binary())),
-        (pa.array([b"x"] + docs_enc, pa.binary()).slice(1), pa.array([b"y"] + tfs_enc, pa.large_binary()).slice(1)),
+        (pa.array([b"x"] + docs_enc, pa.binary()).slice(1), pa.array([b"y"] + tfs_enc, pa.binary()).slice(1)),
         (pa.chunked_array([docs_enc[:cut], docs_enc[cut:]], pa.binary()), pa.chunked_array([tfs_enc], pa.binary())),
     ]
     for docs, tf in forms:
@@ -141,5 +142,7 @@ def test_decode_blocks_matches_stream_decode(seed):
         assert t.tolist() == want_t.tolist()
     empty = decode_blocks(pa.array([b""], pa.binary()), [b""], [0])
     assert [a.size for a in empty] == [0, 0]
+    with pytest.raises(TypeError, match="binary"):
+        decode_blocks(pa.array(docs_enc, pa.large_binary()), tfs_enc, counts)
     with pytest.raises(ValueError, match="postings"):
         decode_blocks(docs_enc, tfs_enc[1:], counts)  # block 0 holds one posting

@@ -44,8 +44,8 @@ def test_doclens_discovery_scoped_to_candidate_buckets(built, monkeypatch):
     # 3 buckets within group 0 at this corpus size)
     out = _load_group_dls(dirs, {(1, 0)})
     assert opened == [dirs[1]]
-    assert set(out) == {0}
-    ids, dls, urls = out[0]
+    assert set(out) == {(1, 0)}
+    ids, dls, urls = out[1, 0]
     assert ids.size == dls.size == len(urls) > 0
     # multi-bucket request opens exactly the candidate set, no root listing
     opened.clear()
@@ -56,14 +56,19 @@ def test_doclens_discovery_scoped_to_candidate_buckets(built, monkeypatch):
 
 def test_doclens_merge_across_buckets_matches_docs_table(built):
     """Consecutive doc ids round-robin over buckets, so one group's docs span
-    several buckets' docs versions; the merged (ids, dls, urls) must equal
-    the docs table's (doc_id, dl, url) for the group."""
-    docs = built.read("docs").select("doc_id", "dl", "url").toPandas().sort_values("doc_id")
+    several buckets' docs versions; each bucket's (ids, dls, urls) must
+    equal the docs table's (doc_id, dl, url) of that bucket, sorted by
+    doc_id, so that merged across buckets they are the group's rows."""
+    docs = built.read("docs").select("doc_id", "dl", "url", "bucket").toPandas().sort_values("doc_id")
     out = _load_group_dls(built.version_dirs("docs"), {(0, 0), (1, 0), (2, 0)})
-    ids, dls, urls = out[0]
-    assert ids.tolist() == docs["doc_id"].tolist()
-    assert dls.tolist() == docs["dl"].tolist()
-    assert urls.to_pylist() == docs["url"].tolist()
+    assert set(out) == {(0, 0), (1, 0), (2, 0)}
+    for (b, _), (ids, dls, urls) in out.items():
+        mine = docs[docs["bucket"] == b]
+        assert ids.tolist() == mine["doc_id"].tolist() != []
+        assert dls.tolist() == mine["dl"].tolist()
+        assert urls.to_pylist() == mine["url"].tolist()
+    merged = sorted(zip(*(np.concatenate([e[i] for e in out.values()]).tolist() for i in (0, 1))))
+    assert merged == list(zip(docs["doc_id"].tolist(), docs["dl"].tolist()))
 
 
 def test_group_dls_raises_on_sidecar_drift():
