@@ -192,7 +192,7 @@ def _rows_dls(dl_map: dict, group: int, row_buckets: np.ndarray, counts: np.ndar
     (``dl_map``, see _load_group_dls), drift check included."""
     per_posting = np.repeat(row_buckets, counts)
     out = np.empty(doc_ids.size)
-    for b in np.unique(row_buckets).tolist():
+    for b in set(row_buckets.tolist()):
         m = per_posting == b
         ids_b, dls_b, _ = dl_map[b, group]
         out[m] = _group_dls(ids_b, dls_b, doc_ids[m])
@@ -597,8 +597,8 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
         if sel.size and ids_b.size:
             at = np.minimum(np.searchsorted(ids_b, doc[sel]), ids_b.size - 1)
             hit = ids_b[at] == doc[sel]
-            for j, url in zip(sel[hit].tolist(), urls_b.take(at[hit]).to_pylist()):
-                urls[j] = url
+            for j, i in zip(sel[hit].tolist(), at[hit].tolist()):
+                urls[j] = urls_b[i].as_py()
     return [(d, url, score) for (d, score), url in zip(ranked, urls)]
 
 
