@@ -18,8 +18,8 @@ postings files, with numpy arrays and no pandas frame: a warm
 :func:`bm25_search_records` runs no Spark job, opens no file and decodes no
 posting. The kernel is the Spark plan's, called with the one task's arrays;
 it asks for a visited group's postings, which the driver path gathers from
-postings files decoded once per file per process (the cache) and the Spark
-plan decodes from the group's block rows. Batches, fan-out above 1 and
+its terms' rows, decoded once per postings file and term per process (the
+cache), and the Spark plan decodes from the group's block rows. Batches, fan-out above 1 and
 Iceberg postings run the Spark plan.
 
 Scale notes (100 TB): the Spark plan's postings scan is pruned at the
@@ -27,10 +27,10 @@ directory level by the term-prefix (tp) partition and at the row-group
 level by the pushed ``term`` IN-list (min-max on the sort column). At the
 sizes measured here every tp file is one row group (Spark's default row
 group is 128 MB), so the IN-list prunes no row group. The driver path reads
-and decodes each tp file a query needs once per process, whole, into the
-in-process cache (_cached) and finds the query's terms by binary search over
-the cached term column; a file larger than the cache's whole bound is read
-and decoded whole on every query that needs it. The Spark plan's only
+each tp file a query needs once per process, whole, into the in-process
+cache (_cached) and finds the query's terms by binary search over the cached
+term column; a file larger than the cache's whole bound is read whole on
+every query that needs it. The Spark plan's only
 shuffles are the per-task candidate routing and (when a query fans out past
 one task) the global rank window; results are NOT globally sorted — the
 contract is the (query_id, rank) key. ``postings_per_task`` splits a
@@ -74,15 +74,18 @@ RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 
 
 # Process-wide LRU cache of immutable index data (guide §4.5: heavyweight
-# per-task state amortized across tasks via worker reuse). Two kinds of
+# per-task state amortized across tasks via worker reuse). Three kinds of
 # entry share one lock, one LRU order and one byte bound:
 # - a doc group's (doc_ids, dls, urls) from one bucket's ``docs`` version,
 #   keyed by (version directory, group) (_load_group_dls): for a 50-query
 #   batch the same few dozen groups would otherwise be read hundreds of
 #   times per run, and a warm driver query takes its dls and its result's
 #   urls from it, whatever subset of a group's buckets its terms touch;
-# - one ``postings`` file, decoded, keyed by its path (_postings_files):
-#   the driver path reads and decodes each tp=T file once per process.
+# - one ``postings`` file's columns, keyed by its path (_postings_files):
+#   the driver path reads each tp=T file once per process;
+# - one term's rows of one postings file, decoded, keyed by (path, term)
+#   (_term_postings): the driver path decodes each once per process, so a
+#   warm query decodes nothing and a cold one only its own terms' rows.
 # A version directory is immutable and its id is unique (catalog.py), so an
 # entry never goes stale; a rewritten bucket is a new directory and the old
 # entries age out of the LRU. Driver-side queries share the cache across
@@ -476,11 +479,10 @@ _POSTINGS_COLUMNS = ["term", "first_doc", "n_docs", "max_tf", "min_dl", "docs_en
 _GROUP_MASK = (1 << DOC_GROUP_BITS) - 1
 
 
-class _PostingsFile(NamedTuple):
-    """One postings file, decoded: one entry per block row in file order,
-    and the rows' postings as flat arrays."""
+class _TermPostings(NamedTuple):
+    """One term's block rows of one postings file, decoded: one entry per
+    row in file order, and the rows' postings as flat arrays."""
 
-    terms: np.ndarray  # UTF-8 bytes, sorted
     first_doc: np.ndarray
     n_docs: np.ndarray
     max_tf: np.ndarray
@@ -505,22 +507,38 @@ def _decode_rows(docs_enc, tfs_enc, first_doc: np.ndarray, n_docs: np.ndarray):
     return start, (d & _GROUP_MASK).astype(np.uint16), tfs.astype(np.int32)
 
 
-def _postings_files(files: list[str]) -> dict[str, _PostingsFile]:
-    """path -> the file decoded (_PostingsFile), from one pyarrow dataset
-    over ``files``. The terms are a numpy bytes array: every file is sorted
-    by (term, first_doc) (index_build._write_postings_rows) and Spark
-    orders strings by their UTF-8 bytes, so a query finds a term's rows by
-    binary search. A file out of that order is an index inconsistency and
-    raises. The payloads decode straight from the Arrow data buffers."""
+def _postings_files(files: list[str]) -> dict[str, tuple[np.ndarray, pa.Table]]:
+    """path -> (its term column, its other columns), in file order, from
+    one pyarrow dataset over ``files``. The terms are a numpy bytes array:
+    every file is sorted by (term, first_doc) (index_build.
+    _write_postings_rows) and Spark orders strings by their UTF-8 bytes,
+    so a query finds a term's rows by binary search. A file out of that
+    order is an index inconsistency and raises."""
     out = {}
     for frag in ds.dataset(files, format="parquet").get_fragments():
         tbl = frag.to_table(columns=_POSTINGS_COLUMNS)
         terms = pc.cast(tbl["term"], pa.binary()).to_numpy(zero_copy_only=False).astype(bytes)
         if (terms[1:] < terms[:-1]).any():
             raise RuntimeError(f"postings file {frag.path} is not sorted by term; rebuild its bucket")
-        first_doc, n_docs, max_tf, min_dl = (tbl[c].to_numpy() for c in ("first_doc", "n_docs", "max_tf", "min_dl"))
-        rows = _decode_rows(tbl["docs_enc"], tbl["tfs_enc"], first_doc, n_docs)
-        out[frag.path] = _PostingsFile(terms, first_doc, n_docs, max_tf, min_dl, *rows)
+        out[frag.path] = (terms, tbl.drop_columns(["term"]))
+    return out
+
+
+def _term_postings(keys: list[tuple[str, str]], files: dict) -> dict[tuple[str, str], _TermPostings]:
+    """(postings file, term) -> the term's rows of the file, decoded
+    (_TermPostings), from the file's cached columns (``files``, see
+    _postings_files). Only the term's rows decode; their payloads are read
+    straight from the Arrow data buffers."""
+    out = {}
+    for f, t in keys:
+        terms, tbl = files[f]
+        s, e = np.searchsorted(terms, t.encode(), "left"), np.searchsorted(terms, t.encode(), "right")
+        rows = tbl.slice(s, e - s)
+        # copies: a slice's numpy view would keep the whole file's column alive
+        first_doc, n_docs, max_tf, min_dl = (rows[c].to_numpy().copy() for c in ("first_doc", "n_docs", "max_tf", "min_dl"))
+        out[f, t] = _TermPostings(
+            first_doc, n_docs, max_tf, min_dl, *_decode_rows(rows["docs_enc"], rows["tfs_enc"], first_doc, n_docs)
+        )
     return out
 
 
@@ -531,12 +549,13 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
 
     The postings are the pinned snapshot's files of the query's tp=T
     directories (file lists memoized per snapshot: Catalog.version_files),
-    each read and decoded once per process into the cache (_cached,
-    _postings_files), so a warm query opens no file and decodes no
-    payload. A binary search over each file's sorted term column picks the
-    query terms' rows; their block metadata and their postings (one
-    contiguous range per file and term) are concatenated in bucket/tp/file
-    order. Each block row becomes one kernel row per occurrence of its term
+    each read once per process into the cache (_cached, _postings_files).
+    A binary search over each file's sorted term column finds the query
+    terms it holds, and each (file, term)'s rows are decoded once per
+    process into the cache too (_term_postings), so a warm query opens no
+    file and decodes no payload, and a cold one decodes only its terms'
+    rows. Their block metadata and postings are concatenated in
+    bucket/tp/file order. Each block row becomes one kernel row per occurrence of its term
     in the query, and the shared WAND kernel scores them, dl read and drift
     check included, with the same floats as the Spark plan and the oracle;
     it gathers a visited group's postings from the concatenated arrays by
@@ -556,23 +575,23 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
     ]
     cached = _cached([f for _, _, f in files], _postings_files)
     term_bytes = np.array([t.encode() for t in terms])  # in the files' order
-    rows, postings, runs = [], [], []  # row slices, posting slices, (bucket, version, term index, rows)
-    n_postings = 0
+    keys, runs = [], []  # (file, term), and (bucket, version, term index, rows)
     for b, v, f in files:
-        pf = cached[f]
-        lo, hi = np.searchsorted(pf.terms, term_bytes, "left"), np.searchsorted(pf.terms, term_bytes, "right")
+        file_terms, _ = cached[f]
+        lo, hi = np.searchsorted(file_terms, term_bytes, "left"), np.searchsorted(file_terms, term_bytes, "right")
         for t, (s, e) in enumerate(zip(lo.tolist(), hi.tolist())):
             if e > s:
-                p0, p1 = int(pf.start[s]), int(pf.start[e])
-                start = pf.start[s:e] + (n_postings - p0)  # into the concatenated postings
-                rows.append((pf.first_doc[s:e], pf.n_docs[s:e], pf.max_tf[s:e], pf.min_dl[s:e], start))
-                postings.append((pf.offs[p0:p1], pf.tfs[p0:p1]))
+                keys.append((f, terms[t]))
                 runs.append((b, v, t, e - s))
-                n_postings += p1 - p0
-    if not rows:  # no query term is in the index
+    if not keys:  # no query term is in the index
         return []
-    first_doc, n_docs, max_tf, min_dl, start = map(np.concatenate, zip(*rows))
-    offs, tfs = map(np.concatenate, zip(*postings))
+    got = _cached(keys, lambda missing: _term_postings(missing, cached))
+    parts = [got[key] for key in keys]
+    first_doc, n_docs, max_tf, min_dl, offs, tfs = (
+        np.concatenate([getattr(p, c) for p in parts]) for c in ("first_doc", "n_docs", "max_tf", "min_dl", "offs", "tfs")
+    )
+    shift = np.cumsum([0] + [p.offs.size for p in parts[:-1]])
+    start = np.concatenate([p.start[:-1] + sh for p, sh in zip(parts, shift.tolist())])  # into the concatenated postings
     bucket, v, row_term, n = map(np.array, zip(*runs))
     row_term = np.repeat(row_term, n)
     # one copy of a block per occurrence of its term: (occurrence, block row) pairs

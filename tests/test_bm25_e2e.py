@@ -381,8 +381,8 @@ def test_cache_serves_no_superseded_version(spark, tmp_path_factory):
 def test_postings_file_out_of_term_order_raises(tmp_path):
     """The driver path binary-searches each cached postings file's term
     column, so a file that is not sorted by term would silently lose rows:
-    the cache fill refuses it instead, and reads (and decodes) a sorted
-    one in file order."""
+    the cache fill refuses it instead, and reads a sorted one in file
+    order, from which a term's rows decode."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -396,10 +396,15 @@ def test_postings_file_out_of_term_order_raises(tmp_path):
         return str(tmp_path / name)
 
     good = write("sorted.parquet", ["b", "b", "é", "éa"])
-    pf = bm25_mod._postings_files([good])[good]
-    assert pf.terms.tolist() == [t.encode() for t in ["b", "b", "é", "éa"]]
-    assert pf.first_doc.tolist() == [0, 1, 2, 3]
-    assert (pf.start.tolist(), pf.offs.tolist(), pf.tfs.tolist()) == ([0, 1, 2, 3, 4], [0] * 4, [1] * 4)
+    files = bm25_mod._postings_files([good])
+    terms, tbl = files[good]
+    assert terms.tolist() == [t.encode() for t in ["b", "b", "é", "éa"]]
+    assert tbl["first_doc"].to_pylist() == [0, 1, 2, 3]
+    tp = bm25_mod._term_postings([(good, "b"), (good, "éa")], files)
+    assert [(p.first_doc.tolist(), p.start.tolist(), p.offs.tolist(), p.tfs.tolist()) for p in tp.values()] == [
+        ([0, 1], [0, 1, 2], [0, 0], [1, 1]),
+        ([3], [0, 1], [0], [1]),
+    ]
     bad = write("unsorted.parquet", ["b", "a"])
     with pytest.raises(RuntimeError, match="not sorted by term"):
         bm25_mod._postings_files([bad])
