@@ -95,7 +95,7 @@ RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 # shared entry.
 _CACHE: dict = {}  # key -> (value, nbytes), least recently used first
 _CACHE_BYTES = [0]
-_CACHE_MAX_BYTES = 256 << 20  # about 4 MB of postings for 6,000 pages; 16 B/doc plus url bytes of docs
+_CACHE_MAX_BYTES = 256 << 20  # about 2 MB of postings files and 0.4 MB of term rows for 6,000 pages; 16 B/doc plus url bytes of docs
 _CACHE_LOCK = threading.Lock()
 
 
@@ -526,19 +526,25 @@ def _postings_files(files: list[str]) -> dict[str, tuple[np.ndarray, pa.Table]]:
 
 def _term_postings(keys: list[tuple[str, str]], files: dict) -> dict[tuple[str, str], _TermPostings]:
     """(postings file, term) -> the term's rows of the file, decoded
-    (_TermPostings), from the file's cached columns (``files``, see
-    _postings_files). Only the term's rows decode; their payloads are read
-    straight from the Arrow data buffers."""
-    out = {}
+    (_TermPostings), from the files' cached columns (``files``, see
+    _postings_files). Only those rows decode, all keys' rows in one pass
+    (_decode_rows) straight from the Arrow data buffers; each entry then
+    copies its range, so it holds no other key's or file's memory."""
+    slices = []
     for f, t in keys:
         terms, tbl = files[f]
         s, e = np.searchsorted(terms, t.encode(), "left"), np.searchsorted(terms, t.encode(), "right")
-        rows = tbl.slice(s, e - s)
-        # copies: a slice's numpy view would keep the whole file's column alive
-        first_doc, n_docs, max_tf, min_dl = (rows[c].to_numpy().copy() for c in ("first_doc", "n_docs", "max_tf", "min_dl"))
-        out[f, t] = _TermPostings(
-            first_doc, n_docs, max_tf, min_dl, *_decode_rows(rows["docs_enc"], rows["tfs_enc"], first_doc, n_docs)
-        )
+        slices.append(tbl.slice(s, e - s))
+    rows = pa.concat_tables(slices).combine_chunks()
+    first_doc, n_docs, max_tf, min_dl = (rows[c].to_numpy() for c in ("first_doc", "n_docs", "max_tf", "min_dl"))
+    start, offs, tfs = _decode_rows(rows["docs_enc"], rows["tfs_enc"], first_doc, n_docs)
+    out = {}
+    r1 = 0
+    for key, sl in zip(keys, slices):
+        r0, r1 = r1, r1 + sl.num_rows
+        p0, p1 = start[r0], start[r1]
+        meta = (a[r0:r1].copy() for a in (first_doc, n_docs, max_tf, min_dl))
+        out[key] = _TermPostings(*meta, start[r0 : r1 + 1] - p0, offs[p0:p1].copy(), tfs[p0:p1].copy())
     return out
 
 
@@ -642,7 +648,7 @@ def _wand_task_kernel(cols: dict[str, np.ndarray], postings, k: int, avgdl: floa
     ``postings(rows)`` -> (offs, tfs) gives the postings of those rows
     (indices into ``cols``), concatenated in that order: each row's
     ``n_docs`` doc ids minus its group's first id, and their tfs. The
-    driver path gathers them from its decoded postings files; the Spark
+    driver path gathers them from its terms' decoded rows; the Spark
     plan decodes the rows' payloads. A visited group takes its rows'
     postings in query-position order, and every posting adds ``idf *
     tf_norm`` to its doc in that order, so a score is the oracle's sum,

@@ -24,8 +24,8 @@ Two layers:
   and ``POST /append`` taking ``{"pages": [{"url", "html" (base64),
   "lang"}, ...]}``. The server is THREADED for /search: concurrent queries
   are independent read-only calls in the driver. A warm query reads no file
-  and decodes no posting (its decoded postings and its doc groups come
-  from the in-process cache), so it is all Python and numpy under the GIL
+  and decodes no posting (its postings files, its terms' decoded rows and
+  its doc groups come from the in-process cache), so it is all Python and numpy under the GIL
   and 4 clients get no more done than one: on the 6,000-page perfbench
   ``search`` index (local[4], 4 vCPUs, in process, 5 s each) 1 client ran
   818-894 queries/s at a 1.1-1.2 ms median and 4 clients 631-644

@@ -320,8 +320,9 @@ def test_warm_search_decodes_nothing(spark, corpus, built, monkeypatch):
 
 def test_cached_arrays_are_read_only(spark, corpus, built):
     """Request threads share the cached arrays, so every numpy array the
-    cache holds, postings files and doc groups alike, is read-only: an
-    in-place write raises instead of changing what later queries score."""
+    cache holds, in postings files, decoded term rows and doc groups alike,
+    is read-only: an in-place write raises instead of changing what later
+    queries score."""
     import numpy as np
 
     from information_retrieval_images_spark.operators import bm25 as bm25_mod
@@ -331,9 +332,10 @@ def test_cached_arrays_are_read_only(spark, corpus, built):
     session = SearchSession(spark, cat.root)
     for row in queries.head(4).itertuples(index=False):
         session.search(row.query_text, k=row.k)
-    held = {type(key): value for key, (value, _) in bm25_mod._CACHE.items()}
-    assert set(held) == {str, tuple}, held  # a postings file and a doc group
-    for value in held.values():
+    # keys: a postings file's path, (docs directory, group), (postings file, term)
+    kinds = {"file" if isinstance(key, str) else type(key[1]).__name__ for key in bm25_mod._CACHE}
+    assert kinds == {"file", "int", "str"}, kinds
+    for value, _ in bm25_mod._CACHE.values():
         arrays = [a for a in value if isinstance(a, np.ndarray)]
         assert arrays
         for a in arrays:
@@ -413,11 +415,10 @@ def test_postings_file_out_of_term_order_raises(tmp_path):
 def test_kernel_is_independent_of_row_order(spark, built, monkeypatch):
     """Permuting a task's block rows leaves the kernel's ranked (doc_id,
     bm25_score) list identical, float for float, on the driver entry (the
-    row arrays, with their postings gathered from the decoded postings
-    files) and on the Spark plan's applyInPandas wrapper (a frame of
-    encoded blocks, whose visited groups decode in the permuted row order).
-    The query
-    repeats a term, so equal-qpos and repeated-term rows both move; k=3
+    row arrays, with their postings gathered from the decoded term rows)
+    and on the Spark plan's applyInPandas wrapper (a frame of encoded
+    blocks, whose visited groups decode in the permuted row order). The
+    query repeats a term, so equal-qpos and repeated-term rows both move; k=3
     keeps the threshold pruning active."""
     import numpy as np
 
@@ -569,13 +570,14 @@ def test_single_query_dataframe_plans_no_exchange(spark, corpus, built):
 
 
 def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
-    """Request threads share the driver's cache of decoded postings files
-    and doc groups (doc ids, dls and urls per bucket and group). Capped at 32 KB
-    (a few of the 5-15 KB entries this index's files and groups take; all
-    of them take about 340 KB), fills evict on most queries: 4 threads x 20
+    """Request threads share the driver's cache of postings files, their
+    terms' decoded rows and doc groups (doc ids, dls and urls per bucket
+    and group). Capped at 32 KB (a few of this index's entries: 5-7 KB per
+    file, about 5 KB per group, under 1 KB per term's rows; all of them
+    take about 300 KB), fills evict on most queries: 4 threads x 20
     searches see zero errors and oracle-identical ranks, scores and urls,
-    and the one byte count equals the bytes of every entry held, postings
-    files and doc groups alike, within the bound."""
+    and the one byte count equals the bytes of every entry held, of every
+    kind, within the bound."""
     from information_retrieval_images_spark.operators import bm25 as bm25_mod
 
     _, queries, idx, expected = corpus
@@ -616,6 +618,7 @@ def test_doclens_cache_is_thread_safe(spark, corpus, built, monkeypatch):
     held = sum(a.nbytes for value, _ in bm25_mod._CACHE.values() for a in value)
     assert bm25_mod._CACHE_BYTES[0] == held <= 32 << 10
     # postings files are keyed by path, doc groups by (docs directory, group)
+    # and decoded term rows by (postings file, term)
     assert {type(key) for key in bm25_mod._CACHE} == {str, tuple}, list(bm25_mod._CACHE)
 
 
