@@ -19,8 +19,16 @@ postings files, with numpy arrays and no pandas frame: a warm
 posting. The kernel is the Spark plan's, called with the one task's arrays;
 it asks for a visited group's postings, which the driver path gathers from
 its terms' rows, decoded once per postings file and term per process (the
-cache), and the Spark plan decodes from the group's block rows. Batches, fan-out above 1 and
-Iceberg postings run the Spark plan.
+cache), and the Spark plan decodes from the group's block rows. Batches,
+fan-out above 1 and Iceberg postings run the Spark plan.
+
+The driver path's cache pays off when queries repeat over an index whose
+postings files, doc groups and queried terms' decoded rows fit its bound:
+a repeated query then reads and decodes nothing, and a query with new
+terms decodes only those terms' rows, once. The decoded rows are held next
+to their files (about a fifth of the files' bytes on the 6,000-page
+perfbench ``search`` index), so an index whose files just fit the bound,
+but not with the rows, evicts files that later queries read again.
 
 Scale notes (100 TB): the Spark plan's postings scan is pruned at the
 directory level by the term-prefix (tp) partition and at the row-group
@@ -28,17 +36,17 @@ level by the pushed ``term`` IN-list (min-max on the sort column). At the
 sizes measured here every tp file is one row group (Spark's default row
 group is 128 MB), so the IN-list prunes no row group. The driver path reads
 each tp file a query needs once per process, whole, into the in-process
-cache (_cached) and finds the query's terms by binary search over the cached
-term column; a file larger than the cache's whole bound is read whole on
-every query that needs it. The Spark plan's only
-shuffles are the per-task candidate routing and (when a query fans out past
-one task) the global rank window; results are NOT globally sorted — the
-contract is the (query_id, rank) key. ``postings_per_task`` splits a
-query's doc-groups across executors so a head-term query does not serialize
-on one task, and bounds the driver path's memory. The driver path lists
-each version directory once per snapshot (Catalog.version_files), so a warm
-query makes no directory listing. A result's urls come from the doc-group
-cache that also holds the groups' dls, one entry per bucket and group
+cache (_cached) and finds the query's terms by binary search over the
+cached term column; a file larger than the cache's whole bound is read
+whole on every query that needs it. The Spark plan's only shuffles are the
+per-task candidate routing and (when a query fans out past one task) the
+global rank window; results are NOT globally sorted — the contract is the
+(query_id, rank) key. ``postings_per_task`` splits a query's doc-groups
+across executors so a head-term query does not serialize on one task, and
+bounds the driver path's memory. The driver path lists each version
+directory once per snapshot (Catalog.version_files), so a warm query makes
+no directory listing. A result's urls come from the doc-group cache that
+also holds the groups' dls, one entry per bucket and group
 (_load_group_dls). A cold group still reads every ``docs`` file of its
 bucket: each is sorted by doc_id but spans nearly the whole doc_id range of
 the bucket, so the doc_id row-group pruning opens about one row group per
@@ -95,7 +103,9 @@ RESULT_SCHEMA = "query_id int, rank int, doc_id long, bm25_score double"
 # shared entry.
 _CACHE: dict = {}  # key -> (value, nbytes), least recently used first
 _CACHE_BYTES = [0]
-_CACHE_MAX_BYTES = 256 << 20  # about 2 MB of postings files and 0.4 MB of term rows for 6,000 pages; 16 B/doc plus url bytes of docs
+# 6,000 pages take about 1.9 MB of postings files and 0.4 MB of term rows;
+# docs take 16 B/doc plus url bytes
+_CACHE_MAX_BYTES = 256 << 20
 _CACHE_LOCK = threading.Lock()
 
 
@@ -561,12 +571,13 @@ def _wand_driver_topk(catalog: Catalog, qrow: tuple[int, str, int], meta) -> lis
     process into the cache too (_term_postings), so a warm query opens no
     file and decodes no payload, and a cold one decodes only its terms'
     rows. Their block metadata and postings are concatenated in
-    bucket/tp/file order. Each block row becomes one kernel row per occurrence of its term
-    in the query, and the shared WAND kernel scores them, dl read and drift
-    check included, with the same floats as the Spark plan and the oracle;
-    it gathers a visited group's postings from the concatenated arrays by
-    index. The urls come from the (bucket, group) arrays the kernel loaded
-    for the dls: one binary search per array of a result group.
+    bucket/tp/file order. Each block row becomes one kernel row per
+    occurrence of its term in the query, and the shared WAND kernel scores
+    them, dl read and drift check included, with the same floats as the
+    Spark plan and the oracle; it gathers a visited group's postings from
+    the concatenated arrays by index. The urls come from the (bucket,
+    group) arrays the kernel loaded for the dls: one binary search per
+    array of a result group.
     """
     _, _, k = qrow
     term_rows, _, avgdl, _ = meta

@@ -289,11 +289,11 @@ def test_warm_search_of_a_bucket_subset_opens_no_docs_file(spark, corpus, built,
 
 
 def test_warm_search_decodes_nothing(spark, corpus, built, monkeypatch):
-    """A warm search decodes no posting payload: the postings-file cache
-    holds each file decoded. A spy on codec.varint_decode, which every
-    block decode runs through, sees the cold searches (on an emptied cache)
-    decode and the warm ones decode nothing, while ranks, scores and urls
-    still equal the oracle's."""
+    """A warm search decodes no posting payload: the cache holds each
+    queried term's rows of a postings file decoded. A spy on
+    codec.varint_decode, which every block decode runs through, sees the
+    cold searches (on an emptied cache) decode and the warm ones decode
+    nothing, while ranks, scores and urls still equal the oracle's."""
     from information_retrieval_images_spark import codec
     from information_retrieval_images_spark.operators import bm25 as bm25_mod
 
