@@ -22,7 +22,7 @@ Package map:
 - ``oracle``     single-process exhaustive BM25 reference scorer
 - ``codec``      delta-gap + varint posting-block codec (numpy)
 - ``session``    tuned SparkSession builders
-- ``catalog``    Iceberg-or-parquet table IO
+- ``catalog``    manifest-pinned parquet table IO (the commit point)
 - ``sources``    pages corpus reader/generator
 - ``operators``  index build, BM25 query engine, dedup, ANN
 - ``functions``  text analysis / similarity column functions
@@ -57,4 +57,6 @@ BLOCK_SIZE = 128
 #   9  one per-document table: every docs file is sorted by doc_id and the
 #      query kernels read dl from it (the doclens sidecar is gone); docs is
 #      a manifest-pinned parquet version in both catalog modes
-INDEX_FORMAT = 9
+#  10  postings are manifest-pinned parquet versions in every warehouse
+#      (the Iceberg postings mode is gone)
+INDEX_FORMAT = 10

@@ -24,8 +24,8 @@ Design:
   ``treeReduce(np.bitwise_or)`` so the driver receives ONE bitmap instead of
   nparts of them (at a 10^9-doc bucket m/8 ~ 1.25 GB per partial — a
   driver-side collect would hold nparts x 1.25 GB).
-- storage: one parquet row (m, k, bits) under ``blooms/bucket=B/v=<version>`` — plain
-  parquet in BOTH catalog modes, like ``docs``: it is a driver point-lookup
+- storage: one parquet row (m, k, bits) under ``blooms/bucket=B/v=<version>``,
+  pinned by the manifest like every table: it is a driver point-lookup
   table, not a Catalyst scan input. Written without column statistics: a
   binary value's min/max would store the bitmap twice more (page header and
   footer), and no reader prunes on them.

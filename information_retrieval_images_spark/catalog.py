@@ -35,12 +35,11 @@ behind by a crashed append once the grace period has passed.
 A term's document frequency is not stored apart from the postings: it is
 the sum of ``n_docs`` over the term's blocks (term_dfs).
 
-On Iceberg, only ``postings`` is an Iceberg table; the manifest still
-carries the metadata and the plain-parquet versions of ``docs`` (the one
-per-document table: doc_id, url, dl, every file sorted by doc_id) and
-``blooms``, and the stage is plain parquet too. Without the Iceberg
-runtime jar every table is sorted parquet (row-group min/max stats give
-the scan-time pruning).
+Every table is sorted plain parquet in every warehouse (row-group min/max
+stats give the scan-time pruning): ``postings`` (with ``tp=T/`` below each
+version), ``docs`` (the one per-document table: doc_id, url, dl, every file
+sorted by doc_id) and ``blooms``; the stage is plain parquet too. The
+manifest follows Iceberg's table model, not its file format or catalog.
 
 All writers take sorted DataFrames and never repartition — layout decisions
 belong to the build job, not the sink.
@@ -62,8 +61,6 @@ from pyspark.sql import functions as F
 
 # the tables of one bucket version, all under one version id
 INDEX_TABLES = ("docs", "postings", "blooms")
-# tables that are Iceberg tables when the runtime is available
-ICEBERG_TABLES = ("postings",)
 MANIFEST_DIR = "_manifest"
 STAGE_DIR = "_stage"
 # Retired versions and superseded manifests are kept this long, so a reader
@@ -80,14 +77,6 @@ _KEEP = object()  # Catalog.commit: leave the manifest's stage as it is
 
 class CommitConflict(RuntimeError):
     """Another writer committed since this write read its base manifest."""
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 class Snapshot:
@@ -112,12 +101,12 @@ class Snapshot:
 
 
 class Catalog:
-    """Warehouse of named tables rooted at a directory (or Iceberg namespace)."""
+    """Warehouse of named tables rooted at a directory: manifest-pinned
+    parquet bucket versions."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.use_iceberg = iceberg_available(spark)
         self._snap: Snapshot | None = None
         self._pin = threading.local()
         # serializes this catalog's commits (build bucket pipelines commit
@@ -125,11 +114,6 @@ class Catalog:
         # os.link instead
         self._commit_lock = threading.Lock()
         self._term_df_cap = 1_000_000  # bound driver memory (~50 MB of strings)
-        # Iceberg: the first append to a table creates it (a fresh build
-        # drops every table). Bucket pipelines append from several driver
-        # threads, so the exists-check and the create run under one lock:
-        # exactly one writer creates, the rest append.
-        self._create_lock = threading.Lock()
 
     # --- the manifest ---------------------------------------------------------
 
@@ -239,10 +223,9 @@ class Catalog:
                     old = live[t].pop(int(b), None)
                     if v is not None:
                         live[t][int(b)] = v
-                    if self._is_dir_table(t):
-                        touched.append((t, int(b)))
-                        if old is not None and old != v:
-                            retired.append((t, int(b), old, now))
+                    touched.append((t, int(b)))
+                    if old is not None and old != v:
+                        retired.append((t, int(b), old, now))
             cutoff = now - VACUUM_GRACE_MINUTES * 60
             expired = [r for r in retired if r[3] < cutoff]
             manifest = {
@@ -279,11 +262,6 @@ class Catalog:
             return self.snapshot()
         finally:
             self._pin.snap = pinned
-
-    def _is_dir_table(self, name: str) -> bool:
-        """True when the table's bucket versions are directories (every
-        table on parquet; all but the postings on Iceberg)."""
-        return not (self.use_iceberg and name in ICEBERG_TABLES)
 
     def _vacuum(self, snap: Snapshot, expired: list, touched: list, cutoff: float) -> None:
         """Delete what no reader can still need: versions retired before
@@ -404,22 +382,10 @@ class Catalog:
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def append(self, df: DataFrame, name: str) -> None:
-        """Iceberg table append, creating the table on first use."""
-        writer = df.writeTo(f"{name}")
-        with self._create_lock:
-            if not self.exists(name):
-                writer.create()
-                return
-        writer.append()
-
     def read(self, name: str) -> DataFrame:
         """The table as of the snapshot: its explicit live directory list
         (``bucket``, ``v`` and any ``tp`` come from the directory names).
-        A listed directory missing on disk raises (never a partial table).
-        Iceberg tables read whole."""
-        if not self._is_dir_table(name):
-            return self.spark.table(name)
+        A listed directory missing on disk raises (never a partial table)."""
         snap = self.snapshot()
         df = snap.dfs.get(name)
         if df is None:
@@ -436,8 +402,8 @@ class Catalog:
         return os.path.join(self.path(STAGE_DIR), version)
 
     def read_stage(self, version: str) -> DataFrame | None:
-        """Stage ``version`` (plain parquet in both catalog modes; ``bucket``
-        comes from the directory names), or None when it holds no row."""
+        """Stage ``version`` (plain parquet; ``bucket`` comes from the
+        directory names), or None when it holds no row."""
         path = self.stage_path(version)
         if not glob.glob(os.path.join(path, "bucket=*")):
             return None
@@ -447,16 +413,10 @@ class Catalog:
         shutil.rmtree(self.stage_path(version), ignore_errors=True)
 
     def exists(self, name: str) -> bool:
-        """True when the snapshot lists any bucket of the table (Iceberg
-        tables: when the table exists)."""
-        if not self._is_dir_table(name):
-            return self.spark.catalog.tableExists(name)
+        """True when the snapshot lists any bucket of the table."""
         return bool(self.snapshot().tables.get(name))
 
     def drop(self, name: str) -> None:
         """K8 analogue (reference drop_database, db.py:317-321)."""
         self._snap = None
-        if not self._is_dir_table(name):
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        else:
-            shutil.rmtree(self.path(name), ignore_errors=True)
+        shutil.rmtree(self.path(name), ignore_errors=True)

@@ -12,15 +12,14 @@ with ties broken by doc_id, rank-identical to ``oracle.oracle_topk`` with
 bit-identical scores: a doc's score adds one ``idf * tf_norm`` term per
 query-token occurrence, in query-position order, as the oracle does.
 
-One query with fan-out 1 (matched volume <= ``postings_per_task``) on
-directory postings is scored IN THE DRIVER from the pinned manifest's
-postings files, with numpy arrays and no pandas frame: a warm
-:func:`bm25_search_records` runs no Spark job, opens no file and decodes no
-posting. The kernel is the Spark plan's, called with the one task's arrays;
+One query with fan-out 1 (matched volume <= ``postings_per_task``) is
+scored IN THE DRIVER from the pinned manifest's postings files, with numpy
+arrays and no pandas frame: a warm :func:`bm25_search_records` runs no
+Spark job, opens no file and decodes no posting. The kernel is the Spark plan's, called with the one task's arrays;
 it asks for a visited group's postings, which the driver path gathers from
 its terms' rows, decoded once per postings file and term per process (the
-cache), and the Spark plan decodes from the group's block rows. Batches,
-fan-out above 1 and Iceberg postings run the Spark plan.
+cache), and the Spark plan decodes from the group's block rows. Batches
+and fan-out above 1 run the Spark plan.
 
 The driver path's cache pays off when queries repeat over an index whose
 postings files, doc groups and queried terms' decoded rows fit its bound:
@@ -363,13 +362,12 @@ def _task_fanout(volumes: dict[int, int], postings_per_task: int, max_tasks: int
 
 
 def _route(catalog: Catalog, qbatch, postings_per_task: int):
-    """(plan meta, in_driver) for a normalized batch. in_driver: one query,
-    fan-out 1 (matched volume <= postings_per_task, which bounds driver
-    memory) and directory (not Iceberg) postings — the batch
-    _wand_driver_topk scores."""
+    """(plan meta, in_driver) for a normalized batch. in_driver: one query
+    with fan-out 1 (matched volume <= postings_per_task, which bounds driver
+    memory) — the batch _wand_driver_topk scores."""
     meta = _query_plan_meta(catalog, qbatch)
     one = len(qbatch) == 1 and meta[3].get(qbatch[0][0], 0) <= postings_per_task
-    return meta, one and catalog._is_dir_table("postings")
+    return meta, one
 
 
 def bm25_topk_wand(

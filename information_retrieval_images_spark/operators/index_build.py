@@ -4,7 +4,7 @@ term-range-partitioned, doc-sorted, delta-gap+varint block-max posting table).
 
 Pipeline (SURVEY.md §3.3 target lifecycle):
 
-  pages (Iceberg/parquet scan, lang pushdown)
+  pages (parquet scan of a path, lang pushdown)
     -> mapInPandas extract ON THE SCAN SIDE (shared kernel, byte-identical
        per url) — html never enters a shuffle; only the ~30-60x smaller
        extracted text moves
@@ -78,8 +78,8 @@ DOC_GROUP_BITS = 14
 # docs is the index's one per-document table: every file of a bucket version
 # is sorted by doc_id, so the query kernels read a doc-group's dl with one
 # pushed doc_id range (operators.bm25._load_group_dls). It is plain parquet
-# under docs/bucket=B/v=<version> in BOTH catalog modes, published by the
-# manifest like blooms.
+# under docs/bucket=B/v=<version>, published by the manifest like every
+# table.
 DOCS_SCHEMA = "doc_id long, url string, dl int, bucket int"
 STAGE_SCHEMA = "doc_id long, url string, dl int, text string, bucket int"
 RUNS_SCHEMA = "term string, doc_id long, tf int, dl int"
@@ -135,11 +135,11 @@ def global_stats(n_docs: int, sum_dl: int, max_doc_id: int, p_logical: int, tp_n
 TERM_PREFIX_PARTITIONS = 16
 
 
-def term_prefix_expr(col: str = "term", tp_n: int = TERM_PREFIX_PARTITIONS):
-    return F.pmod(F.crc32(F.encode(F.col(col), "UTF-8")), F.lit(int(tp_n))).cast("int")
+def term_prefix_expr(tp_n: int):
+    return F.pmod(F.crc32(F.encode(F.col("term"), "UTF-8")), F.lit(int(tp_n))).cast("int")
 
 
-def term_prefix(term: str, tp_n: int = TERM_PREFIX_PARTITIONS) -> int:
+def term_prefix(term: str, tp_n: int) -> int:
     import zlib
 
     return zlib.crc32(term.encode("utf-8")) % int(tp_n)
@@ -595,9 +595,9 @@ def build_index(
     def _build_bucket(b: int) -> None:
         t0 = time.time()
         nd, toks = per_bucket[b]
-        # a killed earlier run of this bucket left only unreferenced files
-        # (and, on Iceberg, postings rows write_bucket DELETEs first). tp_n is the
-        # local pinned value, threaded explicitly like every other reader.
+        # a killed earlier run of this bucket left only unreferenced files.
+        # tp_n is the local pinned value, threaded explicitly like every
+        # other reader.
         version = catalog.new_version()
         rows = stage.where(F.col("bucket") == b)
         runs = posting_runs(rows)
@@ -664,13 +664,10 @@ def _write_postings_rows(catalog: Catalog, blocks: DataFrame, bucket: int, versi
     # shuffle only while the index has one doc group (< 16,384 docs): at
     # 114k docs (8 groups, 8 partitions) it wrote 144 postings files, not 32.
     out = blocks.repartition(int(tp_n), "tp").sortWithinPartitions("tp", "term", "first_doc")
-    # every postings row carries its bucket version (on parquet from the
-    # v=<version> directory): the query kernels find the bucket's docs
-    # version, written under the same version id, without a manifest lookup
-    if catalog.use_iceberg:
-        catalog.append(out.withColumns({"bucket": F.lit(bucket), "v": F.lit(version)}), "postings")
-    else:
-        out.write.partitionBy("tp").parquet(catalog.version_path("postings", bucket, version))
+    # every postings row carries its bucket version (from the v=<version>
+    # directory): the query kernels find the bucket's docs version, written
+    # under the same version id, without a manifest lookup
+    out.write.partitionBy("tp").parquet(catalog.version_path("postings", bucket, version))
 
 
 def encode_bucket_postings(
@@ -704,7 +701,7 @@ def encode_bucket_postings(
     )
     blocks = encode_blocks(sorted_runs)
     bucket_docs = docs.where(F.col("bucket") == bucket)
-    write_bucket(catalog, blocks, bucket_docs, bucket, version, n_keys=n_keys, tp_n=tp_n)
+    write_bucket(catalog, blocks, bucket_docs, bucket, version, n_keys, tp_n)
 
 
 def write_bucket(
@@ -714,7 +711,7 @@ def write_bucket(
     bucket: int,
     version: str,
     n_keys: int,
-    tp_n: int = TERM_PREFIX_PARTITIONS,
+    tp_n: int,
 ) -> None:
     """Write version ``version`` of one bucket as independent writes: the
     postings (from ``blocks``), and from ``bucket_docs`` the docs rows and
@@ -727,24 +724,14 @@ def write_bucket(
     to fresh directories (``<table>/bucket=B/v=<version>``), so no two jobs
     share a ``_temporary`` staging dir. Failure of any write propagates
     after all of them finish (no partially-awaited commit). Nothing is
-    visible until the caller commits the version.
-
-    On Iceberg the postings write is a table append, so the bucket's
-    existing postings rows are DELETEd first; otherwise a bucket whose rows
-    landed before a crash (and before its manifest commit) would be
-    appended twice on resume, doubling its df and BM25 contributions. A
-    table that does not exist yet (a fresh build drops it) gets no DELETE.
-    A delete re-encodes a bucket from its own postings rows, so on Iceberg
-    the blocks are materialized (localCheckpoint) before the DELETE."""
+    visible until the caller commits the version: a crashed write leaves
+    only files that no manifest lists, and the vacuum removes them.
+    ``tp_n`` is the index's pinned term-prefix modulus."""
     from concurrent.futures import ThreadPoolExecutor
 
     from ..blooms import write_bucket_bloom
 
-    blocks = blocks.withColumn("tp", term_prefix_expr(tp_n=tp_n))
-    if catalog.use_iceberg:
-        blocks = blocks.localCheckpoint()
-        if catalog.exists("postings"):
-            catalog.spark.sql(f"DELETE FROM postings WHERE bucket = {int(bucket)}")
+    blocks = blocks.withColumn("tp", term_prefix_expr(tp_n))
     writes = [
         (_write_postings_rows, catalog, blocks, bucket, version, tp_n),
         (_write_bucket_docs, catalog, bucket_docs, bucket, version),

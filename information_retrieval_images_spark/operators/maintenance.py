@@ -15,8 +15,8 @@ are bit-identical to a fresh encode of the surviving documents.
 
 The surviving docs rows are the touched buckets' rows minus the located doc
 ids, and the shared encoder writes them as each bucket's new docs version,
-as it does for build, append and compaction (``docs`` is a manifest-pinned
-directory table in both catalog modes). The op ends with ONE manifest commit
+as it does for build, append and compaction (every table is a
+manifest-pinned parquet directory). The op ends with ONE manifest commit
 (catalog.py) that swaps the bucket versions and the global statistics
 together, so a concurrent reader sees the index before or after the delete,
 never between; a crashed delete leaves only unreferenced files, and
@@ -149,12 +149,12 @@ def _delete_pinned(spark, catalog: Catalog, urls, base, nparts: int, t0: float) 
     # 2. re-encode each affected bucket (the rewrite unit) from its own
     #    postings and docs rows minus the deleted ids — a pushed doc_id
     #    filter, no second url join; surviving counts from the locate job
-    #    size the blooms — no per-bucket count job. An emptied bucket leaves
-    #    the manifest (on Iceberg its postings rows are still DELETEd).
+    #    size the blooms — no per-bucket count job. An emptied bucket only
+    #    leaves the manifest.
     version = catalog.new_version()
     postings = catalog.read("postings")
     for b in buckets:
-        if surviving_counts[b] or catalog.use_iceberg:
+        if surviving_counts[b]:
             runs = decoded_runs(catalog, postings.where(F.col("bucket") == b), deleted_ids[b])
             surviving = docs.where(~F.col("doc_id").isin(deleted_ids[b]))
             encode_bucket_postings(
@@ -190,9 +190,8 @@ def compact_buckets(
     and tie-breaks are untouched) into ``target_bucket`` and merges the
     sources' postings into it: decoded_runs decodes the source buckets'
     blocks and the shared encoder re-encodes them once, with the moved docs
-    rows as the target version's docs. On Iceberg the sources' postings rows
-    are DELETEd after the target is written (the merge reads them). One
-    manifest commit then adds the target and retires the sources.
+    rows as the target version's docs. One manifest commit then adds the
+    target and retires the sources.
 
     ``target_bucket`` must be fresh (same guard as append_bucket).
     """
@@ -211,9 +210,6 @@ def compact_buckets(
         encode_bucket_postings(
             catalog, runs, moved, target_bucket, nparts, catalog.tp_n(), version=version, n_keys=n_moved
         )
-        if catalog.use_iceberg:
-            blist = ", ".join(str(int(b)) for b in buckets)
-            spark.sql(f"DELETE FROM postings WHERE bucket IN ({blist})")
         lineage = {
             "job": "compact_buckets",
             "buckets": buckets,

@@ -1,7 +1,7 @@
 """spark-submit entrypoint: build (or resume) the inverted index.
 
     spark-submit --py-files ir_spark.zip jobs/build_index_job.py \
-        --pages <path-or-iceberg-table> --warehouse <dir> \
+        --pages <parquet-path> --warehouse <dir> \
         [--lang en] [--buckets 8] [--resume] [--term-partitions N] \
         [--p-logical N]
 

@@ -521,33 +521,6 @@ def test_scores_bit_identical_to_oracle(spark, tmp_path_factory, seed):
 
 
 
-def test_iceberg_postings_take_the_spark_plan(spark, corpus, built, monkeypatch):
-    """The driver reads postings version directories, so a catalog whose
-    postings are an Iceberg table sends even a fan-out-1 query to the Spark
-    plan, through both entry points."""
-    from information_retrieval_images_spark.catalog import Catalog
-    from information_retrieval_images_spark.operators import bm25 as bm25_mod
-
-    _, queries, _, _ = corpus
-    cat, _ = built
-    row = queries.iloc[0]
-    calls = []
-    real_driver = bm25_mod._wand_driver_topk
-    empty = spark.createDataFrame([], bm25_mod.RESULT_SCHEMA)
-    monkeypatch.setattr(bm25_mod, "_wand_plan", lambda *a: calls.append("spark") or empty)
-    monkeypatch.setattr(
-        bm25_mod, "_wand_driver_topk", lambda *a, **kw: calls.append("driver") or real_driver(*a, **kw)
-    )
-    bm25_topk_wand(spark, cat, [(0, row.query_text, int(row.k))])
-    bm25_search(spark, cat, row.query_text, int(row.k))
-    assert calls == ["driver", "driver"]
-    calls.clear()
-    monkeypatch.setattr(Catalog, "_is_dir_table", lambda self, name: name != "postings")
-    bm25_topk_wand(spark, cat, [(0, row.query_text, int(row.k))])
-    bm25_search(spark, cat, row.query_text, int(row.k))
-    assert calls == ["spark", "spark"]
-
-
 def test_single_query_dataframe_plans_no_exchange(spark, corpus, built):
     """A single fan-out-1 query through the DataFrame API is the driver
     path's result as a local DataFrame: zero exchanges, oracle-identical.

@@ -177,11 +177,12 @@ def test_delete_then_compact_matches_oracle(spark, corpus, tmp_path_factory):
     _assert_matches_oracle(spark, cat, corpus[~corpus["url"].isin(victims)])
 
 
-def test_delete_and_append_update_stats_incrementally(spark, corpus, tmp_path_factory):
+def test_delete_and_append_update_stats_incrementally(spark, corpus, tmp_path_factory, monkeypatch):
     """Global stats after delete/append equal a from-scratch rebuild's even
     though neither op runs a full-corpus aggregate anymore (VERDICT r2
     what's-wrong #1): (N, sum dl) maintained by bucket-scoped deltas,
     max_doc_id never reused."""
+    from information_retrieval_images_spark.operators import maintenance
     from information_retrieval_images_spark.operators.incremental import append_bucket
 
     cat = Catalog(spark, str(tmp_path_factory.mktemp("incstats")))
@@ -189,7 +190,23 @@ def test_delete_and_append_update_stats_incrementally(spark, corpus, tmp_path_fa
     build_index(spark, spark.createDataFrame(a), cat, n_buckets=2)
     en_a = a[a["lang"] == "en"]
     victims = en_a["url"].iloc[[2, 5]].tolist()
-    delete_docs(spark, cat, victims)
+    before = cat.snapshot()
+    n0, sum0, _ = cat.global_doc_stats()
+    dl_gone = cat.read("docs").where(F.col("url").isin(victims)).agg(F.sum("dl")).collect()[0][0]
+    joins, locate = [], maintenance._locate_join
+    monkeypatch.setattr(maintenance, "_locate_join", lambda *args: joins.append(1) or locate(*args))
+    res = delete_docs(spark, cat, victims)
+    assert joins == [1]  # one url join locates; the surviving rows are a doc_id filter
+    # the committed stats are the base's minus the deleted docs' deltas;
+    # max_doc_id is kept, and only the hit buckets get a new version
+    snap = cat.snapshot()
+    n1, sum1 = n0 - 2, sum0 - dl_gone
+    assert res["n_deleted"] == 2 and res["n_docs"] == n1 and res["avgdl"] == sum1 / n1
+    assert snap.stats == dict(before.stats, n_docs=n1, sum_dl=sum1, avgdl=sum1 / n1)
+    assert snap.manifest["lineage"]["job"] == "delete_docs"
+    for bk in (0, 1):
+        assert snap.tables["docs"][bk] == snap.tables["postings"][bk]
+        assert (snap.tables["docs"][bk] != before.tables["docs"][bk]) == (bk in res["buckets"])
     max_after_delete = cat.global_doc_stats()[2]
     append_bucket(spark, spark.createDataFrame(b), cat, bucket=7000)
 

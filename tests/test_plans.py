@@ -62,7 +62,7 @@ def test_term_prefix_dirs_prune_postings_files(spark, tmp_path_factory):
     assert len(tp_dirs) > 1, "layout must fan out into term-prefix subdirs"
 
     terms = ["term000000", "term000007"]
-    want_tp = sorted({term_prefix(t) for t in terms})
+    want_tp = sorted({term_prefix(t, cat.tp_n()) for t in terms})
     pruned = (
         cat.read("postings").where(F.col("term").isin(terms)).where(F.col("tp").isin(want_tp))
     )

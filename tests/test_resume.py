@@ -172,20 +172,30 @@ def test_old_format_warehouse_gets_clear_error(spark, pages_df, tmp_path_factory
     """A warehouse written by an older engine version must fail with a clear
     'rebuild required' message at the stats gate, not a column-not-found
     error deep inside a query plan (ADVICE r3 finding #4): both a manifest
-    of an older format and a pre-v6 warehouse with no manifest at all."""
+    of an older format and a pre-v6 warehouse with no manifest at all.
+    A format-9 manifest may list postings versions that have no directory
+    (that format could keep postings outside the warehouse): a read or a
+    search fails at the gate, never at a missing path."""
     import json
     import shutil
+
+    from information_retrieval_images_spark.serving import SearchSession
 
     cat = Catalog(spark, str(tmp_path_factory.mktemp("oldfmt")))
     build_index(spark, pages_df, cat, n_buckets=1)
     latest = os.path.join(cat.path("_manifest"), f"{cat.index_version()}.json")
     with open(latest) as f:
         m = json.load(f)
-    m["stats"]["format"] = 8
-    with open(latest, "w") as f:
-        json.dump(m, f)
-    with pytest.raises(RuntimeError, match="format 8 .*rebuild"):
-        Catalog(spark, cat.root).global_doc_stats()
+    for fmt in (8, 9):
+        m["stats"]["format"] = fmt
+        with open(latest, "w") as f:
+            json.dump(m, f)
+        if fmt == 9:
+            shutil.rmtree(cat.path("postings"))
+        with pytest.raises(RuntimeError, match=f"format {fmt} .*rebuild"):
+            Catalog(spark, cat.root).global_doc_stats()
+        with pytest.raises(RuntimeError, match=f"format {fmt} .*rebuild"):
+            SearchSession(spark, cat.root).search("term000000")
     shutil.rmtree(cat.path("_manifest"))
     with pytest.raises(RuntimeError, match="no manifest.*rebuild"):
         Catalog(spark, cat.root).global_doc_stats()
