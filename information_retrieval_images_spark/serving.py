@@ -32,7 +32,8 @@ Two layers:
   clients 518-544 queries/s at 7.0-7.2 ms. A query that still takes the
   Spark plan (fan-out above 1) submits its jobs to Spark's FIFO scheduler,
   so concurrent ones queue, and one that arrives during an /append waits
-  behind the append's jobs (6,000-page index, local[4]: 1.5 s alone, 3.7 s median during an append, over 9 and 6 samples). /append
+  behind the append's jobs (6,000-page index, local[4]: 1.5 s alone, 3.7 s
+  median during an append, over 9 and 6 samples). /append
   stays serialized behind a lock (each append commits against the
   manifest it read; a concurrent one would fail its commit). Horizontal
   scale beyond one driver comes from read-only replicas over the same
